@@ -331,7 +331,6 @@ object IndexStore {
     // slice would both sit above the tombstone and both probe
     val newVecs = graft.util.Maintenance.requireUniqueUpserts(
       upserts.select(id.as("vid"), vec.as("v")), "vid", "ivf-index")
-      .localCheckpoint(true)
     // ids in both upserts and removeIds re-land (the upsert wins)
     val rem = removeIds.select(removeIds.columns.head).toDF("vid")
       .distinct()
@@ -825,7 +824,6 @@ object IndexStore {
     if (batchId >= 0 && batchId <= pm.batch) return None
     val newVecs = graft.util.Maintenance.requireUniqueUpserts(
       upserts.select(id.as("vid"), vec.as("v")), "vid", "ivfpq-index")
-      .localCheckpoint(true)
     // ids in both upserts and removeIds re-land (the upsert wins)
     val rem = removeIds.select(removeIds.columns.head).toDF("vid")
       .distinct()

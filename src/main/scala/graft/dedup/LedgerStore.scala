@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 import graft.util.Generations
 
@@ -13,7 +14,11 @@ import graft.util.Generations
   * in with DELTA-SIZED work (delta shingling → delta pairs against the
   * stored signatures, [[Dedup.minhashNearDupsDeltaFromSigs]] — no
   * old×old candidate work, no base re-shingling → label contraction,
-  * [[Dedup.componentsIncremental]]), and each fold publishes through the
+  * [[Dedup.componentsIncremental]]), a re-ingest/deletion batch
+  * ([[upsertDocs]]) retires and re-lands through that SAME single
+  * contraction (the retiring documents' components re-enter unlabeled
+  * beside the batch's pairs — one delta-sized pass, no separate purge
+  * relabel), and each fold publishes through the
   * one-object atomic manifest-pointer commit with deferred GC. The
   * streaming face is exactly-once via the batch-id ledger (the
   * IndexStore contract). LedgerStoreSpec pins the q130 invariant across
@@ -119,15 +124,16 @@ object LedgerStore {
   /** Tombstoned doc ids (the [[purgeDocs]] ledger): slices in the live
     * window; empty when no purge ever ran OR every tombstone slice has
     * been vacuumed (the dir then exists but holds no slice dirs —
-    * schema inference would fail on it). */
-  private def livePurged(spark: SparkSession, dir: String,
-      m: Meta): DataFrame = {
+    * schema inference would fail on it). `schema` (the data columns,
+    * `id` only) skips the inference job when the caller knows it. */
+  private def livePurged(spark: SparkSession, dir: String, m: Meta,
+      schema: Option[StructType] = None): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/purged")
     val hc = graft.util.Hfs.conf(spark)
     val hasSlices = graft.util.Hfs.exists(p, hc) &&
       graft.util.Hfs.list(p, hc).exists(_.getPath.getName.startsWith("slice="))
     if (hasSlices)
-      spark.read.parquet(s"$dir/purged")
+      readSlices(spark, s"$dir/purged", schema)
         .filter(col("slice") >= m.sliceBase && col("slice") < m.slices)
         .select(col("id"), col("slice").cast("long").as("_tomb"))
     else {
@@ -136,29 +142,46 @@ object LedgerStore {
     }
   }
 
-  /** The LIVE signature store under the v5 SLICE-ORDERED mask: a
-    * tombstone at slice S masks only copies OLDER than it — an
-    * [[upsertDocs]] re-landed signature (data slice above its own
+  private def readSlices(spark: SparkSession, path: String,
+      schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read)(spark.read.schema(_)).parquet(path)
+
+  /** A LIVE slice store (`sigs` or `postings`) under the v5
+    * SLICE-ORDERED mask: a tombstone at slice S masks only copies OLDER
+    * than it — an [[upsertDocs]] re-landed row (data slice above its own
     * tombstone) stays visible; pure purges read exactly as v4. */
-  private def liveSigs(spark: SparkSession, dir: String, m: Meta): DataFrame = {
-    val tomb = livePurged(spark, dir, m)
-      .select(col("id").as("_tid"), col("_tomb"))
-    spark.read.parquet(s"$dir/sigs")
+  private def liveSlices(spark: SparkSession, dir: String, sub: String,
+      m: Meta, tombs: DataFrame,
+      schema: Option[StructType] = None): DataFrame = {
+    val tomb = tombs.select(col("id").as("_tid"), col("_tomb"))
+    readSlices(spark, s"$dir/$sub", schema)
       .filter(col("slice") >= m.sliceBase && col("slice") < m.slices)
       .join(tomb, col("id") === col("_tid") && col("_tomb") > col("slice"),
         "left_anti")
       .drop("slice")
   }
 
-  private def livePostings(spark: SparkSession, dir: String,
-      m: Meta): DataFrame = {
-    val tomb = livePurged(spark, dir, m)
-      .select(col("id").as("_tid"), col("_tomb"))
-    spark.read.parquet(s"$dir/postings")
-      .filter(col("slice") >= m.sliceBase && col("slice") < m.slices)
-      .join(tomb, col("id") === col("_tid") && col("_tomb") > col("slice"),
-        "left_anti")
-      .drop("slice")
+  private def liveSigs(spark: SparkSession, dir: String, m: Meta): DataFrame =
+    liveSlices(spark, dir, "sigs", m, livePurged(spark, dir, m))
+
+  /** One fold's read of the committed state — the labels, tombstones,
+    * signatures and postings, each listed and read ONCE — with every
+    * schema taken from the fold's own delta signatures (their writer),
+    * so no read pays a schema-inference job. */
+  private final case class Live(labels: DataFrame, tombs: DataFrame,
+      sigs: DataFrame, postings: DataFrame)
+
+  private def liveWindow(spark: SparkSession, dir: String, m: Meta,
+      sigSchema: StructType): Live = {
+    val idField = sigSchema("id")
+    val tombs = livePurged(spark, dir, m, Some(StructType(Seq(idField))))
+    Live(
+      spark.read.schema(StructType(Seq(idField, idField.copy(name = "comp"))))
+        .parquet(s"$dir/gen=${m.gen}/labels"),
+      tombs,
+      liveSlices(spark, dir, "sigs", m, tombs, Some(sigSchema)),
+      liveSlices(spark, dir, "postings", m, tombs, Some(StructType(Seq(
+        StructField("bucket", IntegerType), idField)))))
   }
 
   /** Write ONE fold's outputs: the delta slice (sigs + bp-partitioned
@@ -179,7 +202,8 @@ object LedgerStore {
     deltaPostings.write.mode("overwrite").partitionBy("bp")
       .parquet(s"$dir/postings/slice=$sliceId")
     labels.write.mode("overwrite").parquet(s"$dir/gen=${meta.gen}/labels")
-    val n = spark.read.parquet(s"$dir/gen=${meta.gen}/labels").count()
+    val n = spark.read.schema(labels.schema)
+      .parquet(s"$dir/gen=${meta.gen}/labels").count()
     commitMeta(spark, dir, meta.copy(rows = n, commit = meta.commit + 1))
     Generations.gc(spark, dir, meta.gen - (retainGens - 1))
     meta.gen
@@ -204,10 +228,11 @@ object LedgerStore {
       case Some(m) if m.slices - m.sliceBase > 1 =>
         val merged = m.slices
         Generations.claimSlice(spark, dir, Seq("purged"), merged)
-        liveSigs(spark, dir, m).write.mode("overwrite")
+        val tombs = livePurged(spark, dir, m)
+        liveSlices(spark, dir, "sigs", m, tombs).write.mode("overwrite")
           .parquet(s"$dir/sigs/slice=$merged")
-        livePostings(spark, dir, m).write.mode("overwrite").partitionBy("bp")
-          .parquet(s"$dir/postings/slice=$merged")
+        liveSlices(spark, dir, "postings", m, tombs).write.mode("overwrite")
+          .partitionBy("bp").parquet(s"$dir/postings/slice=$merged")
         commitMeta(spark, dir,
           m.copy(sliceBase = merged, slices = merged + 1,
             commit = m.commit + 1))
@@ -306,15 +331,33 @@ object LedgerStore {
   /** DOCUMENT RE-INGEST (round 12) — [[graft.dedup.SemLedgerStore
     * .upsertVecs]]'s text twin, completing the ledger side of the
     * upsert matrix: a changed document retires its OLD signature, lands
-    * the NEW one, re-pairs against the post-purge corpus, and relabels
-    * affected components — atomically, in one ledgered commit (the v5
-    * slice-ordered mask keeps the re-landed copy visible above its own
-    * tombstone; purge-then-fold as two verbs would leave the crash
-    * window where a replay purges the re-landed copy). `removeIds`
-    * deletes outright; ids in both re-land. Exactness inherits
-    * [[purgeDocs]]'s closure caveat: the relabel is exact in the
-    * UNCAPPED profile. Returns the new generation (None for replays /
-    * fully-empty batches). */
+    * the NEW one, re-pairs against the post-retirement corpus, and
+    * relabels affected components — atomically, in one ledgered commit
+    * (the v5 slice-ordered mask keeps the re-landed copy visible above
+    * its own tombstone; purge-then-fold as two verbs would leave the
+    * crash window where a replay purges the re-landed copy). `removeIds`
+    * deletes outright; ids in both re-land. Returns the new generation
+    * (None for replays / fully-empty batches).
+    *
+    * ONE delta-sized pass per batch:
+    *  - one checkpointed AFFECTED SET ([[Dedup.affectedComponents]]) —
+    *    every label row of a component holding an incoming or removed
+    *    id, flagged when the row IS such an id — yields both the
+    *    retiring `targets` and the remaining `members`;
+    *  - the members re-enter UNLABELED, and their stored pairs (`pairsM`:
+    *    all pairs among the members' stored signatures) join the new
+    *    signatures' pairs against the post-retirement corpus
+    *    (`deltaPairs`) in ONE contraction over the untouched components'
+    *    labels ([[Dedup.relabelAffected]]).
+    *
+    * Exactness: the one contraction gives the labels a purge relabel
+    * by `components(pairsM)` followed by a `deltaPairs` contraction
+    * would (the argument is on [[Dedup.relabelAffected]]), in the capped
+    * profile too — `pairsM` and `deltaPairs` are the same pair sets
+    * either way. What the relabel recovers inherits [[purgeDocs]]'s
+    * closure caveat: it is the full recompute in the UNCAPPED profile.
+    * A batch that touches only singleton components (no members) skips
+    * the member pairs; one that also forms no pair skips the fixpoint. */
   def upsertDocs(upserts: DataFrame, id: Column, text: Column,
       removeIds: DataFrame, dir: String, retainGens: Int = 2,
       batchId: Long = -1L): Option[Long] = {
@@ -329,57 +372,45 @@ object LedgerStore {
     // would both sit above the tombstone and both stay visible
     val docs = graft.util.Maintenance.requireUniqueUpserts(
       upserts.select(id.as("doc_id"), text.as("text")), "doc_id",
-      "dedup-ledger").localCheckpoint(true)
+      "dedup-ledger")
+    val docIds = docs.select(col("doc_id").as("id"))
     // ids in both upserts and removeIds re-land (the upsert wins)
     val rem = removeIds.select(removeIds.columns.head).toDF("id")
       .distinct()
-      .join(docs.select(col("doc_id").as("id")), Seq("id"), "left_anti")
+      .join(docIds, Seq("id"), "left_anti")
       .localCheckpoint(true)
-    if (docs.isEmpty && rem.isEmpty) {
+    val hasDocs = !docs.isEmpty
+    if (!hasDocs && rem.isEmpty) {
       recordEmptyBatch(spark, dir, Some(m), batchId); return None
     }
     val threshold = m.thresholdPerMille / 1000.0
-    val labels = spark.read.parquet(s"$dir/gen=${m.gen}/labels")
-    val targets = docs.select(col("doc_id").as("id")).unionByName(rem)
-      .distinct()
-      .join(labels.select(col("id")), Seq("id"), "left_semi")
-      .localCheckpoint(true)
-    // PURGE PHASE (against the pre-commit state): affected components
-    // relabel from their remaining members' stored signatures
-    val comps = labels.join(targets, Seq("id"), "left_semi")
-      .select(col("comp")).distinct()
-    val members = labels.join(comps, Seq("comp"), "left_semi")
-      .join(targets, Seq("id"), "left_anti")
-      .select(col("id"))
-    val sigsM = liveSigs(spark, dir, m)
-      .join(members, Seq("id"), "left_semi").localCheckpoint(true)
-    val pairsM = Dedup.minhashNearDupsDeltaFromSigs(
-      sigsM.limit(0), sigsM, threshold, m.k, m.bands,
-      maxBucketSize = m.maxBucket)
-    val lblM = Dedup.components(pairsM, col("a_id"), col("b_id"))
-    val relabeled = members
-      .join(lblM.select(col("id"), col("comp")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
-    val labelsAfterPurge = labels.join(comps, Seq("comp"), "left_anti")
-      .select(col("id"), col("comp"))
-      .unionByName(relabeled).localCheckpoint(true)
-    val sigsAfterPurge = liveSigs(spark, dir, m)
-      .join(targets, Seq("id"), "left_anti")
-    val postingsAfterPurge = livePostings(spark, dir, m)
-      .join(targets, Seq("id"), "left_anti")
-    // FOLD PHASE: the new signatures pair against the post-purge corpus
-    // through the pruned posting path (the maintainBatch production fold)
     val deltaSigs = Dedup.minhashSigSets(docs, col("doc_id"), col("text"),
       k = m.k).localCheckpoint(true)
+    val live = liveWindow(spark, dir, m, deltaSigs.schema)
+    // docs and rem hold disjoint unique ids
+    val affected = Dedup.affectedComponents(live.labels,
+      docIds.unionByName(rem))
+    val targets = affected.filter(col("_t")).select(col("id"))
+    val members = affected.filter(!col("_t")).select(col("id"))
+    val pairsM =
+      if (members.isEmpty) None
+      else {
+        val sigsM = live.sigs.join(members, Seq("id"), "left_semi")
+          .localCheckpoint(true)
+        Some(Dedup.minhashNearDupsDeltaFromSigs(
+          sigsM.limit(0), sigsM, threshold, m.k, m.bands,
+          maxBucketSize = m.maxBucket, materialize = false))
+      }
+    // the new signatures pair against the post-retirement corpus through
+    // the pruned posting path (the maintainBatch production fold)
     val deltaPairs = Dedup.minhashNearDupsDeltaFromPostings(
-      postingsAfterPurge, sigsAfterPurge, deltaSigs, threshold, m.k,
-      m.bands, maxBucketSize = m.maxBucket, prefixes = m.prefixes)
-      .localCheckpoint(true)
-    val allIds = labelsAfterPurge.select(col("id"))
-      .unionByName(docs.select(col("doc_id").as("id"))).distinct()
-    val newLabels = Dedup.componentsIncremental(
-      labelsAfterPurge, allIds, col("id"), deltaPairs,
-      col("a_id"), col("b_id"))
+      live.postings.join(targets, Seq("id"), "left_anti"),
+      live.sigs.join(targets, Seq("id"), "left_anti"), deltaSigs,
+      threshold, m.k, m.bands, maxBucketSize = m.maxBucket,
+      prefixes = m.prefixes, materialize = false)
+    val edges = pairsM.fold(deltaPairs)(deltaPairs.unionByName(_))
+    val newLabels = Dedup.relabelAffected(live.labels, affected, docIds,
+      edges)
     // WRITES: tombstone slice first (the mask covers only OLDER
     // slices), sig/posting slices above it, labels, ONE commit
     var next = m.slices
@@ -388,7 +419,7 @@ object LedgerStore {
       targets.write.mode("overwrite").parquet(s"$dir/purged/slice=$next")
       next += 1
     }
-    if (!docs.isEmpty) {
+    if (hasDocs) {
       Generations.claimSlice(spark, dir, Seq("purged"), next)
       deltaSigs.write.mode("overwrite").parquet(s"$dir/sigs/slice=$next")
       Dedup.minhashPostings(deltaSigs, m.k, m.bands, m.prefixes)
@@ -402,7 +433,8 @@ object LedgerStore {
     }
     val gen = m.gen + 1
     newLabels.write.mode("overwrite").parquet(s"$dir/gen=$gen/labels")
-    val n = spark.read.parquet(s"$dir/gen=$gen/labels").count()
+    val n = spark.read.schema(newLabels.schema)
+      .parquet(s"$dir/gen=$gen/labels").count()
     commitMeta(spark, dir, m.copy(gen = gen, rows = n, batch = batchId,
       slices = next, commit = m.commit + 1))
     Generations.gc(spark, dir, gen - (retainGens - 1))
@@ -542,14 +574,15 @@ object LedgerStore {
             s"maxBucket=${m.maxBucket}); " +
             s"refusing a mismatched fold ($perMille‰, $k, $bands, " +
             s"$prefixes, $maxBucketSize) — one ledger, one signature family")
-        val (labels, sigs, _) = load(spark, dir)
-        val postings = livePostings(spark, dir, m)
+        require(m.format == Format, s"$dir holds '${m.format}', expected $Format")
+        val live = liveWindow(spark, dir, m, Dedup.minhashSigSets(
+          docs, col("doc_id"), col("text"), k = k).schema)
         // TOMBSTONE SCREEN (round-10 ADVICE): a purged id stays purged
         // until compact+vacuum physically drop its tombstone — re-folding
         // it would re-enter the labels table while the tombstone hides
         // its signature from every pairing read.
         val screened = docs.join(
-          livePurged(spark, dir, m).select(col("id").as("doc_id")),
+          live.tombs.select(col("id").as("doc_id")),
           Seq("doc_id"), "left_anti")
         if (screened.isEmpty) { recordEmptyBatch(spark, dir, Some(m), batchId); return None }
         val deltaSigs = Dedup.minhashSigSets(screened, col("doc_id"),
@@ -557,12 +590,13 @@ object LedgerStore {
         // the production fold: the old side reads only the delta's
         // touched prefix partitions of the LIVE posting slices
         val deltaPairs = Dedup.minhashNearDupsDeltaFromPostings(
-          postings, sigs, deltaSigs, threshold, k, bands,
-          maxBucketSize = maxBucketSize, prefixes = prefixes)
-        val allIds = labels.select(col("id"))
+          live.postings, live.sigs, deltaSigs, threshold, k, bands,
+          maxBucketSize = maxBucketSize, prefixes = prefixes,
+          materialize = false)
+        val allIds = live.labels.select(col("id"))
           .unionByName(screened.select(col("doc_id").as("id")))
         val newLabels = Dedup.componentsIncremental(
-          labels, allIds, col("id"), deltaPairs, col("a_id"), col("b_id"))
+          live.labels, allIds, col("id"), deltaPairs, col("a_id"), col("b_id"))
         // writes: ONLY the delta slice + the labels — the stores append
         Some(publish(spark, dir, newLabels, deltaSigs,
           Dedup.minhashPostings(deltaSigs, k, bands, prefixes)

@@ -336,13 +336,17 @@ object SemLedgerStore {
     * slice-ordered mask keeps them visible), the relabeled components,
     * and the batch ledger.
     *
-    * Labels re-derive in two steps against the pre-commit state: the
-    * purge relabel ([[purgeVecs]]'s pair-closure recompute over the
-    * affected components minus the targets), then the incremental fold
-    * contraction over the new vectors' delta pairs — exact under the
-    * same closure argument both parent verbs carry. `removeIds` deletes
-    * outright; ids in both re-land (the upsert wins). Returns the new
-    * generation (None for replays / fully-empty batches). */
+    * Labels re-derive in ONE contraction ([[LedgerStore.upsertDocs]]'s
+    * form): one checkpointed affected set ([[Dedup.affectedComponents]])
+    * splits into the retiring targets and the remaining members; the
+    * members re-enter unlabeled, and their stored-vector pairs
+    * ([[purgeVecs]]' recompute over the members) join the new vectors'
+    * delta pairs in one contraction over the untouched components'
+    * labels ([[Dedup.relabelAffected]]) — identical labels to
+    * relabel-then-contract, exact under the same closure argument both
+    * parent verbs carry. `removeIds`
+    * deletes outright; ids in both re-land (the upsert wins). Returns
+    * the new generation (None for replays / fully-empty batches). */
   def upsertVecs(upserts: DataFrame, id: Column, vec: Column,
       removeIds: DataFrame, dir: String, retainGens: Int = 2,
       batchId: Long = -1L): Option[Long] = {
@@ -357,7 +361,6 @@ object SemLedgerStore {
     // slice would both sit above the tombstone and both stay visible
     val newVecs = graft.util.Maintenance.requireUniqueUpserts(
       upserts.select(id.as("id"), vec.as("v")), "id", "semantic-ledger")
-      .localCheckpoint(true)
     // an id in both upserts and removeIds re-lands (the upsert wins) —
     // drop the overlap HERE so the contract is the verb's, not an
     // accident of downstream set algebra
@@ -370,55 +373,28 @@ object SemLedgerStore {
     }
     val threshold = m.thresholdPerMille / 1000.0
     val labels = spark.read.parquet(s"$dir/gen=${m.gen}/labels")
-    val targets = newVecs.select(col("id")).unionByName(rem).distinct()
-      .join(labels.select(col("id")), Seq("id"), "left_semi")
-      .localCheckpoint(true)
-    // PURGE PHASE (computed against the pre-commit state): affected
-    // components relabel from their remaining members' stored vectors
-    val comps = labels.join(targets, Seq("id"), "left_semi")
-      .select(col("comp")).distinct()
-    val members = labels.join(comps, Seq("comp"), "left_semi")
-      .join(targets, Seq("id"), "left_anti")
-      .select(col("id"))
-    // The purge-relabel chain (LSH over the affected components'
-    // remaining members + a components fixpoint) and the FOLD-phase
-    // delta-pair chain (LSH of the new vectors against the post-purge
-    // corpus) are INDEPENDENT — neither reads the other's result — and
-    // both are long sequences of tiny jobs (round 17, measured: the
-    // whole refresh fold ran 134 sequential jobs carrying 4.3 summed
-    // task-seconds in 27 s of wall at sf0.01). Run them from two driver
-    // threads so one chain's jobs back-fill the other's idle cores
-    // (guide §2.6); results and the commit sequence are unchanged.
-    val (labelsAfterPurge, deltaPairs) = {
-      val rs = graft.util.Par.all(Seq[() => DataFrame](
-        () => {
-          val vecsM = liveVecs(spark, dir, m)
-            .join(members, Seq("id"), "left_semi").localCheckpoint(true)
-          val pairsM = Dedup.lshNearDups(vecsM, col("id"), col("v"),
-            m.nBands, m.planesPerBand, m.dim, threshold)
-          val lblM = Dedup.components(pairsM, col("a_id"), col("b_id"))
-          val relabeled = members
-            .join(lblM.select(col("id"), col("comp")), Seq("id"), "left")
-            .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
-          labels.join(comps, Seq("comp"), "left_anti")
-            .select(col("id"), col("comp"))
-            .unionByName(relabeled).localCheckpoint(true)
-        },
-        () => {
-          // FOLD PHASE: the new vectors pair against the post-purge corpus
-          val vecsAfterPurge = liveVecs(spark, dir, m)
-            .join(targets, Seq("id"), "left_anti")
-          Dedup.lshNearDupsDelta(vecsAfterPurge, newVecs,
-            col("id"), col("v"), m.nBands, m.planesPerBand, m.dim,
-            threshold).localCheckpoint(true)
-        }))
-      (rs(0), rs(1))
-    }
-    val allIds = labelsAfterPurge.select(col("id"))
-      .unionByName(newVecs.select(col("id"))).distinct()
-    val newLabels = Dedup.componentsIncremental(
-      labelsAfterPurge, allIds, col("id"), deltaPairs,
-      col("a_id"), col("b_id"))
+    // newVecs and rem hold disjoint unique ids
+    val affected = Dedup.affectedComponents(labels,
+      newVecs.select(col("id")).unionByName(rem))
+    val targets = affected.filter(col("_t")).select(col("id"))
+    val members = affected.filter(!col("_t")).select(col("id"))
+    val vecs = liveVecs(spark, dir, m)
+    val pairsM =
+      if (members.isEmpty) None
+      else {
+        val vecsM = vecs.join(members, Seq("id"), "left_semi")
+          .localCheckpoint(true)
+        Some(Dedup.lshNearDups(vecsM, col("id"), col("v"),
+          m.nBands, m.planesPerBand, m.dim, threshold))
+      }
+    // the new vectors pair against the post-retirement corpus
+    val deltaPairs = Dedup.lshNearDupsDelta(
+      vecs.join(targets, Seq("id"), "left_anti"), newVecs,
+      col("id"), col("v"), m.nBands, m.planesPerBand, m.dim,
+      threshold).localCheckpoint(true)
+    val edges = pairsM.fold(deltaPairs)(deltaPairs.unionByName(_))
+    val newLabels = Dedup.relabelAffected(labels, affected,
+      newVecs.select(col("id")), edges)
     // WRITES: tombstone slice first (the mask covers only OLDER
     // slices), new vec/pair slices above it, labels, ONE commit
     var next = m.slices

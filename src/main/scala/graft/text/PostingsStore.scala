@@ -264,7 +264,6 @@ object PostingsStore {
     // in nDocs/totTokens
     val docs = graft.util.Maintenance.requireUniqueUpserts(
       upserts.select(id.as("id"), text.as("text")), "id", "postings-store")
-      .localCheckpoint(true)
     // ids in both upserts and removeIds re-land (the upsert wins)
     val rem = removeIds.select(removeIds.columns.head).toDF("id")
       .distinct()

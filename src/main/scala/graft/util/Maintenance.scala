@@ -147,10 +147,12 @@ object Maintenance {
     * arbitrary pick would be nondeterministic across replays (callers
     * with a version column pre-reduce to latest-per-key, the
     * followMergeTable pattern). Cost: one distinct + one bounded agg
-    * over the DELTA — small by the feed design. */
+    * over the DELTA — small by the feed design. The distinct rows come
+    * back as an eager local checkpoint — the duplicate check reads it,
+    * and so does the caller, without recomputing the batch. */
   def requireUniqueUpserts(batch: DataFrame, idCol: String,
       what: String): DataFrame = {
-    val d = batch.distinct()
+    val d = batch.distinct().localCheckpoint(true)
     val dup = d.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
       .filter(col("n") > 1).select(col(idCol)).take(5)
     require(dup.isEmpty,

@@ -12,6 +12,13 @@ package graft.util
   * Failure contract (ADVICE r16 on the q287 futures): EVERY task is
   * awaited before the first failure is rethrown — a thrown fold must not
   * leave sibling chains running detached jobs on a pool nobody joins.
+  *
+  * Interrupt contract (ADVICE r17): an interrupt of the CALLER while it
+  * waits is not a task failure. The pool is cancelled (`shutdownNow`
+  * interrupts every running task), the caller waits until the tasks
+  * have left, restores its interrupt flag and rethrows the
+  * `InterruptedException` — it neither swallows the interrupt nor
+  * leaves a task running behind it.
   */
 object Par {
 
@@ -37,10 +44,26 @@ object Par {
         catch {
           case e: java.util.concurrent.ExecutionException =>
             Left(Option(e.getCause).getOrElse(e))
+          case e: InterruptedException =>
+            cancelAndJoin(pool)
+            Thread.currentThread().interrupt()
+            throw e
           case e: Throwable => Left(e)
         })
       outcomes.collectFirst { case Left(e) => e }.foreach(throw _)
       outcomes.collect { case Right(v) => v }
     } finally pool.shutdown()
+  }
+
+  /** Interrupt every task of `pool` and wait until all have left; a
+    * repeated interrupt of the waiting thread does not cut the wait
+    * short (the caller restores the flag afterwards). */
+  private def cancelAndJoin(
+      pool: java.util.concurrent.ExecutorService): Unit = {
+    pool.shutdownNow()
+    var joined = false
+    while (!joined)
+      try joined = pool.awaitTermination(1, java.util.concurrent.TimeUnit.SECONDS)
+      catch { case _: InterruptedException => () }
   }
 }

@@ -139,7 +139,8 @@ object PipelineLedger {
     // already-folded stores through their batch ledgers
     // (PipelineLedgerSpec pins both faces). Par.all awaits every fold
     // before rethrowing, so no fold's jobs are orphaned by a sibling's
-    // failure.
+    // failure; an interrupt of this thread interrupts the folds, waits
+    // for them to leave and propagates with the flag set.
     Par.all(stores.map(st => () => {
       spark.sparkContext.setJobDescription(s"pipeline fold: ${st.name}")
       st.fold(batch, batchId)

@@ -323,6 +323,26 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  test("componentsIncremental with no delta edges returns the base " +
+      "labeling exactly") {
+    val baseLabels = Seq((1L, 1L), (2L, 1L), (3L, 3L), (5L, 3L), (7L, 7L))
+      .toDF("id", "comp")
+    // 9 is a new vertex (labels itself); 7 is labeled but absent from ids
+    val ids = Seq(1L, 2L, 3L, 5L, 9L).toDF("id")
+    val noEdges = Seq.empty[(Long, Long)].toDF("a", "b")
+    val inc = Dedup.componentsIncremental(baseLabels, ids, col("id"),
+      noEdges, col("a"), col("b"))
+    assert(inc.columns.toSeq == Seq("id", "comp"))
+    assert(inc.as[(Long, Long)].collect().sorted.toSeq ==
+      Seq((1L, 1L), (2L, 1L), (3L, 3L), (5L, 3L), (9L, 9L)))
+    // an edge inside one component contracts to a self-loop and is
+    // dropped too: still the base labeling
+    val inside = Dedup.componentsIncremental(baseLabels, ids, col("id"),
+      Seq((2L, 1L)).toDF("a", "b"), col("a"), col("b"))
+    assert(inside.as[(Long, Long)].collect().sorted.toSeq ==
+      inc.as[(Long, Long)].collect().sorted.toSeq)
+  }
+
   test("minhashNearDupsDelta: exactly the full pair set that touches a new doc") {
     val corpus = docs // ids 1..5; mark 3..5 as the delta
     val flagged = corpus.withColumn("is_new", col("doc_id") >= 3L)

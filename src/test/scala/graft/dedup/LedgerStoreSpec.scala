@@ -254,6 +254,44 @@ class LedgerStoreSpec extends AnyFunSuite {
     assert(storedLabels(dir).contains(3L))
   }
 
+  test("upsertDocs: re-texting the bridge of a three-document component " +
+      "splits its remaining members, and a re-landed document joins " +
+      "another component — labels equal the full recompute") {
+    val dir = Files.createTempDirectory("ledgerbridge").toString
+    def words(p: String, lo: Int, hi: Int) =
+      (lo to hi).map(i => s"$p$i").mkString(" ")
+    // word 3-gram Jaccard: 1~2 and 2~3 at 0.57, 1~3 at 0.29; 5~6 at 0.71
+    val seed = Seq(1L -> words("t", 1, 20), 2L -> words("t", 6, 25),
+      3L -> words("t", 11, 30), 4L -> words("d", 1, 20),
+      5L -> words("e", 1, 20), 6L -> words("e", 4, 23),
+      7L -> words("g", 1, 20), 8L -> words("h", 1, 20))
+    assert(LedgerStore.maintainBatch(seed.toDF("doc_id", "text"),
+      col("doc_id"), col("text"), dir, batchId = 0L).contains(0L))
+    val before = storedLabels(dir)
+    assert(before(1L) == 1L && before(2L) == 1L && before(3L) == 1L &&
+      before(5L) == 5L && before(6L) == 5L, s"fixture labels $before")
+    // one batch: the bridge 2 leaves its component, 4 re-lands beside
+    // 5 and 6 (and, being smaller, relabels them), 8 is removed
+    val upserts = Seq(2L -> words("z", 1, 20), 4L -> words("e", 2, 21))
+    assert(LedgerStore.upsertDocs(upserts.toDF("doc_id", "text"),
+      col("doc_id"), col("text"), Seq(8L).toDF("id"), dir,
+      batchId = 1L).nonEmpty)
+    val corpus = (seed.toMap ++ upserts - 8L).toSeq.toDF("doc_id", "text")
+    val pairsFull = Dedup.minhashNearDups(corpus, col("doc_id"),
+      col("text"), threshold = 0.5, bands = 16,
+      maxBucketSize = Int.MaxValue)
+    val lblFull = Dedup.components(pairsFull, col("a_id"), col("b_id"))
+    val expect = corpus
+      .join(lblFull.select(col("id").as("doc_id"), col("comp")),
+        Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("comp"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(expect == Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L,
+      5L -> 4L, 6L -> 4L, 7L -> 7L), s"recompute $expect")
+    assert(storedLabels(dir) == expect)
+    assert(LedgerStore.meta(spark, dir).get.rows == expect.size)
+  }
+
   test("purgeDocs: decremental maintenance — affected components " +
       "relabel from stored signatures, tombstones block later folds, " +
       "compact makes the removal physical") {

@@ -26,7 +26,6 @@ class CollectAuditSpec extends AnyFunSuite {
     "CdcPipelineDemo.scala" -> (1, "demo driver tool (bounded fixture)"),
     "DriftProbe.scala" -> (3, "probe tool: recall/drift scalars"),
     "IndexProbe.scala" -> (2, "probe tool: record-count scalars"),
-    "PerfProbe.scala" -> (1, "probe tool: stage timing rows"),
     "PostingsProbe.scala" -> (2, "probe tool: stats scalars"),
     "PurgeProbe.scala" -> (2, "probe tool: count scalars"),
     "ann/AnnQueries.scala" -> (15,

@@ -148,4 +148,22 @@ class MaintenanceSpec extends AnyFunSuite {
       .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("comp"))
     assert(inc.exceptAll(full).count() == 0 && full.exceptAll(inc).count() == 0)
   }
+
+  test("requireUniqueUpserts: exact duplicates collapse to one row per " +
+      "id, conflicting rows for one id fail loudly") {
+    import spark.implicits._
+    val batch = Seq((1L, "a"), (1L, "a"), (2L, "b"), (3L, "c"), (3L, "c"))
+      .toDF("id", "text")
+    val unique = Maintenance.requireUniqueUpserts(batch, "id", "spec")
+    assert(unique.as[(Long, String)].collect().sorted.toSeq ==
+      Seq((1L, "a"), (2L, "b"), (3L, "c")))
+    assert(unique.count() == 3L) // a second read agrees
+    val e = intercept[IllegalArgumentException] {
+      Maintenance.requireUniqueUpserts(
+        Seq((1L, "a"), (1L, "a"), (2L, "b"), (2L, "B")).toDF("id", "text"),
+        "id", "spec")
+    }
+    assert(e.getMessage.contains("spec upsert batch carries CONFLICTING " +
+      "rows for the same id (e.g. 2)"))
+  }
 }
