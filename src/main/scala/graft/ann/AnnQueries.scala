@@ -1105,32 +1105,31 @@ object AnnQueries {
       // round 16: the composed read was 46 sequential stages carrying
       // 1.9 summed task-seconds — pure orchestration latency). Results
       // are bounded 10-id lists either way; nothing about the plans or
-      // their outputs changes, only their scheduling overlaps.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val fExact = Future {
-        val (idx, meta) = IndexStore.loadIvfAt(s, s"$base/index",
-          set.stores("index"))
-        val tk = IndexStore.searchPruned(idx, queryVec(s, d), k = 10,
-          nprobe = 8).localCheckpoint(true)
-        val topIds = tk.select(col("nn_id")).collect()
-          .map(_.getLong(0)).toSet
-        (tk, meta, topIds)
-      }
-      // PQ invariant flag (the q280/q247 pattern): the pinned composite
-      // index's ADC top-10 must overlap the exact top-10 by >= 3.
-      // Driver-side work is two bounded 10-id lists.
-      val fPq = Future {
-        val (pqIdx, pqMeta) = IndexStore.loadIvfPqAt(s, s"$base/pq",
-          set.stores("pq"))
-        val qv = queryVec(s, d).head().getSeq[Float](0)
-          .map(_.toDouble).toSeq
-        (Similarity.ivfPqSearchAdc(pqIdx, qv, k = 10,
-          nprobe = 8).collect().map(_.getLong(0)), pqMeta)
-      }
-      val (tk, meta, topIds) = Await.result(fExact, Duration.Inf)
-      val (adc, pqMeta) = Await.result(fPq, Duration.Inf)
+      // their outputs changes, only their scheduling overlaps. Par.all
+      // awaits both chains before rethrowing a failure and cancels
+      // both when the caller is interrupted.
+      val Seq(Left((tk, meta, topIds)), Right((adc, pqMeta))) =
+        graft.util.Par.all(Seq(
+          () => Left {
+            val (idx, meta) = IndexStore.loadIvfAt(s, s"$base/index",
+              set.stores("index"))
+            val tk = IndexStore.searchPruned(idx, queryVec(s, d), k = 10,
+              nprobe = 8).localCheckpoint(true)
+            val topIds = tk.select(col("nn_id")).collect()
+              .map(_.getLong(0)).toSet
+            (tk, meta, topIds)
+          },
+          // PQ invariant flag (the q280/q247 pattern): the pinned
+          // composite index's ADC top-10 must overlap the exact top-10
+          // by >= 3. Driver-side work is two bounded 10-id lists.
+          () => Right {
+            val (pqIdx, pqMeta) = IndexStore.loadIvfPqAt(s, s"$base/pq",
+              set.stores("pq"))
+            val qv = queryVec(s, d).head().getSeq[Float](0)
+              .map(_.toDouble).toSeq
+            (Similarity.ivfPqSearchAdc(pqIdx, qv, k = 10,
+              nprobe = 8).collect().map(_.getLong(0)), pqMeta)
+          }))
       val pqOk = adc.count(topIds) >= 3
       // the hits' CURRENT baskets (the merge table IS the post-refresh
       // corpus) -> their three pairwise edges from the PINNED graph.

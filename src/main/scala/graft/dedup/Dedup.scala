@@ -700,14 +700,13 @@ object Dedup {
     * layout the [[minhashNearDupsDeltaFromSigs]] scaladoc declares
     * ("keep the bucket posting table partitioned by bucket, making even
     * that scan incremental"), made materializable: one row per
-    * (document, band) with the band's bucket key and its PARTITION
-    * PREFIX `bp = pmod(bucket, prefixes)`. Raw bucket values are
-    * hash-cardinality (millions of tiny partitions — a broken layout);
-    * the prefix folds them into `prefixes` partition dirs, and because
-    * bp is a pure function of bucket, EVERY member of a bucket lives in
-    * one prefix — so a delta fold that touches a set of buckets reads
-    * exactly the matching prefix partitions and bucket-size caps stay
-    * exact on the pruned subset. */
+    * (document, band) with the band's bucket key and its PREFIX
+    * `bp = pmod(bucket, prefixes)`. Raw bucket values are
+    * hash-cardinality; the prefix folds them into `prefixes` sort-key
+    * values, and because bp is a pure function of bucket, EVERY member
+    * of a bucket shares one prefix — so a delta fold that touches a set
+    * of buckets reads exactly the matching prefixes and bucket-size caps
+    * stay exact on the pruned subset. */
   def minhashPostings(sigs: DataFrame, k: Int = 16, bands: Int = 8,
       prefixes: Int = 64): DataFrame = {
     require(bands >= 1 && bands <= k && k % bands == 0,
@@ -721,18 +720,19 @@ object Dedup {
   }
 
   /** [[minhashNearDupsDeltaFromSigs]] against a MAINTAINED POSTING
-    * TABLE (partitioned by `bp` on disk — LedgerStore writes it): the
+    * TABLE (sorted by `bp` on disk — LedgerStore writes it): the
     * delta's band keys are computed fresh, their DISTINCT PREFIXES are
     * a bounded driver fetch (≤ `prefixes` ints), and the old side reads
-    * ONLY the matching prefix partitions — the base-sized "narrow scan
-    * of the cached store for bucket keys" becomes partition-pruned file
-    * reads whose volume tracks the delta's bucket spread, not the
-    * corpus. Old-side VERIFICATION sets join from the sig store by id —
-    * only bucket-mates of the delta survive to that join. Identical
-    * output to the FromSigs form (same keys, same caps on the touched
-    * buckets — untouched buckets produce no candidates — same
-    * JaccardSorted verify); LedgerStoreSpec pins the equality through
-    * the on-disk fold. */
+    * ONLY the matching prefixes — a `bp IN (…)` filter the parquet scan
+    * pushes down, so on a slice of several row groups the statistics
+    * skip the rest and the base-sized "narrow scan of the cached store
+    * for bucket keys" becomes reads whose volume tracks the delta's
+    * bucket spread, not the corpus. Old-side VERIFICATION sets join
+    * from the sig store by id — only bucket-mates of the delta survive
+    * to that join. Identical output to the FromSigs form (same keys,
+    * same caps on the touched buckets — untouched buckets produce no
+    * candidates — same JaccardSorted verify); LedgerStoreSpec pins the
+    * equality through the on-disk fold. */
   def minhashNearDupsDeltaFromPostings(
       oldPostings: DataFrame, oldSigs: DataFrame, newSigs: DataFrame,
       threshold: Double, k: Int = 16, bands: Int = 8,

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.StructType
@@ -250,15 +250,26 @@ private[sources] final case class CommitOffset(commit: Long) extends Offset {
   * window resolved through the store's change resolution and read as a
   * stock parquet batch. Offsets come from the manifest pointer; the
   * archived history makes every planned window replayable bit-for-bit
-  * after a restart. */
+  * after a restart.
+  *
+  * Offsets never regress: the latest offset is never below the start
+  * offset the engine hands in (the end of the last planned window). A
+  * manifest read that races a commit can see no pointer at all (commit
+  * −1); without the floor that read became an end offset below the
+  * logged one, and every restart from the checkpoint then failed on the
+  * backwards window. */
 private[sources] final class ChangesStream(spark: SparkSession,
     dir: String, store: FeedStore, sub: String, schema: StructType,
-    since: Long) extends MicroBatchStream {
+    since: Long) extends MicroBatchStream with SupportsAdmissionControl {
 
   override def initialOffset(): Offset = CommitOffset(since)
 
   override def latestOffset(): Offset =
-    CommitOffset(math.max(since, store.currentCommit(spark, dir)))
+    latestOffset(initialOffset(), ReadLimit.allAvailable())
+
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset =
+    CommitOffset(math.max(start.asInstanceOf[CommitOffset].commit,
+      store.currentCommit(spark, dir)))
 
   override def deserializeOffset(json: String): Offset = {
     val re = """\{"commit":(-?[0-9]+)\}""".r

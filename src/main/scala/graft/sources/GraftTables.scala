@@ -42,12 +42,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    merge needed — labels rewrite per generation).
   *  - `postings.postings` / `postings.doclen` / `postings.purged` —
   *    [[graft.text.PostingsStore]] substrate tables: the snapshot's
-  *    live slice window as explicit paths. `slice` and `tp` stay
-  *    HIVE PARTITION COLUMNS (basePath), so a `WHERE tp = ...` prunes
-  *    statically — the same I/O cut `bm25Query` gets, now available to
-  *    raw SQL. Tombstone semantics are SQL-visible the way they are in
-  *    any warehouse — v3 masks are SLICE-ORDERED (an upserted doc's
-  *    new copy sits above its own tombstone): `... r WHERE NOT EXISTS
+  *    live slice window as explicit paths. `slice` stays a HIVE
+  *    PARTITION COLUMN (basePath); `tp` is a data column the slices are
+  *    sorted by, so a `WHERE tp = ...` pushes into the parquet scan —
+  *    the same I/O cut `bm25Query` gets, now available to raw SQL.
+  *    Tombstone semantics are SQL-visible the way they are in any
+  *    warehouse — masks are SLICE-ORDERED (an upserted doc's new copy
+  *    sits above its own tombstone): `... r WHERE NOT EXISTS
   *    (SELECT 1 FROM purged p WHERE p.id = r.id AND p.slice > r.slice)`.
   *  - `sem.labels` — [[graft.dedup.SemLedgerStore]] component labels of
   *    the selected generation (rewritten whole per fold/purge, like the

@@ -580,8 +580,8 @@ object LmQueries {
     //    delta through the disk path (delta-only tokenization, slice
     //    append, corpus stats + ledger in one atomic commit; replay
     //    no-op on repeat), COMPACTS the slice window, and answers the
-    //    q215 query from the stored postings — term filter as a static
-    //    partition prune on the term-prefix layout, N/avgdl from the
+    //    q215 query from the stored postings — term filter pushed into
+    //    the scan of the term-prefix-sorted files, N/avgdl from the
     //    manifest. Oracle = q215's full-corpus recompute: stored
     //    postings tokenize each doc once with the identical tokenizer
     //    and fold scores in the identical sorted-term order, so
@@ -630,9 +630,9 @@ object LmQueries {
     //    frequency + collection tf) come out of plain groupBy SQL over
     //    the stored postings — no library call in the read path. The
     //    term filter is paired with the writer's own tp prefix-hash so
-    //    Catalyst prunes the term-prefix partitions statically (the
-    //    same I/O cut bm25Query gets; GraftTablesSpec pins the
-    //    PartitionFilters plan). No purge runs in this flow, so the
+    //    the scan pushes the prefix filter into the tp-sorted parquet
+    //    files (the same I/O cut bm25Query gets; GraftTablesSpec pins
+    //    the PushedFilters plan). No purge runs in this flow, so the
     //    tombstone anti-join (… NOT IN (SELECT id FROM purged)) is
     //    vacuous and omitted; its semantics are pinned by
     //    StoreHardeningSpec. Oracle = DuckDB tokenizing the corpus
@@ -651,8 +651,9 @@ object LmQueries {
       val m = PostingsStore.meta(s, dir).getOrElse(
         sys.error(s"no committed postings store at $dir"))
       // the writer's tp expression, applied to the query terms driver-
-      // side (≤|terms| ints) — makes the term filter a STATIC partition
-      // prune instead of a full-postings scan
+      // side (≤|terms| ints) — makes the term filter a parquet pushed
+      // filter over the tp-sorted row groups instead of a full-postings
+      // scan
       import s.implicits._
       val tps = Bm25Terms.toDF("term")
         .select(pmod(xxhash64(col("term")), lit(m.prefixes.toLong))
@@ -674,8 +675,8 @@ object LmQueries {
     //    tables, and `VERSION AS OF 0` resolves the SEED snapshot
     //    through the shared history archive (the q261 as-of read, now
     //    SQL-spelled). The writer's tp prefix values ride in as
-    //    literals, so the term filter still prunes the term-prefix
-    //    partitions statically. Oracle = DuckDB tokenizing the seed
+    //    literals, so the term filter still pushes into the scan of the
+    //    term-prefix-sorted files. Oracle = DuckDB tokenizing the seed
     //    corpus directly (doc_id < cut — the snapshot-0 window).
     "q271_sql_catalog" -> { (s, d) =>
       val dir = postingsStoreDir(s, d)

@@ -18,7 +18,7 @@ import graft.util.Generations
   * Layout (the LedgerStore v3 slice-window pattern):
   * {{{
   *   dir/_graft_postings_meta.json  <- pointer (+ corpus stats + window)
-  *   dir/postings/slice=S/tp=P/     <- parquet (term, id, tf)
+  *   dir/postings/slice=S/          <- parquet (term, id, tf, tp), sorted by (tp, term)
   *   dir/doclen/slice=S/            <- parquet (id, dl)
   * }}}
   *
@@ -30,12 +30,19 @@ import graft.util.Generations
   * and postings can never disagree. Replays are no-ops via the batch-id
   * ledger; [[compact]]/[[vacuumSlices]] bound the slice population.
   *
-  * The postings partition by `tp` — a term-hash prefix — so a query's
-  * term filter becomes a STATIC partition prune: [[bm25Query]] computes
-  * its ≤|terms| prefix values driver-side and opens only those
-  * partitions of the live slices, never the whole index (the
-  * IndexStore.searchPruned / LedgerStore bucket-prefix pattern on the
-  * term axis). `tp` is internal layout only and never crosses an oracle.
+  * Every posting carries `tp` — a term-hash prefix — as an ordinary
+  * data column, and each slice lands as ONE set of files (one per write
+  * task, hash-partitioned on tp) sorted by (tp, term). [[bm25Query]]
+  * computes its ≤|terms| prefix values driver-side; the `tp IN (…)`
+  * filter is a parquet PUSHED filter, so row-group min/max statistics
+  * skip the row groups outside the query's prefixes — once a slice
+  * spans several row groups. A smaller slice (every delta fold, and the
+  * whole seed slice at sf0.1: one 280 KB file) is read whole, where the
+  * directory layout opened only the query's prefixes. A slice used to
+  * be 64 prefix directories of a few hundred bytes each: every fold
+  * paid ~200 file creations and every read listed and opened them all,
+  * a per-file cost that dominated delta-sized folds. `tp` is internal
+  * layout only and never crosses an oracle.
   *
   * Contract (shared with LedgerStore): each document folds exactly once
   * — delta batches are disjoint; a doc re-folded under a new batch id
@@ -54,7 +61,12 @@ object PostingsStore {
   // tombstone is always newer than every row it targets), but a v2
   // build reading a v3 store would hide upserted rows, so the format
   // is bumped and cross-build reads fail loudly.
-  private val Format = "graft-postings-v3"
+  // v4: slices are flat files sorted by `tp` (a data column) instead
+  // of `slice=S/tp=P/` directories. A v3 store cannot take a v4 fold —
+  // its slices would mix both layouts and partition discovery fails —
+  // so [[parseMeta]] refuses every other format before any read or
+  // write.
+  private val Format = "graft-postings-v4"
 
   /** v2 (round 11): `commit` — the monotone snapshot id. Every pointer
     * flip archives its body under `_graft_history/commit-<id>.json`
@@ -72,7 +84,7 @@ object PostingsStore {
       """"commit": ([0-9]+)\}""").r
 
   private def parseMeta(dir: String, body: String): Meta = body match {
-    case MetaRe(f, b, nd, tt, px, sb, sl, c) =>
+    case MetaRe(f, b, nd, tt, px, sb, sl, c) if f == Format =>
       Meta(f, b.toLong, nd.toLong, tt.toLong, px.toInt, sb.toLong,
         sl.toLong, c.toLong)
     case other => sys.error(
@@ -90,9 +102,9 @@ object PostingsStore {
         s""""commit": ${m.commit}}""",
       m.commit)
 
-  /** Term-prefix partition key: a pure function of the term (every
-    * posting of a term lives in ONE prefix — the minhashPostings `bp`
-    * argument applied to terms). Internal layout only. */
+  /** Term-prefix sort key: a pure function of the term (every posting
+    * of a term shares ONE prefix — the minhashPostings `bp` argument
+    * applied to terms). Internal layout only. */
   private def tp(term: Column, prefixes: Int): Column =
     pmod(xxhash64(term), lit(prefixes.toLong)).cast("int")
 
@@ -212,17 +224,16 @@ object PostingsStore {
     // claim the id: a crashed PURGE may have left an orphan tombstone
     // slice here, which this commit would otherwise make live
     Generations.claimSlice(spark, dir, Seq("purged"), sliceId)
-    // postings land TERM-SORTED inside each prefix partition: parquet
-    // row-group min/max stats on `term` then make the query's term
-    // filter skip row groups within the pruned partitions too (the
-    // Z-order lesson applied to the term axis — at sf0.1 each partition
-    // is one row group and this is moot; at 100 TB it is the difference
-    // between reading a prefix's whole postings and its query terms')
+    // postings are hash-partitioned on `tp` and land sorted by
+    // (tp, term), one file per write task (AQE coalesces a delta into
+    // one): each file holds a share of the prefixes in order, so parquet
+    // row-group min/max stats on `tp` and `term` let the query's filters
+    // skip row groups (the Z-order lesson applied to the term axis — a
+    // slice below one row group is read whole and this is moot)
     toks.groupBy(col("id"), col("term")).agg(count(lit(1)).as("tf"))
       .withColumn("tp", tp(col("term"), prefixes))
       .repartition(col("tp")).sortWithinPartitions(col("tp"), col("term"))
-      .write.mode("overwrite").partitionBy("tp")
-      .parquet(s"$dir/postings/slice=$sliceId")
+      .write.mode("overwrite").parquet(s"$dir/postings/slice=$sliceId")
     toks.groupBy(col("id")).agg(count(lit(1)).as("dl"))
       .write.mode("overwrite").parquet(s"$dir/doclen/slice=$sliceId")
     // stats from what was WRITTEN (not the possibly-lazy input), then
@@ -316,8 +327,7 @@ object PostingsStore {
         toks.groupBy(col("id"), col("term")).agg(count(lit(1)).as("tf"))
           .withColumn("tp", tp(col("term"), prefixes))
           .repartition(col("tp")).sortWithinPartitions(col("tp"), col("term"))
-          .write.mode("overwrite").partitionBy("tp")
-          .parquet(s"$dir/postings/slice=$dataSlice")
+          .write.mode("overwrite").parquet(s"$dir/postings/slice=$dataSlice")
         toks.groupBy(col("id")).agg(count(lit(1)).as("dl"))
           .write.mode("overwrite").parquet(s"$dir/doclen/slice=$dataSlice")
         next += 1
@@ -375,7 +385,11 @@ object PostingsStore {
 
   /** [[graft.dedup.LedgerStore.compact]]'s retrieval twin: merge the
     * live slice window into one slice per table, advance the window in
-    * one atomic commit (stats and ledger unchanged). */
+    * one atomic commit (stats and ledger unchanged). The merged postings
+    * are hash-partitioned on `tp` before the (tp, term) sort, so each
+    * large merged file holds few prefixes and its row-group statistics
+    * skip the rest — the trade this layout makes against whole-directory
+    * skipping at large slice sizes. */
   def compact(spark: SparkSession, dir: String): Option[Long] =
     graft.util.Maintenance.withLeasedWriteLock("PostingsStore", spark, dir) {
     readMeta(spark, dir) match {
@@ -384,8 +398,7 @@ object PostingsStore {
         Generations.claimSlice(spark, dir, Seq("purged"), merged)
         live(spark, dir, "postings", m)
           .repartition(col("tp")).sortWithinPartitions(col("tp"), col("term"))
-          .write.mode("overwrite")
-          .partitionBy("tp").parquet(s"$dir/postings/slice=$merged")
+          .write.mode("overwrite").parquet(s"$dir/postings/slice=$merged")
         live(spark, dir, "doclen", m).write.mode("overwrite")
           .parquet(s"$dir/doclen/slice=$merged")
         commitMeta(spark, dir, m.copy(sliceBase = merged,
@@ -444,9 +457,9 @@ object PostingsStore {
   /** BM25 top-k served FROM THE STORE — [[LmQueries.bm25]]'s formula
     * (same rational IDF, same k1/b literals, same sorted-term IEEE
     * fold) with N and total tokens read from the manifest instead of a
-    * corpus pass, and the term filter landing as a static partition
-    * prune on `tp` (the ≤|terms| prefix values are computed driver-side
-    * — bounded metadata). Scores are bit-identical to the full
+    * corpus pass, and the term filter landing as a parquet pushed filter
+    * on `tp` (the ≤|terms| prefix values are computed driver-side —
+    * bounded metadata). Scores are bit-identical to the full
     * recompute because every input number is: tf/df/dl from the stored
     * postings (each doc tokenized once, by the same tokenizer), N and
     * Σdl from the incrementally-maintained stats. */
@@ -562,11 +575,11 @@ object PostingsStore {
 
   /** The live slice data dirs of table `sub` ("postings" | "doclen" |
     * "purged") for a committed snapshot (commit = None → current),
-    * plus the base path that keeps `slice`/`tp` as partition columns —
-    * public for the DataSource V2 catalog face
-    * ([[graft.sources.GraftTables]]): explicit slice paths make the
-    * snapshot window a STATIC property of the table (no slice filter
-    * to push), and the hive layout keeps `tp` prunable by Catalyst.
+    * plus the base path that keeps `slice` a partition column — public
+    * for the DataSource V2 catalog face ([[graft.sources.GraftTables]]):
+    * explicit slice paths make the snapshot window a STATIC property of
+    * the table (no slice filter to push), and a `tp` filter pushes into
+    * the parquet scan of the prefix-sorted files.
     * Fail-closed via [[Generations.requireSlicesReadable]]. May return
     * no dirs for "purged" (no purge ever ran). */
   def sliceDirs(spark: SparkSession, dir: String, sub: String,

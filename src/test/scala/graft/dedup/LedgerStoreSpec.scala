@@ -90,11 +90,30 @@ class LedgerStoreSpec extends AnyFunSuite {
       sigs, deltaSigs, threshold = 0.5, bands = 16,
       maxBucketSize = Int.MaxValue)
     assert(norm(viaPostings) == norm(viaSigs))
-    // the layout's point: the old side is a static partition prune of
-    // the posting table, not a full signature-store scan
+    // the layout's point: the old side is a prefix-filtered scan of the
+    // posting table (bp pushed into the parquet reader), not a full
+    // signature-store scan
     val plan = viaPostings.queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*bp".r.findFirstIn(plan).isDefined,
-      s"posting scan not partition-pruned:\n${plan.take(1500)}")
+    assert("PushedFilters: \\[[^\n]*In\\(bp, ".r.findFirstIn(plan).isDefined,
+      s"posting scan does not push the bp prefix filter:\n${plan.take(1500)}")
+  }
+
+  test("layout: a fold at prefixes = 64 lands its posting slice as " +
+      "bp-sorted files, one per write task, not one directory per prefix") {
+    val dir = Files.createTempDirectory("ledgerflat").toString
+    LedgerStore.maintainBatch(docs.filter(col("doc_id") <= 300),
+      col("doc_id"), col("text"), dir, prefixes = 64, batchId = 0L)
+    graft.FlatSlice.check(spark, s"$dir/postings/slice=0", "bp")
+  }
+
+  test("layout: once a slice spans many row groups, the pushed bp " +
+      "filter skips the row groups of the other prefixes") {
+    val dir = Files.createTempDirectory("ledgerskip").toString
+    graft.FlatSlice.withSmallRowGroups(spark) {
+      LedgerStore.maintainBatch(docs.filter(col("doc_id") <= 300),
+        col("doc_id"), col("text"), dir, prefixes = 64, batchId = 0L)
+    }
+    graft.FlatSlice.checkSkips(spark, s"$dir/postings/slice=0", "bp")
   }
 
   test("compact: the live slice window merges into one slice — data " +

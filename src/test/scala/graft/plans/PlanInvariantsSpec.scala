@@ -81,7 +81,7 @@ class PlanInvariantsSpec extends AnyFunSuite {
   test("q261/q264 snapshot reads keep the term-prefix partition prune: " +
       "time travel must not cost the static pruning the layout exists for") {
     // the archived-manifest path resolves a different window but the
-    // SAME tp-partitioned layout — if the prune stops planning, every
+    // SAME tp-sorted layout — if the pushdown stops planning, every
     // as-of query reads the whole index instead of its terms' prefixes
     graft.SparkEntry.queries("q261_bm25_asof")(spark, d).collect()
     val dir = graft.text.TextQueries.pipelineDir(spark, d)
@@ -90,8 +90,8 @@ class PlanInvariantsSpec extends AnyFunSuite {
         graft.util.PipelineLedger.readSet(spark, dir).stores("postings"),
         Seq("fast", "merge", "table"), 10)
       .queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*tp".r.findFirstIn(plan).isDefined,
-      s"snapshot postings scan not partition-pruned on tp:\n${plan.take(1500)}")
+    assert("PushedFilters: \\[[^\n]*In\\(tp, ".r.findFirstIn(plan).isDefined,
+      s"snapshot postings scan does not push the tp filter:\n${plan.take(1500)}")
   }
 
   test("q263's decontamination probe is a bucket equi-join, never " +

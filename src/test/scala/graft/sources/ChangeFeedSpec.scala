@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -125,6 +126,59 @@ class ChangeFeedSpec extends AnyFunSuite {
 
     // run 3 with no new commits: nothing flows
     assert(run("doclen", ck).isEmpty)
+  }
+
+  test("offsets never regress: a poll that finds no manifest (a read " +
+      "racing a commit) plans no backwards window, and restarts resume") {
+    val dir = Files.createTempDirectory("cfregress").toString
+    val ck = Files.createTempDirectory("cfregressck").toString
+    val seed = docs.filter(col("doc_id") <= 300)
+    val delta = docs.filter(col("doc_id") > 300)
+    PostingsStore.maintainBatch(seed, col("doc_id"), col("text"), dir,
+      batchId = 0L) // commit 0
+    PostingsStore.maintainBatch(delta, col("doc_id"), col("text"), dir,
+      batchId = 1L) // commit 1
+    def run(availableNow: Boolean = false): Set[Long] = {
+      val got = new scala.collection.mutable.HashSet[Long]
+      val w = spark.readStream.format("graft").option("path", dir)
+        .option("table", "changes.postings.doclen").load()
+        .writeStream
+        .option("checkpointLocation", ck)
+        .foreachBatch { (df: DataFrame, _: Long) =>
+          val ids = df.select(col("id")).collect().map(_.getLong(0))
+          got.synchronized { got ++= ids }; ()
+        }
+      val q = (if (availableNow) w.trigger(Trigger.AvailableNow()) else w)
+        .start()
+      try { if (availableNow) q.awaitTermination() else q.processAllAvailable() }
+      finally q.stop()
+      got.synchronized(got.toSet)
+    }
+    def ids(df: DataFrame) =
+      df.select(col("doc_id")).collect().map(_.getLong(0)).toSet
+    assert(run() == ids(seed) ++ ids(delta)) // logs {"commit":1}
+    // the racing read: the pointer (and its checksum sidecar) is absent
+    // while the stream polls, so the store reports commit -1
+    val hidden = Files.createTempDirectory("cfhidden")
+    val meta = Seq("_graft_postings_meta.json",
+      "._graft_postings_meta.json.crc")
+    def move(from: java.nio.file.Path, to: java.nio.file.Path): Unit =
+      meta.map(from.resolve).filter(Files.exists(_)).foreach(f =>
+        Files.move(f, to.resolve(f.getFileName)))
+    move(java.nio.file.Paths.get(dir), hidden)
+    assert(run().isEmpty)
+    // the same poll under an AvailableNow trigger
+    assert(run(availableNow = true).isEmpty)
+    move(hidden, java.nio.file.Paths.get(dir))
+    // the restart resumes at commit 1: nothing replays, nothing fails
+    assert(run().isEmpty)
+    // and the offset log never went backwards
+    val logged = new java.io.File(s"$ck/offsets").listFiles()
+      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toLong)
+      .map(f => """\{"commit":(-?[0-9]+)\}""".r
+        .findFirstMatchIn(Files.readString(f.toPath)).get
+        .group(1).toLong).toSeq
+    assert(logged.nonEmpty && logged == logged.sorted, s"offsets: $logged")
   }
 
   test("graph delta-store feed is DIFFERENTIAL: folds emit positive " +

@@ -37,7 +37,8 @@ class GraftTablesSpec extends AnyFunSuite {
       .option("table", "postings.postings").load()
     val direct = spark.read.parquet(s"$dir/postings")
     assert(viaSql.count() == direct.count() && viaSql.count() > 0)
-    // the hive layout survives: slice and tp are partition COLUMNS
+    // slice is the hive partition column, tp the data column every
+    // slice is sorted by — both are columns of the table
     assert(Set("slice", "tp").subsetOf(viaSql.columns.toSet))
 
     // doclen joins postings into per-doc totals — plain SQL over the
@@ -49,11 +50,12 @@ class GraftTablesSpec extends AnyFunSuite {
       .agg(sum(col("n"))).head.getLong(0)
     assert(viaDoclen.agg(sum(col("dl"))).head.getLong(0) == tokCount)
 
-    // a term filter prunes STATICALLY on the tp partition axis
+    // a term-prefix filter pushes into the parquet scan of the
+    // tp-sorted slices
     val pruned = viaSql.filter(col("tp") === 3)
     val plan = pruned.queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*tp".r.findFirstIn(plan).isDefined,
-      s"tp filter does not partition-prune:\n${plan.take(1500)}")
+    assert("PushedFilters: \\[[^\n]*EqualTo\\(tp,3\\)".r.findFirstIn(plan).isDefined,
+      s"tp filter does not push into the scan:\n${plan.take(1500)}")
 
     // TIME TRAVEL: commit 0 reads the seed window only
     val at0 = spark.read.format("graft").option("path", dir)

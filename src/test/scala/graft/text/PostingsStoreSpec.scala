@@ -10,8 +10,8 @@ import graft.util.Tables
 
 /** The persisted inverted index: stored-postings BM25 ≡ the full
   * recompute bit-for-bit across folds, exactly-once batch folds,
-  * term-prefix partition pruning, compaction identity, vacuum, and the
-  * streaming face.
+  * the flat term-prefix-sorted slice layout and its pushed prefix
+  * filter, compaction identity, vacuum, and the streaming face.
   */
 class PostingsStoreSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -65,8 +65,26 @@ class PostingsStoreSpec extends AnyFunSuite {
       batchId = 0L)
     val plan = PostingsStore.bm25Query(spark, dir, terms, 10)
       .queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*tp".r.findFirstIn(plan).isDefined,
-      s"postings scan not partition-pruned on tp:\n${plan.take(1500)}")
+    assert("PushedFilters: \\[[^\n]*In\\(tp, ".r.findFirstIn(plan).isDefined,
+      s"postings scan does not push the tp prefix filter:\n${plan.take(1500)}")
+  }
+
+  test("layout: a fold at prefixes = 64 lands its posting slice as " +
+      "tp-sorted files, one per write task, not one directory per prefix") {
+    val dir = Files.createTempDirectory("postingsflat").toString
+    PostingsStore.maintainBatch(docs.filter(col("doc_id") <= 300),
+      col("doc_id"), col("text"), dir, prefixes = 64, batchId = 0L)
+    graft.FlatSlice.check(spark, s"$dir/postings/slice=0", "tp")
+  }
+
+  test("layout: once a slice spans many row groups, the pushed tp " +
+      "filter skips the row groups of the other prefixes") {
+    val dir = Files.createTempDirectory("postingsskip").toString
+    graft.FlatSlice.withSmallRowGroups(spark) {
+      PostingsStore.maintainBatch(docs.filter(col("doc_id") <= 300),
+        col("doc_id"), col("text"), dir, prefixes = 64, batchId = 0L)
+    }
+    graft.FlatSlice.checkSkips(spark, s"$dir/postings/slice=0", "tp")
   }
 
   test("compact: window merges, query results identical, ledger and " +

@@ -2,6 +2,8 @@ package graft.util
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -54,14 +56,15 @@ class StoreHardeningSpec extends AnyFunSuite {
     PostingsStore.maintainBatch(slice(0, 300), col("doc_id"), col("text"),
       dir, batchId = 0L)
     // simulate batch 1 crashing AFTER its data writes, BEFORE its commit:
-    // orphan postings+doclen dirs land at the next slice id (1)
+    // orphan postings+doclen dirs land at the next slice id (1), written
+    // the way a fold writes them (flat, tp-partitioned and tp-sorted)
     val orphan = slice(300, 600)
     orphan.select(col("doc_id").as("id"),
         explode(graft.text.TextFunctions.tokens(col("text"))).as("term"))
       .groupBy(col("id"), col("term")).agg(count(lit(1)).as("tf"))
       .withColumn("tp", pmod(xxhash64(col("term")), lit(64L)).cast("int"))
-      .write.mode("overwrite").partitionBy("tp")
-      .parquet(s"$dir/postings/slice=1")
+      .repartition(col("tp")).sortWithinPartitions(col("tp"), col("term"))
+      .write.mode("overwrite").parquet(s"$dir/postings/slice=1")
     orphan.select(col("doc_id").as("id"),
         explode(graft.text.TextFunctions.tokens(col("text"))).as("term"))
       .groupBy(col("id")).agg(count(lit(1)).as("dl"))
@@ -349,7 +352,73 @@ class StoreHardeningSpec extends AnyFunSuite {
     val e = intercept[RuntimeException](PostingsStore.meta(spark, dir))
     assert(e.getMessage.contains("version mismatch") &&
       e.getMessage.contains("graft-postings-v1") &&
-      e.getMessage.contains("graft-postings-v3"),
+      e.getMessage.contains("graft-postings-v4"),
       s"got: ${e.getMessage}")
+  }
+
+  test("a fold into a store whose manifest names the previous format " +
+      "is refused as a version mismatch before anything is written") {
+    // the previous formats laid posting slices out as slice=S/tp=P/ and
+    // slice=S/bp=P/ directories; one flat fold into such a store leaves
+    // a slice tree partition discovery cannot read
+    def downgrade(dir: String, metaName: String, from: String,
+        to: String): Unit = {
+      val p = new org.apache.hadoop.fs.Path(dir, metaName)
+      val body = Hfs.readString(p, Hfs.conf(spark))
+      assert(body.contains(from))
+      Hfs.writeStringAtomic(p, body.replace(from, to), Hfs.conf(spark))
+    }
+    // every file under the store with its size, except the writer
+    // lease's epoch ledger (acquired before any verb reads the manifest)
+    def tree(dir: String): Map[String, Long] = {
+      val root = java.nio.file.Paths.get(dir)
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => root.relativize(f).toString -> Files.size(f))
+        .filterNot(_._1.startsWith("_graft_lease")).toMap
+      finally walk.close()
+    }
+    def refused(dir: String, old: String, cur: String)(
+        verbs: (() => Any)*): Unit = {
+      val before = tree(dir)
+      verbs.foreach { verb =>
+        val e = intercept[RuntimeException](verb())
+        assert(e.getMessage.contains("version mismatch") &&
+          e.getMessage.contains(old) && e.getMessage.contains(cur),
+          s"got: ${e.getMessage}")
+      }
+      assert(tree(dir) == before)
+    }
+    val seed = docs.filter(col("doc_id") <= 200)
+    val more = docs.filter(col("doc_id") > 200 && col("doc_id") <= 300)
+    val none = Seq.empty[Long].toDF("id")
+
+    val pdir = Files.createTempDirectory("oldpostings").toString
+    PostingsStore.maintainBatch(seed, col("doc_id"), col("text"), pdir,
+      batchId = 0L)
+    downgrade(pdir, "_graft_postings_meta.json", "graft-postings-v4",
+      "graft-postings-v3")
+    refused(pdir, "graft-postings-v3", "graft-postings-v4")(
+      () => PostingsStore.maintainBatch(more, col("doc_id"), col("text"),
+        pdir, batchId = 1L),
+      () => PostingsStore.upsertBatch(more, col("doc_id"), col("text"),
+        none, pdir, batchId = 1L),
+      () => PostingsStore.purgeDocs(spark, pdir, Seq(5L).toDF("id")),
+      () => PostingsStore.compact(spark, pdir),
+      () => PostingsStore.bm25Query(spark, pdir, terms, 10))
+
+    val ldir = Files.createTempDirectory("oldledger").toString
+    LedgerStore.maintainBatch(seed, col("doc_id"), col("text"), ldir,
+      batchId = 0L)
+    downgrade(ldir, "_graft_ledger_meta.json", "graft-dedup-v6",
+      "graft-dedup-v5")
+    refused(ldir, "graft-dedup-v5", "graft-dedup-v6")(
+      () => LedgerStore.maintainBatch(more, col("doc_id"), col("text"),
+        ldir, batchId = 1L),
+      () => LedgerStore.upsertDocs(more, col("doc_id"), col("text"),
+        none, ldir, batchId = 1L),
+      () => LedgerStore.purgeDocs(spark, ldir, Seq(5L).toDF("id")),
+      () => LedgerStore.compact(spark, ldir),
+      () => LedgerStore.load(spark, ldir))
   }
 }
