@@ -3,7 +3,8 @@ package graft.ann
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.util.Generations
+import graft.util.{Generations, StoreManifest}
+import graft.util.StoreManifest.{maskOlder, tombstones, window}
 
 /** Version-stamped PERSISTED index format (SURVEY §9.10 follow-on): a
   * refreshed IVF index publishes to a directory through the same
@@ -41,7 +42,6 @@ import graft.util.Generations
   */
 object IndexStore {
 
-  private val MetaName = "_graft_index_meta.json"
   // v3 (round 11): + commit id / history archive.
   // v4 (round 13): SLICE-ORDERED tombstones — a purged/slice=S row masks
   // only assigned rows with slice < S, so [[upsertVectors]] can retire a
@@ -74,32 +74,10 @@ object IndexStore {
     * [[graft.dedup.LedgerStore]] protocol). */
   final case class Meta(format: String, gen: Long, rows: Long,
       baseRows: Long, batch: Long, sliceBase: Long, slices: Long,
-      commit: Long)
+      commit: Long) extends StoreManifest.Windowed
 
-  private val MetaRe =
-    ("""\{"format": "([^"]+)", "gen": ([0-9]+), "rows": ([0-9]+), """ +
-      """"baseRows": ([0-9]+), "batch": (-?[0-9]+), """ +
-      """"sliceBase": ([0-9]+), "slices": ([0-9]+), """ +
-      """"commit": ([0-9]+)\}""").r
-
-  private def parseMeta(dir: String, body: String): Meta = body match {
-    case MetaRe(f, g, n, b, bt, sb, sl, c) =>
-      Meta(f, g.toLong, n.toLong, b.toLong, bt.toLong, sb.toLong,
-        sl.toLong, c.toLong)
-    case other => sys.error(
-      Generations.unparseableMsg(s"$dir (index manifest)", other, Format))
-  }
-
-  private def readMeta(spark: SparkSession, dir: String): Option[Meta] =
-    Generations.readPointer(spark, dir, MetaName).map(parseMeta(dir, _))
-
-  private def commitMeta(spark: SparkSession, dir: String, m: Meta): Unit =
-    Generations.commitArchived(spark, dir, MetaName,
-      s"""{"format": "$Format", "gen": ${m.gen}, "rows": ${m.rows}, """ +
-        s""""baseRows": ${m.baseRows}, "batch": ${m.batch}, """ +
-        s""""sliceBase": ${m.sliceBase}, "slices": ${m.slices}, """ +
-        s""""commit": ${m.commit}}""",
-      m.commit)
+  private[graft] val Manifest =
+    new StoreManifest[Meta]("_graft_index_meta.json", Format, "index")
 
   /** Publish `index` to `dir` as the next generation and flip the
     * pointer. Returns the committed generation id. `retainGens` ≥ 1:
@@ -118,9 +96,7 @@ object IndexStore {
     // monitor (round-11 verdict #5 — reentrant for the fold's internal
     // publish); cross-process stays single-writer by contract
     graft.util.Maintenance.withLeasedWriteLock("IndexStore", spark, dir) {
-    val prev = readMeta(spark, dir)
-    prev.foreach(m => require(m.format == Format,
-      s"$dir holds a '${m.format}' index; refusing to overwrite with $Format"))
+    val prev = Manifest.read(spark, dir)
     val gen = prev.map(_.gen + 1).getOrElse(0L)
     // 1. write the new generation's data — invisible, nothing points at
     // it. The assigned store lands as the epoch's slice 0; later
@@ -133,7 +109,7 @@ object IndexStore {
     // frame would re-run its whole lineage when unmaterialized)
     val n = spark.read.parquet(s"$dir/gen=$gen/assigned").count()
     // 2. the commit: one atomic pointer PUT; 3. deferred GC after it
-    commitMeta(spark, dir,
+    Manifest.commit(spark, dir,
       Meta(Format, gen, n, carryBaseRows.getOrElse(n), batchId,
         sliceBase = 0L, slices = 1L,
         commit = prev.map(_.commit + 1).getOrElse(0L)))
@@ -142,42 +118,24 @@ object IndexStore {
     }
   }
 
+  /** Tombstones (vid, _tomb) of the CURRENT generation (the
+    * [[purgeVectors]]/[[upsertVectors]] ledger) — tombstones live inside
+    * the gen dir, so a re-train (which trains from the filtered view)
+    * sheds them with the old generation. */
+  private def liveTombs(spark: SparkSession, dir: String,
+      m: Meta): DataFrame =
+    tombstones(spark, s"$dir/gen=${m.gen}/purged", "vid", m)
+
   /** Load the CURRENT generation. The returned index is probe-ready
     * ([[Similarity.ivfSearch]] works as-is); [[searchPruned]] adds the
     * partition-pruned scan path the layout exists for. Also returns the
     * meta so a maintenance caller can seed the growth policy
     * (`Maintenance.noteBaseSize(..., meta.baseRows)`). */
-  /** Tombstones (vid, _tomb = the tombstone's slice id) of the CURRENT
-    * generation (the [[purgeVectors]]/[[upsertVectors]] ledger) —
-    * tombstones live inside the gen dir, so a re-train (which trains
-    * from the filtered view) sheds them with the old generation. Since
-    * v4 the slice id rides along: a tombstone masks only assigned rows
-    * in slices OLDER than it, so an upsert's re-landed copy (written
-    * above its own tombstone) stays visible. */
-  private def livePurged(spark: SparkSession, dir: String,
-      m: Meta): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/gen=${m.gen}/purged")
-    val hc = graft.util.Hfs.conf(spark)
-    val hasSlices = graft.util.Hfs.exists(p, hc) &&
-      graft.util.Hfs.list(p, hc).exists(_.getPath.getName.startsWith("slice="))
-    if (hasSlices)
-      spark.read.parquet(s"$dir/gen=${m.gen}/purged")
-        .filter(col("slice") >= m.sliceBase && col("slice") < m.slices)
-        .select(col("vid"), col("slice").cast("long").as("_tomb"))
-    else {
-      import spark.implicits._
-      Seq.empty[(Long, Long)].toDF("vid", "_tomb")
-    }
-  }
-
   def loadIvf(spark: SparkSession, dir: String): (Similarity.IvfIndex, Meta) =
-    loadIvfOn(spark, dir,
-      readMeta(spark, dir).getOrElse(
-        sys.error(s"no committed index at $dir (missing $MetaName)")))
+    loadIvfOn(spark, dir, Manifest.get(spark, dir))
 
   private def loadIvfOn(spark: SparkSession, dir: String,
       m: Meta): (Similarity.IvfIndex, Meta) = {
-    require(m.format == Format, s"$dir holds '${m.format}', expected $Format")
     val centroids = spark.read.parquet(s"$dir/gen=${m.gen}/centroids")
     // liveness prune on the slice partition column (an orphan slice from
     // a crashed fold is outside the committed count); `slice` and `cell`
@@ -185,12 +143,8 @@ object IndexStore {
     // static PartitionFilters prune the layout exists for. v4 mask: a
     // tombstone hides only OLDER slices — an upsert's re-landed copy
     // (data slice above its own tombstone) stays visible.
-    val tomb = livePurged(spark, dir, m)
-      .select(col("vid").as("_tid"), col("_tomb"))
-    val assigned = spark.read.parquet(s"$dir/gen=${m.gen}/assigned")
-      .filter(col("slice") >= m.sliceBase && col("slice") < m.slices)
-      .join(tomb, col("vid") === col("_tid") && col("_tomb") > col("slice"),
-        "left_anti")
+    val assigned = maskOlder(window(spark, s"$dir/gen=${m.gen}/assigned", m),
+        "vid", liveTombs(spark, dir, m))
       .select(col("vid"), col("v"), col("cell"))
     (Similarity.IvfIndex(centroids, assigned), m)
   }
@@ -198,11 +152,11 @@ object IndexStore {
   /** The current manifest, for callers pinning snapshots
     * ([[graft.util.PipelineLedger]]) without loading the frames. */
   def meta(spark: SparkSession, dir: String): Option[Meta] =
-    readMeta(spark, dir)
+    Manifest.read(spark, dir)
 
   /** Committed snapshot ids available for [[loadIvfAt]], ascending. */
   def commits(spark: SparkSession, dir: String): Seq[Long] =
-    Generations.listCommits(spark, dir, MetaName)
+    Manifest.commits(spark, dir)
 
   /** The live slice data dirs of IVF table `sub` ("assigned" |
     * "purged") for a committed snapshot (commit = None → current), plus
@@ -218,9 +172,7 @@ object IndexStore {
   def ivfDirs(spark: SparkSession, dir: String, sub: String,
       commit: Option[Long]): (Seq[String], String) = {
     require(Set("assigned", "purged")(sub), s"unknown ivf table '$sub'")
-    val m = commit.map(metaAt(spark, dir, _)).orElse(readMeta(spark, dir))
-      .getOrElse(sys.error(s"no committed index at $dir"))
-    require(m.format == Format, s"$dir holds '${m.format}', expected $Format")
+    val m = commit.fold(Manifest.get(spark, dir))(Manifest.at(spark, dir, _))
     Generations.requireSlicesReadable(spark, dir,
       Seq(s"gen=${m.gen}/assigned", s"gen=${m.gen}/purged"),
       m.sliceBase, m.slices, s"snapshot ${commit.getOrElse("current")}")
@@ -235,10 +187,7 @@ object IndexStore {
 
   /** The archived manifest of snapshot `commit`. */
   def metaAt(spark: SparkSession, dir: String, commit: Long): Meta =
-    parseMeta(s"$dir@$commit",
-      Generations.readPointerAt(spark, dir, MetaName, commit).getOrElse(sys.error(
-        s"$dir has no committed snapshot $commit " +
-          s"(available: ${commits(spark, dir).mkString(", ")})")))
+    Manifest.at(spark, dir, commit)
 
   /** TIME-TRAVEL [[loadIvf]] — the index AS OF a committed snapshot id
     * (a pre-purge snapshot still probes the purged vectors while its
@@ -271,8 +220,7 @@ object IndexStore {
   def purgeVectors(spark: SparkSession, dir: String,
       vecIds: DataFrame): Long = {
     graft.util.Maintenance.withLeasedWriteLock("IndexStore", spark, dir) {
-    val m = readMeta(spark, dir).getOrElse(
-      sys.error(s"no committed index at $dir (missing $MetaName)"))
+    val m = Manifest.get(spark, dir)
     val (idx, _) = loadIvf(spark, dir)
     val targets = vecIds.select(vecIds.columns.head).toDF("vid").distinct()
       .join(idx.assigned.select(col("vid")), Seq("vid"), "left_semi")
@@ -287,7 +235,7 @@ object IndexStore {
     Generations.claimSlice(spark, dir, Seq(s"gen=${m.gen}/assigned"), sliceId)
     targets.write.mode("overwrite")
       .parquet(s"$dir/gen=${m.gen}/purged/slice=$sliceId")
-    commitMeta(spark, dir, m.copy(rows = m.rows - n, slices = sliceId + 1,
+    Manifest.commit(spark, dir, m.copy(rows = m.rows - n, slices = sliceId + 1,
       commit = m.commit + 1))
     n
     }
@@ -322,7 +270,7 @@ object IndexStore {
       : Option[Long] = {
     val spark = upserts.sparkSession
     graft.util.Maintenance.withLeasedWriteLock("IndexStore", spark, dir) {
-    val m = readMeta(spark, dir).getOrElse(sys.error(
+    val m = Manifest.read(spark, dir).getOrElse(sys.error(
       s"no committed index at $dir — upsertVectors updates an existing " +
         "index; seed with saveIvf/ivfMaintainBatch first"))
     if (batchId >= 0 && batchId <= m.batch) return None
@@ -337,7 +285,7 @@ object IndexStore {
       .join(newVecs.select(col("vid")), Seq("vid"), "left_anti")
       .localCheckpoint(true)
     if (newVecs.isEmpty && rem.isEmpty) {
-      recordEmptyBatch(spark, dir, Some(m), batchId); return None
+      Manifest.recordEmptyBatch(spark, dir, Some(m), batchId); return None
     }
     val (idx, _) = loadIvf(spark, dir)
     // retire the LIVE copies of everything incoming or removed —
@@ -368,10 +316,10 @@ object IndexStore {
       next += 1
     }
     if (next == m.slices) { // nothing live to retire, nothing to land
-      recordEmptyBatch(spark, dir, Some(m), batchId); return None
+      Manifest.recordEmptyBatch(spark, dir, Some(m), batchId); return None
     }
     val commit = m.commit + 1
-    commitMeta(spark, dir, m.copy(rows = m.rows - nGone + dn,
+    Manifest.commit(spark, dir, m.copy(rows = m.rows - nGone + dn,
       batch = batchId, slices = next, commit = commit))
     Some(commit)
     }
@@ -391,38 +339,17 @@ object IndexStore {
       checkpoint: String, embedOf: Column, sinceCommit: Long = -1L)
       : org.apache.spark.sql.streaming.StreamingQuery =
     graft.util.Cascade.followInto(spark, mergeDir, checkpoint, sinceCommit,
-      (ups, rem, bid) => {
-        upsertVectors(ups.select(col("_key").as("vid"), embedOf.as("v")),
-          col("vid"), col("v"), rem.toDF("vid"), dir, batchId = bid)
-        ()
-      })
-  /** ADVICE r11: a ledgered batch the tombstone screen (or the batch
-    * itself) left EMPTY must still record its batch id — returning
-    * without a commit leaves the batch unledgered, so after maintenance
-    * drops the tombstones, a streaming replay of that batch would
-    * re-fold and resurrect the purged vectors. A no-op pointer bump
-    * (batch advanced, data untouched) keeps the replay guard
-    * `batchId <= m.batch` suppressing the re-fold. */
-  private def recordEmptyBatch(spark: SparkSession, dir: String,
-      prev: Option[Meta], batchId: Long): Unit =
-    prev.foreach { m =>
-      if (batchId >= 0 && batchId > m.batch)
-        commitMeta(spark, dir, m.copy(batch = batchId, commit = m.commit + 1))
-    }
+      applyFeedWindow(_, _, dir, embedOf, _))
 
-  /** [[recordEmptyBatch]]'s composite-side twin. */
-  private def recordEmptyPqBatch(spark: SparkSession, dir: String,
-      prev: Option[PqMeta], batchId: Long): Unit =
-    prev.foreach { pm =>
-      if (batchId >= 0 && batchId > pm.batch)
-        Generations.commitArchived(spark, dir, PqMetaName,
-          s"""{"format": "$PqFormat", "gen": ${pm.gen}, "rows": ${pm.rows}, """ +
-            s""""m": ${pm.m}, "subDim": ${pm.subDim}, """ +
-            s""""baseRows": ${pm.baseRows}, """ +
-            s""""batch": $batchId, "commit": ${pm.commit + 1}}""",
-          pm.commit + 1)
-    }
-
+  /** ONE feed window into [[upsertVectors]] — shared by
+    * [[followMergeTable]] and the set-cascade follower
+    * ([[graft.util.Cascade.ivfFollower]]). */
+  private[graft] def applyFeedWindow(ups: DataFrame, rem: DataFrame,
+      dir: String, embedOf: Column, batchId: Long): Unit = {
+    upsertVectors(ups.select(col("_key").as("vid"), embedOf.as("v")),
+      col("vid"), col("v"), rem.toDF("vid"), dir, batchId = batchId)
+    ()
+  }
 
   /** Fold ONE batch of vectors into the persisted index — the complete
     * maintenance step a continuous ingest runs per micro-batch, built
@@ -466,8 +393,8 @@ object IndexStore {
     val spark = batch.sparkSession
     graft.util.Maintenance.withLeasedWriteLock("IndexStore", spark, dir) {
     val vecs = batch.select(id.as("vid"), vec.as("v"))
-    if (vecs.isEmpty) { recordEmptyBatch(spark, dir, readMeta(spark, dir), batchId); return None }
-    readMeta(spark, dir) match {
+    if (vecs.isEmpty) { Manifest.recordEmptyBatch(spark, dir, Manifest.read(spark, dir), batchId); return None }
+    Manifest.read(spark, dir) match {
       case None =>
         val seeded = Similarity.buildIvf(vecs, col("vid"), col("v"),
           nCentroids, iterations = 1, materialize = true)
@@ -480,9 +407,9 @@ object IndexStore {
         // until a re-train or compact sheds its tombstone — re-inserting
         // it would bump `rows` while the tombstone hides the vector from
         // every probe, permanently skewing the doubling denominator
-        val screened = vecs.join(livePurged(spark, dir, m),
+        val screened = vecs.join(liveTombs(spark, dir, m),
           Seq("vid"), "left_anti")
-        if (screened.isEmpty) { recordEmptyBatch(spark, dir, Some(m), batchId); return None }
+        if (screened.isEmpty) { Manifest.recordEmptyBatch(spark, dir, Some(m), batchId); return None }
         // claim the id: a crashed purge's orphan tombstone slice here
         // must not become live under this fold's commit
         Generations.claimSlice(spark, dir, Seq(s"gen=${m.gen}/purged"),
@@ -503,19 +430,14 @@ object IndexStore {
           // slice-ordered mask keeps upsert-re-landed copies in),
           // retrain, publish a fresh generation; the orphan slice dies
           // with its gen's GC
-          val tombR = livePurged(spark, dir, m)
-            .select(col("vid").as("_tid"), col("_tomb"))
-          val all = spark.read.parquet(s"$dir/gen=${m.gen}/assigned")
-            .filter(col("slice") >= m.sliceBase && col("slice") <= m.slices)
-            .join(tombR,
-              col("vid") === col("_tid") && col("_tomb") > col("slice"),
-              "left_anti")
+          val all = maskOlder(window(spark, s"$dir/gen=${m.gen}/assigned",
+              m.copy(slices = m.slices + 1)), "vid", liveTombs(spark, dir, m))
             .select(col("vid"), col("v"))
           val retrained = Similarity.buildIvf(all, col("vid"), col("v"),
             nCentroids, iterations = 1, materialize = true)
           Some((saveIvf(retrained, dir, retainGens, batchId = batchId), true))
         } else {
-          commitMeta(spark, dir,
+          Manifest.commit(spark, dir,
             m.copy(rows = n, batch = batchId, slices = m.slices + 1,
               commit = m.commit + 1))
           Some((m.gen, false))
@@ -536,7 +458,7 @@ object IndexStore {
     * below-threshold index that folds forever without doubling. */
   def compactAssigned(spark: SparkSession, dir: String): Option[Long] =
     graft.util.Maintenance.withLeasedWriteLock("IndexStore", spark, dir) {
-    readMeta(spark, dir) match {
+    Manifest.read(spark, dir) match {
       case Some(m) if m.slices - m.sliceBase > 1 =>
         val merged = m.slices
         Generations.claimSlice(spark, dir, Seq(s"gen=${m.gen}/purged"),
@@ -544,7 +466,7 @@ object IndexStore {
         val (idx, _) = loadIvf(spark, dir)
         idx.assigned.write.mode("overwrite").partitionBy("cell")
           .parquet(s"$dir/gen=${m.gen}/assigned/slice=$merged")
-        commitMeta(spark, dir, m.copy(sliceBase = merged,
+        Manifest.commit(spark, dir, m.copy(sliceBase = merged,
           slices = merged + 1, commit = m.commit + 1))
         Some(merged)
       case _ => None
@@ -555,7 +477,7 @@ object IndexStore {
     * generation only — old generations die whole via [[saveIvf]]'s
     * retention GC). */
   def vacuumAssignedSlices(spark: SparkSession, dir: String): Int =
-    readMeta(spark, dir).map { m =>
+    Manifest.read(spark, dir).map { m =>
       Generations.gcSlices(spark, dir,
         Seq(s"gen=${m.gen}/assigned", s"gen=${m.gen}/purged"), m.sliceBase)
     }.getOrElse(0)
@@ -583,13 +505,7 @@ object IndexStore {
 
   // ---- the composite (IVF-PQ) index, persisted ----
 
-  private val PqMetaName = "_graft_ivfpq_meta.json"
   private val PqFormat = "graft-ivfpq-v3" // v3 (round 11): + commit id / history archive
-
-  private val PqMetaRe =
-    ("""\{"format": "([^"]+)", "gen": ([0-9]+), "rows": ([0-9]+), """ +
-      """"m": ([0-9]+), "subDim": ([0-9]+), "baseRows": ([0-9]+), """ +
-      """"batch": (-?[0-9]+), "commit": ([0-9]+)\}""").r
 
   /** v2 (round 10): `baseRows` (the doubling-policy denominator) and
     * `batch` (the exactly-once streaming ledger) moved INTO the manifest
@@ -604,17 +520,10 @@ object IndexStore {
     * [[Meta]] protocol on the composite side). */
   final case class PqMeta(format: String, gen: Long, rows: Long,
       m: Int, subDim: Int, baseRows: Long, batch: Long, commit: Long)
+      extends StoreManifest.Entry
 
-  private def parsePqMeta(dir: String, body: String): PqMeta = body match {
-    case PqMetaRe(f, g, n, m, sd, b, bt, c) =>
-      PqMeta(f, g.toLong, n.toLong, m.toInt, sd.toInt, b.toLong,
-        bt.toLong, c.toLong)
-    case other => sys.error(
-      Generations.unparseableMsg(s"$dir (ivfpq manifest)", other, PqFormat))
-  }
-
-  private def readPqMeta(spark: SparkSession, dir: String): Option[PqMeta] =
-    Generations.readPointer(spark, dir, PqMetaName).map(parsePqMeta(dir, _))
+  private[graft] val PqManifest =
+    new StoreManifest[PqMeta]("_graft_ivfpq_meta.json", PqFormat, "ivfpq")
 
   /** Persist the COMPOSITE index — the one a 100 TB deployment actually
     * stores (codes are ~4·subDim× smaller than vectors): coarse cells
@@ -632,9 +541,7 @@ object IndexStore {
     val spark = index.codes.sparkSession
     import spark.implicits._
     graft.util.Maintenance.withLeasedWriteLock("IndexStore", spark, dir) {
-    val prev = readPqMeta(spark, dir)
-    prev.foreach(m => require(m.format == PqFormat,
-      s"$dir holds a '${m.format}' index; refusing to overwrite with $PqFormat"))
+    val prev = PqManifest.read(spark, dir)
     val gen = prev.map(_.gen + 1).getOrElse(0L)
     index.cells.map { case (cell, c) => (cell, c.toSeq) }
       .toDF("cell", "c").coalesce(1)
@@ -653,13 +560,9 @@ object IndexStore {
       df.write.mode("overwrite").parquet(s"$dir/gen=$gen/$name") }
     // count what was written, not the (possibly lazy) input frame
     val n = spark.read.parquet(s"$dir/gen=$gen/codes").count()
-    val commit = prev.map(_.commit + 1).getOrElse(0L)
-    Generations.commitArchived(spark, dir, PqMetaName,
-      s"""{"format": "$PqFormat", "gen": $gen, "rows": $n, """ +
-        s""""m": ${index.pq.m}, "subDim": ${index.pq.subDim}, """ +
-        s""""baseRows": ${carryBaseRows.getOrElse(n)}, """ +
-        s""""batch": $batchId, "commit": $commit}""",
-      commit)
+    PqManifest.commit(spark, dir, PqMeta(PqFormat, gen, n, index.pq.m,
+      index.pq.subDim, carryBaseRows.getOrElse(n), batchId,
+      prev.map(_.commit + 1).getOrElse(0L)))
     Generations.gc(spark, dir, gen - (retainGens - 1))
     gen
     }
@@ -677,20 +580,15 @@ object IndexStore {
     * free (IndexStoreSpec pins the PartitionFilters plan). */
   def loadIvfPq(spark: SparkSession, dir: String)
       : (Similarity.IvfPqIndex, PqMeta) =
-    loadIvfPqOn(spark, dir,
-      readPqMeta(spark, dir).getOrElse(
-        sys.error(s"no committed index at $dir (missing $PqMetaName)")))
+    loadIvfPqOn(spark, dir, PqManifest.get(spark, dir))
 
   /** Committed composite-index snapshot ids, ascending. */
   def pqCommits(spark: SparkSession, dir: String): Seq[Long] =
-    Generations.listCommits(spark, dir, PqMetaName)
+    PqManifest.commits(spark, dir)
 
   /** The archived PQ manifest of snapshot `commit`. */
   def pqMetaAt(spark: SparkSession, dir: String, commit: Long): PqMeta =
-    parsePqMeta(s"$dir@$commit",
-      Generations.readPointerAt(spark, dir, PqMetaName, commit).getOrElse(sys.error(
-        s"$dir has no committed snapshot $commit " +
-          s"(available: ${pqCommits(spark, dir).mkString(", ")})")))
+    PqManifest.at(spark, dir, commit)
 
   /** TIME-TRAVEL [[loadIvfPq]] — the composite index AS OF a committed
     * snapshot id; fails loudly once generation retention dropped the
@@ -710,7 +608,6 @@ object IndexStore {
 
   private def loadIvfPqOn(spark: SparkSession, dir: String,
       m: PqMeta): (Similarity.IvfPqIndex, PqMeta) = {
-    require(m.format == PqFormat, s"$dir holds '${m.format}', expected $PqFormat")
     val cells = spark.read.parquet(s"$dir/gen=${m.gen}/cells")
       .collect().map(r => (r.getAs[Number](0).intValue(),
         r.getSeq[Double](1).toArray)).sortBy(_._1).toIndexedSeq
@@ -748,8 +645,8 @@ object IndexStore {
     val spark = batch.sparkSession
     graft.util.Maintenance.withLeasedWriteLock("IndexStore", spark, dir) {
     val vecs = batch.select(id.as("vid"), vec.as("v")).localCheckpoint(true)
-    if (vecs.isEmpty) { recordEmptyPqBatch(spark, dir, readPqMeta(spark, dir), batchId); return None }
-    readPqMeta(spark, dir) match {
+    if (vecs.isEmpty) { PqManifest.recordEmptyBatch(spark, dir, PqManifest.read(spark, dir), batchId); return None }
+    PqManifest.read(spark, dir) match {
       case Some(pm) if batchId >= 0 && batchId <= pm.batch =>
         None // crash replay of an already-folded batch
       case None =>
@@ -792,12 +689,19 @@ object IndexStore {
       retainGens: Int = 2, sinceCommit: Long = -1L)
       : org.apache.spark.sql.streaming.StreamingQuery =
     graft.util.Cascade.followInto(spark, mergeDir, checkpoint, sinceCommit,
-      (ups, rem, bid) => {
-        upsertPqVectors(ups.select(col("_key").as("vid"), embedOf.as("v")),
-          col("vid"), col("v"), rem.toDF("vid"), dir, retainGens,
-          batchId = bid)
-        ()
-      })
+      applyPqFeedWindow(_, _, dir, embedOf, _, retainGens))
+
+  /** ONE feed window into [[upsertPqVectors]] — shared by
+    * [[followMergeTablePq]] and the set-cascade follower
+    * ([[graft.util.Cascade.ivfPqFollower]]). */
+  private[graft] def applyPqFeedWindow(ups: DataFrame, rem: DataFrame,
+      dir: String, embedOf: Column, batchId: Long,
+      retainGens: Int = 2): Unit = {
+    upsertPqVectors(ups.select(col("_key").as("vid"), embedOf.as("v")),
+      col("vid"), col("v"), rem.toDF("vid"), dir, retainGens,
+      batchId = batchId)
+    ()
+  }
 
   /** [[upsertVectors]]'s composite-index twin — VECTOR REFRESH on the
     * persisted IVF-PQ store: retire the old copies of incoming/removed
@@ -818,7 +722,7 @@ object IndexStore {
       batchId: Long = -1L): Option[Long] = {
     val spark = upserts.sparkSession
     graft.util.Maintenance.withLeasedWriteLock("IndexStore", spark, dir) {
-    val pm = readPqMeta(spark, dir).getOrElse(sys.error(
+    val pm = PqManifest.read(spark, dir).getOrElse(sys.error(
       s"no committed index at $dir — upsertPqVectors updates an existing " +
         "index; seed with saveIvfPq/ivfPqMaintainBatch first"))
     if (batchId >= 0 && batchId <= pm.batch) return None
@@ -830,7 +734,7 @@ object IndexStore {
       .join(newVecs.select(col("vid")), Seq("vid"), "left_anti")
       .localCheckpoint(true)
     if (newVecs.isEmpty && rem.isEmpty) {
-      recordEmptyPqBatch(spark, dir, Some(pm), batchId); return None
+      PqManifest.recordEmptyBatch(spark, dir, Some(pm), batchId); return None
     }
     // survives its generation's GC (and the new gen's publish)
     val oldVecs = spark.read.parquet(s"$dir/gen=${pm.gen}/vecs")
@@ -839,7 +743,7 @@ object IndexStore {
       .join(oldVecs.select(col("vid")), Seq("vid"), "left_semi")
       .localCheckpoint(true)
     if (newVecs.isEmpty && targets.isEmpty) { // removes of absent ids
-      recordEmptyPqBatch(spark, dir, Some(pm), batchId); return None
+      PqManifest.recordEmptyBatch(spark, dir, Some(pm), batchId); return None
     }
     val (idx, _) = loadIvfPq(spark, dir)
     val keptCodes = idx.codes.join(targets, Seq("vid"), "left_anti")
@@ -900,17 +804,14 @@ object IndexStore {
       .limit(k)
   }
 
-  /** The committed snapshot id produced by LEDGERED batch `batchId` —
-    * the pin a cross-store set manifest records (ADVICE r11). −1 when
-    * the store has no committed state at all. */
+  /** The committed snapshot id produced by LEDGERED batch `batchId`
+    * (see [[StoreManifest.commitForBatch]]). */
   def commitForBatch(spark: SparkSession, dir: String,
       batchId: Long): Long =
-    if (readMeta(spark, dir).isEmpty) -1L
-    else Generations.foldCommitForBatch(spark, dir, MetaName, batchId)
+    Manifest.commitForBatch(spark, dir, batchId)
 
   /** [[commitForBatch]]'s composite-index twin. */
   def pqCommitForBatch(spark: SparkSession, dir: String,
       batchId: Long): Long =
-    if (readPqMeta(spark, dir).isEmpty) -1L
-    else Generations.foldCommitForBatch(spark, dir, PqMetaName, batchId)
+    PqManifest.commitForBatch(spark, dir, batchId)
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
-import graft.util.Generations
+import graft.util.{Generations, StoreManifest}
+import graft.util.StoreManifest.{maskOlder, tombstones, window}
 
 /** Persisted TEXT DEDUP LEDGER with incremental maintenance — the
   * [[graft.ann.IndexStore]] discipline applied to the repo's most-probed
@@ -66,7 +67,6 @@ import graft.util.Generations
   */
 object LedgerStore {
 
-  private val MetaName = "_graft_ledger_meta.json"
   // v4 (round 11): + commit id / history archive.
   // v5 (round 12): SLICE-ORDERED tombstones — a purged/slice=S row
   // masks only sig/posting rows with slice < S, so [[upsertDocs]] can
@@ -76,8 +76,8 @@ object LedgerStore {
   // version mismatch.
   // v6: posting slices are flat files sorted by `bp` (a data column)
   // instead of `slice=S/bp=P/` directories; a v5 store would mix both
-  // layouts after one fold, so [[parseMeta]] refuses every other format
-  // before any read or write.
+  // layouts after one fold, so the manifest kernel refuses every other
+  // format before any read or write.
   private val Format = "graft-dedup-v6"
 
   /** v3 (round 10): `sliceBase` — the live slice window's lower bound.
@@ -96,62 +96,10 @@ object LedgerStore {
   final case class Meta(format: String, gen: Long, rows: Long, batch: Long,
       thresholdPerMille: Int, k: Int, bands: Int, prefixes: Int,
       maxBucket: Int, sliceBase: Long, slices: Long, commit: Long)
+      extends StoreManifest.Windowed
 
-  private val MetaRe =
-    ("""\{"format": "([^"]+)", "gen": ([0-9]+), "rows": ([0-9]+), """ +
-      """"batch": (-?[0-9]+), "thresholdPerMille": ([0-9]+), """ +
-      """"k": ([0-9]+), "bands": ([0-9]+), "prefixes": ([0-9]+), """ +
-      """"maxBucket": ([0-9]+), """ +
-      """"sliceBase": ([0-9]+), "slices": ([0-9]+), """ +
-      """"commit": ([0-9]+)\}""").r
-
-  private def parseMeta(dir: String, body: String): Meta = body match {
-    case MetaRe(f, g, n, b, t, k, bd, px, mb, sb, sl, c) if f == Format =>
-      Meta(f, g.toLong, n.toLong, b.toLong, t.toInt, k.toInt, bd.toInt,
-        px.toInt, mb.toInt, sb.toLong, sl.toLong, c.toLong)
-    case other => sys.error(
-      Generations.unparseableMsg(s"$dir (ledger manifest)", other, Format))
-  }
-
-  private def readMeta(spark: SparkSession, dir: String): Option[Meta] =
-    Generations.readPointer(spark, dir, MetaName).map(parseMeta(dir, _))
-
-  private def commitMeta(spark: SparkSession, dir: String, m: Meta): Unit =
-    Generations.commitArchived(spark, dir, MetaName,
-      s"""{"format": "$Format", "gen": ${m.gen}, "rows": ${m.rows}, """ +
-        s""""batch": ${m.batch}, """ +
-        s""""thresholdPerMille": ${m.thresholdPerMille}, """ +
-        s""""k": ${m.k}, "bands": ${m.bands}, """ +
-        s""""prefixes": ${m.prefixes}, "maxBucket": ${m.maxBucket}, """ +
-        s""""sliceBase": ${m.sliceBase}, """ +
-        s""""slices": ${m.slices}, """ +
-        s""""commit": ${m.commit}}""",
-      m.commit)
-
-  /** Tombstoned doc ids (the [[purgeDocs]] ledger): slices in the live
-    * window; empty when no purge ever ran OR every tombstone slice has
-    * been vacuumed (the dir then exists but holds no slice dirs —
-    * schema inference would fail on it). `schema` (the data columns,
-    * `id` only) skips the inference job when the caller knows it. */
-  private def livePurged(spark: SparkSession, dir: String, m: Meta,
-      schema: Option[StructType] = None): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/purged")
-    val hc = graft.util.Hfs.conf(spark)
-    val hasSlices = graft.util.Hfs.exists(p, hc) &&
-      graft.util.Hfs.list(p, hc).exists(_.getPath.getName.startsWith("slice="))
-    if (hasSlices)
-      readSlices(spark, s"$dir/purged", schema)
-        .filter(col("slice") >= m.sliceBase && col("slice") < m.slices)
-        .select(col("id"), col("slice").cast("long").as("_tomb"))
-    else {
-      import spark.implicits._
-      Seq.empty[(Long, Long)].toDF("id", "_tomb")
-    }
-  }
-
-  private def readSlices(spark: SparkSession, path: String,
-      schema: Option[StructType]): DataFrame =
-    schema.fold(spark.read)(spark.read.schema(_)).parquet(path)
+  private[graft] val Manifest =
+    new StoreManifest[Meta]("_graft_ledger_meta.json", Format, "ledger")
 
   /** A LIVE slice store (`sigs` or `postings`) under the v5
     * SLICE-ORDERED mask: a tombstone at slice S masks only copies OLDER
@@ -159,17 +107,13 @@ object LedgerStore {
     * tombstone) stays visible; pure purges read exactly as v4. */
   private def liveSlices(spark: SparkSession, dir: String, sub: String,
       m: Meta, tombs: DataFrame,
-      schema: Option[StructType] = None): DataFrame = {
-    val tomb = tombs.select(col("id").as("_tid"), col("_tomb"))
-    readSlices(spark, s"$dir/$sub", schema)
-      .filter(col("slice") >= m.sliceBase && col("slice") < m.slices)
-      .join(tomb, col("id") === col("_tid") && col("_tomb") > col("slice"),
-        "left_anti")
+      schema: Option[StructType] = None): DataFrame =
+    maskOlder(window(spark, s"$dir/$sub", m, schema), "id", tombs)
       .drop("slice")
-  }
 
   private def liveSigs(spark: SparkSession, dir: String, m: Meta): DataFrame =
-    liveSlices(spark, dir, "sigs", m, livePurged(spark, dir, m))
+    liveSlices(spark, dir, "sigs", m,
+      tombstones(spark, s"$dir/purged", "id", m))
 
   /** One fold's read of the committed state — the labels, tombstones,
     * signatures and postings, each listed and read ONCE — with every
@@ -181,7 +125,8 @@ object LedgerStore {
   private def liveWindow(spark: SparkSession, dir: String, m: Meta,
       sigSchema: StructType): Live = {
     val idField = sigSchema("id")
-    val tombs = livePurged(spark, dir, m, Some(StructType(Seq(idField))))
+    val tombs = tombstones(spark, s"$dir/purged", "id", m,
+      Some(StructType(Seq(idField))))
     Live(
       spark.read.schema(StructType(Seq(idField, idField.copy(name = "comp"))))
         .parquet(s"$dir/gen=${m.gen}/labels"),
@@ -212,7 +157,7 @@ object LedgerStore {
     labels.write.mode("overwrite").parquet(s"$dir/gen=${meta.gen}/labels")
     val n = spark.read.schema(labels.schema)
       .parquet(s"$dir/gen=${meta.gen}/labels").count()
-    commitMeta(spark, dir, meta.copy(rows = n, commit = meta.commit + 1))
+    Manifest.commit(spark, dir, meta.copy(rows = n, commit = meta.commit + 1))
     Generations.gc(spark, dir, meta.gen - (retainGens - 1))
     meta.gen
   }
@@ -235,17 +180,17 @@ object LedgerStore {
     // purge/fold/compact serialize on the per-(store, dir) monitor
     // (round-11 verdict #5); cross-process stays single-writer
     graft.util.Maintenance.withLeasedWriteLock("LedgerStore", spark, dir) {
-    readMeta(spark, dir) match {
+    Manifest.read(spark, dir) match {
       case Some(m) if m.slices - m.sliceBase > 1 =>
         val merged = m.slices
         Generations.claimSlice(spark, dir, Seq("purged"), merged)
-        val tombs = livePurged(spark, dir, m)
+        val tombs = tombstones(spark, s"$dir/purged", "id", m)
         liveSlices(spark, dir, "sigs", m, tombs).write.mode("overwrite")
           .parquet(s"$dir/sigs/slice=$merged")
         liveSlices(spark, dir, "postings", m, tombs)
           .repartition(col("bp")).sortWithinPartitions(col("bp"))
           .write.mode("overwrite").parquet(s"$dir/postings/slice=$merged")
-        commitMeta(spark, dir,
+        Manifest.commit(spark, dir,
           m.copy(sliceBase = merged, slices = merged + 1,
             commit = m.commit + 1))
         Some(merged)
@@ -259,7 +204,7 @@ object LedgerStore {
     * pointer. Run after a grace window once pre-compact readers have
     * moved on (the Apply deferred-GC contract). Returns dirs removed. */
   def vacuumSlices(spark: SparkSession, dir: String): Int =
-    readMeta(spark, dir).map { m =>
+    Manifest.read(spark, dir).map { m =>
       Generations.gcSlices(spark, dir, Seq("sigs", "postings", "purged"),
         m.sliceBase)
     }.getOrElse(0)
@@ -293,8 +238,7 @@ object LedgerStore {
   def purgeDocs(spark: SparkSession, dir: String, docIds: DataFrame,
       retainGens: Int = 2): Option[Long] = {
     graft.util.Maintenance.withLeasedWriteLock("LedgerStore", spark, dir) {
-    val m = readMeta(spark, dir).getOrElse(
-      sys.error(s"no committed ledger at $dir (missing $MetaName)"))
+    val m = Manifest.get(spark, dir)
     val labels = spark.read.parquet(s"$dir/gen=${m.gen}/labels")
     val targets = docIds.select(docIds.columns.head)
       .toDF("id").distinct()
@@ -332,7 +276,7 @@ object LedgerStore {
     val gen = m.gen + 1
     newLabels.write.mode("overwrite").parquet(s"$dir/gen=$gen/labels")
     val n = spark.read.parquet(s"$dir/gen=$gen/labels").count()
-    commitMeta(spark, dir,
+    Manifest.commit(spark, dir,
       m.copy(gen = gen, rows = n, slices = sliceId + 1,
         commit = m.commit + 1))
     Generations.gc(spark, dir, gen - (retainGens - 1))
@@ -375,7 +319,7 @@ object LedgerStore {
       batchId: Long = -1L): Option[Long] = {
     val spark = upserts.sparkSession
     graft.util.Maintenance.withLeasedWriteLock("LedgerStore", spark, dir) {
-    val m = readMeta(spark, dir).getOrElse(sys.error(
+    val m = Manifest.read(spark, dir).getOrElse(sys.error(
       s"no committed ledger at $dir — upsertDocs updates an existing " +
         "ledger; seed with maintainBatch first"))
     if (batchId >= 0 && batchId <= m.batch) return None
@@ -393,7 +337,7 @@ object LedgerStore {
       .localCheckpoint(true)
     val hasDocs = !docs.isEmpty
     if (!hasDocs && rem.isEmpty) {
-      recordEmptyBatch(spark, dir, Some(m), batchId); return None
+      Manifest.recordEmptyBatch(spark, dir, Some(m), batchId); return None
     }
     val threshold = m.thresholdPerMille / 1000.0
     val deltaSigs = Dedup.minhashSigSets(docs, col("doc_id"), col("text"),
@@ -441,13 +385,13 @@ object LedgerStore {
       next += 1
     }
     if (next == m.slices) { // nothing live to retire, nothing to land
-      recordEmptyBatch(spark, dir, Some(m), batchId); return None
+      Manifest.recordEmptyBatch(spark, dir, Some(m), batchId); return None
     }
     val gen = m.gen + 1
     newLabels.write.mode("overwrite").parquet(s"$dir/gen=$gen/labels")
     val n = spark.read.schema(newLabels.schema)
       .parquet(s"$dir/gen=$gen/labels").count()
-    commitMeta(spark, dir, m.copy(gen = gen, rows = n, batch = batchId,
+    Manifest.commit(spark, dir, m.copy(gen = gen, rows = n, batch = batchId,
       slices = next, commit = m.commit + 1))
     Generations.gc(spark, dir, gen - (retainGens - 1))
     Some(gen)
@@ -458,8 +402,7 @@ object LedgerStore {
     * — the slice union, liveness-pruned — and meta). Probe-ready —
     * `labels` is the q75-shaped ledger face. */
   def load(spark: SparkSession, dir: String): (DataFrame, DataFrame, Meta) = {
-    val m = readMeta(spark, dir).getOrElse(
-      sys.error(s"no committed ledger at $dir (missing $MetaName)"))
+    val m = Manifest.get(spark, dir)
     (spark.read.parquet(s"$dir/gen=${m.gen}/labels"),
       liveSigs(spark, dir, m), m)
   }
@@ -467,13 +410,12 @@ object LedgerStore {
   /** The current manifest, for callers pinning snapshots
     * ([[graft.util.PipelineLedger]]) without loading the frames. */
   def meta(spark: SparkSession, dir: String): Option[Meta] =
-    readMeta(spark, dir)
+    Manifest.read(spark, dir)
 
   /** Committed snapshot ids available for [[loadAt]], ascending. */
   def commits(spark: SparkSession, dir: String): Seq[Long] =
-    Generations.listCommits(spark, dir, MetaName)
+    Manifest.commits(spark, dir)
 
-  /** The archived manifest of snapshot `commit`. */
   /** CHANGE-FEED resolution (round 12 — `changes.ledger.{sigs,
     * postings,purged}` through `format("graft")`): the slice dirs
     * commits `(since, until]` appended — signature replication,
@@ -490,11 +432,9 @@ object LedgerStore {
       }, since, until)
   }
 
+  /** The archived manifest of snapshot `commit`. */
   def metaAt(spark: SparkSession, dir: String, commit: Long): Meta =
-    parseMeta(s"$dir@$commit",
-      Generations.readPointerAt(spark, dir, MetaName, commit).getOrElse(sys.error(
-        s"$dir has no committed snapshot $commit " +
-          s"(available: ${commits(spark, dir).mkString(", ")})")))
+    Manifest.at(spark, dir, commit)
 
   /** TIME-TRAVEL [[load]] — the ledger AS OF a committed snapshot id
     * (labels, live signature store, meta, each resolved through the
@@ -518,21 +458,6 @@ object LedgerStore {
     (spark.read.parquet(labelsDir), liveSigs(spark, dir, m), m)
   }
 
-  /** ADVICE r11: a ledgered batch the tombstone screen (or the batch
-    * itself) left EMPTY must still record its batch id — returning
-    * without a commit leaves the batch unledgered, so after a
-    * compact+vacuum drops the tombstones, a streaming replay of that
-    * batch (restart before the checkpoint committed) would re-fold and
-    * resurrect the purged docs. A no-op pointer bump (batch advanced,
-    * data untouched) keeps the replay guard `batchId <= m.batch`
-    * suppressing the re-fold. */
-  private def recordEmptyBatch(spark: SparkSession, dir: String,
-      prev: Option[Meta], batchId: Long): Unit =
-    prev.foreach { m =>
-      if (batchId >= 0 && batchId > m.batch)
-        commitMeta(spark, dir, m.copy(batch = batchId, commit = m.commit + 1))
-    }
-
   /** Fold one batch of NEW documents (id, text) into the persisted
     * ledger. First batch seeds (freezing the fold config in the
     * manifest); later batches pay DELTA-SIZED work only. Empty batches
@@ -553,9 +478,9 @@ object LedgerStore {
     val spark = batch.sparkSession
     graft.util.Maintenance.withLeasedWriteLock("LedgerStore", spark, dir) {
     val docs = batch.select(id.as("doc_id"), text.as("text"))
-    if (docs.isEmpty) { recordEmptyBatch(spark, dir, readMeta(spark, dir), batchId); return None }
+    if (docs.isEmpty) { Manifest.recordEmptyBatch(spark, dir, Manifest.read(spark, dir), batchId); return None }
     val perMille = math.round(threshold * 1000).toInt
-    readMeta(spark, dir) match {
+    Manifest.read(spark, dir) match {
       case None =>
         val sigs = Dedup.minhashSigSets(docs, col("doc_id"), col("text"),
           k = k).localCheckpoint(true)
@@ -594,7 +519,7 @@ object LedgerStore {
         val screened = docs.join(
           live.tombs.select(col("id").as("doc_id")),
           Seq("doc_id"), "left_anti")
-        if (screened.isEmpty) { recordEmptyBatch(spark, dir, Some(m), batchId); return None }
+        if (screened.isEmpty) { Manifest.recordEmptyBatch(spark, dir, Some(m), batchId); return None }
         val deltaSigs = Dedup.minhashSigSets(screened, col("doc_id"),
           col("text"), k = k).localCheckpoint(true)
         // the production fold: the old side reads only the delta's
@@ -653,23 +578,25 @@ object LedgerStore {
       sinceCommit: Long = -1L)
       : org.apache.spark.sql.streaming.StreamingQuery =
     graft.util.Cascade.followInto(spark, mergeDir, checkpoint, sinceCommit,
-      (ups, rem, bid) => {
-        upsertDocs(ups.select(col("_key").as("doc_id"), textOf.as("text")),
-          col("doc_id"), col("text"), rem.toDF("doc_id"), dir, retainGens,
-          batchId = bid)
-        ()
-      })
+      applyFeedWindow(_, _, dir, textOf, _, retainGens))
 
-  /** The committed snapshot id produced by LEDGERED batch `batchId` —
-    * the pin a cross-store set manifest records (ADVICE r11: the
-    * store's CURRENT commit can be later than the batch's fold commit
-    * when a compact/purge ran since — pinning current would claim "as
-    * of batch B" while naming a post-maintenance state). −1 when the
-    * store has no committed state at all (an empty seed batch). */
+  /** ONE feed window into [[upsertDocs]] — shared by
+    * [[followMergeTable]] and the set-cascade follower
+    * ([[graft.util.Cascade.ledgerFollower]]). */
+  private[graft] def applyFeedWindow(ups: DataFrame, rem: DataFrame,
+      dir: String, textOf: Column, batchId: Long,
+      retainGens: Int = 2): Unit = {
+    upsertDocs(ups.select(col("_key").as("doc_id"), textOf.as("text")),
+      col("doc_id"), col("text"), rem.toDF("doc_id"), dir, retainGens,
+      batchId = batchId)
+    ()
+  }
+
+  /** The committed snapshot id produced by LEDGERED batch `batchId`
+    * (see [[StoreManifest.commitForBatch]]). */
   def commitForBatch(spark: SparkSession, dir: String,
       batchId: Long): Long =
-    if (readMeta(spark, dir).isEmpty) -1L
-    else Generations.foldCommitForBatch(spark, dir, MetaName, batchId)
+    Manifest.commitForBatch(spark, dir, batchId)
 
   /** The labels table's data dir for a committed snapshot (commit =
     * None → current) — the path behind [[load]]/[[loadAt]]'s first
@@ -678,8 +605,7 @@ object LedgerStore {
     * retention dropped the snapshot's gen dir. */
   def labelsDir(spark: SparkSession, dir: String,
       commit: Option[Long]): String = {
-    val m = commit.map(metaAt(spark, dir, _)).orElse(readMeta(spark, dir))
-      .getOrElse(sys.error(s"no committed ledger at $dir"))
+    val m = commit.fold(Manifest.get(spark, dir))(Manifest.at(spark, dir, _))
     val p = s"$dir/gen=${m.gen}/labels"
     require(graft.util.Hfs.exists(new org.apache.hadoop.fs.Path(p),
         graft.util.Hfs.conf(spark)),

@@ -3,7 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.util.Generations
+import graft.util.{Generations, StoreManifest}
+import graft.util.StoreManifest.{maskOlder, tombstones, window}
 
 /** Persisted SEMANTIC (embedding) dedup ledger — [[LedgerStore]]'s twin
   * for the q102/q212/q244 sign-LSH pipeline, completing the set: every
@@ -35,7 +36,6 @@ import graft.util.Generations
   */
 object SemLedgerStore {
 
-  private val MetaName = "_graft_semledger_meta.json"
   // v4 (round 11): + commit id / history archive.
   // v5 (round 12): SLICE-ORDERED tombstones — a purged/slice=S row
   // masks only vec/pair rows with slice < S, so [[upsertVecs]] can
@@ -53,84 +53,27 @@ object SemLedgerStore {
   final case class Meta(format: String, gen: Long, rows: Long, batch: Long,
       thresholdPerMille: Int, nBands: Int, planesPerBand: Int, dim: Int,
       sliceBase: Long, slices: Long, commit: Long)
+      extends StoreManifest.Windowed
 
-  private val MetaRe =
-    ("""\{"format": "([^"]+)", "gen": ([0-9]+), "rows": ([0-9]+), """ +
-      """"batch": (-?[0-9]+), "thresholdPerMille": (-?[0-9]+), """ +
-      """"nBands": ([0-9]+), "planesPerBand": ([0-9]+), "dim": ([0-9]+), """ +
-      """"sliceBase": ([0-9]+), "slices": ([0-9]+), """ +
-      """"commit": ([0-9]+)\}""").r
-
-  private def parseMeta(dir: String, body: String): Meta = body match {
-    case MetaRe(f, g, n, b, t, nb, ppb, d, sb, sl, c) =>
-      Meta(f, g.toLong, n.toLong, b.toLong, t.toInt, nb.toInt,
-        ppb.toInt, d.toInt, sb.toLong, sl.toLong, c.toLong)
-    case other => sys.error(
-      Generations.unparseableMsg(s"$dir (semantic-ledger manifest)", other,
-        Format))
-  }
-
-  private def readMeta(spark: SparkSession, dir: String): Option[Meta] =
-    Generations.readPointer(spark, dir, MetaName).map(parseMeta(dir, _))
-
-  private def commitMeta(spark: SparkSession, dir: String, m: Meta): Unit =
-    Generations.commitArchived(spark, dir, MetaName,
-      s"""{"format": "$Format", "gen": ${m.gen}, "rows": ${m.rows}, """ +
-        s""""batch": ${m.batch}, """ +
-        s""""thresholdPerMille": ${m.thresholdPerMille}, """ +
-        s""""nBands": ${m.nBands}, """ +
-        s""""planesPerBand": ${m.planesPerBand}, "dim": ${m.dim}, """ +
-        s""""sliceBase": ${m.sliceBase}, "slices": ${m.slices}, """ +
-        s""""commit": ${m.commit}}""",
-      m.commit)
-
-
-  /** Tombstones (id, _tomb = the tombstone's slice id) — the
-    * [[purgeVecs]]/[[upsertVecs]] ledger; empty when no purge ran or
-    * every tombstone slice was vacuumed. */
-  private def livePurged(spark: SparkSession, dir: String,
-      m: Meta): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/purged")
-    val hc = graft.util.Hfs.conf(spark)
-    val hasSlices = graft.util.Hfs.exists(p, hc) &&
-      graft.util.Hfs.list(p, hc).exists(_.getPath.getName.startsWith("slice="))
-    if (hasSlices)
-      spark.read.parquet(s"$dir/purged")
-        .filter(col("slice") >= m.sliceBase && col("slice") < m.slices)
-        .select(col("id"), col("slice").cast("long").as("_tomb"))
-    else {
-      import spark.implicits._
-      Seq.empty[(Long, Long)].toDF("id", "_tomb")
-    }
-  }
+  private[graft] val Manifest = new StoreManifest[Meta](
+    "_graft_semledger_meta.json", Format, "semantic-ledger")
 
   /** The live vectors under the v5 SLICE-ORDERED mask: a tombstone at
     * slice S masks only copies OLDER than it — an [[upsertVecs]]
     * re-landed vector (data slice above its own tombstone) stays
     * visible; pure purges read exactly as v4. */
-  private def liveVecs(spark: SparkSession, dir: String, m: Meta): DataFrame = {
-    val tomb = livePurged(spark, dir, m)
-      .select(col("id").as("_tid"), col("_tomb"))
-    spark.read.parquet(s"$dir/vecs")
-      .filter(col("slice") >= m.sliceBase && col("slice") < m.slices)
-      .join(tomb, col("id") === col("_tid") && col("_tomb") > col("slice"),
-        "left_anti")
-      .drop("slice")
-  }
+  private def liveVecs(spark: SparkSession, dir: String, m: Meta): DataFrame =
+    maskOlder(window(spark, s"$dir/vecs", m), "id",
+      tombstones(spark, s"$dir/purged", "id", m)).drop("slice")
 
   /** The live pair ledger: a pair drops iff EITHER endpoint carries a
     * tombstone newer than the pair's slice — old pairs of an updated
     * vector (computed from the retired embedding) mask out, the upsert
     * fold's new pairs (written above the tombstone) survive. */
   private def livePairs(spark: SparkSession, dir: String, m: Meta): DataFrame = {
-    val tomb = livePurged(spark, dir, m)
-      .select(col("id").as("_tid"), col("_tomb"))
-    spark.read.parquet(s"$dir/pairs")
-      .filter(col("slice") >= m.sliceBase && col("slice") < m.slices)
-      .join(tomb, col("a_id") === col("_tid") && col("_tomb") > col("slice"),
-        "left_anti")
-      .join(tomb, col("b_id") === col("_tid") && col("_tomb") > col("slice"),
-        "left_anti")
+    val tombs = tombstones(spark, s"$dir/purged", "id", m)
+    maskOlder(maskOlder(window(spark, s"$dir/pairs", m), "a_id", tombs),
+      "b_id", tombs)
       .select(col("a_id"), col("b_id"), col("cosine"))
   }
 
@@ -145,7 +88,7 @@ object SemLedgerStore {
     deltaPairs.write.mode("overwrite").parquet(s"$dir/pairs/slice=$sliceId")
     labels.write.mode("overwrite").parquet(s"$dir/gen=${meta.gen}/labels")
     val n = spark.read.parquet(s"$dir/gen=${meta.gen}/labels").count()
-    commitMeta(spark, dir, meta.copy(rows = n, commit = meta.commit + 1))
+    Manifest.commit(spark, dir, meta.copy(rows = n, commit = meta.commit + 1))
     Generations.gc(spark, dir, meta.gen - (retainGens - 1))
     meta.gen
   }
@@ -160,7 +103,7 @@ object SemLedgerStore {
     // purge/fold/compact serialize on the per-(store, dir) monitor
     // (round-11 verdict #5); cross-process stays single-writer
     graft.util.Maintenance.withLeasedWriteLock("SemLedgerStore", spark, dir) {
-    readMeta(spark, dir) match {
+    Manifest.read(spark, dir) match {
       case Some(m) if m.slices - m.sliceBase > 1 =>
         val merged = m.slices
         Generations.claimSlice(spark, dir, Seq("purged"), merged)
@@ -171,7 +114,7 @@ object SemLedgerStore {
           .parquet(s"$dir/vecs/slice=$merged")
         livePairs(spark, dir, m).write.mode("overwrite")
           .parquet(s"$dir/pairs/slice=$merged")
-        commitMeta(spark, dir,
+        Manifest.commit(spark, dir,
           m.copy(sliceBase = merged, slices = merged + 1,
             commit = m.commit + 1))
         Some(merged)
@@ -182,7 +125,7 @@ object SemLedgerStore {
   /** Deferred slice GC below the current `sliceBase` — run after a
     * grace window (the Apply deferred-GC contract). */
   def vacuumSlices(spark: SparkSession, dir: String): Int =
-    readMeta(spark, dir).map { m =>
+    Manifest.read(spark, dir).map { m =>
       Generations.gcSlices(spark, dir, Seq("vecs", "pairs", "purged"),
         m.sliceBase)
     }.getOrElse(0)
@@ -192,9 +135,7 @@ object SemLedgerStore {
     * meta). */
   def load(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, Meta) = {
-    val m = readMeta(spark, dir).getOrElse(
-      sys.error(s"no committed semantic ledger at $dir (missing $MetaName)"))
-    require(m.format == Format, s"$dir holds '${m.format}', expected $Format")
+    val m = Manifest.get(spark, dir)
     (liveVecs(spark, dir, m),
       livePairs(spark, dir, m),
       spark.read.parquet(s"$dir/gen=${m.gen}/labels"), m)
@@ -203,7 +144,7 @@ object SemLedgerStore {
   /** The current manifest, for callers pinning snapshots
     * ([[graft.util.PipelineLedger]]) without loading the frames. */
   def meta(spark: SparkSession, dir: String): Option[Meta] =
-    readMeta(spark, dir)
+    Manifest.read(spark, dir)
 
   /** The labels table's data dir for a committed snapshot (commit =
     * None → current) — the exact frame [[load]]/[[loadAt]] serve third
@@ -213,9 +154,7 @@ object SemLedgerStore {
     * retention dropped the snapshot's gen dir. */
   def labelsDir(spark: SparkSession, dir: String,
       commit: Option[Long]): String = {
-    val m = commit.map(metaAt(spark, dir, _)).orElse(readMeta(spark, dir))
-      .getOrElse(sys.error(s"no committed semantic ledger at $dir"))
-    require(m.format == Format, s"$dir holds '${m.format}', expected $Format")
+    val m = commit.fold(Manifest.get(spark, dir))(Manifest.at(spark, dir, _))
     val p = s"$dir/gen=${m.gen}/labels"
     require(graft.util.Hfs.exists(new org.apache.hadoop.fs.Path(p),
         graft.util.Hfs.conf(spark)),
@@ -226,9 +165,8 @@ object SemLedgerStore {
 
   /** Committed snapshot ids available for [[loadAt]], ascending. */
   def commits(spark: SparkSession, dir: String): Seq[Long] =
-    Generations.listCommits(spark, dir, MetaName)
+    Manifest.commits(spark, dir)
 
-  /** The archived manifest of snapshot `commit`. */
   /** CHANGE-FEED resolution (round 12 — consumed through
     * `format("graft")` as `changes.sem.{vecs,pairs,purged}`): the
     * slice dirs commits `(since, until]` appended. The `pairs` feed is
@@ -249,11 +187,9 @@ object SemLedgerStore {
       }, since, until)
   }
 
+  /** The archived manifest of snapshot `commit`. */
   def metaAt(spark: SparkSession, dir: String, commit: Long): Meta =
-    parseMeta(s"$dir@$commit",
-      Generations.readPointerAt(spark, dir, MetaName, commit).getOrElse(sys.error(
-        s"$dir has no committed snapshot $commit " +
-          s"(available: ${commits(spark, dir).mkString(", ")})")))
+    Manifest.at(spark, dir, commit)
 
   /** TIME-TRAVEL [[load]] — the semantic ledger AS OF a committed
     * snapshot id; fails loudly once vacuum/generation retention dropped
@@ -284,8 +220,7 @@ object SemLedgerStore {
   def purgeVecs(spark: SparkSession, dir: String, vecIds: DataFrame,
       retainGens: Int = 2): Option[Long] = {
     graft.util.Maintenance.withLeasedWriteLock("SemLedgerStore", spark, dir) {
-    val m = readMeta(spark, dir).getOrElse(
-      sys.error(s"no committed semantic ledger at $dir (missing $MetaName)"))
+    val m = Manifest.get(spark, dir)
     val labels = spark.read.parquet(s"$dir/gen=${m.gen}/labels")
     val targets = vecIds.select(vecIds.columns.head)
       .toDF("id").distinct()
@@ -316,7 +251,7 @@ object SemLedgerStore {
     val gen = m.gen + 1
     newLabels.write.mode("overwrite").parquet(s"$dir/gen=$gen/labels")
     val n = spark.read.parquet(s"$dir/gen=$gen/labels").count()
-    commitMeta(spark, dir,
+    Manifest.commit(spark, dir,
       m.copy(gen = gen, rows = n, slices = sliceId + 1,
         commit = m.commit + 1))
     Generations.gc(spark, dir, gen - (retainGens - 1))
@@ -352,7 +287,7 @@ object SemLedgerStore {
       batchId: Long = -1L): Option[Long] = {
     val spark = upserts.sparkSession
     graft.util.Maintenance.withLeasedWriteLock("SemLedgerStore", spark, dir) {
-    val m = readMeta(spark, dir).getOrElse(sys.error(
+    val m = Manifest.read(spark, dir).getOrElse(sys.error(
       s"no committed semantic ledger at $dir — upsertVecs updates an " +
         "existing ledger; seed with maintainBatch first"))
     if (batchId >= 0 && batchId <= m.batch) return None
@@ -369,7 +304,7 @@ object SemLedgerStore {
       .join(newVecs.select(col("id")), Seq("id"), "left_anti")
       .localCheckpoint(true)
     if (newVecs.isEmpty && rem.isEmpty) {
-      recordEmptyBatch(spark, dir, Some(m), batchId); return None
+      Manifest.recordEmptyBatch(spark, dir, Some(m), batchId); return None
     }
     val threshold = m.thresholdPerMille / 1000.0
     val labels = spark.read.parquet(s"$dir/gen=${m.gen}/labels")
@@ -410,12 +345,12 @@ object SemLedgerStore {
       next += 1
     }
     if (next == m.slices) { // nothing live to retire, nothing to land
-      recordEmptyBatch(spark, dir, Some(m), batchId); return None
+      Manifest.recordEmptyBatch(spark, dir, Some(m), batchId); return None
     }
     val gen = m.gen + 1
     newLabels.write.mode("overwrite").parquet(s"$dir/gen=$gen/labels")
     val n = spark.read.parquet(s"$dir/gen=$gen/labels").count()
-    commitMeta(spark, dir, m.copy(gen = gen, rows = n, batch = batchId,
+    Manifest.commit(spark, dir, m.copy(gen = gen, rows = n, batch = batchId,
       slices = next, commit = m.commit + 1))
     Generations.gc(spark, dir, gen - (retainGens - 1))
     Some(gen)
@@ -441,27 +376,19 @@ object SemLedgerStore {
       sinceCommit: Long = -1L)
       : org.apache.spark.sql.streaming.StreamingQuery =
     graft.util.Cascade.followInto(spark, mergeDir, checkpoint, sinceCommit,
-      (ups, rem, bid) => {
-        upsertVecs(ups.select(col("_key").as("id"), embedOf.as("v")),
-          col("id"), col("v"), rem.toDF("id"), dir, retainGens,
-          batchId = bid)
-        ()
-      })
+      applyFeedWindow(_, _, dir, embedOf, _, retainGens))
 
-  /** ADVICE r11: a ledgered batch the tombstone screen (or the batch
-    * itself) left EMPTY must still record its batch id — returning
-    * without a commit leaves the batch unledgered, so after a
-    * compact+vacuum drops the tombstones, a streaming replay of that
-    * batch (restart before the checkpoint committed) would re-fold and
-    * resurrect the purged docs. A no-op pointer bump (batch advanced,
-    * data untouched) keeps the replay guard `batchId <= m.batch`
-    * suppressing the re-fold. */
-  private def recordEmptyBatch(spark: SparkSession, dir: String,
-      prev: Option[Meta], batchId: Long): Unit =
-    prev.foreach { m =>
-      if (batchId >= 0 && batchId > m.batch)
-        commitMeta(spark, dir, m.copy(batch = batchId, commit = m.commit + 1))
-    }
+  /** ONE feed window into [[upsertVecs]] — shared by
+    * [[followMergeTable]] and the set-cascade follower
+    * ([[graft.util.Cascade.semFollower]]). */
+  private[graft] def applyFeedWindow(ups: DataFrame, rem: DataFrame,
+      dir: String, embedOf: Column, batchId: Long,
+      retainGens: Int = 2): Unit = {
+    upsertVecs(ups.select(col("_key").as("id"), embedOf.as("v")),
+      col("id"), col("v"), rem.toDF("id"), dir, retainGens,
+      batchId = batchId)
+    ()
+  }
 
   /** Fold one batch of NEW vectors (id, embedding) into the persisted
     * ledger; first batch seeds and freezes the config. Empty batches
@@ -473,9 +400,9 @@ object SemLedgerStore {
     val spark = batch.sparkSession
     graft.util.Maintenance.withLeasedWriteLock("SemLedgerStore", spark, dir) {
     val vecs = batch.select(id.as("id"), vec.as("v")).localCheckpoint(true)
-    if (vecs.isEmpty) { recordEmptyBatch(spark, dir, readMeta(spark, dir), batchId); return None }
+    if (vecs.isEmpty) { Manifest.recordEmptyBatch(spark, dir, Manifest.read(spark, dir), batchId); return None }
     val perMille = math.round(threshold * 1000).toInt
-    readMeta(spark, dir) match {
+    Manifest.read(spark, dir) match {
       case None =>
         val pairs = Dedup.lshNearDupsDelta(vecs.limit(0), vecs,
           col("id"), col("v"), nBands, planesPerBand, dim, threshold)
@@ -498,9 +425,10 @@ object SemLedgerStore {
         // TOMBSTONE SCREEN (round-10 ADVICE): purged ids stay purged
         // until compact+vacuum; re-folding one would re-enter the labels
         // while the tombstone hides its vector from every pairing read
-        val screened = vecs.join(livePurged(spark, dir, m).select("id"),
+        val screened = vecs.join(
+          tombstones(spark, s"$dir/purged", "id", m).select("id"),
           Seq("id"), "left_anti").localCheckpoint(true)
-        if (screened.isEmpty) { recordEmptyBatch(spark, dir, Some(m), batchId); return None }
+        if (screened.isEmpty) { Manifest.recordEmptyBatch(spark, dir, Some(m), batchId); return None }
         val deltaPairs = Dedup.lshNearDupsDelta(oldVecs, screened,
           col("id"), col("v"), nBands, planesPerBand, dim, threshold)
           .localCheckpoint(true)
@@ -533,14 +461,9 @@ object SemLedgerStore {
       }
       .start()
 
-  /** The committed snapshot id produced by LEDGERED batch `batchId` —
-    * the pin a cross-store set manifest records (ADVICE r11: the
-    * store's CURRENT commit can be later than the batch's fold commit
-    * when a compact/purge ran since — pinning current would claim "as
-    * of batch B" while naming a post-maintenance state). −1 when the
-    * store has no committed state at all (an empty seed batch). */
+  /** The committed snapshot id produced by LEDGERED batch `batchId`
+    * (see [[StoreManifest.commitForBatch]]). */
   def commitForBatch(spark: SparkSession, dir: String,
       batchId: Long): Long =
-    if (readMeta(spark, dir).isEmpty) -1L
-    else Generations.foldCommitForBatch(spark, dir, MetaName, batchId)
+    Manifest.commitForBatch(spark, dir, batchId)
 }

@@ -40,71 +40,69 @@ import graft.util.Generations
   */
 private[sources] object GraftProcedures {
 
-  private val Kinds: Seq[(String, String)] = Seq(
-    "merge" -> "_graft_table_meta.json",
-    "postings" -> "_graft_postings_meta.json",
-    "ledger" -> "_graft_ledger_meta.json",
-    "sem" -> "_graft_semledger_meta.json",
-    "graph" -> "_graft_graph_meta.json",
-    "ivf" -> "_graft_index_meta.json")
+  /** One store kind: its manifest, and what `compact` and `vacuum` run
+    * on it (each returns the result row's detail). */
+  private final case class Kind(kind: String, manifest: String,
+      compact: (SparkSession, String) => String,
+      vacuum: (SparkSession, String) => String)
+
+  private def sliceMsg(r: Option[Long]): String =
+    r.fold("window already compact (nothing to do)")(s =>
+      s"window merged into slice $s")
+
+  private def removed(n: Int): String = s"$n slice dirs removed"
+
+  private val Kinds: Seq[Kind] = Seq(
+    Kind("merge", "_graft_table_meta.json",
+      (s, d) => { graft.cdc.Apply.compact(s, d); "live buckets rewritten" },
+      (s, d) => {
+        graft.cdc.Apply.vacuum(s, d); "unreferenced generations removed"
+      }),
+    Kind("postings", graft.text.PostingsStore.Manifest.name,
+      (s, d) => sliceMsg(graft.text.PostingsStore.compact(s, d)),
+      (s, d) => removed(graft.text.PostingsStore.vacuumSlices(s, d))),
+    Kind("ledger", graft.dedup.LedgerStore.Manifest.name,
+      (s, d) => sliceMsg(graft.dedup.LedgerStore.compact(s, d)),
+      (s, d) => removed(graft.dedup.LedgerStore.vacuumSlices(s, d))),
+    Kind("sem", graft.dedup.SemLedgerStore.Manifest.name,
+      (s, d) => sliceMsg(graft.dedup.SemLedgerStore.compact(s, d)),
+      (s, d) => removed(graft.dedup.SemLedgerStore.vacuumSlices(s, d))),
+    Kind("graph", graft.warehouse.GraphStore.Manifest.name,
+      (s, d) => sliceMsg(graft.warehouse.GraphStore.compact(s, d)),
+      (s, d) => removed(graft.warehouse.GraphStore.vacuumSlices(s, d))),
+    Kind("ivf", graft.ann.IndexStore.Manifest.name,
+      (s, d) => sliceMsg(graft.ann.IndexStore.compactAssigned(s, d)),
+      (s, d) => removed(graft.ann.IndexStore.vacuumAssignedSlices(s, d))))
 
   val Names: Seq[String] =
     Seq("compact", "vacuum", "commits", "restore", "vacuum_changes",
       "schema_history", "migrate_schema_history")
 
-  private def kindOf(spark: SparkSession, dir: String): (String, String) =
-    Kinds.collectFirst {
-      case (k, m) if Generations.readPointer(spark, dir, m).isDefined =>
-        (k, m)
-    }.getOrElse(sys.error(
-      s"$dir holds no committed graft store manifest " +
-        s"(looked for: ${Kinds.map(_._2).mkString(", ")})"))
+  private def kindOf(spark: SparkSession, dir: String): Kind =
+    Kinds.find(k => Generations.readPointer(spark, dir, k.manifest).isDefined)
+      .getOrElse(sys.error(
+        s"$dir holds no committed graft store manifest " +
+          s"(looked for: ${Kinds.map(_.manifest).mkString(", ")})"))
 
   def load(name: String, dirOf: String => String): UnboundProcedure =
     name match {
       case "compact" => verb(name, dirOf) { (spark, dir) =>
-        val (kind, _) = kindOf(spark, dir)
-        val detail = kind match {
-          case "merge" =>
-            graft.cdc.Apply.compact(spark, dir); "live buckets rewritten"
-          case "postings" => sliceMsg(graft.text.PostingsStore.compact(spark, dir))
-          case "ledger" => sliceMsg(graft.dedup.LedgerStore.compact(spark, dir))
-          case "sem" => sliceMsg(graft.dedup.SemLedgerStore.compact(spark, dir))
-          case "graph" => sliceMsg(graft.warehouse.GraphStore.compact(spark, dir))
-          case "ivf" =>
-            sliceMsg(graft.ann.IndexStore.compactAssigned(spark, dir))
-        }
-        (kind, detail)
+        val k = kindOf(spark, dir); (k.kind, k.compact(spark, dir))
       }
       case "vacuum" => verb(name, dirOf) { (spark, dir) =>
-        val (kind, _) = kindOf(spark, dir)
-        val detail = kind match {
-          case "merge" =>
-            graft.cdc.Apply.vacuum(spark, dir); "unreferenced generations removed"
-          case "postings" =>
-            s"${graft.text.PostingsStore.vacuumSlices(spark, dir)} slice dirs removed"
-          case "ledger" =>
-            s"${graft.dedup.LedgerStore.vacuumSlices(spark, dir)} slice dirs removed"
-          case "sem" =>
-            s"${graft.dedup.SemLedgerStore.vacuumSlices(spark, dir)} slice dirs removed"
-          case "graph" =>
-            s"${graft.warehouse.GraphStore.vacuumSlices(spark, dir)} slice dirs removed"
-          case "ivf" =>
-            s"${graft.ann.IndexStore.vacuumAssignedSlices(spark, dir)} slice dirs removed"
-        }
-        (kind, detail)
+        val k = kindOf(spark, dir); (k.kind, k.vacuum(spark, dir))
       }
       case "commits" => new StoreProcedure(name, dirOf,
         new StructType().add("commit", LongType).add("committed_at_ms", LongType)
           .add("kind", StringType),
         (spark, dir, _) => {
-          val (kind, meta) = kindOf(spark, dir)
+          val k = kindOf(spark, dir)
           val hc = graft.util.Hfs.conf(spark)
-          Generations.listCommits(spark, dir, meta).map { c =>
+          Generations.listCommits(spark, dir, k.manifest).map { c =>
             val p = new org.apache.hadoop.fs.Path(
               s"$dir/_graft_history/commit-$c.json")
             new GenericInternalRow(Array[Any](c, graft.util.Hfs.mtime(p, hc),
-              UTF8String.fromString(kind)))
+              UTF8String.fromString(k.kind)))
           }.toArray[InternalRow]
         })
       // merge-table-only operational verbs: RESTORE (Delta `RESTORE
@@ -160,7 +158,7 @@ private[sources] object GraftProcedures {
 
   private def requireKind(spark: SparkSession, dir: String,
       want: String, verb: String): Unit = {
-    val (kind, _) = kindOf(spark, dir)
+    val kind = kindOf(spark, dir).kind
     require(kind == want,
       s"$verb applies to $want tables; $dir holds a '$kind' store")
   }
@@ -168,10 +166,6 @@ private[sources] object GraftProcedures {
   private def row2(kind: String, detail: String): Array[InternalRow] =
     Array[InternalRow](new GenericInternalRow(Array[Any](
       UTF8String.fromString(kind), UTF8String.fromString(detail))))
-
-  private def sliceMsg(r: Option[Long]): String =
-    r.fold("window already compact (nothing to do)")(s =>
-      s"window merged into slice $s")
 
   private def verb(name: String, dirOf: String => String)(
       run: (SparkSession, String) => (String, String)): UnboundProcedure =

@@ -3,7 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.util.Generations
+import graft.util.{Generations, StoreManifest}
+import graft.util.StoreManifest.{maskOlder, tombstones, window}
 
 /** Persisted INVERTED INDEX with incremental maintenance — the retrieval
   * stack's disk face, completing the set of maintained substrates (text
@@ -51,7 +52,6 @@ import graft.util.Generations
   */
 object PostingsStore {
 
-  private val MetaName = "_graft_postings_meta.json"
   // v2 (round 11): + commit id / history archive.
   // v3 (round 12): tombstones are SLICE-ORDERED — a purged/slice=S row
   // masks only data rows with slice < S, so [[upsertBatch]] can retire
@@ -64,8 +64,8 @@ object PostingsStore {
   // v4: slices are flat files sorted by `tp` (a data column) instead
   // of `slice=S/tp=P/` directories. A v3 store cannot take a v4 fold —
   // its slices would mix both layouts and partition discovery fails —
-  // so [[parseMeta]] refuses every other format before any read or
-  // write.
+  // so the manifest kernel refuses every other format before any read
+  // or write.
   private val Format = "graft-postings-v4"
 
   /** v2 (round 11): `commit` — the monotone snapshot id. Every pointer
@@ -75,32 +75,10 @@ object PostingsStore {
     * from any still-readable past snapshot. */
   final case class Meta(format: String, batch: Long, nDocs: Long,
       totTokens: Long, prefixes: Int, sliceBase: Long, slices: Long,
-      commit: Long)
+      commit: Long) extends StoreManifest.Windowed
 
-  private val MetaRe =
-    ("""\{"format": "([^"]+)", "batch": (-?[0-9]+), "nDocs": ([0-9]+), """ +
-      """"totTokens": ([0-9]+), "prefixes": ([0-9]+), """ +
-      """"sliceBase": ([0-9]+), "slices": ([0-9]+), """ +
-      """"commit": ([0-9]+)\}""").r
-
-  private def parseMeta(dir: String, body: String): Meta = body match {
-    case MetaRe(f, b, nd, tt, px, sb, sl, c) if f == Format =>
-      Meta(f, b.toLong, nd.toLong, tt.toLong, px.toInt, sb.toLong,
-        sl.toLong, c.toLong)
-    case other => sys.error(
-      Generations.unparseableMsg(s"$dir (postings manifest)", other, Format))
-  }
-
-  private def readMeta(spark: SparkSession, dir: String): Option[Meta] =
-    Generations.readPointer(spark, dir, MetaName).map(parseMeta(dir, _))
-
-  private def commitMeta(spark: SparkSession, dir: String, m: Meta): Unit =
-    Generations.commitArchived(spark, dir, MetaName,
-      s"""{"format": "$Format", "batch": ${m.batch}, "nDocs": ${m.nDocs}, """ +
-        s""""totTokens": ${m.totTokens}, "prefixes": ${m.prefixes}, """ +
-        s""""sliceBase": ${m.sliceBase}, "slices": ${m.slices}, """ +
-        s""""commit": ${m.commit}}""",
-      m.commit)
+  private[graft] val Manifest =
+    new StoreManifest[Meta]("_graft_postings_meta.json", Format, "postings")
 
   /** Term-prefix sort key: a pure function of the term (every posting
     * of a term shares ONE prefix — the minhashPostings `bp` argument
@@ -116,45 +94,18 @@ object PostingsStore {
     * as v2; an [[upsertBatch]]'s re-landed copy (data slice above its
     * own tombstone slice) stays visible. */
   private def live(spark: SparkSession, dir: String, sub: String,
-      m: Meta): DataFrame = {
-    val rows = spark.read.parquet(s"$dir/$sub")
-      .filter(col("slice") >= m.sliceBase && col("slice") < m.slices)
-    rows.as("r")
-      .join(livePurged(spark, dir, m).as("p"),
-        col("r.id") === col("p.id") && col("p._tomb") > col("r.slice"),
-        "left_anti")
-      .drop("slice")
-  }
-
-  /** Tombstones (id, _tomb = the tombstone's slice id) — the
-    * [[purgeDocs]]/[[upsertBatch]] ledger; empty when no purge ran or
-    * every tombstone slice was vacuumed. */
-  private def livePurged(spark: SparkSession, dir: String,
-      m: Meta): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/purged")
-    val hc = graft.util.Hfs.conf(spark)
-    val hasSlices = graft.util.Hfs.exists(p, hc) &&
-      graft.util.Hfs.list(p, hc).exists(_.getPath.getName.startsWith("slice="))
-    if (hasSlices)
-      spark.read.parquet(s"$dir/purged")
-        .filter(col("slice") >= m.sliceBase && col("slice") < m.slices)
-        .select(col("id"), col("slice").cast("long").as("_tomb"))
-    else {
-      import spark.implicits._
-      Seq.empty[(Long, Long)].toDF("id", "_tomb")
-    }
-  }
+      m: Meta): DataFrame =
+    maskOlder(window(spark, s"$dir/$sub", m), "id",
+      tombstones(spark, s"$dir/purged", "id", m)).drop("slice")
 
   /** The current manifest, for callers composing their own scoring. */
   def meta(spark: SparkSession, dir: String): Option[Meta] =
-    readMeta(spark, dir)
+    Manifest.read(spark, dir)
 
   /** The live (id, dl) rows — the masked read face (consumers
     * composing their own scoring, and the upsert/cascade specs). */
   def docLengths(spark: SparkSession, dir: String): DataFrame =
-    live(spark, dir, "doclen",
-      readMeta(spark, dir).getOrElse(sys.error(
-        s"no committed postings store at $dir (missing $MetaName)")))
+    live(spark, dir, "doclen", Manifest.get(spark, dir))
 
   /** [[docLengths]] AS OF a committed snapshot id — the pinned-read
     * face a cross-store set composition needs ([[bm25QueryAt]]'s
@@ -167,21 +118,6 @@ object PostingsStore {
       s"snapshot $commit")
     live(spark, dir, "doclen", m)
   }
-
-  /** ADVICE r11: a ledgered batch the tombstone screen (or the batch
-    * itself) left EMPTY must still record its batch id — returning
-    * without a commit leaves the batch unledgered, so after a
-    * compact+vacuum drops the tombstones, a streaming replay of that
-    * batch (restart before the checkpoint committed) would re-fold and
-    * resurrect the purged docs. A no-op pointer bump (batch advanced,
-    * data untouched) keeps the replay guard `batchId <= m.batch`
-    * suppressing the re-fold. */
-  private def recordEmptyBatch(spark: SparkSession, dir: String,
-      prev: Option[Meta], batchId: Long): Unit =
-    prev.foreach { m =>
-      if (batchId >= 0 && batchId > m.batch)
-        commitMeta(spark, dir, m.copy(batch = batchId, commit = m.commit + 1))
-    }
 
   /** Fold one batch of NEW documents (id, text) into the store: delta
     * tokenization only, one appended slice per table, corpus stats and
@@ -196,8 +132,8 @@ object PostingsStore {
     // id mid-write; cross-process remains single-writer by contract)
     graft.util.Maintenance.withLeasedWriteLock("PostingsStore", spark, dir) {
     val docs = batch.select(id.as("id"), text.as("text"))
-    if (docs.isEmpty) { recordEmptyBatch(spark, dir, readMeta(spark, dir), batchId); return None }
-    val prev = readMeta(spark, dir)
+    if (docs.isEmpty) { Manifest.recordEmptyBatch(spark, dir, Manifest.read(spark, dir), batchId); return None }
+    val prev = Manifest.read(spark, dir)
     prev match {
       case Some(m) if batchId >= 0 && batchId <= m.batch => return None
       case Some(m) => require(m.prefixes == prefixes,
@@ -216,8 +152,9 @@ object PostingsStore {
     // or ONE atomic [[upsertBatch]], the verb that retires the old copy
     // itself (round 12) and therefore needs no screen.
     val screened = prev.fold(docs)(m0 =>
-      docs.join(livePurged(spark, dir, m0), Seq("id"), "left_anti"))
-    if (prev.isDefined && screened.isEmpty) { recordEmptyBatch(spark, dir, prev, batchId); return None }
+      docs.join(tombstones(spark, s"$dir/purged", "id", m0), Seq("id"),
+        "left_anti"))
+    if (prev.isDefined && screened.isEmpty) { Manifest.recordEmptyBatch(spark, dir, prev, batchId); return None }
     val toks = screened.select(col("id"),
       explode(TextFunctions.tokens(col("text"))).as("term"))
     val sliceId = m.slices
@@ -240,7 +177,7 @@ object PostingsStore {
     // the one atomic commit carrying stats + ledger + window together
     val stats = spark.read.parquet(s"$dir/doclen/slice=$sliceId")
       .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
-    commitMeta(spark, dir, m.copy(batch = batchId,
+    Manifest.commit(spark, dir, m.copy(batch = batchId,
       nDocs = m.nDocs + stats.getLong(0),
       totTokens = m.totTokens + stats.getLong(1),
       slices = sliceId + 1, commit = m.commit + 1))
@@ -280,7 +217,7 @@ object PostingsStore {
       .distinct()
       .join(docs.select(col("id")), Seq("id"), "left_anti")
       .localCheckpoint(true)
-    val prev = readMeta(spark, dir)
+    val prev = Manifest.read(spark, dir)
     prev match {
       case Some(m) if batchId >= 0 && batchId <= m.batch => return None
       case Some(m) => require(m.prefixes == prefixes,
@@ -292,7 +229,7 @@ object PostingsStore {
       Meta(Format, -1L, 0L, 0L, prefixes, sliceBase = 0L, slices = 0L,
         commit = -1L))
     if (docs.isEmpty && rem.isEmpty) {
-      recordEmptyBatch(spark, dir, prev, batchId); return None
+      Manifest.recordEmptyBatch(spark, dir, prev, batchId); return None
     }
     // retire the LIVE copies of everything incoming or removed
     val targets =
@@ -336,9 +273,9 @@ object PostingsStore {
         (s.getLong(0), s.getLong(1))
       }
     if (next == m.slices) { // everything screened away: no-op bump
-      recordEmptyBatch(spark, dir, prev, batchId); return None
+      Manifest.recordEmptyBatch(spark, dir, prev, batchId); return None
     }
-    commitMeta(spark, dir, m.copy(batch = batchId,
+    Manifest.commit(spark, dir, m.copy(batch = batchId,
       nDocs = m.nDocs - gone._1 + newNd,
       totTokens = m.totTokens - gone._2 + newNt,
       slices = next, commit = m.commit + 1))
@@ -362,12 +299,19 @@ object PostingsStore {
       sinceCommit: Long = -1L)
       : org.apache.spark.sql.streaming.StreamingQuery =
     graft.util.Cascade.followInto(spark, mergeDir, checkpoint, sinceCommit,
-      (ups, rem, bid) => {
-        upsertBatch(ups.select(col("_key").as("id"), textOf.as("text")),
-          col("id"), col("text"), rem.toDF("id"), dir, prefixes,
-          batchId = bid)
-        ()
-      })
+      applyFeedWindow(_, _, dir, textOf, _, prefixes))
+
+  /** ONE feed window into [[upsertBatch]] — shared by
+    * [[followMergeTable]] and the set-cascade follower
+    * ([[graft.util.Cascade.postingsFollower]]), so the two paths cannot
+    * drift. */
+  private[graft] def applyFeedWindow(ups: DataFrame, rem: DataFrame,
+      dir: String, textOf: Column, batchId: Long, prefixes: Int = 64): Unit = {
+    upsertBatch(ups.select(col("_key").as("id"), textOf.as("text")),
+      col("id"), col("text"), rem.toDF("id"), dir, prefixes,
+      batchId = batchId)
+    ()
+  }
 
   /** Continuous maintenance: one fold per micro-batch of arriving
     * documents, exactly-once via the manifest's batch-id ledger. */
@@ -392,7 +336,7 @@ object PostingsStore {
     * skipping at large slice sizes. */
   def compact(spark: SparkSession, dir: String): Option[Long] =
     graft.util.Maintenance.withLeasedWriteLock("PostingsStore", spark, dir) {
-    readMeta(spark, dir) match {
+    Manifest.read(spark, dir) match {
       case Some(m) if m.slices - m.sliceBase > 1 =>
         val merged = m.slices
         Generations.claimSlice(spark, dir, Seq("purged"), merged)
@@ -401,7 +345,7 @@ object PostingsStore {
           .write.mode("overwrite").parquet(s"$dir/postings/slice=$merged")
         live(spark, dir, "doclen", m).write.mode("overwrite")
           .parquet(s"$dir/doclen/slice=$merged")
-        commitMeta(spark, dir, m.copy(sliceBase = merged,
+        Manifest.commit(spark, dir, m.copy(sliceBase = merged,
           slices = merged + 1, commit = m.commit + 1))
         Some(merged)
       case _ => None
@@ -410,7 +354,7 @@ object PostingsStore {
 
   /** Deferred slice GC below the current window base. */
   def vacuumSlices(spark: SparkSession, dir: String): Int =
-    readMeta(spark, dir).map { m =>
+    Manifest.read(spark, dir).map { m =>
       Generations.gcSlices(spark, dir, Seq("postings", "doclen", "purged"),
         m.sliceBase)
     }.getOrElse(0)
@@ -427,8 +371,7 @@ object PostingsStore {
   def purgeDocs(spark: SparkSession, dir: String,
       docIds: DataFrame): Option[(Long, Long)] = {
     graft.util.Maintenance.withLeasedWriteLock("PostingsStore", spark, dir) {
-    val m = readMeta(spark, dir).getOrElse(
-      sys.error(s"no committed postings store at $dir (missing $MetaName)"))
+    val m = Manifest.get(spark, dir)
     val targets = docIds.select(docIds.columns.head)
       .toDF("id").distinct()
       .join(live(spark, dir, "doclen", m).select(col("id")),
@@ -447,7 +390,7 @@ object PostingsStore {
     // live (uncounted by the stats) and break the replay's overwrite
     Generations.claimSlice(spark, dir, Seq("postings", "doclen"), sliceId)
     targets.write.mode("overwrite").parquet(s"$dir/purged/slice=$sliceId")
-    commitMeta(spark, dir, m.copy(
+    Manifest.commit(spark, dir, m.copy(
       nDocs = m.nDocs - nd, totTokens = m.totTokens - nt,
       slices = sliceId + 1, commit = m.commit + 1))
     Some((nd, nt))
@@ -465,21 +408,15 @@ object PostingsStore {
     * Σdl from the incrementally-maintained stats. */
   def bm25Query(spark: SparkSession, dir: String,
       terms: Seq[String], topK: Int): DataFrame =
-    bm25On(spark, dir,
-      readMeta(spark, dir).getOrElse(sys.error(
-        s"no committed postings store at $dir (missing $MetaName)")),
-      terms, topK)
+    bm25On(spark, dir, Manifest.get(spark, dir), terms, topK)
 
   /** Committed snapshot ids available for [[bm25QueryAt]], ascending. */
   def commits(spark: SparkSession, dir: String): Seq[Long] =
-    Generations.listCommits(spark, dir, MetaName)
+    Manifest.commits(spark, dir)
 
   /** The archived manifest of snapshot `commit`. */
   def metaAt(spark: SparkSession, dir: String, commit: Long): Meta =
-    parseMeta(s"$dir@$commit",
-      Generations.readPointerAt(spark, dir, MetaName, commit).getOrElse(sys.error(
-        s"$dir has no committed snapshot $commit " +
-          s"(available: ${commits(spark, dir).mkString(", ")})")))
+    Manifest.at(spark, dir, commit)
 
   /** TIME-TRAVEL BM25 — [[bm25Query]] AS OF a committed snapshot id:
     * resolves through the archived manifest exactly like the current
@@ -532,16 +469,11 @@ object PostingsStore {
       .limit(topK)
   }
 
-  /** The committed snapshot id produced by LEDGERED batch `batchId` —
-    * the pin a cross-store set manifest records (ADVICE r11: the
-    * store's CURRENT commit can be later than the batch's fold commit
-    * when a compact/purge ran since — pinning current would claim "as
-    * of batch B" while naming a post-maintenance state). −1 when the
-    * store has no committed state at all (an empty seed batch). */
+  /** The committed snapshot id produced by LEDGERED batch `batchId`
+    * (see [[StoreManifest.commitForBatch]]). */
   def commitForBatch(spark: SparkSession, dir: String,
       batchId: Long): Long =
-    if (readMeta(spark, dir).isEmpty) -1L
-    else Generations.foldCommitForBatch(spark, dir, MetaName, batchId)
+    Manifest.commitForBatch(spark, dir, batchId)
 
   /** CHANGE-FEED resolution (round 12): the slice data dirs of table
     * `sub` APPENDED by the commits in `(since, until]` — the store's
@@ -586,8 +518,7 @@ object PostingsStore {
       commit: Option[Long]): (Seq[String], String) = {
     require(Set("postings", "doclen", "purged")(sub),
       s"unknown postings-store table '$sub'")
-    val m = commit.map(metaAt(spark, dir, _)).orElse(readMeta(spark, dir))
-      .getOrElse(sys.error(s"no committed postings store at $dir"))
+    val m = commit.fold(Manifest.get(spark, dir))(Manifest.at(spark, dir, _))
     // every live slice id was written by exactly ONE op, so a given sub
     // holds a SUBSET of the window's ids (a purge slice has only
     // `purged/`, a fold slice only `postings/`+`doclen/`) — readability

@@ -65,48 +65,36 @@ object Cascade {
       }
       .start()
 
+  /** A store as a set member: each window's upserts and REMOVEs go
+    * through the SAME feed-window fold the store's standalone
+    * `followMergeTable` runs (so the two paths cannot drift), under the
+    * shared batch id; `pin` is the store's `commitForBatch`. */
+  private def member(name: String, fold: (DataFrame, DataFrame, Long) => Unit,
+      pin: (SparkSession, Long) => Long): PipelineLedger.Store =
+    PipelineLedger.Store(name,
+      (df, bid) => { val (ups, rem) = split(df); fold(ups, rem, bid) }, pin)
+
   /** The BM25 postings index as a set member ([[
     * graft.text.PostingsStore.upsertBatch]] under the shared batch id). */
   def postingsFollower(name: String, dir: String, textOf: Column,
       prefixes: Int = 64): PipelineLedger.Store =
-    PipelineLedger.Store(name,
-      (df, bid) => {
-        val (ups, rem) = split(df)
-        graft.text.PostingsStore.upsertBatch(
-          ups.select(col("_key").as("id"), textOf.as("text")),
-          col("id"), col("text"), rem.toDF("id"), dir, prefixes,
-          batchId = bid)
-        ()
-      },
-      (s, bid) => graft.text.PostingsStore.commitForBatch(s, dir, bid))
+    member(name,
+      graft.text.PostingsStore.applyFeedWindow(_, _, dir, textOf, _, prefixes),
+      graft.text.PostingsStore.commitForBatch(_, dir, _))
 
   /** The semantic dedup ledger as a set member (`embedOf` = the
     * re-embed hook, see [[graft.dedup.SemLedgerStore.followMergeTable]]). */
   def semFollower(name: String, dir: String,
       embedOf: Column): PipelineLedger.Store =
-    PipelineLedger.Store(name,
-      (df, bid) => {
-        val (ups, rem) = split(df)
-        graft.dedup.SemLedgerStore.upsertVecs(
-          ups.select(col("_key").as("id"), embedOf.as("v")),
-          col("id"), col("v"), rem.toDF("id"), dir, batchId = bid)
-        ()
-      },
-      (s, bid) => graft.dedup.SemLedgerStore.commitForBatch(s, dir, bid))
+    member(name, graft.dedup.SemLedgerStore.applyFeedWindow(_, _, dir, embedOf, _),
+      graft.dedup.SemLedgerStore.commitForBatch(_, dir, _))
 
   /** The persisted IVF index as a set member
     * ([[graft.ann.IndexStore.upsertVectors]]' one-commit refresh). */
   def ivfFollower(name: String, dir: String,
       embedOf: Column): PipelineLedger.Store =
-    PipelineLedger.Store(name,
-      (df, bid) => {
-        val (ups, rem) = split(df)
-        graft.ann.IndexStore.upsertVectors(
-          ups.select(col("_key").as("vid"), embedOf.as("v")),
-          col("vid"), col("v"), rem.toDF("vid"), dir, batchId = bid)
-        ()
-      },
-      (s, bid) => graft.ann.IndexStore.commitForBatch(s, dir, bid))
+    member(name, graft.ann.IndexStore.applyFeedWindow(_, _, dir, embedOf, _),
+      graft.ann.IndexStore.commitForBatch(_, dir, _))
 
   /** The persisted IVF-PQ index as a set member
     * ([[graft.ann.IndexStore.upsertPqVectors]]' frozen-quantizer
@@ -114,15 +102,8 @@ object Cascade {
     * standalone `followMergeTablePq` already served. */
   def ivfPqFollower(name: String, dir: String,
       embedOf: Column): PipelineLedger.Store =
-    PipelineLedger.Store(name,
-      (df, bid) => {
-        val (ups, rem) = split(df)
-        graft.ann.IndexStore.upsertPqVectors(
-          ups.select(col("_key").as("vid"), embedOf.as("v")),
-          col("vid"), col("v"), rem.toDF("vid"), dir, batchId = bid)
-        ()
-      },
-      (s, bid) => graft.ann.IndexStore.pqCommitForBatch(s, dir, bid))
+    member(name, graft.ann.IndexStore.applyPqFeedWindow(_, _, dir, embedOf, _),
+      graft.ann.IndexStore.pqCommitForBatch(_, dir, _))
 
   /** The text dedup ledger as a set member
     * ([[graft.dedup.LedgerStore.upsertDocs]]' one-commit re-ingest;
@@ -130,30 +111,16 @@ object Cascade {
     * [[graft.dedup.LedgerStore.followMergeTable]]). */
   def ledgerFollower(name: String, dir: String,
       textOf: Column): PipelineLedger.Store =
-    PipelineLedger.Store(name,
-      (df, bid) => {
-        val (ups, rem) = split(df)
-        graft.dedup.LedgerStore.upsertDocs(
-          ups.select(col("_key").as("doc_id"), textOf.as("text")),
-          col("doc_id"), col("text"), rem.toDF("doc_id"), dir,
-          batchId = bid)
-        ()
-      },
-      (s, bid) => graft.dedup.LedgerStore.commitForBatch(s, dir, bid))
+    member(name, graft.dedup.LedgerStore.applyFeedWindow(_, _, dir, textOf, _),
+      graft.dedup.LedgerStore.commitForBatch(_, dir, _))
 
-  /** The co-purchase graph as a set member — delegates to the SAME
-    * feed-window fold the standalone follower uses
-    * ([[graft.warehouse.GraphStore.applyFeedWindow]]), so the
-    * empty-basket retirement rule (ADVICE r13) holds on both paths. */
+  /** The co-purchase graph as a set member — the empty-basket
+    * retirement rule (ADVICE r13) rides
+    * [[graft.warehouse.GraphStore.applyFeedWindow]] on both paths. */
   def graphFollower(name: String, dir: String,
       itemsOf: Column): PipelineLedger.Store =
-    PipelineLedger.Store(name,
-      (df, bid) => {
-        val (ups, rem) = split(df)
-        graft.warehouse.GraphStore.applyFeedWindow(ups, rem, dir,
-          itemsOf, bid)
-      },
-      (s, bid) => graft.warehouse.GraphStore.commitForBatch(s, dir, bid))
+    member(name, graft.warehouse.GraphStore.applyFeedWindow(_, _, dir, itemsOf, _),
+      graft.warehouse.GraphStore.commitForBatch(_, dir, _))
 
   /** Follow `changes.merge` into EVERY store of the set, one
     * [[PipelineLedger.refreshAll]] commit per feed window — the

@@ -5,13 +5,14 @@ import org.apache.spark.sql.SparkSession
 
 /** Shared plumbing for GENERATION-STAMPED persisted state (the
   * manifest-pointer commit discipline of [[graft.cdc.Apply]], reused by
-  * `ann/IndexStore` and `dedup/LedgerStore` and `dedup/SemLedgerStore`):
-  * one small pointer object is the commit — readers see fully-old or
-  * fully-new — new-generation data dirs are invisible until the flip,
-  * and superseded generations are deleted only after it and beyond a
-  * retention window. Each store keeps its own meta SCHEMA (and its
-  * fail-loud parse); this helper owns only the pointer I/O and the GC
-  * sweep, so the commit discipline cannot drift between stores.
+  * every slice store): one small pointer object is the commit — readers
+  * see fully-old or fully-new — new-generation data dirs are invisible
+  * until the flip, and superseded generations are deleted only after it
+  * and beyond a retention window. This object owns the pointer and
+  * history I/O, the slice-window checks and the GC sweeps; the typed
+  * manifest on top of it — one codec, one format check, the batch
+  * ledger — is [[StoreManifest]], so neither half can drift between
+  * stores.
   */
 object Generations {
 

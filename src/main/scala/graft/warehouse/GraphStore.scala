@@ -3,7 +3,8 @@ package graft.warehouse
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.util.Generations
+import graft.util.{Generations, StoreManifest}
+import graft.util.StoreManifest.{maskOlder, tombstones, window}
 
 /** Persisted GRAPH SUBSTRATE with incremental maintenance — the disk
   * face of q239's maintained co-purchase edge state, completing the
@@ -33,7 +34,6 @@ import graft.util.Generations
   */
 object GraphStore {
 
-  private val MetaName = "_graft_graph_meta.json"
   // v3 (round 11): + commit id / history archive.
   // v4 (round 13): SLICE-ORDERED tombstones — a purged/slice=S basket
   // masks only item slices < S, so [[upsertOrders]] can retire a
@@ -55,76 +55,34 @@ object GraphStore {
     * [[graft.dedup.LedgerStore]] protocol). */
   final case class Meta(format: String, batch: Long, prefixes: Int,
       sliceBase: Long, slices: Long, commit: Long)
+      extends StoreManifest.Windowed
 
-  private val MetaRe =
-    ("""\{"format": "([^"]+)", "batch": (-?[0-9]+), """ +
-      """"prefixes": ([0-9]+), """ +
-      """"sliceBase": ([0-9]+), "slices": ([0-9]+), """ +
-      """"commit": ([0-9]+)\}""").r
-
-  private def parseMeta(dir: String, body: String): Meta = body match {
-    case MetaRe(f, b, px, sb, sl, c) =>
-      Meta(f, b.toLong, px.toInt, sb.toLong, sl.toLong, c.toLong)
-    case other => sys.error(
-      Generations.unparseableMsg(s"$dir (graph manifest)", other, Format))
-  }
-
-  private def readMeta(spark: SparkSession, dir: String): Option[Meta] =
-    Generations.readPointer(spark, dir, MetaName).map(parseMeta(dir, _))
-
-  private def commitMeta(spark: SparkSession, dir: String, m: Meta): Unit =
-    Generations.commitArchived(spark, dir, MetaName,
-      s"""{"format": "$Format", "batch": ${m.batch}, """ +
-        s""""prefixes": ${m.prefixes}, """ +
-        s""""sliceBase": ${m.sliceBase}, "slices": ${m.slices}, """ +
-        s""""commit": ${m.commit}}""",
-      m.commit)
+  private[graft] val Manifest =
+    new StoreManifest[Meta]("_graft_graph_meta.json", Format, "graph")
 
   /** Basket-hash partition key: pure function of the basket id. */
   private def opOf(ord: Column, prefixes: Int): Column =
     pmod(xxhash64(ord), lit(prefixes.toLong)).cast("int")
 
-  private def live(spark: SparkSession, dir: String, sub: String,
+  /** The merged pair counts (u, v, n_ab) — the live Δ-slices summed. */
+  private def livePairs(spark: SparkSession, dir: String,
       m: Meta): DataFrame =
-    spark.read.parquet(s"$dir/$sub")
-      .filter(col("slice") >= m.sliceBase && col("slice") < m.slices)
-      .drop("slice")
+    window(spark, s"$dir/pairs", m)
+      .groupBy(col("u"), col("v")).agg(sum(col("dn")).as("n_ab"))
+      .filter(col("n_ab") =!= 0L)
 
-  /** Tombstoned basket ids with their tombstone slice (the
-    * [[purgeOrders]]/[[upsertOrders]] ledger) — since v4 the slice id
-    * rides along: a tombstone masks only item slices OLDER than it, so
-    * an upsert's re-landed basket (written above its own tombstone)
-    * stays visible. */
-  private def livePurgedOrds(spark: SparkSession, dir: String,
-      m: Meta): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/purged")
-    val hc = graft.util.Hfs.conf(spark)
-    val hasSlices = graft.util.Hfs.exists(p, hc) &&
-      graft.util.Hfs.list(p, hc).exists(_.getPath.getName.startsWith("slice="))
-    if (hasSlices)
-      spark.read.parquet(s"$dir/purged")
-        .filter(col("slice") >= m.sliceBase && col("slice") < m.slices)
-        .select(col("ord"), col("slice").cast("long").as("_tomb"))
-    else {
-      import spark.implicits._
-      Seq.empty[(Long, Long)].toDF("ord", "_tomb")
-    }
-  }
-
-  /** The v4 mask: drop item lines whose basket has a NEWER tombstone. */
-  private def maskItems(items: DataFrame, tomb: DataFrame): DataFrame =
-    items.join(tomb.select(col("ord").as("_tord"), col("_tomb")),
-        col("ord") === col("_tord") && col("_tomb") > col("slice"),
-        "left_anti")
+  /** The live basket lines (ord, item), optionally pruned to the
+    * basket-hash partitions `ops`. Since v4 a tombstone (the
+    * [[purgeOrders]]/[[upsertOrders]] ledger) masks only item slices
+    * OLDER than it, so an upsert's re-landed basket (written above its
+    * own tombstone) stays visible. */
+  private def liveItems(spark: SparkSession, dir: String, m: Meta,
+      ops: Option[Seq[Int]] = None): DataFrame = {
+    val items = window(spark, s"$dir/items", m)
+    maskOlder(ops.fold(items)(o => items.filter(col("op").isin(o: _*))),
+      "ord", tombstones(spark, s"$dir/purged", "ord", m))
       .select(col("ord"), col("item"))
-
-  /** The live basket lines minus tombstoned baskets. */
-  private def liveItems(spark: SparkSession, dir: String, m: Meta): DataFrame =
-    maskItems(
-      spark.read.parquet(s"$dir/items")
-        .filter(col("slice") >= m.sliceBase && col("slice") < m.slices)
-        .select(col("ord"), col("item"), col("slice")),
-      livePurgedOrds(spark, dir, m))
+  }
 
   /** The fold's BASE-side read, pruned to the prefixes a delta's
     * baskets touch (≤ `prefixes` driver ints — bounded metadata): every
@@ -133,36 +91,14 @@ object GraphStore {
     * the corpus (GraphStoreSpec pins the PartitionFilters plan). */
   private[warehouse] def baseItemsFor(spark: SparkSession, dir: String,
       deltaOrds: DataFrame): DataFrame = {
-    val m = readMeta(spark, dir).getOrElse(
-      sys.error(s"no committed graph store at $dir (missing $MetaName)"))
-    val ops = deltaOrds.select(
+    val m = Manifest.get(spark, dir)
+    liveItems(spark, dir, m, Some(deltaOrds.select(
         opOf(col(deltaOrds.columns.head), m.prefixes).as("op"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    maskItems(
-      spark.read.parquet(s"$dir/items")
-        .filter(col("slice") >= m.sliceBase && col("slice") < m.slices)
-        .filter(col("op").isin(ops.map(Integer.valueOf): _*))
-        .select(col("ord"), col("item"), col("slice")),
-      livePurgedOrds(spark, dir, m))
+      .distinct().collect().map(_.getInt(0)).toSeq))
   }
 
   def meta(spark: SparkSession, dir: String): Option[Meta] =
-    readMeta(spark, dir)
-
-  /** ADVICE r11: a ledgered batch the tombstone screen (or the batch
-    * itself) left EMPTY must still record its batch id — returning
-    * without a commit leaves the batch unledgered, so after a
-    * compact+vacuum drops the tombstones, a streaming replay of that
-    * batch (restart before the checkpoint committed) would re-fold and
-    * resurrect the purged docs. A no-op pointer bump (batch advanced,
-    * data untouched) keeps the replay guard `batchId <= m.batch`
-    * suppressing the re-fold. */
-  private def recordEmptyBatch(spark: SparkSession, dir: String,
-      prev: Option[Meta], batchId: Long): Unit =
-    prev.foreach { m =>
-      if (batchId >= 0 && batchId > m.batch)
-        commitMeta(spark, dir, m.copy(batch = batchId, commit = m.commit + 1))
-    }
+    Manifest.read(spark, dir)
 
   /** Fold one batch of NEW basket lines (ord, item) into the store:
     * Δ-pair expansion against the live items, two appended slices, one
@@ -175,8 +111,8 @@ object GraphStore {
     // (round-11 verdict #5); cross-process stays single-writer
     graft.util.Maintenance.withLeasedWriteLock("GraphStore", spark, dir) {
     val items = batch.select(ord.as("ord"), item.as("item"))
-    if (items.isEmpty) { recordEmptyBatch(spark, dir, readMeta(spark, dir), batchId); return None }
-    val prev = readMeta(spark, dir)
+    if (items.isEmpty) { Manifest.recordEmptyBatch(spark, dir, Manifest.read(spark, dir), batchId); return None }
+    val prev = Manifest.read(spark, dir)
     prev match {
       case Some(m) if batchId >= 0 && batchId <= m.batch => return None
       case Some(m) => require(m.prefixes == prefixes,
@@ -192,8 +128,9 @@ object GraphStore {
     // while the tombstone hides the lines from every items read, so the
     // merged counts would disagree with the live lines.
     val screened = prev.fold(items)(m0 =>
-      items.join(livePurgedOrds(spark, dir, m0), Seq("ord"), "left_anti"))
-    if (prev.isDefined && screened.isEmpty) { recordEmptyBatch(spark, dir, prev, batchId); return None }
+      items.join(tombstones(spark, s"$dir/purged", "ord", m0), Seq("ord"),
+        "left_anti"))
+    if (prev.isDefined && screened.isEmpty) { Manifest.recordEmptyBatch(spark, dir, prev, batchId); return None }
     val baseItems =
       if (m.slices == m.sliceBase)
         items.limit(0) // seed: no live items yet
@@ -207,7 +144,7 @@ object GraphStore {
     screened.withColumn("op", opOf(col("ord"), prefixes))
       .write.mode("overwrite").partitionBy("op")
       .parquet(s"$dir/items/slice=$sliceId")
-    commitMeta(spark, dir, m.copy(batch = batchId, slices = sliceId + 1,
+    Manifest.commit(spark, dir, m.copy(batch = batchId, slices = sliceId + 1,
       commit = m.commit + 1))
     Some(sliceId)
     }
@@ -236,25 +173,17 @@ object GraphStore {
     * delta-store trade [[compact]] amortizes). Readers apply their
     * co-occurrence floor on n_ab. */
   def load(spark: SparkSession, dir: String): (DataFrame, DataFrame, Meta) = {
-    val m = readMeta(spark, dir).getOrElse(
-      sys.error(s"no committed graph store at $dir (missing $MetaName)"))
-    require(m.format == Format, s"$dir holds '${m.format}', expected $Format")
-    (liveItems(spark, dir, m),
-      live(spark, dir, "pairs", m)
-        .groupBy(col("u"), col("v")).agg(sum(col("dn")).as("n_ab"))
-        .filter(col("n_ab") =!= 0L), m)
+    val m = Manifest.get(spark, dir)
+    (liveItems(spark, dir, m), livePairs(spark, dir, m), m)
   }
 
   /** Committed snapshot ids available for [[loadAt]], ascending. */
   def commits(spark: SparkSession, dir: String): Seq[Long] =
-    Generations.listCommits(spark, dir, MetaName)
+    Manifest.commits(spark, dir)
 
   /** The archived manifest of snapshot `commit`. */
   def metaAt(spark: SparkSession, dir: String, commit: Long): Meta =
-    parseMeta(s"$dir@$commit",
-      Generations.readPointerAt(spark, dir, MetaName, commit).getOrElse(sys.error(
-        s"$dir has no committed snapshot $commit " +
-          s"(available: ${commits(spark, dir).mkString(", ")})")))
+    Manifest.at(spark, dir, commit)
 
   /** TIME-TRAVEL [[load]] — the graph substrate AS OF a committed
     * snapshot id (items and merged pair counts resolved through the
@@ -268,10 +197,7 @@ object GraphStore {
     Generations.requireSlicesReadable(spark, dir,
       Seq("items", "pairs", "purged"), m.sliceBase, m.slices,
       s"snapshot $commit")
-    (liveItems(spark, dir, m),
-      live(spark, dir, "pairs", m)
-        .groupBy(col("u"), col("v")).agg(sum(col("dn")).as("n_ab"))
-        .filter(col("n_ab") =!= 0L), m)
+    (liveItems(spark, dir, m), livePairs(spark, dir, m), m)
   }
 
   /** Merge the live window into ONE slice per store — the pair slice
@@ -281,11 +207,11 @@ object GraphStore {
     * [[vacuumSlices]]. */
   def compact(spark: SparkSession, dir: String): Option[Long] =
     graft.util.Maintenance.withLeasedWriteLock("GraphStore", spark, dir) {
-    readMeta(spark, dir) match {
+    Manifest.read(spark, dir) match {
       case Some(m) if m.slices - m.sliceBase > 1 =>
         val merged = m.slices
         Generations.claimSlice(spark, dir, Seq("purged"), merged)
-        live(spark, dir, "pairs", m)
+        window(spark, s"$dir/pairs", m)
           .groupBy(col("u"), col("v")).agg(sum(col("dn")).as("dn"))
           .filter(col("dn") =!= 0L)
           .write.mode("overwrite").parquet(s"$dir/pairs/slice=$merged")
@@ -293,7 +219,7 @@ object GraphStore {
           .withColumn("op", opOf(col("ord"), m.prefixes))
           .write.mode("overwrite").partitionBy("op")
           .parquet(s"$dir/items/slice=$merged")
-        commitMeta(spark, dir, m.copy(sliceBase = merged,
+        Manifest.commit(spark, dir, m.copy(sliceBase = merged,
           slices = merged + 1, commit = m.commit + 1))
         Some(merged)
       case _ => None
@@ -302,7 +228,7 @@ object GraphStore {
 
   /** Deferred slice GC below the current window base. */
   def vacuumSlices(spark: SparkSession, dir: String): Int =
-    readMeta(spark, dir).map { m =>
+    Manifest.read(spark, dir).map { m =>
       Generations.gcSlices(spark, dir, Seq("items", "pairs", "purged"),
         m.sliceBase)
     }.getOrElse(0)
@@ -321,8 +247,7 @@ object GraphStore {
   def purgeOrders(spark: SparkSession, dir: String,
       ords: DataFrame): Option[Long] = {
     graft.util.Maintenance.withLeasedWriteLock("GraphStore", spark, dir) {
-    val m = readMeta(spark, dir).getOrElse(
-      sys.error(s"no committed graph store at $dir (missing $MetaName)"))
+    val m = Manifest.get(spark, dir)
     val targets = ords.select(ords.columns.head).toDF("ord").distinct()
       .join(liveItems(spark, dir, m).select(col("ord")), Seq("ord"),
         "left_semi")
@@ -340,7 +265,7 @@ object GraphStore {
       .select(col("u"), col("v"), (-col("dn")).as("dn"))
       .write.mode("overwrite").parquet(s"$dir/pairs/slice=$sliceId")
     targets.write.mode("overwrite").parquet(s"$dir/purged/slice=$sliceId")
-    commitMeta(spark, dir, m.copy(slices = sliceId + 1,
+    Manifest.commit(spark, dir, m.copy(slices = sliceId + 1,
       commit = m.commit + 1))
     Some(sliceId)
     }
@@ -370,7 +295,7 @@ object GraphStore {
       : Option[Long] = {
     val spark = upserts.sparkSession
     graft.util.Maintenance.withLeasedWriteLock("GraphStore", spark, dir) {
-    val m = readMeta(spark, dir).getOrElse(sys.error(
+    val m = Manifest.read(spark, dir).getOrElse(sys.error(
       s"no committed graph store at $dir — upsertOrders updates an " +
         "existing store; seed with maintainBatch first"))
     if (batchId >= 0 && batchId <= m.batch) return None
@@ -381,7 +306,7 @@ object GraphStore {
       .join(lines.select(col("ord")), Seq("ord"), "left_anti")
       .localCheckpoint(true)
     if (lines.isEmpty && rem.isEmpty) {
-      recordEmptyBatch(spark, dir, Some(m), batchId); return None
+      Manifest.recordEmptyBatch(spark, dir, Some(m), batchId); return None
     }
     // retire the LIVE baskets among incoming/removed — absent or
     // already-purged ords need no tombstone (their re-land, if any, is
@@ -413,9 +338,9 @@ object GraphStore {
       next += 1
     }
     if (next == m.slices) { // removes of absent baskets only
-      recordEmptyBatch(spark, dir, Some(m), batchId); return None
+      Manifest.recordEmptyBatch(spark, dir, Some(m), batchId); return None
     }
-    commitMeta(spark, dir, m.copy(batch = batchId, slices = next,
+    Manifest.commit(spark, dir, m.copy(batch = batchId, slices = next,
       commit = m.commit + 1))
     Some(m.slices)
     }
@@ -480,14 +405,9 @@ object GraphStore {
       }, since, until)
   }
 
-  /** The committed snapshot id produced by LEDGERED batch `batchId` —
-    * the pin a cross-store set manifest records (ADVICE r11: the
-    * store's CURRENT commit can be later than the batch's fold commit
-    * when a compact/purge ran since — pinning current would claim "as
-    * of batch B" while naming a post-maintenance state). −1 when the
-    * store has no committed state at all (an empty seed batch). */
+  /** The committed snapshot id produced by LEDGERED batch `batchId`
+    * (see [[StoreManifest.commitForBatch]]). */
   def commitForBatch(spark: SparkSession, dir: String,
       batchId: Long): Long =
-    if (readMeta(spark, dir).isEmpty) -1L
-    else Generations.foldCommitForBatch(spark, dir, MetaName, batchId)
+    Manifest.commitForBatch(spark, dir, batchId)
 }

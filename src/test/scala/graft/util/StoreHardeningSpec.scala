@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.ann.IndexStore
 import graft.cdc.{After, After2, Apply, Env, Env2}
-import graft.dedup.LedgerStore
+import graft.dedup.{LedgerStore, SemLedgerStore}
 import graft.text.{LmQueries, PostingsStore}
 import graft.warehouse.GraphStore
 
@@ -420,5 +421,127 @@ class StoreHardeningSpec extends AnyFunSuite {
       () => LedgerStore.purgeDocs(spark, ldir, Seq(5L).toDF("id")),
       () => LedgerStore.compact(spark, ldir),
       () => LedgerStore.load(spark, ldir))
+
+    // the other four manifests refuse a foreign format the same way
+    val vecs = Tables.embeddings(spark, sf)
+      .select(col("vec_id"), col("embedding"))
+    val vseed = vecs.filter(col("vec_id") > 0 && col("vec_id") <= 100)
+    val vmore = vecs.filter(col("vec_id") > 100 && col("vec_id") <= 150)
+    val vnone = Seq.empty[Long].toDF("vid")
+
+    val sdir = Files.createTempDirectory("oldsem").toString
+    SemLedgerStore.maintainBatch(vseed, col("vec_id"), col("embedding"),
+      sdir, batchId = 0L)
+    downgrade(sdir, "_graft_semledger_meta.json", "graft-semdedup-v5",
+      "graft-semdedup-v4")
+    refused(sdir, "graft-semdedup-v4", "graft-semdedup-v5")(
+      () => SemLedgerStore.maintainBatch(vmore, col("vec_id"),
+        col("embedding"), sdir, batchId = 1L),
+      () => SemLedgerStore.upsertVecs(vmore, col("vec_id"),
+        col("embedding"), none, sdir, batchId = 1L),
+      () => SemLedgerStore.purgeVecs(spark, sdir, Seq(5L).toDF("id")),
+      () => SemLedgerStore.compact(spark, sdir),
+      () => SemLedgerStore.load(spark, sdir))
+
+    val lines = Tables.lineitem(spark, sf)
+      .select(col("l_orderkey").as("ord"), col("l_partkey").as("item"),
+        col("l_linenumber").as("ln"))
+    val gdir = Files.createTempDirectory("oldgraph").toString
+    GraphStore.maintainBatch(lines.filter(col("ln") === 1), col("ord"),
+      col("item"), gdir, batchId = 0L)
+    downgrade(gdir, "_graft_graph_meta.json", "graft-graph-v4",
+      "graft-graph-v3")
+    refused(gdir, "graft-graph-v3", "graft-graph-v4")(
+      () => GraphStore.maintainBatch(lines.filter(col("ln") === 2),
+        col("ord"), col("item"), gdir, batchId = 1L),
+      () => GraphStore.upsertOrders(lines.filter(col("ln") === 2),
+        col("ord"), col("item"), Seq.empty[Long].toDF("ord"), gdir,
+        batchId = 1L),
+      () => GraphStore.purgeOrders(spark, gdir, Seq(5L).toDF("ord")),
+      () => GraphStore.compact(spark, gdir),
+      () => GraphStore.load(spark, gdir))
+
+    val idir = Files.createTempDirectory("oldivf").toString
+    IndexStore.ivfMaintainBatch(vseed, col("vec_id"), col("embedding"),
+      idir, nCentroids = 4, batchId = 0L)
+    downgrade(idir, "_graft_index_meta.json", "graft-ivf-v4", "graft-ivf-v3")
+    refused(idir, "graft-ivf-v3", "graft-ivf-v4")(
+      () => IndexStore.ivfMaintainBatch(vmore, col("vec_id"),
+        col("embedding"), idir, nCentroids = 4, batchId = 1L),
+      () => IndexStore.upsertVectors(vmore, col("vec_id"), col("embedding"),
+        vnone, idir, batchId = 1L),
+      () => IndexStore.purgeVectors(spark, idir, Seq(5L).toDF("vid")),
+      () => IndexStore.compactAssigned(spark, idir),
+      () => IndexStore.loadIvf(spark, idir))
+
+    val qdir = Files.createTempDirectory("oldivfpq").toString
+    IndexStore.ivfPqMaintainBatch(vseed, col("vec_id"), col("embedding"),
+      qdir, nCells = 4, m = 8, ksub = 16, batchId = 0L)
+    downgrade(qdir, "_graft_ivfpq_meta.json", "graft-ivfpq-v3",
+      "graft-ivfpq-v2")
+    refused(qdir, "graft-ivfpq-v2", "graft-ivfpq-v3")(
+      () => IndexStore.ivfPqMaintainBatch(vmore, col("vec_id"),
+        col("embedding"), qdir, nCells = 4, m = 8, ksub = 16, batchId = 1L),
+      () => IndexStore.upsertPqVectors(vmore, col("vec_id"),
+        col("embedding"), vnone, qdir, batchId = 1L),
+      () => IndexStore.loadIvfPq(spark, qdir))
+  }
+
+  test("manifest bodies are pinned byte-for-byte: one fold into each of " +
+      "the six store manifests writes the same pointer and history body") {
+    val vecs = Tables.embeddings(spark, sf)
+      .filter(col("vec_id") > 0 && col("vec_id") <= 100)
+    val lines = Tables.lineitem(spark, sf)
+      .filter(col("l_linenumber") === 1)
+    def bodies(dir: String, metaName: String): (String, String) = {
+      val hc = Hfs.conf(spark)
+      (Hfs.readString(new org.apache.hadoop.fs.Path(dir, metaName), hc),
+        Hfs.readString(new org.apache.hadoop.fs.Path(
+          s"$dir/_graft_history/commit-0.json"), hc))
+    }
+    def pinned(metaName: String, expected: String)(fold: String => Any)
+        : Unit = {
+      val dir = Files.createTempDirectory("pinned").toString
+      fold(dir)
+      val (cur, hist) = bodies(dir, metaName)
+      assert(cur == expected, s"current pointer of $metaName")
+      assert(hist == expected, s"history entry of $metaName")
+    }
+    pinned("_graft_postings_meta.json",
+      """{"format": "graft-postings-v4", "batch": 0, "nDocs": 200, """ +
+      """"totTokens": 11011, "prefixes": 64, "sliceBase": 0, "slices": 1, """ +
+      """"commit": 0}""")(dir =>
+      PostingsStore.maintainBatch(docs.filter(col("doc_id") <= 200),
+        col("doc_id"), col("text"), dir, batchId = 0L))
+    pinned("_graft_ledger_meta.json",
+      """{"format": "graft-dedup-v6", "gen": 0, "rows": 200, "batch": 0, """ +
+      """"thresholdPerMille": 500, "k": 16, "bands": 16, "prefixes": 64, """ +
+      """"maxBucket": 2147483647, "sliceBase": 0, "slices": 1, """ +
+      """"commit": 0}""")(dir =>
+      LedgerStore.maintainBatch(docs.filter(col("doc_id") <= 200),
+        col("doc_id"), col("text"), dir, batchId = 0L))
+    pinned("_graft_semledger_meta.json",
+      """{"format": "graft-semdedup-v5", "gen": 0, "rows": 100, """ +
+      """"batch": 0, "thresholdPerMille": 250, "nBands": 4, """ +
+      """"planesPerBand": 4, "dim": 64, "sliceBase": 0, "slices": 1, """ +
+      """"commit": 0}""")(dir =>
+      SemLedgerStore.maintainBatch(vecs, col("vec_id"), col("embedding"),
+        dir, batchId = 0L))
+    pinned("_graft_graph_meta.json",
+      """{"format": "graft-graph-v4", "batch": 0, "prefixes": 64, """ +
+      """"sliceBase": 0, "slices": 1, "commit": 0}""")(dir =>
+      GraphStore.maintainBatch(lines, col("l_orderkey"), col("l_partkey"),
+        dir, batchId = 0L))
+    pinned("_graft_index_meta.json",
+      """{"format": "graft-ivf-v4", "gen": 0, "rows": 100, """ +
+      """"baseRows": 100, "batch": 0, "sliceBase": 0, "slices": 1, """ +
+      """"commit": 0}""")(dir =>
+      IndexStore.ivfMaintainBatch(vecs, col("vec_id"), col("embedding"),
+        dir, nCentroids = 4, batchId = 0L))
+    pinned("_graft_ivfpq_meta.json",
+      """{"format": "graft-ivfpq-v3", "gen": 0, "rows": 100, "m": 8, """ +
+      """"subDim": 8, "baseRows": 100, "batch": 0, "commit": 0}""")(dir =>
+      IndexStore.ivfPqMaintainBatch(vecs, col("vec_id"), col("embedding"),
+        dir, nCells = 4, m = 8, ksub = 16, batchId = 0L))
   }
 }
