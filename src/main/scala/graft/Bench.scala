@@ -2,8 +2,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * emits ONE JSON line.
   *
@@ -16,26 +14,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // SIZE-ADAPTIVE cached-plan partitioning (round 16, guide §2.2/§6,
-      // PerfProbe-measured): cached plans are otherwise built WITHOUT
-      // AQE, so a kilobyte-sized maintained table (the memoized edge/
-      // ledger substrates) persists as shuffle.partitions tiny
-      // partitions and every downstream aggregate pays a fixed
-      // per-task cost × that count (one groupBy over the 3,853-row
-      // maintained pair cache: 12.3 summed task-seconds at 32
-      // partitions vs 1.9 at AQE-coalesced ~10; q108 wall 1.24 ->
-      // 0.43 s). AQE sizes cached partitions by bytes
-      // (advisoryPartitionSizeInBytes), so big caches keep their
-      // parallelism at any scale — adaptive, not a local[32] constant.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.envCpus)
     // JVM/codegen warmup outside the measured window
     spark.read.parquet(s"$sfDir/region.parquet").groupBy("r_name").count().count()
     // Maintenance state is warmed OUTSIDE the timed window, declared, in
@@ -116,19 +95,21 @@ object Bench {
     // contention. Disable with SPARK_GRAFT_BENCH_RERUN=0; queries
     // without a trajectory entry (new this round) are never re-run.
     val reruns = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
+    // The committed trajectory, parsed once for the rerun pass and the
+    // contention factor: per-query seconds plus `_calibration`.
+    val traj: Map[String, Double] = {
+      val trajPath = Paths.get(sys.env.getOrElse(
+        "SPARK_GRAFT_BENCH_TRAJECTORY", "docs/bench_trajectory.json"))
+      if (Files.exists(trajPath)) {
+        val s = new String(Files.readAllBytes(trajPath), StandardCharsets.UTF_8)
+        val m = """"(q[0-9]+[a-z0-9_]*)":([0-9.eE+-]+)""".r
+        m.findAllMatchIn(s).map(g => g.group(1) -> g.group(2).toDouble)
+          .toMap ++
+          """"calibration_s":([0-9.eE+-]+)""".r.findFirstMatchIn(s)
+            .map(g => "_calibration" -> g.group(1).toDouble)
+      } else Map.empty
+    }
     if (sys.env.getOrElse("SPARK_GRAFT_BENCH_RERUN", "1") != "0") {
-      val trajPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_TRAJECTORY",
-        "docs/bench_trajectory.json")
-      val traj: Map[String, Double] =
-        if (Files.exists(Paths.get(trajPath))) {
-          val s = new String(Files.readAllBytes(Paths.get(trajPath)),
-            StandardCharsets.UTF_8)
-          val m = """"(q[0-9]+[a-z0-9_]*)":([0-9.eE+-]+)""".r
-          m.findAllMatchIn(s).map(g => g.group(1) -> g.group(2).toDouble)
-            .toMap ++
-            """"calibration_s":([0-9.eE+-]+)""".r.findFirstMatchIn(s)
-              .map(g => "_calibration" -> g.group(1).toDouble)
-        } else Map.empty
       val trajCal = traj.getOrElse("_calibration", 0.0)
       if (trajCal > 0) {
         val scale = calibrationS / trajCal
@@ -159,28 +140,15 @@ object Bench {
     // when deciding flat-vs-regressed — shared-query sum ÷ committed
     // trajectory sum, normalized by the calibration ratio (so a uniformly
     // slower host reads ~1.0 and only a real plan regression moves it).
-    // Computed from the same trajectory file the rerun pass loads;
+    // Computed from `traj`, as the rerun pass is;
     // emitted as `contention_factor` (raw ratio) + `normalized_factor`
     // (calibration-cancelled). 0.0 when no trajectory exists.
-    val trajForFactor: Map[String, Double] = {
-      val trajPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_TRAJECTORY",
-        "docs/bench_trajectory.json")
-      if (Files.exists(Paths.get(trajPath))) {
-        val s = new String(Files.readAllBytes(Paths.get(trajPath)),
-          StandardCharsets.UTF_8)
-        val m = """"(q[0-9]+[a-z0-9_]*)":([0-9.eE+-]+)""".r
-        m.findAllMatchIn(s).map(g => g.group(1) -> g.group(2).toDouble)
-          .toMap ++
-          """"calibration_s":([0-9.eE+-]+)""".r.findFirstMatchIn(s)
-            .map(g => "_calibration" -> g.group(1).toDouble)
-      } else Map.empty
-    }
     val (rawFactor, normFactor) = {
       val shared = timings.toSeq.filter { case (n, _) =>
-        !errors.contains(n) && trajForFactor.contains(n) }
+        !errors.contains(n) && traj.contains(n) }
       val mine = shared.map(_._2).sum
-      val theirs = shared.map { case (n, _) => trajForFactor(n) }.sum
-      val calRatio = trajForFactor.get("_calibration")
+      val theirs = shared.map { case (n, _) => traj(n) }.sum
+      val calRatio = traj.get("_calibration")
         .filter(_ > 0).map(calibrationS / _).getOrElse(1.0)
       if (theirs > 0) (mine / theirs, mine / theirs / calRatio)
       else (0.0, 0.0)

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.cdc.{Apply, Capture, Envelope, Reconcile}
@@ -21,13 +20,7 @@ object CdcPipelineDemo {
         case null => sys.error("pass path to a trades fixture json")
         case u => u.getPath
       })
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.envCpus)
 
     val stage = Files.createTempDirectory("graft-stage").toString
     val wh = Files.createTempDirectory("graft-wh").toString

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dumps formatted physical plans for EVERY SparkEntry query (plus one
@@ -23,12 +22,7 @@ object ExplainDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("docs/PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.envCpus)
     val sb = new StringBuilder
     sb.append("# Physical plans (FormattedMode, sf0.01, AQE initial plans)\n\n")
     sb.append("Generated by `graft.ExplainDump`. What to look for: `PushedFilters`\n")
@@ -108,7 +102,7 @@ object ExplainDump {
           // support bag — the round's IVM claim in plan form: the state
           // side appears ONLY under BroadcastHashJoins (stream side),
           // the single Exchange in the plan is the delta's own
-          // pre-aggregate (graft.IvmProbe measures the same thing as
+          // pre-aggregate (IvmProbe in docs/PROBES.md measures the same thing as
           // shuffle-write records)
           import org.apache.spark.sql.functions.lit
           val ev = graft.util.Tables.events(spark, sfDir)

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,13 +19,7 @@ object SqlPathDemo {
   def main(args: Array[String]): Unit = {
     val fixture = args.headOption.getOrElse(sys.error("pass path to a txns csv"))
     val replays = args.lift(1).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.envCpus)
 
     // 1. S1-S3: scan + normalize + all-varchar landing.
     val raw = CsvNormalize.readRaw(spark, fixture)

@@ -60,9 +60,10 @@ object AnnQueries {
     }
 
   /** Ingest new vectors into the MAINTAINED IVF index under the measured
-    * refresh policy (graft.DriftProbe / SURVEY §9.9: frozen-quantizer
-    * recall plateaus ~0.10 below a rebuild from +100% growth onward, so
-    * the default is "rebuild after the corpus doubles"). Below the
+    * refresh policy (DriftProbe in docs/PROBES.md / SURVEY §9.9:
+    * frozen-quantizer recall plateaus ~0.10 below a rebuild from +100%
+    * growth onward, so the default is "rebuild after the corpus
+    * doubles"). Below the
     * threshold the grown index — one broadcast-argmin pass over the
     * delta, lineage cut — REPLACES the memo in place; at the threshold
     * the memo invalidates and the NEXT [[ivfIndex]] call re-trains from

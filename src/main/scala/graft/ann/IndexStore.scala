@@ -644,11 +644,12 @@ object IndexStore {
       batchId: Long = -1L): Option[(Long, Boolean)] = {
     val spark = batch.sparkSession
     graft.util.Maintenance.withLeasedWriteLock("IndexStore", spark, dir) {
+    val prev = PqManifest.read(spark, dir)
+    // crash replay of an already-folded batch: screened before any job
+    if (prev.exists(pm => batchId >= 0 && batchId <= pm.batch)) return None
     val vecs = batch.select(id.as("vid"), vec.as("v")).localCheckpoint(true)
-    if (vecs.isEmpty) { PqManifest.recordEmptyBatch(spark, dir, PqManifest.read(spark, dir), batchId); return None }
-    PqManifest.read(spark, dir) match {
-      case Some(pm) if batchId >= 0 && batchId <= pm.batch =>
-        None // crash replay of an already-folded batch
+    if (vecs.isEmpty) { PqManifest.recordEmptyBatch(spark, dir, prev, batchId); return None }
+    prev match {
       case None =>
         val seeded = Similarity.buildIvfPq(vecs, col("vid"), col("v"),
           nCells, m, ksub, materialize = true)
@@ -656,7 +657,7 @@ object IndexStore {
           sideTables = Seq("vecs" -> vecs), batchId = batchId)
         Some((gen, true))
       case Some(pm) =>
-        val (idx, _) = loadIvfPq(spark, dir)
+        val (idx, _) = loadIvfPqOn(spark, dir, pm)
         val oldVecs = spark.read.parquet(s"$dir/gen=${pm.gen}/vecs")
           .localCheckpoint(true) // survives its generation's GC
         val allVecs = oldVecs.unionByName(vecs)

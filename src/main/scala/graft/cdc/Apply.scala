@@ -1626,7 +1626,7 @@ object Apply {
   private type HPath = org.apache.hadoop.fs.Path
   private type HConf = org.apache.hadoop.conf.Configuration
 
-  private val MetaName = "_graft_table_meta.json"
+  private[graft] val MetaName = "_graft_table_meta.json"
   private val LayoutV2 = "bucketed-v2"
 
   /** Default retirement grace before a superseded generation dir is

@@ -32,7 +32,7 @@ object IncrementalAgg {
     * table every commit; the merge streams the state through broadcast
     * probes of the |Δ|-sized delta partials — only the delta aggregate
     * itself shuffles (rationale and measurements: IvmFold scaladoc /
-    * graft.IvmProbe). */
+    * IvmProbe in docs/PROBES.md). */
   def applyDelta(state: DataFrame, changes: DataFrame, key: Column,
       value: Column): DataFrame = {
     val w = when(col("_change_type") === "insert", lit(1L)).otherwise(lit(-1L))

@@ -37,9 +37,9 @@ object IncrementalDistinct {
     * base-sized exchange per fold is exactly the cost IVM exists to
     * avoid (and checkpointed state cannot be relied on to keep its
     * partitioning for a join-based fold either: LogicalRDD under AQE
-    * reports it unknown, measured in graft.IvmProbe). The merge streams
-    * the cached state through two broadcast-hash probes of the tiny
-    * delta — the only exchange in the whole fold is the |Δ|-sized
+    * reports it unknown, measured by IvmProbe, docs/PROBES.md). The
+    * merge streams the cached state through two broadcast-hash probes
+    * of the tiny delta — the only exchange in the whole fold is the |Δ|-sized
     * delta aggregate. IvmProbe: ~2k shuffled records per fold vs ~N
     * for union/re-aggregate at any base size. */
   def applyDelta(state: DataFrame, changes: DataFrame, key: Column,

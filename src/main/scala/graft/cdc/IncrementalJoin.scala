@@ -74,7 +74,8 @@ object IncrementalJoin {
     // re-aggregate: the union form re-shuffles each base-sized bag
     // every commit; the merge streams the bags through broadcast
     // probes of the delta — only the delta's own aggregate shuffles
-    // (rationale and measurements: IvmFold scaladoc / graft.IvmProbe).
+    // (rationale and measurements: IvmFold scaladoc / IvmProbe in
+    // docs/PROBES.md).
     def fold(state: DataFrame, delta: DataFrame, cols: Seq[String]): DataFrame =
       IvmFold.mergeCounts(state,
           delta.groupBy(cols.map(col): _*).agg(sum(col("m")).as("dm")),

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * (localCheckpoint / checkpoint, mandatory for plan-growth control
   * across commits), the LogicalRDD reports unknown partitioning under
   * AQE and the planner re-shuffles anyway — measured, not theorized,
-  * in `graft.IvmProbe`.
+  * in `IvmProbe` (docs/PROBES.md).
   *
   * The merge instead decomposes by which side a key appears on:
   *

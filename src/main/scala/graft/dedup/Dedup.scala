@@ -274,11 +274,11 @@ object Dedup {
   /** The candidate-generation stage of [[editDistancePairs]] — segment
     * equi-join + distinct, names and packed frequency signatures
     * attached — exposed so the verify cost can be probed separately
-    * (graft.FuzzyProbe) and alternative verifies composed. This PROBE
-    * face is the only caller that wants the signatures (the pigeonhole
-    * pre-filter was a measured negative result), so only it pays them
-    * (`withSigs` — round-9 advice: the production path was carrying two
-    * dead BIGINTs of compute and shuffle width). */
+    * (FuzzyProbe in docs/PROBES.md) and alternative verifies composed.
+    * This PROBE face is the only caller that wants the signatures (the
+    * pigeonhole pre-filter was a measured negative result), so only it
+    * pays them (`withSigs` — round-9 advice: the production path was
+    * carrying two dead BIGINTs of compute and shuffle width). */
   def editDistanceCandidates(
       rows: DataFrame, id: Column, name: Column, block: Column,
       k: Int): DataFrame =
@@ -289,8 +289,8 @@ object Dedup {
 
   /** [[editDistanceCandidates]] BEFORE the distinct: one row per
     * matching (pair, segment-combo) — a pair found by several segment
-    * alignments repeats. Probe-facing (graft.FuzzyProbe measures where
-    * the dedup is cheapest). `withSigs` attaches the packed char-
+    * alignments repeats. Probe-facing (FuzzyProbe in docs/PROBES.md
+    * measures where the dedup is cheapest). `withSigs` attaches the packed char-
     * frequency signatures for pigeonhole experiments; the production
     * verify path ([[editDistancePairs]]) leaves them off — narrower
     * candidate rows through the segment join and no dead signature

@@ -134,12 +134,15 @@ object SemLedgerStore {
     * unions, liveness-pruned, tombstone-filtered — current labels,
     * meta). */
   def load(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, Meta) = {
-    val m = Manifest.get(spark, dir)
+      : (DataFrame, DataFrame, DataFrame, Meta) =
+    loadOn(spark, dir, Manifest.get(spark, dir))
+
+  /** [[load]] against a manifest the caller has already read. */
+  private def loadOn(spark: SparkSession, dir: String, m: Meta)
+      : (DataFrame, DataFrame, DataFrame, Meta) =
     (liveVecs(spark, dir, m),
       livePairs(spark, dir, m),
       spark.read.parquet(s"$dir/gen=${m.gen}/labels"), m)
-  }
 
   /** The current manifest, for callers pinning snapshots
     * ([[graft.util.PipelineLedger]]) without loading the frames. */
@@ -399,10 +402,13 @@ object SemLedgerStore {
       batchId: Long = -1L): Option[Long] = {
     val spark = batch.sparkSession
     graft.util.Maintenance.withLeasedWriteLock("SemLedgerStore", spark, dir) {
+    val prev = Manifest.read(spark, dir)
+    // crash replay of an already-folded batch: screened before any job
+    if (prev.exists(m => batchId >= 0 && batchId <= m.batch)) return None
     val vecs = batch.select(id.as("id"), vec.as("v")).localCheckpoint(true)
-    if (vecs.isEmpty) { Manifest.recordEmptyBatch(spark, dir, Manifest.read(spark, dir), batchId); return None }
+    if (vecs.isEmpty) { Manifest.recordEmptyBatch(spark, dir, prev, batchId); return None }
     val perMille = math.round(threshold * 1000).toInt
-    Manifest.read(spark, dir) match {
+    prev match {
       case None =>
         val pairs = Dedup.lshNearDupsDelta(vecs.limit(0), vecs,
           col("id"), col("v"), nBands, planesPerBand, dim, threshold)
@@ -412,8 +418,6 @@ object SemLedgerStore {
         Some(publish(spark, dir, vecs, pairs, labels,
           Meta(Format, 0L, 0L, batchId, perMille, nBands, planesPerBand,
             dim, sliceBase = 0L, slices = 1L, commit = -1L), retainGens))
-      case Some(m) if batchId >= 0 && batchId <= m.batch =>
-        None // crash replay of an already-folded batch
       case Some(m) =>
         require(m.thresholdPerMille == perMille && m.nBands == nBands &&
             m.planesPerBand == planesPerBand && m.dim == dim,
@@ -421,7 +425,7 @@ object SemLedgerStore {
             s"(${m.thresholdPerMille}‰, ${m.nBands}×${m.planesPerBand}, " +
             s"dim ${m.dim}); refusing a mismatched fold — one ledger, " +
             "one hyperplane family")
-        val (oldVecs, _, oldLabels, _) = load(spark, dir)
+        val (oldVecs, _, oldLabels, _) = loadOn(spark, dir, m)
         // TOMBSTONE SCREEN (round-10 ADVICE): purged ids stay purged
         // until compact+vacuum; re-folding one would re-enter the labels
         // while the tombstone hides its vector from every pairing read

@@ -118,8 +118,8 @@ object AsOfRules {
   val RangeJoinImplKey = "spark.graft.rangeJoin.impl"
 
   /** Implementation choice for the sweep-line join family — the custom
-    * exec is NOT unconditionally better, and the A/B probe (graft.AbProbe)
-    * quantifies both regimes:
+    * exec is NOT unconditionally better, and the A/B probe (AbProbe in
+    * docs/PROBES.md) quantifies both regimes:
     *
     *  - HOT keys (few keys, many rows each): native planning is
     *    SortMergeJoin on the key + post-join range filter, which

@@ -150,22 +150,22 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
     def has(meta: String): Boolean =
       Generations.readPointer(spark, dir, meta).isDefined
     val surfaces =
-      (if (has("_graft_table_meta.json"))
+      (if (has(graft.cdc.Apply.MetaName))
         Seq("merge", "changes.merge") else Nil) ++
-      (if (has("_graft_ledger_meta.json"))
+      (if (has(graft.dedup.LedgerStore.Manifest.name))
         Seq("ledger.labels", "changes.ledger.sigs",
           "changes.ledger.postings", "changes.ledger.purged") else Nil) ++
-      (if (has("_graft_semledger_meta.json"))
+      (if (has(graft.dedup.SemLedgerStore.Manifest.name))
         Seq("sem.labels", "changes.sem.vecs", "changes.sem.pairs",
           "changes.sem.purged") else Nil) ++
-      (if (has("_graft_postings_meta.json"))
+      (if (has(graft.text.PostingsStore.Manifest.name))
         Seq("postings.postings", "postings.doclen", "postings.purged",
           "changes.postings.postings", "changes.postings.doclen",
           "changes.postings.purged") else Nil) ++
-      (if (has("_graft_graph_meta.json"))
+      (if (has(graft.warehouse.GraphStore.Manifest.name))
         Seq("changes.graph.items", "changes.graph.pairs",
           "changes.graph.purged") else Nil) ++
-      (if (has("_graft_index_meta.json"))
+      (if (has(graft.ann.IndexStore.Manifest.name))
         Seq("ivf.assigned", "ivf.purged") else Nil)
     surfaces.map(Identifier.of(namespace, _)).toArray
   }

@@ -53,7 +53,7 @@ private[sources] object GraftProcedures {
   private def removed(n: Int): String = s"$n slice dirs removed"
 
   private val Kinds: Seq[Kind] = Seq(
-    Kind("merge", "_graft_table_meta.json",
+    Kind("merge", graft.cdc.Apply.MetaName,
       (s, d) => { graft.cdc.Apply.compact(s, d); "live buckets rewritten" },
       (s, d) => {
         graft.cdc.Apply.vacuum(s, d); "unreferenced generations removed"

@@ -459,16 +459,18 @@ object GraftTables {
     * shared `_graft_history/` protocol makes TIMESTAMP AS OF one
     * resolution path for every store kind ([[GraftCatalog]]). */
   def metaNameOf(table: String): String = table match {
-    case "merge" | "changes.merge" => "_graft_table_meta.json"
-    case "ledger.labels" => "_graft_ledger_meta.json"
-    case s if s.startsWith("changes.ledger.") => "_graft_ledger_meta.json"
-    case "sem.labels" => "_graft_semledger_meta.json"
-    case s if s.startsWith("changes.sem.") => "_graft_semledger_meta.json"
+    case "merge" | "changes.merge" => graft.cdc.Apply.MetaName
+    case s if s == "ledger.labels" || s.startsWith("changes.ledger.") =>
+      graft.dedup.LedgerStore.Manifest.name
+    case s if s == "sem.labels" || s.startsWith("changes.sem.") =>
+      graft.dedup.SemLedgerStore.Manifest.name
     case s if s.startsWith("postings.") ||
-      s.startsWith("changes.postings.") => "_graft_postings_meta.json"
-    case s if s.startsWith("changes.graph.") => "_graft_graph_meta.json"
-    case s if s.startsWith("ivf.") => "_graft_index_meta.json"
-    case s if s.startsWith("set:") => "_graft_pipeline_meta.json"
+      s.startsWith("changes.postings.") =>
+      graft.text.PostingsStore.Manifest.name
+    case s if s.startsWith("changes.graph.") =>
+      graft.warehouse.GraphStore.Manifest.name
+    case s if s.startsWith("ivf.") => graft.ann.IndexStore.Manifest.name
+    case s if s.startsWith("set:") => graft.util.PipelineLedger.MetaName
     case other => sys.error(s"unknown graft table '$other'")
   }
 

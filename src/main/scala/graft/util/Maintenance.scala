@@ -174,8 +174,8 @@ object Maintenance {
     growth.put((name, s, dir), Growth(n, 0L))
 
   /** Record `delta` rows ingested into a maintained state and apply the
-    * MEASURED refresh policy (graft.DriftProbe / SURVEY §9.9: frozen-
-    * quantizer recall plateaus ~0.10 below a rebuild from +100% growth
+    * MEASURED refresh policy (DriftProbe in docs/PROBES.md / SURVEY
+    * §9.9: frozen-quantizer recall plateaus ~0.10 below a rebuild from +100% growth
     * onward — so "rebuild after the corpus doubles" is the default):
     * once base + inserted ≥ growthFactor × base, the entry is
     * [[invalidate]]d so the NEXT accessor call re-trains from current

@@ -50,7 +50,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object PipelineLedger {
 
-  private val MetaName = "_graft_pipeline_meta.json"
+  private[graft] val MetaName = "_graft_pipeline_meta.json"
   private val Format = "graft-pipeline-v1"
 
   /** One maintained substrate in the set: `fold` must be the store's

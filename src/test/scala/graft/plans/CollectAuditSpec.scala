@@ -24,10 +24,6 @@ class CollectAuditSpec extends AnyFunSuite {
   /** file (repo-relative) → (reviewed count, what bounds the inputs) */
   private val reviewed: Map[String, (Int, String)] = Map(
     "CdcPipelineDemo.scala" -> (1, "demo driver tool (bounded fixture)"),
-    "DriftProbe.scala" -> (3, "probe tool: recall/drift scalars"),
-    "IndexProbe.scala" -> (2, "probe tool: record-count scalars"),
-    "PostingsProbe.scala" -> (2, "probe tool: stats scalars"),
-    "PurgeProbe.scala" -> (2, "probe tool: count scalars"),
     "ann/AnnQueries.scala" -> (15,
       "query-vector ids, cell/slice ints, recall scalars, set pins — " +
         "gate-construction driver metadata"),
