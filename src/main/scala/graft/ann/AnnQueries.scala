@@ -278,9 +278,8 @@ object AnnQueries {
       def envOf(df: org.apache.spark.sql.DataFrame, op: String, ver: Long) =
         df.select(lit(op).as("op"), col("vec_id").as("key"),
           lit(ver).as("ver"),
-          when(lit(op) === graft.cdc.Envelope.Remove, lit(null))
-            .otherwise(struct(col("vec_id"), col("embedding")))
-            .as("after"))
+          (if (op == graft.cdc.Envelope.Remove) lit(null)
+           else struct(col("vec_id"), col("embedding"))).as("after"))
       val (updated, added, removes) = refreshDelta(e)
       val seed = envOf(e, graft.cdc.Envelope.Insert, 1L)
       val refresh = envOf(updated, graft.cdc.Envelope.Modify, 2L)
@@ -305,7 +304,7 @@ object AnnQueries {
 
   /** q281's FOLLOWED semantic ledger: hydrated from the base corpus
     * (= the warehouse's commit-1 state), then maintained by
-    * [[graft.dedup.SemLedgerStore.followMergeTable]] from `sinceCommit
+    * [[graft.util.Cascade.follow]] from `sinceCommit
     * = 1` — only the refresh commit flows (the hydrate-from-snapshot,
     * follow-from-its-commit production pattern). The re-embed hook is
     * the stored embedding column (the warehouse carries the vectors
@@ -326,8 +325,9 @@ object AnnQueries {
             e, col("vec_id"), col("embedding"), dir)
           ""
         })).head
-      val q = graft.dedup.SemLedgerStore.followMergeTable(s, mergeDir,
-        dir, s"$base/ck", embedOf = col("embedding"), sinceCommit = 1L)
+      val q = graft.util.Cascade.follow(s, mergeDir, s"$base/ck",
+        graft.util.Cascade.semFollower("sem", dir, col("embedding")),
+        sinceCommit = 1L)
       q.processAllAvailable(); q.stop()
       dir
     }
@@ -477,8 +477,9 @@ object AnnQueries {
       IndexStore.saveIvf(Similarity.buildIvf(e, col("vec_id"),
         col("embedding"), nCentroids = 8, iterations = 1,
         materialize = true), dir)
-      val q = IndexStore.followMergeTable(s, mergeDir, dir, s"$base/ck",
-        embedOf = col("embedding"), sinceCommit = 1L)
+      val q = graft.util.Cascade.follow(s, mergeDir, s"$base/ck",
+        graft.util.Cascade.ivfFollower("index", dir, col("embedding")),
+        sinceCommit = 1L)
       q.processAllAvailable(); q.stop()
       dir
     }
@@ -1019,7 +1020,7 @@ object AnnQueries {
     // -- round 13: the WAREHOUSE→EMBEDDINGS CASCADE — the q279/q280
     //    refresh flows as warehouse CDC (one merge commit of MODIFY/
     //    INSERT/REMOVE envelopes through the real startMerge path), and
-    //    [[graft.dedup.SemLedgerStore.followMergeTable]] maintains the
+    //    a [[graft.util.Cascade.semFollower]] maintains the
     //    semantic ledger FROM the table's `changes.merge` feed: updates
     //    re-embed atomically (the upsertVecs one-commit verb), REMOVEs
     //    propagate as ledger purges — the compliance-deletion path to
@@ -1038,7 +1039,7 @@ object AnnQueries {
         .orderBy(col("vec_id"))
     },
 
-    // -- q281's search-side twin: [[IndexStore.followMergeTable]] keeps
+    // -- q281's search-side twin: a [[graft.util.Cascade.ivfFollower]] keeps
     //    the persisted IVF index in sync with the warehouse through the
     //    same feed, on [[IndexStore.upsertVectors]]'s one-commit
     //    atomicity. Full-probe over the followed store ≡ the exact

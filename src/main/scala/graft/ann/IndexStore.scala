@@ -3,7 +3,7 @@ package graft.ann
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.util.{Generations, StoreManifest}
+import graft.util.{Generations, SliceManifest, StoreManifest}
 import graft.util.StoreManifest.{maskOlder, tombstones, window}
 
 /** Version-stamped PERSISTED index format (SURVEY §9.10 follow-on): a
@@ -76,8 +76,9 @@ object IndexStore {
       baseRows: Long, batch: Long, sliceBase: Long, slices: Long,
       commit: Long) extends StoreManifest.Windowed
 
-  private[graft] val Manifest =
-    new StoreManifest[Meta]("_graft_index_meta.json", Format, "index")
+  private[graft] val Manifest = new SliceManifest[Meta](
+    "_graft_index_meta.json", Format, "index", Seq("assigned", "purged"),
+    m => s"gen=${m.gen}/")
 
   /** Publish `index` to `dir` as the next generation and flip the
     * pointer. Returns the committed generation id. `retainGens` ≥ 1:
@@ -158,33 +159,6 @@ object IndexStore {
   def commits(spark: SparkSession, dir: String): Seq[Long] =
     Manifest.commits(spark, dir)
 
-  /** The live slice data dirs of IVF table `sub` ("assigned" |
-    * "purged") for a committed snapshot (commit = None → current), plus
-    * the base path that keeps `slice`/`cell` as partition columns —
-    * public for the DataSource V2 catalog face
-    * ([[graft.sources.GraftTables]]): explicit slice paths pin the
-    * snapshot's live window (a crashed fold's orphan slice is outside
-    * it), and the hive layout keeps `cell` prunable by Catalyst — a
-    * probe's cell filter through raw SQL plans the same static
-    * PartitionFilters cut `searchPruned` gets. May return no dirs for
-    * "purged" (no purge ever ran). Fail-closed on a half-vacuumed
-    * window or a retention-dropped generation. */
-  def ivfDirs(spark: SparkSession, dir: String, sub: String,
-      commit: Option[Long]): (Seq[String], String) = {
-    require(Set("assigned", "purged")(sub), s"unknown ivf table '$sub'")
-    val m = commit.fold(Manifest.get(spark, dir))(Manifest.at(spark, dir, _))
-    Generations.requireSlicesReadable(spark, dir,
-      Seq(s"gen=${m.gen}/assigned", s"gen=${m.gen}/purged"),
-      m.sliceBase, m.slices, s"snapshot ${commit.getOrElse("current")}")
-    val hc = graft.util.Hfs.conf(spark)
-    val base = s"$dir/gen=${m.gen}/$sub"
-    val dirs = (m.sliceBase until m.slices)
-      .map(s => s"$base/slice=$s")
-      .filter(p => graft.util.Hfs.exists(
-        new org.apache.hadoop.fs.Path(p), hc))
-    (dirs, base)
-  }
-
   /** The archived manifest of snapshot `commit`. */
   def metaAt(spark: SparkSession, dir: String, commit: Long): Meta =
     Manifest.at(spark, dir, commit)
@@ -203,9 +177,7 @@ object IndexStore {
         graft.util.Hfs.conf(spark)),
       s"snapshot $commit of $dir is no longer readable: gen=${m.gen} " +
         "was dropped by generation retention (raise retainGens to keep it)")
-    Generations.requireSlicesReadable(spark, dir,
-      Seq(s"gen=${m.gen}/assigned", s"gen=${m.gen}/purged"),
-      m.sliceBase, m.slices, s"snapshot $commit")
+    Manifest.requireReadable(spark, dir, m, s"snapshot $commit")
     loadIvfOn(spark, dir, m)
   }
 
@@ -325,25 +297,13 @@ object IndexStore {
     }
   }
 
-  /** The warehouse→ANN-INDEX cascade (round 13): maintain this
-    * persisted IVF index FROM a merge table's `changes.merge` feed,
-    * exactly-once end-to-end — built on [[upsertVectors]]'s one-commit
-    * atomicity, so a warehouse UPDATE re-embeds and re-assigns its
-    * vector with no purge-then-insert crash window, and warehouse
-    * REMOVEs / `purgeKeys` compliance deletions propagate as index
-    * tombstones. `embedOf` is the RE-EMBED HOOK (see
-    * [[graft.dedup.SemLedgerStore.followMergeTable]]). Ordering is by
-    * (commit, _version) so a RESTORE commit's reinstated rows win
-    * their window. */
-  def followMergeTable(spark: SparkSession, mergeDir: String, dir: String,
-      checkpoint: String, embedOf: Column, sinceCommit: Long = -1L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    graft.util.Cascade.followInto(spark, mergeDir, checkpoint, sinceCommit,
-      applyFeedWindow(_, _, dir, embedOf, _))
-
-  /** ONE feed window into [[upsertVectors]] — shared by
-    * [[followMergeTable]] and the set-cascade follower
-    * ([[graft.util.Cascade.ivfFollower]]). */
+  /** The warehouse→ANN-INDEX cascade step: ONE reduced `changes.merge`
+    * window into [[upsertVectors]] ([[graft.util.Cascade.ivfFollower]])
+    * — a warehouse UPDATE re-embeds and re-assigns its vector in one
+    * commit (no purge-then-insert crash window), REMOVEs and
+    * `purgeKeys` compliance deletions become index tombstones,
+    * exactly-once via the batch ledger. `embedOf` is the re-embed
+    * hook. */
   private[graft] def applyFeedWindow(ups: DataFrame, rem: DataFrame,
       dir: String, embedOf: Column, batchId: Long): Unit = {
     upsertVectors(ups.select(col("_key").as("vid"), embedOf.as("v")),
@@ -457,51 +417,17 @@ object IndexStore {
     * fresh generation at slice 0); compact serves the long-lived
     * below-threshold index that folds forever without doubling. */
   def compactAssigned(spark: SparkSession, dir: String): Option[Long] =
-    graft.util.Maintenance.withLeasedWriteLock("IndexStore", spark, dir) {
-    Manifest.read(spark, dir) match {
-      case Some(m) if m.slices - m.sliceBase > 1 =>
-        val merged = m.slices
-        Generations.claimSlice(spark, dir, Seq(s"gen=${m.gen}/purged"),
-          merged)
-        val (idx, _) = loadIvf(spark, dir)
-        idx.assigned.write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$dir/gen=${m.gen}/assigned/slice=$merged")
-        Manifest.commit(spark, dir, m.copy(sliceBase = merged,
-          slices = merged + 1, commit = m.commit + 1))
-        Some(merged)
-      case _ => None
-    }
+    Manifest.compact(spark, dir, "IndexStore") { (m, merged) =>
+      loadIvfOn(spark, dir, m)._1.assigned.write.mode("overwrite")
+        .partitionBy("cell")
+        .parquet(s"$dir/gen=${m.gen}/assigned/slice=$merged")
     }
 
   /** Deferred slice GC below the current window base (current
     * generation only — old generations die whole via [[saveIvf]]'s
-    * retention GC). */
+    * retention GC; [[SliceManifest.vacuum]]). */
   def vacuumAssignedSlices(spark: SparkSession, dir: String): Int =
-    Manifest.read(spark, dir).map { m =>
-      Generations.gcSlices(spark, dir,
-        Seq(s"gen=${m.gen}/assigned", s"gen=${m.gen}/purged"), m.sliceBase)
-    }.getOrElse(0)
-
-  /** Continuous index maintenance: start a streaming query folding
-    * `vecs` (a STREAMING DataFrame with the id/vec columns) into the
-    * persisted index at `dir`, one [[ivfMaintainBatch]] per micro-batch.
-    * Exactly-once: the manifest records each fold's batch id, so a
-    * batch replayed after a crash between publish and checkpoint commit
-    * is recognized and skipped instead of double-inserting its vectors
-    * (the standard idempotent-foreachBatch ledger). */
-  def ivfMaintainStream(vecs: DataFrame, id: Column, vec: Column,
-      dir: String, checkpoint: String, nCentroids: Int,
-      growthFactor: Double = 2.0, retainGens: Int = 2)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (df: DataFrame, bid: Long) =>
-        ivfMaintainBatch(df, id, vec, dir, nCentroids, growthFactor,
-          retainGens, batchId = bid)
-        ()
-      }
-      .start()
+    Manifest.vacuum(spark, dir)
 
   // ---- the composite (IVF-PQ) index, persisted ----
 
@@ -680,27 +606,15 @@ object IndexStore {
     }
   }
 
-  /** [[followMergeTable]]'s composite twin: the `changes.merge` feed
-    * maintaining the persisted IVF-PQ store through
-    * [[upsertPqVectors]] — retired codes, frozen-quantizer re-encodes,
-    * and the rewritten raw-vecs side table publish per feed window,
-    * exactly-once via the same offsets + batch ledger. */
-  def followMergeTablePq(spark: SparkSession, mergeDir: String,
-      dir: String, checkpoint: String, embedOf: Column,
-      retainGens: Int = 2, sinceCommit: Long = -1L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    graft.util.Cascade.followInto(spark, mergeDir, checkpoint, sinceCommit,
-      applyPqFeedWindow(_, _, dir, embedOf, _, retainGens))
-
-  /** ONE feed window into [[upsertPqVectors]] — shared by
-    * [[followMergeTablePq]] and the set-cascade follower
-    * ([[graft.util.Cascade.ivfPqFollower]]). */
+  /** [[applyFeedWindow]]'s composite twin: ONE reduced `changes.merge`
+    * window into [[upsertPqVectors]]
+    * ([[graft.util.Cascade.ivfPqFollower]]) — retired codes,
+    * frozen-quantizer re-encodes and the rewritten raw-vecs side table
+    * publish per window, exactly-once via the batch ledger. */
   private[graft] def applyPqFeedWindow(ups: DataFrame, rem: DataFrame,
-      dir: String, embedOf: Column, batchId: Long,
-      retainGens: Int = 2): Unit = {
+      dir: String, embedOf: Column, batchId: Long): Unit = {
     upsertPqVectors(ups.select(col("_key").as("vid"), embedOf.as("v")),
-      col("vid"), col("v"), rem.toDF("vid"), dir, retainGens,
-      batchId = batchId)
+      col("vid"), col("v"), rem.toDF("vid"), dir, batchId = batchId)
     ()
   }
 
@@ -762,22 +676,6 @@ object IndexStore {
       carryBaseRows = Some(pm.baseRows), batchId = batchId))
     }
   }
-
-  /** Continuous composite-index maintenance — [[ivfMaintainStream]]'s
-    * IVF-PQ twin, exactly-once via the manifest's batch-id ledger. */
-  def ivfPqMaintainStream(vecs: DataFrame, id: Column, vec: Column,
-      dir: String, checkpoint: String, nCells: Int, m: Int, ksub: Int,
-      growthFactor: Double = 2.0, retainGens: Int = 2)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (df: DataFrame, bid: Long) =>
-        ivfPqMaintainBatch(df, id, vec, dir, nCells, m, ksub,
-          growthFactor, retainGens, batchId = bid)
-        ()
-      }
-      .start()
 
   /** IVF probe over a PERSISTED index via static partition pruning: the
     * cell ranking is centroid-table-sized driver metadata (the

@@ -1526,8 +1526,8 @@ object Apply {
     * state diff the same way): reinstated/changed rows as MODIFY events
     * carrying the restored after-image, rows the restore removed as
     * REMOVE events with typed-null after-images. Without this a
-    * `changes.merge` cascade ([[graft.text.PostingsStore
-    * .followMergeTable]]) would silently diverge from the table forever.
+    * `changes.merge` cascade ([[graft.util.Cascade]]) would silently
+    * diverge from the table forever.
     * Cost is two snapshot scans + one key-diff — the honest price of a
     * verb that rewrites state wholesale; every other commit's slice
     * stays O(delta). The diff needs the merge key, a manifest invariant
@@ -1825,7 +1825,7 @@ object Apply {
     * restore / vacuum commits are physical or metadata operations and
     * wrote none. Consumed through `format("graft")` as
     * `table = changes.merge` — batch or streaming (the
-    * [[graft.text.PostingsStore.changeDirs]] contract on the warehouse
+    * [[graft.util.SliceManifest.changeDirs]] contract on the warehouse
     * table itself). Fail-closed: a window [[vacuumChanges]] retired
     * errors at resolution, never a silent skip. */
   def changeFeedDirs(spark: SparkSession, tableDir: String,

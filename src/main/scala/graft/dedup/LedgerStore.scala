@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
-import graft.util.{Generations, StoreManifest}
+import graft.util.{Generations, SliceManifest, StoreManifest}
 import graft.util.StoreManifest.{maskOlder, tombstones, window}
 
 /** Persisted TEXT DEDUP LEDGER with incremental maintenance — the
@@ -83,7 +83,7 @@ object LedgerStore {
   /** v3 (round 10): `sliceBase` — the live slice window's lower bound.
     * [[compact]] rewrites the live slices `[sliceBase, slices)` into one
     * merged slice and advances the base past them in a single pointer
-    * commit, so long-running [[maintainStream]] folds no longer grow an
+    * commit, so long-running streamed folds no longer grow an
     * unbounded slice/partition-dir population that every `liveSigs`
     * union must open (the round-9 "thousands of slices per day" gap).
     * Retired slices stay on disk for readers holding the pre-compact
@@ -98,8 +98,9 @@ object LedgerStore {
       maxBucket: Int, sliceBase: Long, slices: Long, commit: Long)
       extends StoreManifest.Windowed
 
-  private[graft] val Manifest =
-    new StoreManifest[Meta]("_graft_ledger_meta.json", Format, "ledger")
+  private[graft] val Manifest = new SliceManifest[Meta](
+    "_graft_ledger_meta.json", Format, "ledger",
+    Seq("sigs", "postings", "purged"))
 
   /** A LIVE slice store (`sigs` or `postings`) under the v5
     * SLICE-ORDERED mask: a tombstone at slice S masks only copies OLDER
@@ -176,38 +177,21 @@ object LedgerStore {
     * postings are hash-partitioned on `bp` before the sort, so each large
     * merged file holds few prefixes and row-group statistics skip the
     * rest. */
-  def compact(spark: SparkSession, dir: String): Option[Long] = {
-    // purge/fold/compact serialize on the per-(store, dir) monitor
-    // (round-11 verdict #5); cross-process stays single-writer
-    graft.util.Maintenance.withLeasedWriteLock("LedgerStore", spark, dir) {
-    Manifest.read(spark, dir) match {
-      case Some(m) if m.slices - m.sliceBase > 1 =>
-        val merged = m.slices
-        Generations.claimSlice(spark, dir, Seq("purged"), merged)
-        val tombs = tombstones(spark, s"$dir/purged", "id", m)
-        liveSlices(spark, dir, "sigs", m, tombs).write.mode("overwrite")
-          .parquet(s"$dir/sigs/slice=$merged")
-        liveSlices(spark, dir, "postings", m, tombs)
-          .repartition(col("bp")).sortWithinPartitions(col("bp"))
-          .write.mode("overwrite").parquet(s"$dir/postings/slice=$merged")
-        Manifest.commit(spark, dir,
-          m.copy(sliceBase = merged, slices = merged + 1,
-            commit = m.commit + 1))
-        Some(merged)
-      case _ => None
+  def compact(spark: SparkSession, dir: String): Option[Long] =
+    Manifest.compact(spark, dir, "LedgerStore") { (m, merged) =>
+      val tombs = tombstones(spark, s"$dir/purged", "id", m)
+      liveSlices(spark, dir, "sigs", m, tombs).write.mode("overwrite")
+        .parquet(s"$dir/sigs/slice=$merged")
+      liveSlices(spark, dir, "postings", m, tombs)
+        .repartition(col("bp")).sortWithinPartitions(col("bp"))
+        .write.mode("overwrite").parquet(s"$dir/postings/slice=$merged")
     }
-    }
-  }
 
-  /** Deferred slice GC: delete slice dirs strictly below the CURRENT
-    * manifest's `sliceBase` — non-live under the current and every later
-    * pointer. Run after a grace window once pre-compact readers have
-    * moved on (the Apply deferred-GC contract). Returns dirs removed. */
+  /** Deferred slice GC below the CURRENT manifest's `sliceBase`
+    * ([[SliceManifest.vacuum]]; the Apply deferred-GC contract).
+    * Returns dirs removed. */
   def vacuumSlices(spark: SparkSession, dir: String): Int =
-    Manifest.read(spark, dir).map { m =>
-      Generations.gcSlices(spark, dir, Seq("sigs", "postings", "purged"),
-        m.sliceBase)
-    }.getOrElse(0)
+    Manifest.vacuum(spark, dir)
 
   /** DECREMENTAL ledger maintenance — delete documents from the
     * persisted dedup state (the [[graft.cdc.Apply.purgeKeys]]
@@ -416,22 +400,6 @@ object LedgerStore {
   def commits(spark: SparkSession, dir: String): Seq[Long] =
     Manifest.commits(spark, dir)
 
-  /** CHANGE-FEED resolution (round 12 — `changes.ledger.{sigs,
-    * postings,purged}` through `format("graft")`): the slice dirs
-    * commits `(since, until]` appended — signature replication,
-    * bucket-posting replication, deletion propagation; compacts emit
-    * nothing; labels rewrite per generation and are not feed-able. */
-  def changeDirs(spark: SparkSession, dir: String, sub: String,
-      since: Long, until: Long): (Seq[String], String) = {
-    require(Set("sigs", "postings", "purged")(sub),
-      s"unknown ledger table '$sub'")
-    Generations.changeSliceDirs(spark, dir, sub,
-      Seq("sigs", "postings", "purged"),
-      c => if (c < 0L) (0L, 0L) else {
-        val m = metaAt(spark, dir, c); (m.sliceBase, m.slices)
-      }, since, until)
-  }
-
   /** The archived manifest of snapshot `commit`. */
   def metaAt(spark: SparkSession, dir: String, commit: Long): Meta =
     Manifest.at(spark, dir, commit)
@@ -447,9 +415,7 @@ object LedgerStore {
   def loadAt(spark: SparkSession, dir: String,
       commit: Long): (DataFrame, DataFrame, Meta) = {
     val m = metaAt(spark, dir, commit)
-    Generations.requireSlicesReadable(spark, dir,
-      Seq("sigs", "postings", "purged"), m.sliceBase, m.slices,
-      s"snapshot $commit")
+    Manifest.requireReadable(spark, dir, m, s"snapshot $commit")
     val labelsDir = s"$dir/gen=${m.gen}/labels"
     require(graft.util.Hfs.exists(
         new org.apache.hadoop.fs.Path(labelsDir), graft.util.Hfs.conf(spark)),
@@ -542,52 +508,17 @@ object LedgerStore {
     }
   }
 
-  /** Continuous ledger maintenance: one [[maintainBatch]] fold per
-    * micro-batch of arriving documents, exactly-once via the manifest's
-    * batch-id ledger. External readers follow generations through
-    * [[load]] without sharing the session. */
-  def maintainStream(docs: DataFrame, id: Column, text: Column,
-      dir: String, checkpoint: String, threshold: Double = 0.5,
-      k: Int = 16, bands: Int = 16, prefixes: Int = 64,
-      retainGens: Int = 2, maxBucketSize: Int = Int.MaxValue)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (df: DataFrame, bid: Long) =>
-        maintainBatch(df, id, text, dir, threshold, k, bands, prefixes,
-          retainGens, batchId = bid, maxBucketSize = maxBucketSize)
-        ()
-      }
-      .start()
-
-  /** The warehouse→TEXT-DEDUP cascade (round 14, closing the last
-    * follower gap — every other maintained substrate got its
-    * `changes.merge` follower in rounds 12–13): maintain this ledger
-    * FROM a merge table's feed via the shared
-    * [[graft.util.Cascade.followInto]] harness, exactly-once
-    * end-to-end. Warehouse document updates RE-INGEST atomically
-    * ([[upsertDocs]]' one-commit tombstone + re-land + relabel);
-    * warehouse REMOVEs and `purgeKeys` compliance deletions propagate
-    * as ledger purges — the deletion-propagation path to the dedup
-    * labeling. `textOf` maps a feed row to its document text (in
-    * production the stored text column or a normalization expression
-    * over it). */
-  def followMergeTable(spark: SparkSession, mergeDir: String, dir: String,
-      checkpoint: String, textOf: Column, retainGens: Int = 2,
-      sinceCommit: Long = -1L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    graft.util.Cascade.followInto(spark, mergeDir, checkpoint, sinceCommit,
-      applyFeedWindow(_, _, dir, textOf, _, retainGens))
-
-  /** ONE feed window into [[upsertDocs]] — shared by
-    * [[followMergeTable]] and the set-cascade follower
-    * ([[graft.util.Cascade.ledgerFollower]]). */
+  /** The warehouse→TEXT-DEDUP cascade step: ONE reduced `changes.merge`
+    * window into [[upsertDocs]] ([[graft.util.Cascade.ledgerFollower]]),
+    * exactly-once via its batch ledger. Warehouse document updates
+    * RE-INGEST atomically (one-commit tombstone + re-land + relabel);
+    * REMOVEs and `purgeKeys` compliance deletions propagate as ledger
+    * purges — the deletion-propagation path to the dedup labeling.
+    * `textOf` maps a feed row to its document text. */
   private[graft] def applyFeedWindow(ups: DataFrame, rem: DataFrame,
-      dir: String, textOf: Column, batchId: Long,
-      retainGens: Int = 2): Unit = {
+      dir: String, textOf: Column, batchId: Long): Unit = {
     upsertDocs(ups.select(col("_key").as("doc_id"), textOf.as("text")),
-      col("doc_id"), col("text"), rem.toDF("doc_id"), dir, retainGens,
+      col("doc_id"), col("text"), rem.toDF("doc_id"), dir,
       batchId = batchId)
     ()
   }

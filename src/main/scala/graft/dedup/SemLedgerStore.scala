@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.util.{Generations, StoreManifest}
+import graft.util.{Generations, SliceManifest, StoreManifest}
 import graft.util.StoreManifest.{maskOlder, tombstones, window}
 
 /** Persisted SEMANTIC (embedding) dedup ledger — [[LedgerStore]]'s twin
@@ -55,8 +55,9 @@ object SemLedgerStore {
       sliceBase: Long, slices: Long, commit: Long)
       extends StoreManifest.Windowed
 
-  private[graft] val Manifest = new StoreManifest[Meta](
-    "_graft_semledger_meta.json", Format, "semantic-ledger")
+  private[graft] val Manifest = new SliceManifest[Meta](
+    "_graft_semledger_meta.json", Format, "semantic-ledger",
+    Seq("vecs", "pairs", "purged"))
 
   /** The live vectors under the v5 SLICE-ORDERED mask: a tombstone at
     * slice S masks only copies OLDER than it — an [[upsertVecs]]
@@ -100,35 +101,17 @@ object SemLedgerStore {
     * until [[vacuumSlices]]. Returns the merged slice id, or None when
     * the window already holds ≤ 1 slice. */
   def compact(spark: SparkSession, dir: String): Option[Long] =
-    // purge/fold/compact serialize on the per-(store, dir) monitor
-    // (round-11 verdict #5); cross-process stays single-writer
-    graft.util.Maintenance.withLeasedWriteLock("SemLedgerStore", spark, dir) {
-    Manifest.read(spark, dir) match {
-      case Some(m) if m.slices - m.sliceBase > 1 =>
-        val merged = m.slices
-        Generations.claimSlice(spark, dir, Seq("purged"), merged)
-        // merged slices are written from the TOMBSTONE-FILTERED views:
-        // purged rows leave the store physically, and the superseded
-        // tombstone slices fall out of the window with the old slices
-        liveVecs(spark, dir, m).write.mode("overwrite")
-          .parquet(s"$dir/vecs/slice=$merged")
-        livePairs(spark, dir, m).write.mode("overwrite")
-          .parquet(s"$dir/pairs/slice=$merged")
-        Manifest.commit(spark, dir,
-          m.copy(sliceBase = merged, slices = merged + 1,
-            commit = m.commit + 1))
-        Some(merged)
-      case _ => None
-    }
+    Manifest.compact(spark, dir, "SemLedgerStore") { (m, merged) =>
+      liveVecs(spark, dir, m).write.mode("overwrite")
+        .parquet(s"$dir/vecs/slice=$merged")
+      livePairs(spark, dir, m).write.mode("overwrite")
+        .parquet(s"$dir/pairs/slice=$merged")
     }
 
   /** Deferred slice GC below the current `sliceBase` — run after a
-    * grace window (the Apply deferred-GC contract). */
+    * grace window ([[SliceManifest.vacuum]]). */
   def vacuumSlices(spark: SparkSession, dir: String): Int =
-    Manifest.read(spark, dir).map { m =>
-      Generations.gcSlices(spark, dir, Seq("vecs", "pairs", "purged"),
-        m.sliceBase)
-    }.getOrElse(0)
+    Manifest.vacuum(spark, dir)
 
   /** Load the current state: (LIVE vectors, LIVE pair ledger — slice
     * unions, liveness-pruned, tombstone-filtered — current labels,
@@ -170,26 +153,6 @@ object SemLedgerStore {
   def commits(spark: SparkSession, dir: String): Seq[Long] =
     Manifest.commits(spark, dir)
 
-  /** CHANGE-FEED resolution (round 12 — consumed through
-    * `format("graft")` as `changes.sem.{vecs,pairs,purged}`): the
-    * slice dirs commits `(since, until]` appended. The `pairs` feed is
-    * the stream of NEWLY-DISCOVERED near-duplicate pairs per fold —
-    * what a downstream dedup consumer actually wants — `vecs` is
-    * embedding replication, `purged` deletion propagation; a compact
-    * (rewrite of rows already flowed) emits nothing. Labels are NOT
-    * feed-able: they rewrite per generation (a snapshot, not a delta).
-    */
-  def changeDirs(spark: SparkSession, dir: String, sub: String,
-      since: Long, until: Long): (Seq[String], String) = {
-    require(Set("vecs", "pairs", "purged")(sub),
-      s"unknown semantic-ledger table '$sub'")
-    Generations.changeSliceDirs(spark, dir, sub,
-      Seq("vecs", "pairs", "purged"),
-      c => if (c < 0L) (0L, 0L) else {
-        val m = metaAt(spark, dir, c); (m.sliceBase, m.slices)
-      }, since, until)
-  }
-
   /** The archived manifest of snapshot `commit`. */
   def metaAt(spark: SparkSession, dir: String, commit: Long): Meta =
     Manifest.at(spark, dir, commit)
@@ -200,9 +163,7 @@ object SemLedgerStore {
   def loadAt(spark: SparkSession, dir: String, commit: Long)
       : (DataFrame, DataFrame, DataFrame, Meta) = {
     val m = metaAt(spark, dir, commit)
-    Generations.requireSlicesReadable(spark, dir,
-      Seq("vecs", "pairs", "purged"), m.sliceBase, m.slices,
-      s"snapshot $commit")
+    Manifest.requireReadable(spark, dir, m, s"snapshot $commit")
     val labelsDir = s"$dir/gen=${m.gen}/labels"
     require(graft.util.Hfs.exists(
         new org.apache.hadoop.fs.Path(labelsDir), graft.util.Hfs.conf(spark)),
@@ -360,36 +321,16 @@ object SemLedgerStore {
     }
   }
 
-  /** The warehouse→EMBEDDINGS cascade (round 13, completing the
-    * [[graft.text.PostingsStore.followMergeTable]] path beyond text):
-    * maintain this semantic ledger FROM a merge table's `changes.merge`
-    * feed, exactly-once end-to-end — the feed replays uncommitted commit
-    * windows from its checkpoint, and [[upsertVecs]]'s ledger absorbs
-    * the replays. Warehouse updates RE-EMBED and re-enter the near-dup
-    * closure atomically; warehouse REMOVEs and `purgeKeys` compliance
-    * deletions propagate as ledger purges — the deletion-propagation
-    * path to embeddings. `embedOf` is the RE-EMBED HOOK: a Column
-    * mapping a feed row to its `Array[Float]` vector (in production a
-    * model-serving expression/UDF over the document columns; tests and
-    * gates use a deterministic projection). Ordering is by (commit,
-    * _version) — the table's serialization axis first, so a RESTORE
-    * commit's reinstated rows win their window. */
-  def followMergeTable(spark: SparkSession, mergeDir: String, dir: String,
-      checkpoint: String, embedOf: Column, retainGens: Int = 2,
-      sinceCommit: Long = -1L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    graft.util.Cascade.followInto(spark, mergeDir, checkpoint, sinceCommit,
-      applyFeedWindow(_, _, dir, embedOf, _, retainGens))
-
-  /** ONE feed window into [[upsertVecs]] — shared by
-    * [[followMergeTable]] and the set-cascade follower
-    * ([[graft.util.Cascade.semFollower]]). */
+  /** The warehouse→EMBEDDINGS cascade step: ONE reduced `changes.merge`
+    * window into [[upsertVecs]] ([[graft.util.Cascade.semFollower]]),
+    * exactly-once via its batch ledger. Warehouse updates RE-EMBED and
+    * re-enter the near-dup closure atomically; REMOVEs and `purgeKeys`
+    * compliance deletions propagate as ledger purges. `embedOf` is the
+    * re-embed hook. */
   private[graft] def applyFeedWindow(ups: DataFrame, rem: DataFrame,
-      dir: String, embedOf: Column, batchId: Long,
-      retainGens: Int = 2): Unit = {
+      dir: String, embedOf: Column, batchId: Long): Unit = {
     upsertVecs(ups.select(col("_key").as("id"), embedOf.as("v")),
-      col("id"), col("v"), rem.toDF("id"), dir, retainGens,
-      batchId = batchId)
+      col("id"), col("v"), rem.toDF("id"), dir, batchId = batchId)
     ()
   }
 
@@ -448,22 +389,6 @@ object SemLedgerStore {
     }
     }
   }
-
-  /** Continuous semantic-ledger maintenance: one fold per micro-batch
-    * of arriving vectors, exactly-once via the batch-id ledger. */
-  def maintainStream(vecs: DataFrame, id: Column, vec: Column,
-      dir: String, checkpoint: String, threshold: Double = 0.25,
-      nBands: Int = 4, planesPerBand: Int = 4, dim: Int = 64,
-      retainGens: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (df: DataFrame, bid: Long) =>
-        maintainBatch(df, id, vec, dir, threshold, nBands, planesPerBand,
-          dim, retainGens, batchId = bid)
-        ()
-      }
-      .start()
 
   /** The committed snapshot id produced by LEDGERED batch `batchId`
     * (see [[StoreManifest.commitForBatch]]). */

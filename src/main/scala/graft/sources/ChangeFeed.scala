@@ -15,14 +15,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** The store kinds a change feed can tail — each maps the shared
   * commit-window protocol onto its own manifest and on-disk layout:
-  * the slice stores ([[graft.text.PostingsStore.changeDirs]],
-  * [[graft.warehouse.GraphStore.changeDirs]], slices under
-  * `dir/<sub>/slice=N`) and the merge table
-  * ([[graft.cdc.Apply.changeFeedDirs]], write-time change slices under
-  * `dir/_changes/commit=N`). `emptySchema` covers feeds that are
-  * legitimately subscribable before their first slice exists (a
-  * pre-purge `purged` feed projects the store's id column from a
-  * sibling sub). */
+  * the slice stores ([[SliceFeed]], slices under `dir/<sub>/slice=N`)
+  * and the merge table ([[graft.cdc.Apply.changeFeedDirs]], write-time
+  * change slices under `dir/_changes/commit=N`). `emptySchema` covers
+  * feeds that are legitimately subscribable before their first slice
+  * exists (a pre-purge `purged` feed projects the store's id column
+  * from a sibling sub). */
 private[sources] sealed trait FeedStore {
   def storeName: String
   def subs: Set[String]
@@ -46,60 +44,22 @@ private[sources] sealed trait FeedStore {
       "subscribing to its change feed")
 }
 
-private[sources] object PostingsFeed extends FeedStore {
-  val storeName = "postings"
-  val subs = Set("postings", "doclen", "purged")
+/** A slice store's feeds (`changes.<kind>.<table>`): the store's
+  * [[graft.util.SliceManifest.changeDirs]] over its manifest's tables. */
+private[sources] final class SliceFeed(kind: StoreKind) extends FeedStore {
+  val storeName = kind.name
+  val subs = kind.manifest.tables.toSet
   def currentCommit(spark: SparkSession, dir: String): Long =
-    graft.text.PostingsStore.meta(spark, dir).map(_.commit).getOrElse(-1L)
+    kind.manifest.read(spark, dir).map(_.commit).getOrElse(-1L)
   def changeDirs(spark: SparkSession, dir: String, sub: String,
       since: Long, until: Long): (Seq[String], String) =
-    graft.text.PostingsStore.changeDirs(spark, dir, sub, since, until)
+    kind.manifest.changeDirs(spark, dir, sub, since, until)
   override def emptySchema(spark: SparkSession, dir: String,
-      sub: String): StructType =
-    ChangeFeed.purgedProxySchema(this, spark, dir, sub, "doclen",
-      Set("id", "slice"))
-}
-
-private[sources] object GraphFeed extends FeedStore {
-  val storeName = "graph"
-  val subs = Set("items", "pairs", "purged")
-  def currentCommit(spark: SparkSession, dir: String): Long =
-    graft.warehouse.GraphStore.meta(spark, dir).map(_.commit).getOrElse(-1L)
-  def changeDirs(spark: SparkSession, dir: String, sub: String,
-      since: Long, until: Long): (Seq[String], String) =
-    graft.warehouse.GraphStore.changeDirs(spark, dir, sub, since, until)
-  override def emptySchema(spark: SparkSession, dir: String,
-      sub: String): StructType =
-    ChangeFeed.purgedProxySchema(this, spark, dir, sub, "items",
-      Set("ord", "slice"))
-}
-
-private[sources] object SemFeed extends FeedStore {
-  val storeName = "sem"
-  val subs = Set("vecs", "pairs", "purged")
-  def currentCommit(spark: SparkSession, dir: String): Long =
-    graft.dedup.SemLedgerStore.meta(spark, dir).map(_.commit).getOrElse(-1L)
-  def changeDirs(spark: SparkSession, dir: String, sub: String,
-      since: Long, until: Long): (Seq[String], String) =
-    graft.dedup.SemLedgerStore.changeDirs(spark, dir, sub, since, until)
-  override def emptySchema(spark: SparkSession, dir: String,
-      sub: String): StructType =
-    ChangeFeed.purgedProxySchema(this, spark, dir, sub, "vecs",
-      Set("id", "slice"))
-}
-
-private[sources] object LedgerFeed extends FeedStore {
-  val storeName = "ledger"
-  val subs = Set("sigs", "postings", "purged")
-  def currentCommit(spark: SparkSession, dir: String): Long =
-    graft.dedup.LedgerStore.meta(spark, dir).map(_.commit).getOrElse(-1L)
-  def changeDirs(spark: SparkSession, dir: String, sub: String,
-      since: Long, until: Long): (Seq[String], String) =
-    graft.dedup.LedgerStore.changeDirs(spark, dir, sub, since, until)
-  override def emptySchema(spark: SparkSession, dir: String,
-      sub: String): StructType =
-    ChangeFeed.purgedProxySchema(this, spark, dir, sub, "sigs",
-      Set("id", "slice"))
+      sub: String): StructType = {
+    val (proxy, key) = kind.feed.get
+    ChangeFeed.purgedProxySchema(this, spark, dir, sub, proxy,
+      Set(key, "slice"))
+  }
 }
 
 /** The WAREHOUSE TABLE's own feed: every merge batch writes its
@@ -144,14 +104,15 @@ private[sources] object MergeFeed extends FeedStore {
   *     .option("table", "changes.merge").load()
   * }}}
   *
-  * Surfaces: `changes.postings.{postings,doclen,purged}`,
-  * `changes.graph.{items,pairs,purged}` (the graph's `pairs` feed is
-  * DIFFERENTIAL — signed Δ-counts; summing `dn` maintains exact edge
-  * weights, purges ride as negatives), and `changes.merge` (the
+  * Surfaces: `changes.<kind>.<table>` for each feed-bearing
+  * [[StoreKind]] — postings, ledger, sem and graph (the graph's `pairs`
+  * feed is DIFFERENTIAL — signed Δ-counts; summing `dn` maintains exact
+  * edge weights, purges ride as negatives; sem's `pairs` is the stream
+  * of newly-discovered near-duplicate pairs) — and `changes.merge` (the
   * warehouse table's applied upserts + REMOVEs, written at commit
-  * time — no diffing).
+  * time — no diffing). Labels rewrite per generation and have no feed.
   *
-  * Semantics ([[graft.util.Generations.changeSliceDirs]] /
+  * Semantics ([[graft.util.SliceManifest.changeDirs]] /
   * [[graft.cdc.Apply.changeFeedDirs]]): a FOLD's appended slices are
   * row additions, a PURGE's slice its deletions, and a COMPACT /
   * RESTORE / VACUUM — physical or metadata reorganizations of rows

@@ -150,23 +150,9 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
     def has(meta: String): Boolean =
       Generations.readPointer(spark, dir, meta).isDefined
     val surfaces =
-      (if (has(graft.cdc.Apply.MetaName))
-        Seq("merge", "changes.merge") else Nil) ++
-      (if (has(graft.dedup.LedgerStore.Manifest.name))
-        Seq("ledger.labels", "changes.ledger.sigs",
-          "changes.ledger.postings", "changes.ledger.purged") else Nil) ++
-      (if (has(graft.dedup.SemLedgerStore.Manifest.name))
-        Seq("sem.labels", "changes.sem.vecs", "changes.sem.pairs",
-          "changes.sem.purged") else Nil) ++
-      (if (has(graft.text.PostingsStore.Manifest.name))
-        Seq("postings.postings", "postings.doclen", "postings.purged",
-          "changes.postings.postings", "changes.postings.doclen",
-          "changes.postings.purged") else Nil) ++
-      (if (has(graft.warehouse.GraphStore.Manifest.name))
-        Seq("changes.graph.items", "changes.graph.pairs",
-          "changes.graph.purged") else Nil) ++
-      (if (has(graft.ann.IndexStore.Manifest.name))
-        Seq("ivf.assigned", "ivf.purged") else Nil)
+      (if (has(graft.cdc.Apply.MetaName)) Seq("merge", "changes.merge")
+       else Nil) ++
+        StoreKind.All.filter(k => has(k.manifest.name)).flatMap(_.surfaces)
     surfaces.map(Identifier.of(namespace, _)).toArray
   }
 

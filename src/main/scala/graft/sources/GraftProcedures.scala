@@ -41,38 +41,21 @@ import graft.util.Generations
 private[sources] object GraftProcedures {
 
   /** One store kind: its manifest, and what `compact` and `vacuum` run
-    * on it (each returns the result row's detail). */
+    * on it (each returns the result row's detail) — the merge table,
+    * then every slice store kind ([[StoreKind.All]]). */
   private final case class Kind(kind: String, manifest: String,
       compact: (SparkSession, String) => String,
       vacuum: (SparkSession, String) => String)
 
-  private def sliceMsg(r: Option[Long]): String =
-    r.fold("window already compact (nothing to do)")(s =>
-      s"window merged into slice $s")
-
-  private def removed(n: Int): String = s"$n slice dirs removed"
-
-  private val Kinds: Seq[Kind] = Seq(
+  private val Kinds: Seq[Kind] =
     Kind("merge", graft.cdc.Apply.MetaName,
       (s, d) => { graft.cdc.Apply.compact(s, d); "live buckets rewritten" },
       (s, d) => {
         graft.cdc.Apply.vacuum(s, d); "unreferenced generations removed"
-      }),
-    Kind("postings", graft.text.PostingsStore.Manifest.name,
-      (s, d) => sliceMsg(graft.text.PostingsStore.compact(s, d)),
-      (s, d) => removed(graft.text.PostingsStore.vacuumSlices(s, d))),
-    Kind("ledger", graft.dedup.LedgerStore.Manifest.name,
-      (s, d) => sliceMsg(graft.dedup.LedgerStore.compact(s, d)),
-      (s, d) => removed(graft.dedup.LedgerStore.vacuumSlices(s, d))),
-    Kind("sem", graft.dedup.SemLedgerStore.Manifest.name,
-      (s, d) => sliceMsg(graft.dedup.SemLedgerStore.compact(s, d)),
-      (s, d) => removed(graft.dedup.SemLedgerStore.vacuumSlices(s, d))),
-    Kind("graph", graft.warehouse.GraphStore.Manifest.name,
-      (s, d) => sliceMsg(graft.warehouse.GraphStore.compact(s, d)),
-      (s, d) => removed(graft.warehouse.GraphStore.vacuumSlices(s, d))),
-    Kind("ivf", graft.ann.IndexStore.Manifest.name,
-      (s, d) => sliceMsg(graft.ann.IndexStore.compactAssigned(s, d)),
-      (s, d) => removed(graft.ann.IndexStore.vacuumAssignedSlices(s, d))))
+      }) +: StoreKind.All.map(k => Kind(k.name, k.manifest.name,
+      (s, d) => k.compact(s, d).fold("window already compact (nothing " +
+        "to do)")(m => s"window merged into slice $m"),
+      (s, d) => s"${k.manifest.vacuum(s, d)} slice dirs removed"))
 
   val Names: Seq[String] =
     Seq("compact", "vacuum", "commits", "restore", "vacuum_changes",

@@ -107,7 +107,7 @@ class GraftTables extends TableProvider with DataSourceRegister {
   * the whole input DataFrame to [[graft.cdc.Apply.insertBatch]], which
   * stages it as MODIFY envelopes and folds ONE ledgered commit through
   * the real leased merge path (change slice included — a
-  * `followMergeTable` cascade sees SQL inserts like any other commit).
+  * `changes.merge` follower sees SQL inserts like any other commit).
   *
   * Streaming over a SNAPSHOT surface is intentionally unsupported
   * (ADVICE r13): a snapshot is an immutable path set — "new files in
@@ -378,20 +378,15 @@ object GraftTables {
       table.stripPrefix("changes.").split("\\.", 2) match {
         case Array("merge") =>
           new ChangeFeedTable(spark, dir, MergeFeed, "feed", options)
-        case Array("postings", sub) =>
-          new ChangeFeedTable(spark, dir, PostingsFeed, sub, options)
-        case Array("graph", sub) =>
-          new ChangeFeedTable(spark, dir, GraphFeed, sub, options)
-        case Array("sem", sub) =>
-          new ChangeFeedTable(spark, dir, SemFeed, sub, options)
-        case Array("ledger", sub) =>
-          new ChangeFeedTable(spark, dir, LedgerFeed, sub, options)
-        case _ => sys.error(
-          s"unknown change feed '$table' — feed-bearing surfaces are " +
-            "changes.merge, changes.postings.{postings,doclen,purged}, " +
-            "changes.graph.{items,pairs,purged}, " +
-            "changes.sem.{vecs,pairs,purged} and " +
-            "changes.ledger.{sigs,postings,purged}")
+        case Array(kind, sub) if StoreKind.Feeds.contains(kind) =>
+          new ChangeFeedTable(spark, dir, new SliceFeed(StoreKind.Feeds(kind)),
+            sub, options)
+        case _ =>
+          val feeds = StoreKind.All.filter(_.feed.isDefined).map(k =>
+            s"changes.${k.name}.{${k.manifest.tables.mkString(",")}}")
+          sys.error(s"unknown change feed '$table' — feed-bearing " +
+            s"surfaces are ${("changes.merge" +: feeds.init).mkString(", ")} " +
+            s"and ${feeds.last}")
       }
     } else if (table == "merge" &&
         graft.cdc.Apply.mergeSnapshotEmpty(spark, dir, commit)) {
@@ -460,18 +455,15 @@ object GraftTables {
     * resolution path for every store kind ([[GraftCatalog]]). */
   def metaNameOf(table: String): String = table match {
     case "merge" | "changes.merge" => graft.cdc.Apply.MetaName
-    case s if s == "ledger.labels" || s.startsWith("changes.ledger.") =>
-      graft.dedup.LedgerStore.Manifest.name
-    case s if s == "sem.labels" || s.startsWith("changes.sem.") =>
-      graft.dedup.SemLedgerStore.Manifest.name
-    case s if s.startsWith("postings.") ||
-      s.startsWith("changes.postings.") =>
-      graft.text.PostingsStore.Manifest.name
-    case s if s.startsWith("changes.graph.") =>
-      graft.warehouse.GraphStore.Manifest.name
-    case s if s.startsWith("ivf.") => graft.ann.IndexStore.Manifest.name
     case s if s.startsWith("set:") => graft.util.PipelineLedger.MetaName
-    case other => sys.error(s"unknown graft table '$other'")
+    case s =>
+      // the kind whose surfaces share `s`'s family (`postings.`,
+      // `changes.ledger.` …) — a misspelled table of a known family
+      // still resolves to its store and fails at resolution
+      def family(t: String) = t.take(t.lastIndexOf('.') + 1)
+      StoreKind.All.find(_.surfaces.exists(t => family(t) == family(s)))
+        .map(_.manifest.name)
+        .getOrElse(sys.error(s"unknown graft table '$s'"))
   }
 
   private def pathsOf(spark: SparkSession, dir: String, table: String,
@@ -480,30 +472,6 @@ object GraftTables {
       case "merge" =>
         (graft.cdc.Apply.snapshotBucketDirs(spark, dir, commit),
           Map("mergeSchema" -> "true"))
-      case "ledger.labels" =>
-        (Seq(graft.dedup.LedgerStore.labelsDir(spark, dir, commit)),
-          Map.empty[String, String])
-      case s if s.startsWith("postings.") =>
-        val sub = s.stripPrefix("postings.")
-        val (dirs, base) =
-          graft.text.PostingsStore.sliceDirs(spark, dir, sub, commit)
-        require(dirs.nonEmpty,
-          s"$dir/$sub holds no live slices at " +
-            s"snapshot ${commit.getOrElse("current")}")
-        (dirs, Map("basePath" -> base))
-      case "sem.labels" =>
-        (Seq(graft.dedup.SemLedgerStore.labelsDir(spark, dir, commit)),
-          Map.empty[String, String])
-      case s if s.startsWith("ivf.") =>
-        val sub = s.stripPrefix("ivf.")
-        val (dirs, base) =
-          graft.ann.IndexStore.ivfDirs(spark, dir, sub, commit)
-        require(dirs.nonEmpty,
-          s"$dir ivf/$sub holds no live slices at " +
-            s"snapshot ${commit.getOrElse("current")}")
-        // slice + cell stay hive partition columns: a cell filter in raw
-        // SQL plans the same static prune searchPruned gets
-        (dirs, Map("basePath" -> base))
       case s if s.startsWith("set:") =>
         // SET-PINNED read (the q262/q264 composition as a catalog face):
         // `path` names a [[graft.util.PipelineLedger]] SET dir, `commit`
@@ -525,11 +493,22 @@ object GraftTables {
           s"set manifest at $dir pins no store named '$storeName' " +
             s"(stores: ${setMeta.stores.keys.toSeq.sorted.mkString(", ")})"))
         pathsOf(spark, s"$dir/$storeName", surface, Some(pinned))
-      case other => sys.error(
-        s"unknown graft table '$other' (supported: merge, ledger.labels, " +
-          "sem.labels, postings.postings, postings.doclen, " +
-          "postings.purged, ivf.assigned, ivf.purged, " +
-          "set:<store>:<surface>, changes.postings.<sub>)")
+      case s => StoreKind.All.find(_.snapshots.contains(s)) match {
+        case Some(k) if s == s"${k.name}.labels" =>
+          (Seq(k.labelsDir.get(spark, dir, commit)), Map.empty[String, String])
+        case Some(k) =>
+          // `slice` (and IVF's `cell`) stay hive partition columns: a
+          // cell filter in raw SQL plans the same static prune
+          // searchPruned gets, a `tp` filter pushes into the parquet scan
+          val (dirs, base) = k.manifest.liveDirs(spark, dir,
+            s.stripPrefix(s"${k.name}."), commit)
+          require(dirs.nonEmpty, s"$base holds no live slices at " +
+            s"snapshot ${commit.getOrElse("current")}")
+          (dirs, Map("basePath" -> base))
+        case None => sys.error(s"unknown graft table '$s' (supported: " +
+          ("merge" +: StoreKind.All.flatMap(_.snapshots)).mkString(", ") +
+          ", set:<store>:<surface>, changes.postings.<sub>)")
+      }
     }
 }
 

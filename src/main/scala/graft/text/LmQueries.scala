@@ -759,7 +759,7 @@ object LmQueries {
     //    doclen over the simulated post-upsert corpus: the masked
     //    store read ≡ the recompute, bit-for-bit. The cascade face —
     //    the merge table's change feed DRIVING this verb exactly-once
-    //    (followMergeTable) — is pinned by PostingsUpsertSpec.
+    //    (Cascade.postingsFollower) — is pinned by PostingsUpsertSpec.
     "q276_index_upsert" -> { (s, d) =>
       val docs = Tables.documents(s, d)
       val cut = docs.agg(max(col("doc_id"))).head.getLong(0) * 9 / 10

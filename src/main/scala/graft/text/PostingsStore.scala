@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.util.{Generations, StoreManifest}
+import graft.util.{Generations, SliceManifest, StoreManifest}
 import graft.util.StoreManifest.{maskOlder, tombstones, window}
 
 /** Persisted INVERTED INDEX with incremental maintenance — the retrieval
@@ -77,8 +77,9 @@ object PostingsStore {
       totTokens: Long, prefixes: Int, sliceBase: Long, slices: Long,
       commit: Long) extends StoreManifest.Windowed
 
-  private[graft] val Manifest =
-    new StoreManifest[Meta]("_graft_postings_meta.json", Format, "postings")
+  private[graft] val Manifest = new SliceManifest[Meta](
+    "_graft_postings_meta.json", Format, "postings",
+    Seq("postings", "doclen", "purged"))
 
   /** Term-prefix sort key: a pure function of the term (every posting
     * of a term shares ONE prefix — the minhashPostings `bp` argument
@@ -113,9 +114,7 @@ object PostingsStore {
   def docLengthsAt(spark: SparkSession, dir: String,
       commit: Long): DataFrame = {
     val m = metaAt(spark, dir, commit)
-    Generations.requireSlicesReadable(spark, dir,
-      Seq("doclen", "purged"), m.sliceBase, m.slices,
-      s"snapshot $commit")
+    Manifest.requireReadable(spark, dir, m, s"snapshot $commit")
     live(spark, dir, "doclen", m)
   }
 
@@ -283,49 +282,19 @@ object PostingsStore {
     }
   }
 
-  /** The CASCADE: maintain this store FROM a merge table's
-    * `changes.merge` feed — the warehouse's CDC-OUT
-    * ([[graft.cdc.Apply.changeFeedDirs]]) driving the retrieval
-    * index, exactly-once END-TO-END: the feed replays uncommitted
-    * commit windows from its checkpoint, and [[upsertBatch]]'s ledger
-    * absorbs the replays. Each micro-batch reduces to the latest
-    * envelope per key (a batch may span several commits), then
-    * INSERT/MODIFY upsert and REMOVE delete — warehouse updates
-    * re-index atomically, warehouse purges propagate as index purges
-    * (the compliance path). `textOf` maps a feed row to the text to
-    * index. */
-  def followMergeTable(spark: SparkSession, mergeDir: String, dir: String,
-      checkpoint: String, textOf: Column, prefixes: Int = 64,
-      sinceCommit: Long = -1L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    graft.util.Cascade.followInto(spark, mergeDir, checkpoint, sinceCommit,
-      applyFeedWindow(_, _, dir, textOf, _, prefixes))
-
-  /** ONE feed window into [[upsertBatch]] — shared by
-    * [[followMergeTable]] and the set-cascade follower
-    * ([[graft.util.Cascade.postingsFollower]]), so the two paths cannot
-    * drift. */
+  /** The CASCADE step: ONE reduced `changes.merge` window into
+    * [[upsertBatch]] — the warehouse's CDC-OUT driving the retrieval
+    * index ([[graft.util.Cascade.postingsFollower]]), exactly-once via
+    * the upsert's batch ledger. INSERT/MODIFY re-index atomically,
+    * REMOVE (and `purgeKeys` compliance deletions) purge. `textOf` maps
+    * a feed row to the text to index. */
   private[graft] def applyFeedWindow(ups: DataFrame, rem: DataFrame,
-      dir: String, textOf: Column, batchId: Long, prefixes: Int = 64): Unit = {
+      dir: String, textOf: Column, batchId: Long, prefixes: Int): Unit = {
     upsertBatch(ups.select(col("_key").as("id"), textOf.as("text")),
       col("id"), col("text"), rem.toDF("id"), dir, prefixes,
       batchId = batchId)
     ()
   }
-
-  /** Continuous maintenance: one fold per micro-batch of arriving
-    * documents, exactly-once via the manifest's batch-id ledger. */
-  def maintainStream(docs: DataFrame, id: Column, text: Column,
-      dir: String, checkpoint: String, prefixes: Int = 64)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (df: DataFrame, bid: Long) =>
-        maintainBatch(df, id, text, dir, prefixes, batchId = bid)
-        ()
-      }
-      .start()
 
   /** [[graft.dedup.LedgerStore.compact]]'s retrieval twin: merge the
     * live slice window into one slice per table, advance the window in
@@ -335,29 +304,18 @@ object PostingsStore {
     * skip the rest — the trade this layout makes against whole-directory
     * skipping at large slice sizes. */
   def compact(spark: SparkSession, dir: String): Option[Long] =
-    graft.util.Maintenance.withLeasedWriteLock("PostingsStore", spark, dir) {
-    Manifest.read(spark, dir) match {
-      case Some(m) if m.slices - m.sliceBase > 1 =>
-        val merged = m.slices
-        Generations.claimSlice(spark, dir, Seq("purged"), merged)
-        live(spark, dir, "postings", m)
-          .repartition(col("tp")).sortWithinPartitions(col("tp"), col("term"))
-          .write.mode("overwrite").parquet(s"$dir/postings/slice=$merged")
-        live(spark, dir, "doclen", m).write.mode("overwrite")
-          .parquet(s"$dir/doclen/slice=$merged")
-        Manifest.commit(spark, dir, m.copy(sliceBase = merged,
-          slices = merged + 1, commit = m.commit + 1))
-        Some(merged)
-      case _ => None
-    }
+    Manifest.compact(spark, dir, "PostingsStore") { (m, merged) =>
+      live(spark, dir, "postings", m)
+        .repartition(col("tp")).sortWithinPartitions(col("tp"), col("term"))
+        .write.mode("overwrite").parquet(s"$dir/postings/slice=$merged")
+      live(spark, dir, "doclen", m).write.mode("overwrite")
+        .parquet(s"$dir/doclen/slice=$merged")
     }
 
-  /** Deferred slice GC below the current window base. */
+  /** Deferred slice GC below the current window base
+    * ([[SliceManifest.vacuum]]). */
   def vacuumSlices(spark: SparkSession, dir: String): Int =
-    Manifest.read(spark, dir).map { m =>
-      Generations.gcSlices(spark, dir, Seq("postings", "doclen", "purged"),
-        m.sliceBase)
-    }.getOrElse(0)
+    Manifest.vacuum(spark, dir)
 
   /** DECREMENTAL index maintenance — delete documents from the
     * persisted inverted index (the purge verb on the retrieval
@@ -430,9 +388,7 @@ object PostingsStore {
   def bm25QueryAt(spark: SparkSession, dir: String, commit: Long,
       terms: Seq[String], topK: Int): DataFrame = {
     val m = metaAt(spark, dir, commit)
-    Generations.requireSlicesReadable(spark, dir,
-      Seq("postings", "doclen", "purged"), m.sliceBase, m.slices,
-      s"snapshot $commit")
+    Manifest.requireReadable(spark, dir, m, s"snapshot $commit")
     bm25On(spark, dir, m, terms, topK)
   }
 
@@ -474,63 +430,4 @@ object PostingsStore {
   def commitForBatch(spark: SparkSession, dir: String,
       batchId: Long): Long =
     Manifest.commitForBatch(spark, dir, batchId)
-
-  /** CHANGE-FEED resolution (round 12): the slice data dirs of table
-    * `sub` APPENDED by the commits in `(since, until]` — the store's
-    * CDC-out face, consumed by [[graft.sources.ChangeFeedTable]] both
-    * as a batch delta read and as micro-batch offsets of a streaming
-    * source. Commit classification is derivable from the archived
-    * manifests alone (no verb log needed):
-    *
-    *  - a COMPACT advanced `sliceBase` — its merged slice REWRITES
-    *    rows that already flowed through the feed, so it contributes
-    *    NOTHING (a physical reorganization is not a change);
-    *  - an empty-batch no-op bump added no slices — nothing;
-    *  - a FOLD appended postings+doclen slices (row additions), a
-    *    PURGE appended a purged slice (row deletions) — each commit's
-    *    new ids are `[slices(c-1), slices(c))`, and which sub a verb
-    *    wrote is exactly which sub's dir exists at that id.
-    *
-    * `since = -1` streams from genesis. Fail-closed like every
-    * snapshot read: the whole change window must still be readable
-    * (vacuum retires it loudly, never silently). */
-  def changeDirs(spark: SparkSession, dir: String, sub: String,
-      since: Long, until: Long): (Seq[String], String) = {
-    require(Set("postings", "doclen", "purged")(sub),
-      s"unknown postings-store table '$sub'")
-    Generations.changeSliceDirs(spark, dir, sub,
-      Seq("postings", "doclen", "purged"),
-      c => if (c < 0L) (0L, 0L) else {
-        val m = metaAt(spark, dir, c); (m.sliceBase, m.slices)
-      }, since, until)
-  }
-
-  /** The live slice data dirs of table `sub` ("postings" | "doclen" |
-    * "purged") for a committed snapshot (commit = None → current),
-    * plus the base path that keeps `slice` a partition column — public
-    * for the DataSource V2 catalog face ([[graft.sources.GraftTables]]):
-    * explicit slice paths make the snapshot window a STATIC property of
-    * the table (no slice filter to push), and a `tp` filter pushes into
-    * the parquet scan of the prefix-sorted files.
-    * Fail-closed via [[Generations.requireSlicesReadable]]. May return
-    * no dirs for "purged" (no purge ever ran). */
-  def sliceDirs(spark: SparkSession, dir: String, sub: String,
-      commit: Option[Long]): (Seq[String], String) = {
-    require(Set("postings", "doclen", "purged")(sub),
-      s"unknown postings-store table '$sub'")
-    val m = commit.fold(Manifest.get(spark, dir))(Manifest.at(spark, dir, _))
-    // every live slice id was written by exactly ONE op, so a given sub
-    // holds a SUBSET of the window's ids (a purge slice has only
-    // `purged/`, a fold slice only `postings/`+`doclen/`) — readability
-    // checks across all three, the per-sub path set keeps what exists
-    Generations.requireSlicesReadable(spark, dir,
-      Seq("postings", "doclen", "purged"), m.sliceBase, m.slices,
-      s"snapshot ${commit.getOrElse("current")}")
-    val hc = graft.util.Hfs.conf(spark)
-    val dirs = (m.sliceBase until m.slices)
-      .map(s => s"$dir/$sub/slice=$s")
-      .filter(p => graft.util.Hfs.exists(
-        new org.apache.hadoop.fs.Path(p), hc))
-    (dirs, s"$dir/$sub")
-  }
 }

@@ -3,30 +3,33 @@ package graft.util
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** ATOMIC MULTI-STORE CASCADE over the warehouse's change feed
-  * (round 13) — the composition of the two round-12/13 subsystems:
-  * per-store `followMergeTable` keeps each substrate exactly-once
-  * w.r.t. the feed, but each store COMMITS INDEPENDENTLY, so a crash
-  * mid-window leaves the stores at different commits (each correct,
-  * mutually inconsistent until the replay). A pipeline whose queries
-  * compose substrates (q262/q264's point) needs the cascade itself to
-  * publish CONSISTENT SETS: here one feed window folds into N stores
-  * and ONE [[PipelineLedger]] set commit pins each store's
-  * batch-exact snapshot — all-visible-or-all-replayed, the
-  * `refreshAll` discipline driven by CDC-OUT instead of a raw corpus
-  * stream. Set readers (`readSet` + each store's `loadAt` face, or
-  * `set:<store>:<surface>` through `format("graft")`) never observe a
-  * half-applied window, even while the cascade is mid-fold.
+/** The FOLLOWERS of the warehouse's change feed (`changes.merge`): the
+  * one place a maintained store is driven by CDC-OUT.
   *
-  * The per-window envelope reduce happens ONCE here (not once per
-  * store): latest per key by (commit, _version) — commit first, the
-  * table's serialization axis, so a RESTORE's reinstated rows win
-  * their window — REMOVE above MODIFY on full ties. Each store's
-  * fold then splits upserts from REMOVEs and calls its one-commit
-  * upsert verb under the SHARED batch id; the store ledgers absorb
-  * partial-crash replays, `commitForBatch` pins the batch-exact
-  * commit even if store-level maintenance interleaved (the r11
-  * pin rule).
+  * A follower is a `*Follower` set member ([[PipelineLedger.Store]]):
+  * its fold takes ONE reduced feed window — the latest envelope per key
+  * ([[reduceLatest]], by (commit, _version): commit first, the table's
+  * serialization axis, so a RESTORE's reinstated rows win their window;
+  * REMOVE above MODIFY on full ties) — splits upserts from REMOVEs, and
+  * calls the store's one-commit upsert verb under the stream's batch id.
+  * The store's batch ledger absorbs replays, so a follower is
+  * exactly-once end-to-end. Every follower runs the same loop
+  * ([[Maintenance.foldStream]]) over the same feed ([[feed]]):
+  *
+  *  - [[follow]] drives ONE member standalone. Each store commits on its
+  *    own, so a crash mid-window can leave several followed stores at
+  *    different commits until the replay converges them.
+  *  - [[followMergeTableAll]] drives a SET: one window folds into N
+  *    stores and ONE [[PipelineLedger]] set commit pins each store's
+  *    batch-exact snapshot (`commitForBatch`, the r11 pin rule) —
+  *    all-visible-or-all-replayed. Set readers (`readSet` + each
+  *    store's `loadAt` face, or `set:<store>:<surface>` through
+  *    `format("graft")`) never observe a half-applied window.
+  *
+  * Both run the member's fold on the same reduced window, so the set
+  * cascade and a standalone follower cannot drift. Jobs carry
+  * `follow: <member>` (standalone) or `cascade window` (the set's
+  * reduce and commit; each member's fold is `pipeline fold: <member>`).
   */
 object Cascade {
 
@@ -42,33 +45,30 @@ object Cascade {
     latest.filter(col("op") === graft.cdc.Envelope.Remove)
       .select(col("_key")))
 
-  /** The SHARED follower harness every per-store `followMergeTable`
-    * delegates to (round-13 review: five hand-copied foreachBatch
-    * bodies would let the next reduce/ordering change silently miss
-    * one follower): read the feed from `sinceCommit`, reduce each
-    * window ONCE ([[reduceLatest]] — commit-first ordering), split
-    * upserts from REMOVEs, and hand them to the store's one-commit
-    * upsert verb under the stream's batch id. */
-  def followInto(spark: SparkSession, mergeDir: String,
-      checkpoint: String, sinceCommit: Long,
-      apply: (DataFrame, DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+  /** The merge table's change feed from `sinceCommit` (exclusive) as a
+    * stream of commit windows — every follower's source. */
+  def feed(spark: SparkSession, mergeDir: String,
+      sinceCommit: Long): DataFrame =
     spark.readStream.format("graft").option("path", mergeDir)
       .option("table", "changes.merge")
       .option("sinceCommit", sinceCommit.toString).load()
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (df: DataFrame, bid: Long) =>
-        val (ups, rem) = split(reduceLatest(df))
-        apply(ups, rem, bid)
-        ()
-      }
-      .start()
 
-  /** A store as a set member: each window's upserts and REMOVEs go
-    * through the SAME feed-window fold the store's standalone
-    * `followMergeTable` runs (so the two paths cannot drift), under the
-    * shared batch id; `pin` is the store's `commitForBatch`. */
+  /** Follow the feed into ONE store: `member`'s fold (a `*Follower`
+    * below) on each reduced window, under the stream's batch id.
+    * Hydrate the store from a snapshot first and follow from its commit
+    * via `sinceCommit` (the production pattern). */
+  def follow(spark: SparkSession, mergeDir: String, checkpoint: String,
+      member: PipelineLedger.Store, sinceCommit: Long = -1L)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    Maintenance.foldStream(feed(spark, mergeDir, sinceCommit), checkpoint) {
+      (df, bid) =>
+        df.sparkSession.sparkContext.setJobDescription(s"follow: ${member.name}")
+        member.fold(reduceLatest(df), bid)
+    }
+
+  /** A store as a follower: each window's upserts and REMOVEs go
+    * through the store's feed-window fold under the shared batch id;
+    * `pin` is the store's `commitForBatch`. */
   private def member(name: String, fold: (DataFrame, DataFrame, Long) => Unit,
       pin: (SparkSession, Long) => Long): PipelineLedger.Store =
     PipelineLedger.Store(name,
@@ -82,8 +82,11 @@ object Cascade {
       graft.text.PostingsStore.applyFeedWindow(_, _, dir, textOf, _, prefixes),
       graft.text.PostingsStore.commitForBatch(_, dir, _))
 
-  /** The semantic dedup ledger as a set member (`embedOf` = the
-    * re-embed hook, see [[graft.dedup.SemLedgerStore.followMergeTable]]). */
+  /** The semantic dedup ledger as a set member
+    * ([[graft.dedup.SemLedgerStore.upsertVecs]]; `embedOf` is the
+    * RE-EMBED HOOK — a Column mapping a feed row to its `Array[Float]`
+    * vector: in production a model-serving expression over the
+    * document columns, in tests and gates a stored projection). */
   def semFollower(name: String, dir: String,
       embedOf: Column): PipelineLedger.Store =
     member(name, graft.dedup.SemLedgerStore.applyFeedWindow(_, _, dir, embedOf, _),
@@ -98,8 +101,7 @@ object Cascade {
 
   /** The persisted IVF-PQ index as a set member
     * ([[graft.ann.IndexStore.upsertPqVectors]]' frozen-quantizer
-    * one-commit refresh) — round 14, joining the atomic set the
-    * standalone `followMergeTablePq` already served. */
+    * one-commit refresh). */
   def ivfPqFollower(name: String, dir: String,
       embedOf: Column): PipelineLedger.Store =
     member(name, graft.ann.IndexStore.applyPqFeedWindow(_, _, dir, embedOf, _),
@@ -107,16 +109,15 @@ object Cascade {
 
   /** The text dedup ledger as a set member
     * ([[graft.dedup.LedgerStore.upsertDocs]]' one-commit re-ingest;
-    * `textOf` = the document-text hook, as in
-    * [[graft.dedup.LedgerStore.followMergeTable]]). */
+    * `textOf` maps a feed row to its document text). */
   def ledgerFollower(name: String, dir: String,
       textOf: Column): PipelineLedger.Store =
     member(name, graft.dedup.LedgerStore.applyFeedWindow(_, _, dir, textOf, _),
       graft.dedup.LedgerStore.commitForBatch(_, dir, _))
 
-  /** The co-purchase graph as a set member — the empty-basket
-    * retirement rule (ADVICE r13) rides
-    * [[graft.warehouse.GraphStore.applyFeedWindow]] on both paths. */
+  /** The co-purchase graph as a set member (`itemsOf` maps a feed row
+    * to its basket's item array) — the empty-basket retirement rule
+    * (ADVICE r13) rides [[graft.warehouse.GraphStore.applyFeedWindow]]. */
   def graphFollower(name: String, dir: String,
       itemsOf: Column): PipelineLedger.Store =
     member(name, graft.warehouse.GraphStore.applyFeedWindow(_, _, dir, itemsOf, _),
@@ -130,15 +131,11 @@ object Cascade {
       setDir: String, checkpoint: String,
       stores: Seq[PipelineLedger.Store], sinceCommit: Long = -1L)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream.format("graft").option("path", mergeDir)
-      .option("table", "changes.merge")
-      .option("sinceCommit", sinceCommit.toString).load()
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (df: DataFrame, bid: Long) =>
+    Maintenance.foldStream(feed(spark, mergeDir, sinceCommit), checkpoint) {
+      (df, bid) =>
+        df.sparkSession.sparkContext.setJobDescription("cascade window")
         PipelineLedger.refreshAll(df.sparkSession, setDir,
           reduceLatest(df), bid, stores)
         ()
-      }
-      .start()
+    }
 }

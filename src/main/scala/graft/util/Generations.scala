@@ -9,10 +9,10 @@ import org.apache.spark.sql.SparkSession
   * see fully-old or fully-new — new-generation data dirs are invisible
   * until the flip, and superseded generations are deleted only after it
   * and beyond a retention window. This object owns the pointer and
-  * history I/O, the slice-window checks and the GC sweeps; the typed
-  * manifest on top of it — one codec, one format check, the batch
-  * ledger — is [[StoreManifest]], so neither half can drift between
-  * stores.
+  * history I/O, the slice-window readability check and the GC sweeps;
+  * the typed manifest on top of it — one codec, one format check, the
+  * batch ledger, the slice-window protocol — is [[StoreManifest]], so
+  * neither half can drift between stores.
   */
 object Generations {
 
@@ -107,37 +107,6 @@ object Generations {
     val p = new HPath(s"$dir/$HistoryDir/commit-$commitId.json")
     val hc = Hfs.conf(spark)
     if (Hfs.exists(p, hc)) Some(Hfs.readString(p, hc).trim) else None
-  }
-
-  /** CHANGE-FEED window resolution shared by the slice stores
-    * ([[graft.text.PostingsStore.changeDirs]],
-    * [[graft.warehouse.GraphStore.changeDirs]]): the slice data dirs of
-    * `sub` APPENDED by the commits in `(since, until]`, classified from
-    * the archived manifests alone — `window(c)` returns commit `c`'s
-    * `(sliceBase, slices)` (and `(0, 0)` for the virtual pre-genesis
-    * commit −1). A commit that advanced `sliceBase` is a COMPACT — a
-    * physical rewrite of rows that already flowed, contributing
-    * nothing; a commit that added no slices is a no-op ledger bump;
-    * everything else appended genuine change slices, and which sub a
-    * verb wrote is exactly which sub's dir exists at that id.
-    * Fail-closed: the whole change window must still be readable. */
-  def changeSliceDirs(spark: SparkSession, dir: String, sub: String,
-      allSubs: Seq[String], window: Long => (Long, Long),
-      since: Long, until: Long): (Seq[String], String) = {
-    require(since >= -1L && since <= until,
-      s"bad change window ($since, $until]")
-    if (since == until) return (Nil, s"$dir/$sub")
-    requireSlicesReadable(spark, dir, allSubs,
-      window(since)._2, window(until)._2,
-      s"change window ($since, $until]")
-    val hc = Hfs.conf(spark)
-    val dirs = ((since + 1L) to until).flatMap { c =>
-      val (prevBase, prevSlices) = window(c - 1)
-      val (base, slices) = window(c)
-      if (base > prevBase) Nil // compact: rewrite, not change
-      else (prevSlices until slices).map(s => s"$dir/$sub/slice=$s")
-    }.filter(p => Hfs.exists(new HPath(p), hc))
-    (dirs, s"$dir/$sub")
   }
 
   /** TIMESTAMP AS OF resolution: the latest committed snapshot whose

@@ -74,20 +74,36 @@ object Hfs {
     } finally in.close()
   }
 
-  /** Publish a small file atomically: write to a temp sibling, then a
-    * single overwrite-rename (`FileContext` supports overwriting renames
-    * portably, unlike `FileSystem.rename`). On a POSIX fs this is an
-    * atomic rename; the object-store translation is a single PUT of one
-    * small object — readers see either fully-old or fully-new, which is
-    * the entire point of a manifest-pointer commit. */
+  /** Publish a small file atomically: write to a temp sibling, then
+    * replace the target in one step — readers see either fully-old or
+    * fully-new, which is the entire point of a manifest-pointer commit.
+    *
+    * On the local FS (`file:`) the temp file is written without a
+    * checksum sidecar, any `.crc` of the target is removed, and one
+    * `rename(2)` replaces the target. Hadoop's overwrite-rename there
+    * deletes the target first and moves the `.crc` separately, so a
+    * racing reader could find no file, or new bytes under the old
+    * checksum. Other schemes use `FileContext`'s overwriting rename
+    * (portable, unlike `FileSystem.rename`); on an object store it is a
+    * single PUT of one small object. */
   def writeStringAtomic(p: Path, body: String, c: Configuration): Unit = {
     val f = fs(p, c)
     f.mkdirs(p.getParent)
     val tmp = new Path(p.getParent, s".${p.getName}.${java.util.UUID.randomUUID()}.tmp")
-    val out = f.create(tmp, true)
-    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    FileContext.getFileContext(p.toUri, c)
-      .rename(tmp, p, Options.Rename.OVERWRITE)
+    val bytes = body.getBytes(StandardCharsets.UTF_8)
+    if (f.getScheme == "file") {
+      import java.nio.file.{Files, Paths, StandardCopyOption}
+      val target = Paths.get(f.makeQualified(p).toUri)
+      val tmpFile = target.resolveSibling(tmp.getName)
+      Files.write(tmpFile, bytes)
+      Files.deleteIfExists(target.resolveSibling(s".${p.getName}.crc"))
+      Files.move(tmpFile, target, StandardCopyOption.ATOMIC_MOVE)
+    } else {
+      val out = f.create(tmp, true)
+      try out.write(bytes) finally out.close()
+      FileContext.getFileContext(p.toUri, c)
+        .rename(tmp, p, Options.Rename.OVERWRITE)
+    }
   }
 
   /** Create `p` with content, FAILING if it already exists — the

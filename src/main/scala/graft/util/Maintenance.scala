@@ -136,6 +136,24 @@ object Maintenance {
       }
     }
 
+  /** THE streaming fold loop — every continuous maintenance path (a
+    * store fold per micro-batch of arriving rows, a [[Cascade]] follower
+    * on a change feed, a [[PipelineLedger]] set refresh) is this one
+    * `foreachBatch` sink over a checkpointed source: `fold(batch,
+    * batchId)` per micro-batch. Exactly-once is the fold's half of the
+    * contract: the store verbs record `batchId` in their manifest's
+    * batch ledger, so a batch the stream replays after a crash between
+    * the fold's commit and the checkpoint's is a no-op, not a second
+    * insert (the Structured Streaming idempotent-sink contract). */
+  def foldStream(src: DataFrame, checkpoint: String)(
+      fold: (DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    src.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(fold)
+      .start()
+
   /** Normalize an UPSERT batch to ONE row per id (ADVICE r12): the
     * slice-ordered tombstone mask retires only slices OLDER than the
     * tombstone, so two same-id rows landing in one data slice would
@@ -146,7 +164,7 @@ object Maintenance {
     * an upsert verb has no ordering column to pick a winner by, and an
     * arbitrary pick would be nondeterministic across replays (callers
     * with a version column pre-reduce to latest-per-key, the
-    * followMergeTable pattern). Cost: one distinct + one bounded agg
+    * [[Cascade]] follower pattern). Cost: one distinct + one bounded agg
     * over the DELTA — small by the feed design. The distinct rows come
     * back as an eager local checkpoint — the duplicate check reads it,
     * and so does the caller, without recomputing the batch. */

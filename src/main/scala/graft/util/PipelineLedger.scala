@@ -47,6 +47,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * old pins fail loudly through the stores' own fail-closed `loadAt`
   * checks. Run store maintenance (compact/vacuum) BETWEEN batches and
   * re-pin with the next [[refreshAll]].
+  *
+  * Continuous maintenance runs [[refreshAll]] per micro-batch through
+  * [[Maintenance.foldStream]] (the change-feed driven set is
+  * [[Cascade.followMergeTableAll]]).
   */
 object PipelineLedger {
 
@@ -173,20 +177,4 @@ object PipelineLedger {
       Generations.readPointerAt(spark, dir, MetaName, commit).getOrElse(sys.error(
         s"$dir has no committed set snapshot $commit " +
           s"(available: ${commits(spark, dir).mkString(", ")})")))
-
-  /** Continuous cross-substrate maintenance: one [[refreshAll]] per
-    * micro-batch — every substrate follows the arriving corpus as ONE
-    * consistent set, exactly-once via the pipeline's batch ledger (and
-    * each store's beneath it). */
-  def refreshStream(src: DataFrame, dir: String, checkpoint: String,
-      stores: Seq[Store])
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    src.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (df: DataFrame, bid: Long) =>
-        refreshAll(df.sparkSession, dir, df, bid, stores)
-        ()
-      }
-      .start()
 }

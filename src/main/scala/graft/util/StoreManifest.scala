@@ -8,10 +8,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
-/** The MANIFEST KERNEL of the ledgered slice stores (postings, text and
-  * semantic dedup ledgers, graph, IVF and IVF-PQ): one typed pointer
-  * body per store, written and read through ONE codec so the exactly-
-  * once bookkeeping cannot drift between stores.
+/** The KERNEL of the ledgered slice stores (postings, text and semantic
+  * dedup ledgers, graph, IVF and IVF-PQ): one typed pointer body per
+  * store, written and read through ONE codec, and — for the five
+  * slice stores ([[SliceManifest]]) — one implementation of the
+  * protocol around the window, so the exactly-once bookkeeping cannot
+  * drift between stores.
   *
   * A store's manifest is its `Meta` case class rendered as flat JSON —
   * `{"field": value, ...}` with the fields in DECLARATION order, strings
@@ -22,9 +24,12 @@ import org.apache.spark.sql.types.StructType
   * another build apart from a corrupt one). On top of the codec the
   * kernel owns the current and archived reads, the archived commit
   * ([[Generations.commitArchived]]), the empty-batch ledger bump and the
-  * batch → fold-commit pin; [[Generations]] keeps the pointer I/O.
+  * batch → fold-commit pin; [[Generations]] keeps the pointer I/O. A
+  * store supplies its folds, its compaction's merged-slice writes and
+  * its read surfaces; the streaming loop that drives a fold is
+  * [[Maintenance.foldStream]].
   */
-final class StoreManifest[M <: StoreManifest.Entry](val name: String,
+class StoreManifest[M <: StoreManifest.Entry](val name: String,
     val format: String, what: String)(implicit tag: ClassTag[M]) {
 
   // a case class has one public constructor: its fields, in order
@@ -32,6 +37,12 @@ final class StoreManifest[M <: StoreManifest.Entry](val name: String,
 
   private def build(values: Seq[Any]): M =
     ctor.newInstance(values.map(_.asInstanceOf[AnyRef]): _*).asInstanceOf[M]
+
+  /** `m` with the fields `f` names replaced — the copy a generic
+    * maintenance commit needs without knowing the store's case class. */
+  protected def updated(m: M)(f: PartialFunction[String, Any]): M =
+    build(m.productElementNames.zip(m.productIterator)
+      .map { case (k, v) => f.applyOrElse(k, (_: String) => v) }.toSeq)
 
   def render(m: M): String =
     m.productElementNames.zip(m.productIterator).map {
@@ -88,12 +99,10 @@ final class StoreManifest[M <: StoreManifest.Entry](val name: String,
       batchId: Long): Unit =
     prev.foreach { m =>
       if (batchId >= 0 && batchId > m.batch)
-        commit(spark, dir, build(m.productElementNames.zip(m.productIterator)
-          .map {
-            case ("batch", _) => batchId
-            case ("commit", _) => m.commit + 1
-            case (_, v) => v
-          }.toSeq))
+        commit(spark, dir, updated(m) {
+          case "batch" => batchId
+          case "commit" => m.commit + 1
+        })
     }
 
   /** The committed snapshot id produced by LEDGERED batch `batchId` —
@@ -107,6 +116,112 @@ final class StoreManifest[M <: StoreManifest.Entry](val name: String,
     else Generations.foldCommitForBatch(spark, dir, name, batchId)
 }
 
+/** A SLICE store's manifest: the live window `[sliceBase, slices)` over
+  * its `tables` (each `<dir>/<base(m)><table>/slice=S`; `base` is empty
+  * except for IVF, whose tables live inside the generation, `gen=G/`).
+  * Every table list is spelled here, once per store, and the protocol
+  * around the window is this class's: the live and change-window slice
+  * dirs, the readability check, the vacuum and the compaction skeleton.
+  * The store's tombstone table is `purged`. */
+final class SliceManifest[M <: StoreManifest.Windowed](name: String,
+    format: String, what: String, val tables: Seq[String],
+    base: M => String = (_: M) => "")(implicit tag: ClassTag[M])
+    extends StoreManifest[M](name, format, what) {
+
+  private def subs(m: M): Seq[String] = tables.map(base(m) + _)
+
+  /** Fail loudly unless every slice of `m`'s window is still on disk
+    * ([[Generations.requireSlicesReadable]]) — the time-travel guard. */
+  def requireReadable(spark: SparkSession, dir: String, m: M,
+      snapshot: String): Unit =
+    Generations.requireSlicesReadable(spark, dir, subs(m), m.sliceBase,
+      m.slices, snapshot)
+
+  /** The live slice dirs of table `sub` at snapshot `commit` (None:
+    * current), plus the base path that keeps `slice` (and IVF's `cell`)
+    * a partition column — the catalog's snapshot surfaces. Explicit
+    * slice paths make the window a STATIC property of the table. Every
+    * live slice id was written by one verb, so a table holds a subset
+    * of the window's ids; the readability check spans all tables.
+    * Fail-closed; may return no dirs (a `purged` table before any
+    * purge). */
+  def liveDirs(spark: SparkSession, dir: String, sub: String,
+      commit: Option[Long]): (Seq[String], String) = {
+    val m = commit.fold(get(spark, dir))(at(spark, dir, _))
+    requireReadable(spark, dir, m, s"snapshot ${commit.getOrElse("current")}")
+    val root = s"$dir/${base(m)}$sub"
+    val hc = Hfs.conf(spark)
+    ((m.sliceBase until m.slices).map(s => s"$root/slice=$s")
+      .filter(p => Hfs.exists(new HPath(p), hc)), root)
+  }
+
+  /** CHANGE-FEED resolution: the slice dirs of `sub` APPENDED by the
+    * commits in `(since, until]`, classified from the archived manifests
+    * alone (no verb log). A commit that advanced `sliceBase` is a
+    * COMPACT — a physical rewrite of rows that already flowed, so it
+    * contributes nothing; a commit that added no slices is a no-op
+    * ledger bump; every other commit appended genuine change slices
+    * `[slices(c-1), slices(c))`, and which table a verb wrote is exactly
+    * which table's dir exists at that id. `since = -1` streams from
+    * genesis. Fail-closed: the whole change window must still be
+    * readable (vacuum retires it loudly, never silently). */
+  def changeDirs(spark: SparkSession, dir: String, sub: String,
+      since: Long, until: Long): (Seq[String], String) = {
+    require(since >= -1L && since <= until,
+      s"bad change window ($since, $until]")
+    val root = s"$dir/$sub"
+    if (since == until) return (Nil, root)
+    def window(c: Long): (Long, Long) =
+      if (c < 0L) (0L, 0L)
+      else { val m = at(spark, dir, c); (m.sliceBase, m.slices) }
+    Generations.requireSlicesReadable(spark, dir, tables, window(since)._2,
+      window(until)._2, s"change window ($since, $until]")
+    val hc = Hfs.conf(spark)
+    (((since + 1L) to until).flatMap { c =>
+      val (prevBase, prevSlices) = window(c - 1)
+      val (cBase, cSlices) = window(c)
+      if (cBase > prevBase) Nil
+      else (prevSlices until cSlices).map(s => s"$root/slice=$s")
+    }.filter(p => Hfs.exists(new HPath(p), hc)), root)
+  }
+
+  /** Deferred slice GC: delete the slice dirs strictly below the CURRENT
+    * `sliceBase` — non-live under the current and every later pointer
+    * ([[Generations.gcSlices]]). Run after a grace window once
+    * pre-compact readers have moved on. Returns dirs removed. */
+  def vacuum(spark: SparkSession, dir: String): Int =
+    read(spark, dir).map(m => Generations.gcSlices(spark, dir, subs(m),
+      m.sliceBase)).getOrElse(0)
+
+  /** OPTIMIZE: under the store's write lease (`lock`), merge the live
+    * window into ONE slice per table and advance `sliceBase` past the
+    * old slices in one atomic commit — every other field (stats, batch
+    * ledger, fold config) rides along unchanged, so replay safety and
+    * data identity are preserved. `write(m, merged)` writes the store's
+    * merged tables at slice `merged` from the tombstone-masked live
+    * view, so purged rows leave physically and the superseded
+    * tombstones fall out of the window with the old slices; the merged
+    * id's `purged` dir is claimed first (a crashed purge's orphan). A
+    * crash before the commit leaves an invisible orphan the next
+    * compact overwrites. Returns the merged slice id, or None when the
+    * window already holds ≤ 1 slice. */
+  def compact(spark: SparkSession, dir: String, lock: String)(
+      write: (M, Long) => Unit): Option[Long] =
+    Maintenance.withLeasedWriteLock(lock, spark, dir) {
+      read(spark, dir).filter(m => m.slices - m.sliceBase > 1).map { m =>
+        val merged = m.slices
+        Generations.claimSlice(spark, dir, Seq(s"${base(m)}purged"), merged)
+        write(m, merged)
+        commit(spark, dir, updated(m) {
+          case "sliceBase" => merged
+          case "slices" => merged + 1
+          case "commit" => m.commit + 1
+        })
+        merged
+      }
+    }
+}
+
 object StoreManifest {
 
   /** What every manifest carries: its format, the batch ledger and the
@@ -117,7 +232,8 @@ object StoreManifest {
     def commit: Long
   }
 
-  /** A slice store's manifest: the live window `[sliceBase, slices)`. */
+  /** A slice store's manifest: the live window `[sliceBase, slices)`
+    * ([[SliceManifest]]). */
   trait Windowed extends Entry {
     def sliceBase: Long
     def slices: Long

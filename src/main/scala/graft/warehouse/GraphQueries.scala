@@ -200,7 +200,7 @@ object GraphQueries {
     * CDC — every %10 order's basket SHRINKS to its two smallest
     * distinct parts (MODIFY), every %17 non-modified order is REMOVEd, every
     * %9 order's twin is INSERTed under a fresh +1e9 id — then
-    * [[GraphStore.followMergeTable]] maintains the co-purchase graph
+    * a [[graft.util.Cascade.graphFollower]] maintains the co-purchase graph
     * from the table's own feed: one [[GraphStore.upsertOrders]] commit
     * cancels the retired baskets' pairs (negative Δ slice) and lands
     * the refreshed ones. */
@@ -216,8 +216,8 @@ object GraphQueries {
       def envOf(df: org.apache.spark.sql.DataFrame, op: String, ver: Long) =
         df.select(lit(op).as("op"), col("ord").as("key"),
           lit(ver).as("ver"),
-          when(lit(op) === graft.cdc.Envelope.Remove, lit(null))
-            .otherwise(struct(col("ord"), col("items"))).as("after"))
+          (if (op == graft.cdc.Envelope.Remove) lit(null)
+           else struct(col("ord"), col("items"))).as("after"))
       val seed = basketsOf(li)
       // TOTAL refresh transform (l_linenumber is uniform-random per
       // line in this corpus, so a linenumber cut would silently skip
@@ -255,8 +255,9 @@ object GraphQueries {
       GraphStore.maintainBatch(
         li.select(col("l_orderkey"), col("l_partkey")).distinct(),
         col("l_orderkey"), col("l_partkey"), dir)
-      val q = GraphStore.followMergeTable(s, tableDir, dir, s"$base/fck",
-        itemsOf = col("items"), sinceCommit = 1L)
+      val q = graft.util.Cascade.follow(s, tableDir, s"$base/fck",
+        graft.util.Cascade.graphFollower("graph", dir, col("items")),
+        sinceCommit = 1L)
       q.processAllAvailable(); q.stop()
       dir
     }
@@ -742,7 +743,7 @@ object GraphQueries {
 
     // -- round 12: the graph substrate's CHANGE DATA FEED
     //    ([[graft.sources.ChangeFeedTable]] over
-    //    [[GraphStore.changeDirs]]) — a DIFFERENTIAL stream: the
+    //    [[graft.util.SliceManifest.changeDirs]]) — a DIFFERENTIAL stream: the
     //    delta-store's slices carry signed Δ-counts, so the feed since
     //    the seed commit, SUMMED, is exactly the edge-weight change
     //    the delta lines caused (base⋈Δ ∪ C(Δ,2)); the compact commit

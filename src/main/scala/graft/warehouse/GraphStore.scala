@@ -3,7 +3,7 @@ package graft.warehouse
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.util.{Generations, StoreManifest}
+import graft.util.{Generations, SliceManifest, StoreManifest}
 import graft.util.StoreManifest.{maskOlder, tombstones, window}
 
 /** Persisted GRAPH SUBSTRATE with incremental maintenance — the disk
@@ -57,8 +57,8 @@ object GraphStore {
       sliceBase: Long, slices: Long, commit: Long)
       extends StoreManifest.Windowed
 
-  private[graft] val Manifest =
-    new StoreManifest[Meta]("_graft_graph_meta.json", Format, "graph")
+  private[graft] val Manifest = new SliceManifest[Meta](
+    "_graft_graph_meta.json", Format, "graph", Seq("items", "pairs", "purged"))
 
   /** Basket-hash partition key: pure function of the basket id. */
   private def opOf(ord: Column, prefixes: Int): Column =
@@ -150,24 +150,6 @@ object GraphStore {
     }
   }
 
-  /** Continuous substrate maintenance: one fold per micro-batch,
-    * exactly-once via the manifest's batch-id ledger. `prefixes` must
-    * match the store's seeded fan (forwarded to every fold — round-10
-    * ADVICE: the hard-coded default killed streams over stores seeded
-    * with any other fan). */
-  def maintainStream(lines: DataFrame, ord: Column, item: Column,
-      dir: String, checkpoint: String, prefixes: Int = 64)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    lines.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (df: DataFrame, bid: Long) =>
-        maintainBatch(df, ord, item, dir, batchId = bid,
-          prefixes = prefixes)
-        ()
-      }
-      .start()
-
   /** Load the current state: (live items, MERGED pair counts (u, v,
     * n_ab) — the Δ-slices aggregated; the read-side merge is the
     * delta-store trade [[compact]] amortizes). Readers apply their
@@ -194,9 +176,7 @@ object GraphStore {
   def loadAt(spark: SparkSession, dir: String,
       commit: Long): (DataFrame, DataFrame, Meta) = {
     val m = metaAt(spark, dir, commit)
-    Generations.requireSlicesReadable(spark, dir,
-      Seq("items", "pairs", "purged"), m.sliceBase, m.slices,
-      s"snapshot $commit")
+    Manifest.requireReadable(spark, dir, m, s"snapshot $commit")
     (liveItems(spark, dir, m), livePairs(spark, dir, m), m)
   }
 
@@ -206,32 +186,21 @@ object GraphStore {
     * advance; ledger unchanged; superseded slices stay until
     * [[vacuumSlices]]. */
   def compact(spark: SparkSession, dir: String): Option[Long] =
-    graft.util.Maintenance.withLeasedWriteLock("GraphStore", spark, dir) {
-    Manifest.read(spark, dir) match {
-      case Some(m) if m.slices - m.sliceBase > 1 =>
-        val merged = m.slices
-        Generations.claimSlice(spark, dir, Seq("purged"), merged)
-        window(spark, s"$dir/pairs", m)
-          .groupBy(col("u"), col("v")).agg(sum(col("dn")).as("dn"))
-          .filter(col("dn") =!= 0L)
-          .write.mode("overwrite").parquet(s"$dir/pairs/slice=$merged")
-        liveItems(spark, dir, m)
-          .withColumn("op", opOf(col("ord"), m.prefixes))
-          .write.mode("overwrite").partitionBy("op")
-          .parquet(s"$dir/items/slice=$merged")
-        Manifest.commit(spark, dir, m.copy(sliceBase = merged,
-          slices = merged + 1, commit = m.commit + 1))
-        Some(merged)
-      case _ => None
-    }
+    Manifest.compact(spark, dir, "GraphStore") { (m, merged) =>
+      window(spark, s"$dir/pairs", m)
+        .groupBy(col("u"), col("v")).agg(sum(col("dn")).as("dn"))
+        .filter(col("dn") =!= 0L)
+        .write.mode("overwrite").parquet(s"$dir/pairs/slice=$merged")
+      liveItems(spark, dir, m)
+        .withColumn("op", opOf(col("ord"), m.prefixes))
+        .write.mode("overwrite").partitionBy("op")
+        .parquet(s"$dir/items/slice=$merged")
     }
 
-  /** Deferred slice GC below the current window base. */
+  /** Deferred slice GC below the current window base
+    * ([[SliceManifest.vacuum]]). */
   def vacuumSlices(spark: SparkSession, dir: String): Int =
-    Manifest.read(spark, dir).map { m =>
-      Generations.gcSlices(spark, dir, Seq("items", "pairs", "purged"),
-        m.sliceBase)
-    }.getOrElse(0)
+    Manifest.vacuum(spark, dir)
 
   /** DECREMENTAL substrate maintenance — remove whole BASKETS (the
     * user-data purge unit: every pair lives within one basket, so a
@@ -346,30 +315,17 @@ object GraphStore {
     }
   }
 
-  /** The warehouse→GRAPH cascade: maintain this store FROM a merge
-    * table's `changes.merge` feed (the
-    * [[graft.text.PostingsStore.followMergeTable]] family, via the
-    * shared [[graft.util.Cascade.followInto]] harness) — warehouse
-    * order updates refresh their baskets atomically
-    * ([[upsertOrders]]), REMOVEs and `purgeKeys` compliance deletions
-    * cancel their pairs, exactly-once end-to-end. `itemsOf` maps a
-    * feed row to its item ARRAY (the order's basket). A MODIFY whose
-    * basket is EMPTY or NULL explodes to zero lines, so its ord would
-    * reach [[upsertOrders]] in neither upserts nor removeOrds and its
-    * old pairs would silently stay live (ADVICE r13) — the verb's
-    * contract is "sets the id's current state", so empty-basket keys
-    * are routed into removeOrds and retired in the same commit. */
-  def followMergeTable(spark: SparkSession, mergeDir: String, dir: String,
-      checkpoint: String, itemsOf: Column, sinceCommit: Long = -1L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    graft.util.Cascade.followInto(spark, mergeDir, checkpoint, sinceCommit,
-      (ups, rem, bid) => applyFeedWindow(ups, rem, dir, itemsOf, bid))
-
-  /** ONE feed window into [[upsertOrders]] — shared by
-    * [[followMergeTable]] and the set-cascade follower
-    * ([[graft.util.Cascade.graphFollower]]), so the empty-basket rule
-    * above cannot drift between the two paths (the round-13 followInto
-    * lesson, one level down). */
+  /** The warehouse→GRAPH cascade step: ONE reduced `changes.merge`
+    * window into [[upsertOrders]] ([[graft.util.Cascade.graphFollower]])
+    * — order updates refresh their baskets atomically, REMOVEs and
+    * `purgeKeys` compliance deletions cancel their pairs, exactly-once
+    * via the batch ledger. `itemsOf` maps a feed row to its item ARRAY
+    * (the order's basket). A MODIFY whose basket is EMPTY or NULL
+    * explodes to zero lines, so its ord would reach [[upsertOrders]] in
+    * neither upserts nor removeOrds and its old pairs would silently
+    * stay live (ADVICE r13) — the verb's contract is "sets the id's
+    * current state", so empty-basket keys are routed into removeOrds and
+    * retired in the same commit. */
   private[graft] def applyFeedWindow(ups: DataFrame, rem: DataFrame,
       dir: String, itemsOf: Column, batchId: Long): Unit = {
     val keyed = ups.select(col("_key").as("ord"), itemsOf.as("items"))
@@ -381,28 +337,6 @@ object GraphStore {
       col("ord"), col("item"),
       rem.toDF("ord").unionByName(emptied), dir, batchId = batchId)
     ()
-  }
-
-  /** CHANGE-FEED resolution (round 12 — the
-    * [[graft.text.PostingsStore.changeDirs]] analog on the graph
-    * substrate, consumed through `format("graft")` as
-    * `changes.graph.{pairs,items,purged}`): the slice dirs commits
-    * `(since, until]` appended. The delta-store layout makes the
-    * `pairs` feed DIFFERENTIAL in the differential-dataflow sense — a
-    * fold's slice carries positive Δ-counts, a purge's slice carries
-    * the NEGATIVE Δ-counts that cancel the purged baskets, so a
-    * downstream consumer maintains exact edge weights by summing `dn`
-    * over the feed; a compact (physical pre-aggregation of already-
-    * flowed rows) contributes nothing. */
-  def changeDirs(spark: SparkSession, dir: String, sub: String,
-      since: Long, until: Long): (Seq[String], String) = {
-    require(Set("items", "pairs", "purged")(sub),
-      s"unknown graph-store table '$sub'")
-    Generations.changeSliceDirs(spark, dir, sub,
-      Seq("items", "pairs", "purged"),
-      c => if (c < 0L) (0L, 0L) else {
-        val m = metaAt(spark, dir, c); (m.sliceBase, m.slices)
-      }, since, until)
   }
 
   /** The committed snapshot id produced by LEDGERED batch `batchId`

@@ -66,8 +66,9 @@ class CascadeSpec extends AnyFunSuite {
     SemLedgerStore.maintainBatch(slice(0, 30), col("vec_id"),
       col("embedding"), dir)
     def cascade(): Unit = {
-      val q = SemLedgerStore.followMergeTable(spark, mergeDir, dir, ck,
-        embedOf = col("embedding"), sinceCommit = 1L)
+      val q = graft.util.Cascade.follow(spark, mergeDir, ck,
+        graft.util.Cascade.semFollower("sem", dir, col("embedding")),
+        sinceCommit = 1L)
       q.processAllAvailable(); q.stop()
     }
     cascade() // nothing past the hydration commit: a ledgered no-op
@@ -115,8 +116,9 @@ class CascadeSpec extends AnyFunSuite {
     SemLedgerStore.maintainBatch(slice(0, 30), col("vec_id"),
       col("embedding"), dir)
     def cascade(): Unit = {
-      val q = SemLedgerStore.followMergeTable(spark, mergeDir, dir, ck,
-        embedOf = col("embedding"), sinceCommit = 1L)
+      val q = graft.util.Cascade.follow(spark, mergeDir, ck,
+        graft.util.Cascade.semFollower("sem", dir, col("embedding")),
+        sinceCommit = 1L)
       q.processAllAvailable(); q.stop()
     }
     spark.conf.set("spark.sql.catalog.graft_csc",
@@ -167,8 +169,9 @@ class CascadeSpec extends AnyFunSuite {
       col("embedding"), nCentroids = 4, iterations = 1,
       materialize = true), dir)
     def cascade(): Unit = {
-      val q = IndexStore.followMergeTable(spark, mergeDir, dir, ck,
-        embedOf = col("embedding"), sinceCommit = 1L)
+      val q = graft.util.Cascade.follow(spark, mergeDir, ck,
+        graft.util.Cascade.ivfFollower("index", dir, col("embedding")),
+        sinceCommit = 1L)
       q.processAllAvailable(); q.stop()
     }
     cascade()
@@ -216,8 +219,9 @@ class CascadeSpec extends AnyFunSuite {
       sideTables = Seq("vecs" -> slice(0, 100)
         .select(col("vec_id").as("vid"), col("embedding").as("v"))))
     def cascade(): Unit = {
-      val q = IndexStore.followMergeTablePq(spark, mergeDir, dir, ck,
-        embedOf = col("embedding"), sinceCommit = 1L)
+      val q = graft.util.Cascade.follow(spark, mergeDir, ck,
+        graft.util.Cascade.ivfPqFollower("pq", dir, col("embedding")),
+        sinceCommit = 1L)
       q.processAllAvailable(); q.stop()
     }
     cascade()
@@ -278,8 +282,9 @@ class CascadeSpec extends AnyFunSuite {
         (3L, 40L), (3L, 50L)).toDF("ord", "item"),
       col("ord"), col("item"), dir)
     def cascade(): Unit = {
-      val q = GraphStore.followMergeTable(spark, mergeDir, dir, ck,
-        itemsOf = col("items"), sinceCommit = 1L)
+      val q = graft.util.Cascade.follow(spark, mergeDir, ck,
+        graft.util.Cascade.graphFollower("graph", dir, col("items")),
+        sinceCommit = 1L)
       q.processAllAvailable(); q.stop()
     }
     def edges(): Map[(Long, Long), Long] =

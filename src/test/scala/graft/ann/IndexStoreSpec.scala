@@ -338,9 +338,10 @@ class IndexStoreSpec extends AnyFunSuite {
     val rows = embs.select(col("vec_id"), col("embedding"))
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
     val ms = MemoryStream[(Long, Seq[Float])]
-    val q = IndexStore.ivfMaintainStream(
-      ms.toDF().toDF("vec_id", "embedding"), col("vec_id"), col("embedding"),
-      dir, ckpt, nCentroids = 4)
+    val q = graft.util.Maintenance.foldStream(
+      ms.toDF().toDF("vec_id", "embedding"), ckpt)((df, bid) =>
+      IndexStore.ivfMaintainBatch(df, col("vec_id"), col("embedding"), dir,
+        nCentroids = 4, batchId = bid))
     try {
       ms.addData(rows.take(20).toSeq: _*)
       q.processAllAvailable()

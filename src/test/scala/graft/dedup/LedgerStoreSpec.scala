@@ -374,9 +374,10 @@ class LedgerStoreSpec extends AnyFunSuite {
     val rows = docs.collect().map(r => (r.getLong(0), r.getString(1)))
       .sortBy(_._1)
     val ms = MemoryStream[(Long, String)]
-    val q = LedgerStore.maintainStream(
-      ms.toDF().toDF("doc_id", "text"), col("doc_id"), col("text"),
-      dir, ckpt)
+    val q = graft.util.Maintenance.foldStream(
+      ms.toDF().toDF("doc_id", "text"), ckpt)((df, bid) =>
+      LedgerStore.maintainBatch(df, col("doc_id"), col("text"), dir,
+        batchId = bid))
     try {
       ms.addData(rows.take(250).toSeq: _*)
       q.processAllAvailable()

@@ -464,8 +464,9 @@ class ChangeFeedSpec extends AnyFunSuite {
     // 1..3 in a single micro-batch window — commit-first ordering must
     // land k1 at "a" (the restore's older-versioned image), k3 absent
     val store = Files.createTempDirectory("cfrpost").toString
-    val fq = PostingsStore.followMergeTable(spark, dir, store,
-      Files.createTempDirectory("cfrfck").toString, textOf = col("ticker"))
+    val fq = graft.util.Cascade.follow(spark, dir,
+      Files.createTempDirectory("cfrfck").toString,
+      graft.util.Cascade.postingsFollower("postings", store, col("ticker")))
     fq.processAllAvailable(); fq.stop()
     val m = PostingsStore.meta(spark, store).get
     assert(m.nDocs == 2L, "the followed index must hold k1 and k2 only")

@@ -372,4 +372,71 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(chain(eT).exists(_.contains("fully emptied")),
       chain(eT).mkString(" <- "))
   }
+
+  test("every store kind: SHOW TABLES lists its exact surfaces, and " +
+      "compact/vacuum after two folds return the kind's result rows") {
+    catalogReady
+    def tmp(p: String) = Files.createTempDirectory(p).toString
+    def docRange(lo: Long, hi: Long) =
+      docs.filter(col("doc_id") > lo && col("doc_id") <= hi)
+    def vecRange(lo: Long, hi: Long) = graft.util.Tables.embeddings(spark, sf)
+      .filter(col("vec_id") > lo && col("vec_id") <= hi)
+    val lines = graft.util.Tables.lineitem(spark, sf)
+      .select(col("l_orderkey").as("ord"), col("l_partkey").as("item"))
+    val merge = tmp("kindmerge") + "/t"
+    spark.sql(s"CREATE TABLE graft_test.`$merge`.merge " +
+      "(id BIGINT, v STRING, _version BIGINT) TBLPROPERTIES (key_col 'id')")
+    spark.sql(s"INSERT INTO graft_test.`$merge`.merge VALUES (1, 'a', 1)")
+    spark.sql(s"INSERT INTO graft_test.`$merge`.merge VALUES (2, 'b', 1)")
+    val ledger = tmp("kindledger")
+    val sem = tmp("kindsem")
+    val postings = tmp("kindpostings")
+    val graph = tmp("kindgraph")
+    val ivf = tmp("kindivf")
+    for (b <- 0L to 1L) {
+      val (lo, hi) = if (b == 0L) (0L, 200L) else (200L, 300L)
+      graft.dedup.LedgerStore.maintainBatch(docRange(lo, hi), col("doc_id"),
+        col("text"), ledger, batchId = b)
+      graft.dedup.SemLedgerStore.maintainBatch(vecRange(lo, hi),
+        col("vec_id"), col("embedding"), sem, batchId = b)
+      PostingsStore.maintainBatch(docRange(lo, hi), col("doc_id"),
+        col("text"), postings, batchId = b)
+      graft.warehouse.GraphStore.maintainBatch(
+        lines.filter(col("ord") % 2 === b), col("ord"), col("item"), graph,
+        batchId = b)
+      // 100 more vectors on a 200-vector seed stay below the doubling
+      // re-train: the second fold appends slice 1 to generation 0
+      graft.ann.IndexStore.ivfMaintainBatch(vecRange(lo, hi),
+        col("vec_id"), col("embedding"), ivf, nCentroids = 4, batchId = b)
+    }
+    def shown(dir: String): Set[String] =
+      spark.sql(s"SHOW TABLES IN graft_test.`$dir`")
+        .select(col("tableName")).collect().map(_.getString(0)).toSet
+    def call(verb: String, dir: String): Seq[(String, String)] =
+      spark.sql(s"CALL graft_test.system.$verb(store => '$dir')").collect()
+        .map(r => (r.getString(0), r.getString(1))).toSeq
+    def feeds(k: String, ts: String*) = ts.map(t => s"changes.$k.$t")
+    val expected = Seq(
+      (merge, "merge", Set("merge", "changes.merge"),
+        "live buckets rewritten", "unreferenced generations removed"),
+      (ledger, "ledger",
+        Set("ledger.labels") ++ feeds("ledger", "sigs", "postings", "purged"),
+        "window merged into slice 2", "4 slice dirs removed"),
+      (sem, "sem", Set("sem.labels") ++ feeds("sem", "vecs", "pairs", "purged"),
+        "window merged into slice 2", "4 slice dirs removed"),
+      (postings, "postings",
+        Set("postings.postings", "postings.doclen", "postings.purged") ++
+          feeds("postings", "postings", "doclen", "purged"),
+        "window merged into slice 2", "4 slice dirs removed"),
+      (graph, "graph", feeds("graph", "items", "pairs", "purged").toSet,
+        "window merged into slice 2", "4 slice dirs removed"),
+      // IVF folds write no tombstone slice: 2 assigned dirs retire
+      (ivf, "ivf", Set("ivf.assigned", "ivf.purged"),
+        "window merged into slice 2", "2 slice dirs removed"))
+    expected.foreach { case (dir, kind, tables, compacted, vacuumed) =>
+      assert(shown(dir) == tables, kind)
+      assert(call("compact", dir) == Seq((kind, compacted)), kind)
+      assert(call("vacuum", dir) == Seq((kind, vacuumed)), kind)
+    }
+  }
 }

@@ -117,8 +117,8 @@ class PostingsUpsertSpec extends AnyFunSuite {
       q.processAllAvailable(); q.stop()
     }
     def cascade(): Unit = {
-      val q = PostingsStore.followMergeTable(spark, mergeDir, idxDir,
-        ck, textOf = col("body"))
+      val q = graft.util.Cascade.follow(spark, mergeDir, ck,
+        graft.util.Cascade.postingsFollower("postings", idxDir, col("body")))
       q.processAllAvailable(); q.stop()
     }
 

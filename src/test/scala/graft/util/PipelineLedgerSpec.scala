@@ -144,8 +144,9 @@ class PipelineLedgerSpec extends AnyFunSuite {
     val rows = docs.collect().map(r => (r.getLong(0), r.getString(1)))
       .sortBy(_._1)
     val ms = MemoryStream[(Long, String)]
-    val q = PipelineLedger.refreshStream(
-      ms.toDF().toDF("doc_id", "text"), dir, ckpt, ss)
+    val q = Maintenance.foldStream(ms.toDF().toDF("doc_id", "text"), ckpt)(
+      (df, bid) =>
+        PipelineLedger.refreshAll(df.sparkSession, dir, df, bid, ss))
     try {
       ms.addData(rows.take(200).toSeq: _*)
       q.processAllAvailable()

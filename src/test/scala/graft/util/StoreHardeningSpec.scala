@@ -157,8 +157,10 @@ class StoreHardeningSpec extends AnyFunSuite {
     GraphStore.maintainBatch(Seq((1L, 10L), (1L, 11L)).toDF("ord", "item"),
       col("ord"), col("item"), dir, batchId = -1L, prefixes = 8)
     val ms = MemoryStream[(Long, Long)]
-    val q = GraphStore.maintainStream(ms.toDF().toDF("ord", "item"),
-      col("ord"), col("item"), dir, ckpt, prefixes = 8)
+    val q = Maintenance.foldStream(ms.toDF().toDF("ord", "item"), ckpt)(
+      (df, bid) =>
+        GraphStore.maintainBatch(df, col("ord"), col("item"), dir,
+          batchId = bid, prefixes = 8))
     try {
       ms.addData((2L, 10L), (2L, 11L))
       q.processAllAvailable()

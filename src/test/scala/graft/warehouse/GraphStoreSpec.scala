@@ -203,9 +203,10 @@ class GraphStoreSpec extends AnyFunSuite {
     val rows = lines.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val ms = MemoryStream[(Long, Long, Long)]
-    val q = GraphStore.maintainStream(
-      ms.toDF().toDF("ord", "item", "ln"), col("ord"), col("item"),
-      dir, ckpt)
+    val q = graft.util.Maintenance.foldStream(
+      ms.toDF().toDF("ord", "item", "ln"), ckpt)((df, bid) =>
+      GraphStore.maintainBatch(df, col("ord"), col("item"), dir,
+        batchId = bid))
     try {
       ms.addData(rows.filter(_._3 <= 2).toSeq: _*)
       q.processAllAvailable()
