@@ -172,11 +172,7 @@ object IndexStore {
   def loadIvfAt(spark: SparkSession, dir: String,
       commit: Long): (Similarity.IvfIndex, Meta) = {
     val m = metaAt(spark, dir, commit)
-    require(graft.util.Hfs.exists(
-        new org.apache.hadoop.fs.Path(s"$dir/gen=${m.gen}"),
-        graft.util.Hfs.conf(spark)),
-      s"snapshot $commit of $dir is no longer readable: gen=${m.gen} " +
-        "was dropped by generation retention (raise retainGens to keep it)")
+    Generations.requireGen(spark, dir, m.gen, "", s"snapshot $commit")
     Manifest.requireReadable(spark, dir, m, s"snapshot $commit")
     loadIvfOn(spark, dir, m)
   }
@@ -524,11 +520,7 @@ object IndexStore {
   def loadIvfPqAt(spark: SparkSession, dir: String,
       commit: Long): (Similarity.IvfPqIndex, PqMeta) = {
     val m = pqMetaAt(spark, dir, commit)
-    require(graft.util.Hfs.exists(
-        new org.apache.hadoop.fs.Path(s"$dir/gen=${m.gen}"),
-        graft.util.Hfs.conf(spark)),
-      s"snapshot $commit of $dir is no longer readable: gen=${m.gen} " +
-        "was dropped by generation retention (raise retainGens to keep it)")
+    Generations.requireGen(spark, dir, m.gen, "", s"snapshot $commit")
     loadIvfPqOn(spark, dir, m)
   }
 

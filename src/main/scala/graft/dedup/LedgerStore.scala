@@ -416,11 +416,8 @@ object LedgerStore {
       commit: Long): (DataFrame, DataFrame, Meta) = {
     val m = metaAt(spark, dir, commit)
     Manifest.requireReadable(spark, dir, m, s"snapshot $commit")
-    val labelsDir = s"$dir/gen=${m.gen}/labels"
-    require(graft.util.Hfs.exists(
-        new org.apache.hadoop.fs.Path(labelsDir), graft.util.Hfs.conf(spark)),
-      s"snapshot $commit of $dir is no longer readable: gen=${m.gen} " +
-        "was dropped by generation retention (raise retainGens to keep it)")
+    val labelsDir =
+      Generations.requireGen(spark, dir, m.gen, "/labels", s"snapshot $commit")
     (spark.read.parquet(labelsDir), liveSigs(spark, dir, m), m)
   }
 
@@ -537,11 +534,7 @@ object LedgerStore {
   def labelsDir(spark: SparkSession, dir: String,
       commit: Option[Long]): String = {
     val m = commit.fold(Manifest.get(spark, dir))(Manifest.at(spark, dir, _))
-    val p = s"$dir/gen=${m.gen}/labels"
-    require(graft.util.Hfs.exists(new org.apache.hadoop.fs.Path(p),
-        graft.util.Hfs.conf(spark)),
-      s"snapshot ${commit.getOrElse("current")} of $dir is no longer " +
-        s"readable: $p was dropped by generation retention")
-    p
+    Generations.requireGen(spark, dir, m.gen, "/labels",
+      s"snapshot ${commit.getOrElse("current")}")
   }
 }

@@ -141,12 +141,8 @@ object SemLedgerStore {
   def labelsDir(spark: SparkSession, dir: String,
       commit: Option[Long]): String = {
     val m = commit.fold(Manifest.get(spark, dir))(Manifest.at(spark, dir, _))
-    val p = s"$dir/gen=${m.gen}/labels"
-    require(graft.util.Hfs.exists(new org.apache.hadoop.fs.Path(p),
-        graft.util.Hfs.conf(spark)),
-      s"snapshot ${commit.getOrElse("current")} of $dir is no longer " +
-        s"readable: gen=${m.gen} was dropped by generation retention")
-    p
+    Generations.requireGen(spark, dir, m.gen, "/labels",
+      s"snapshot ${commit.getOrElse("current")}")
   }
 
   /** Committed snapshot ids available for [[loadAt]], ascending. */
@@ -164,11 +160,8 @@ object SemLedgerStore {
       : (DataFrame, DataFrame, DataFrame, Meta) = {
     val m = metaAt(spark, dir, commit)
     Manifest.requireReadable(spark, dir, m, s"snapshot $commit")
-    val labelsDir = s"$dir/gen=${m.gen}/labels"
-    require(graft.util.Hfs.exists(
-        new org.apache.hadoop.fs.Path(labelsDir), graft.util.Hfs.conf(spark)),
-      s"snapshot $commit of $dir is no longer readable: gen=${m.gen} " +
-        "was dropped by generation retention (raise retainGens to keep it)")
+    val labelsDir =
+      Generations.requireGen(spark, dir, m.gen, "/labels", s"snapshot $commit")
     (liveVecs(spark, dir, m), livePairs(spark, dir, m),
       spark.read.parquet(labelsDir), m)
   }

@@ -46,11 +46,14 @@ import graft.cdc.{Apply, Envelope}
   *     cluster-visible; row data NEVER moves through the driver.
   *  3. The driver commit ([[Apply.rowLevelCommit]]) reads ONLY the
   *     files named by committed task messages (zombie/speculative
-  *     attempts are ignored), enforces the STALE-VERSION GATE, and
-  *     folds ONE merge commit through [[Apply.mergeBatch]] — lease,
-  *     versioned fold, change slice, pointer archive, all identical to
-  *     a streamed micro-batch. A `changes.merge` cascade sees a SQL
-  *     UPDATE exactly like any other commit.
+  *     attempts are ignored), with the schema the writers staged them
+  *     with, and folds ONE merge commit through [[Apply.mergeBatch]] —
+  *     lease, versioned fold, change slice, pointer archive, all
+  *     identical to a streamed micro-batch — with the fold's
+  *     STALE-VERSION GATE on: the fold's own per-key window compares
+  *     each envelope with the stored version and aborts the statement
+  *     before any write. A `changes.merge` cascade sees a SQL UPDATE
+  *     exactly like any other commit.
   *
   * THE VERSION CONTRACT (documented SQL surface, spec-pinned by
   * `GraftRowLevelSpec`): `_version` is user-visible state — the fold's
@@ -162,7 +165,8 @@ private final class GraftDeltaWrite(spark: SparkSession, dir: String,
       val files = messages.toSeq.collect {
         case m: GraftDeltaMessage => m.files
       }.flatten
-      Apply.rowLevelCommit(SparkSession.active, dir, stage, files, command)
+      Apply.rowLevelCommit(SparkSession.active, dir, stage, files,
+        envSchema, command)
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -351,7 +355,7 @@ private final class GraftStreamingWrite(spark: SparkSession, dir: String,
       case m: GraftDeltaMessage => m.files
     }.flatten
     Apply.rowLevelCommit(SparkSession.active, dir, stageFor(epochId),
-      files, s"streaming epoch $epochId", staleGate = false)
+      files, envSchema, s"streaming epoch $epochId", staleGate = false)
   }
 
   override def abort(epochId: Long,

@@ -232,6 +232,19 @@ object Generations {
         "vacuumed (delay vacuumSlices to retain history)")
   }
 
+  /** A snapshot's generation data dir `<dir>/gen=<gen><sub>`, failing
+    * loudly once generation retention ([[gc]]) dropped it — the one
+    * fail-closed generation check of the generational stores' time
+    * travel. */
+  def requireGen(spark: SparkSession, dir: String, gen: Long, sub: String,
+      what: String): String = {
+    val p = s"$dir/gen=$gen$sub"
+    require(Hfs.exists(new HPath(p), Hfs.conf(spark)),
+      s"$what of $dir is no longer readable: gen=$gen was dropped by " +
+        "generation retention (raise retainGens to keep it)")
+    p
+  }
+
   /** Deferred GC: drop `gen=` dirs strictly below `cutoffGen` — callers
     * compute the cutoff from their retention window AFTER the flip, so
     * removed generations are non-live under both old and new pointers. */

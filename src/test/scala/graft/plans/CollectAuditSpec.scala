@@ -31,11 +31,11 @@ class CollectAuditSpec extends AnyFunSuite {
       "cell ids of the probe set + manifest/ledger scalars"),
     "ann/Similarity.scala" -> (6,
       "sampled centroid seeds, query top-k, quant range scalars"),
-    "cdc/Apply.scala" -> (7,
-      "touched-bucket ints (≤ nBuckets), stale-gate 4-row samples " +
-        "(row-level AND overwrite — both limit-4), REPLACE WHERE " +
-        "region-escape probe (limit-1), fold-axis null probe " +
-        "(limit-1), restore diff metadata"),
+    "cdc/Apply.scala" -> (4,
+      "the fold's 1-row probe (touched-bucket set ≤ nBuckets ints + " +
+        "two null-axis flags), the fold's stale-gate sample (limit-4), " +
+        "REPLACE WHERE region-escape probe (limit-1), restore diff " +
+        "metadata"),
     "cdc/CdcQueries.scala" -> (1,
       "q284's deleted-key list (distinct user_id % 7 — bounded keys)"),
     "dedup/Dedup.scala" -> (1, "hot-bucket cap ids (capped list)"),

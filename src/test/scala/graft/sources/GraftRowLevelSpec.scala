@@ -477,4 +477,110 @@ class GraftRowLevelSpec extends AnyFunSuite {
           "lease fence), got: " + chain(t).mkString(" <- "))
     }
   }
+
+  test("a MERGE ON a non-key column whose NOT MATCHED insert re-offers " +
+      "a stored key at a non-advancing version is rejected — nothing " +
+      "committed") {
+    catalogReady
+    val dir = seed() // ids 1..6 at version 10
+    import spark.implicits._
+    // no ticker matches, so both rows take the insert branch — onto
+    // stored keys 3 (at the stored version) and 4 (below it). The
+    // MATCHED clause keeps the statement on the row-level face (an
+    // insert-only MERGE plans as a plain append, the INSERT fold).
+    Seq((3L, "zzz", 33.0, 10L), (4L, "yyy", 44.0, 9L))
+      .toDF("id", "ticker", "price", "v")
+      .createOrReplaceTempView("graft_rl_src_nk")
+    val e = intercept[Exception](spark.sql(
+      s"""MERGE INTO graft_rl.`$dir`.merge AS t
+         |USING graft_rl_src_nk AS s ON t.ticker = s.ticker
+         |WHEN MATCHED THEN UPDATE SET price = s.price,
+         |  _version = t._version + 1
+         |WHEN NOT MATCHED THEN INSERT (id, ticker, price, _version)
+         |  VALUES (s.id, s.ticker, s.price, s.v)""".stripMargin))
+    assert(chain(e).exists(m => m.contains("stale") &&
+      m.contains("MERGE")), chain(e).mkString(" <- "))
+    assert(Apply.currentCommit(spark, dir) == 1L,
+      "a rejected MERGE must not commit")
+    assert(state(dir) == (1L to 6L).map(i =>
+      i -> ((s"t$i", i.toDouble, 10L))).toMap, "nothing applied")
+  }
+
+  test("a predicate DELETE at the scanned version commits: a REMOVE at " +
+      "the stored version is not stale") {
+    catalogReady
+    val dir = seed()
+    spark.sql(s"UPDATE graft_rl.`$dir`.merge " +
+      "SET _version = _version + 1 WHERE id = 3") // 3 at 11, commit 2
+    spark.sql(s"DELETE FROM graft_rl.`$dir`.merge " +
+      "WHERE id >= 3 AND price < 5.5") // REMOVEs 3@11, 4@10, 5@10
+    assert(Apply.currentCommit(spark, dir) == 3L,
+      "the DELETE must commit through the gated fold")
+    assert(state(dir).keySet == Set(1L, 2L, 6L))
+    assert(slice(dir, 2L, 3L) ==
+      Set(3L -> "REMOVE", 4L -> "REMOVE", 5L -> "REMOVE"))
+  }
+
+  test("a streaming-sink epoch that replays stale rows drops them " +
+      "silently: the epoch commits, the stale rows lose the fold and " +
+      "stay out of the change slice") {
+    catalogReady
+    val dir = seed() // ids 1..6 at version 10
+    import spark.implicits._
+    val base = Files.createTempDirectory("graftrlsink").toString
+    Seq((1L, "old", 0.5, 9L), (2L, "tie", 0.5, 10L), (7L, "new", 7.0, 1L))
+      .toDF("id", "ticker", "price", "_version")
+      .repartition(1).write.parquet(s"$base/in")
+    val q = spark.readStream
+      .schema("id BIGINT, ticker STRING, price DOUBLE, _version BIGINT")
+      .parquet(s"$base/in")
+      .writeStream.format("graft").option("path", dir)
+      .option("checkpointLocation", s"$base/ck")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    assert(Apply.currentCommit(spark, dir) == 2L, "the epoch commits")
+    val s = state(dir)
+    assert(s(1L) == (("t1", 1.0, 10L)) && s(2L) == (("t2", 2.0, 10L)),
+      s"stale replayed rows must lose the fold: $s")
+    assert(s(7L) == (("new", 7.0, 1L)), s"fresh keys land: $s")
+    assert(slice(dir, 1L, 2L) == Set(7L -> "MODIFY"),
+      "lost rows must not enter the feed")
+  }
+
+  test("one UPDATE statement runs at most 11 Spark jobs: the stale " +
+      "gate and the null-axis and touched-bucket probes ride the merge " +
+      "fold (16 jobs when each ran as its own query)") {
+    catalogReady
+    val dir = seed()
+    val sc = spark.sparkContext
+    val group = s"graft-rl-jobs-${java.util.UUID.randomUUID}"
+    val marker = s"$group-marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "update")
+      try spark.sql(s"UPDATE graft_rl.`$dir`.merge " +
+        "SET price = 0.0, _version = _version + 1 WHERE id <= 3")
+      finally sc.clearJobGroup()
+      // the listener bus is asynchronous and ordered: once the marker
+      // job's start arrives, every job of the statement has arrived
+      sc.setJobGroup(marker, "marker")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.contains(marker) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.contains(marker), "the listener never saw the marker")
+      val n = seen.toArray.count(_ == group)
+      assert(n > 0 && n <= 11, s"one UPDATE ran $n jobs")
+    } finally sc.removeSparkListener(listener)
+    assert(state(dir)(1L) == (("t1", 0.0, 11L)))
+  }
 }
