@@ -29,7 +29,10 @@ import graft.util.StoreManifest.{maskOlder, tombstones, window}
   * object-store PUT);
   * superseded generations are deleted only AFTER the flip and only
   * beyond a retention window, so a reader holding the previous meta
-  * keeps scanning intact files (the Apply deferred-GC contract).
+  * keeps scanning intact files (the Apply deferred-GC contract). Within
+  * a generation, the frozen-insert fold, the upsert and the purge append
+  * through the one ledgered slice write
+  * ([[graft.util.SliceManifest.write]]).
   *
   * The assigned table is written `partitionBy("cell")` — the
   * [[Similarity]] scaladoc's "assignment column doubles as a partition
@@ -54,8 +57,8 @@ object IndexStore {
   /** `rows` = vectors in this generation; `baseRows` = rows at the last
     * RE-TRAIN — the denominator of the doubling refresh policy (a grown
     * publish carries its base forward; a rebuild resets base = rows).
-    * `batch` = the streaming batch id whose fold produced this
-    * generation (−1 for non-streaming publishes) — the idempotent-
+    * `batch` = the last ledgered batch id folded (−1 before any; a
+    * publish without a batch id keeps it) — the idempotent-
     * foreachBatch ledger: a crash-replayed batch id ≤ `batch` is a
     * no-op instead of a double insert.
     *
@@ -111,8 +114,8 @@ object IndexStore {
     val n = spark.read.parquet(s"$dir/gen=$gen/assigned").count()
     // 2. the commit: one atomic pointer PUT; 3. deferred GC after it
     Manifest.commit(spark, dir,
-      Meta(Format, gen, n, carryBaseRows.getOrElse(n), batchId,
-        sliceBase = 0L, slices = 1L,
+      Meta(Format, gen, n, carryBaseRows.getOrElse(n),
+        Manifest.ledger(prev, batchId), sliceBase = 0L, slices = 1L,
         commit = prev.map(_.commit + 1).getOrElse(0L)))
     Generations.gc(spark, dir, gen - (retainGens - 1))
     gen
@@ -178,36 +181,28 @@ object IndexStore {
   }
 
   /** DECREMENTAL index maintenance — remove vectors from the persisted
-    * IVF index (the purge verb on the ANN substrate; search over the
-    * remaining vectors is trivially exact — no cross-row semantics to
-    * repair, unlike the dedup ledgers). Purged ids land as a tombstone
-    * slice INSIDE the current generation (a re-train sheds them with
-    * it); `rows` decrements in the same atomic commit so the doubling
-    * denominator stays honest; [[compactAssigned]] makes the removal
-    * physical. No-op for absent ids. Returns vectors removed. */
+    * IVF index (search over the remaining vectors is trivially exact — no
+    * cross-row semantics to repair, unlike the dedup ledgers):
+    * [[upsertVectors]] with no upserts and no batch id
+    * ([[SliceManifest.purge]]). Purged ids land as a tombstone slice
+    * INSIDE the current generation (a re-train sheds them with it);
+    * `rows` decrements in the same commit so the doubling denominator
+    * stays honest; [[compactAssigned]] makes the removal physical. No-op
+    * for absent ids. Returns vectors removed. */
   def purgeVectors(spark: SparkSession, dir: String,
-      vecIds: DataFrame): Long = {
-    graft.util.Maintenance.withLeasedWriteLock("IndexStore", spark, dir) {
-    val m = Manifest.get(spark, dir)
-    val (idx, _) = loadIvf(spark, dir)
-    val targets = vecIds.select(vecIds.columns.head).toDF("vid").distinct()
-      .join(idx.assigned.select(col("vid")), Seq("vid"), "left_semi")
-      .localCheckpoint(true)
-    val n = targets.count()
-    if (n == 0L) return 0L
-    val sliceId = m.slices
-    // claim the id: a crashed fold's orphan assigned slice here must not
-    // become live when this commit advances the window — its vectors
-    // would enter every probe while `rows` never counted them, and the
-    // fold's replay would re-insert at S+1 (round-10 ADVICE)
-    Generations.claimSlice(spark, dir, Seq(s"gen=${m.gen}/assigned"), sliceId)
-    targets.write.mode("overwrite")
-      .parquet(s"$dir/gen=${m.gen}/purged/slice=$sliceId")
-    Manifest.commit(spark, dir, m.copy(rows = m.rows - n, slices = sliceId + 1,
-      commit = m.commit + 1))
-    n
-    }
-  }
+      vecIds: DataFrame): Long =
+    Manifest.purge(spark, dir, "IndexStore")(m => upsertVectors(
+      loadIvfOn(spark, dir, m)._1.assigned.limit(0), col("vid"), col("v"),
+      vecIds, dir))((b, a) => b.rows - a.rows).getOrElse(0L)
+
+  /** Land `assigned` (vid, v, cell) — vectors assigned against the
+    * generation's FROZEN centroids ([[Similarity.assignDelta]], one
+    * broadcast-argmin pass) — as its assigned slice `s`, partitioned by
+    * cell. */
+  private def landAssigned(dir: String, m: Meta, assigned: DataFrame)(
+      s: Long): Unit =
+    assigned.write.mode("overwrite").partitionBy("cell")
+      .parquet(s"$dir/gen=${m.gen}/assigned/slice=$s")
 
   /** VECTOR REFRESH (round 13) — the last cell of the upsert matrix
     * ([[graft.text.PostingsStore.upsertBatch]] /
@@ -215,15 +210,11 @@ object IndexStore {
     * [[graft.dedup.SemLedgerStore.upsertVecs]] on the IVF index): after
     * a model upgrade re-embeds documents, the index must retire each
     * vector's OLD copy, land the NEW one (assigned against the FROZEN
-    * centroids — one broadcast-argmin pass over the delta), and adjust
-    * `rows` by exactly −old +new — atomically, in ONE ledgered commit.
-    * [[purgeVectors]]-then-[[ivfMaintainBatch]] as two verbs leaves a
-    * crash window: purge has no batch ledger, so a replay between the
-    * two commits purges the re-landed copy (or the fold's tombstone
-    * screen silently drops the re-insert). Here one commit carries the
-    * tombstone slice, the re-assigned data slice ABOVE it (the v4
-    * slice-ordered mask keeps it visible), the stats delta, and the
-    * batch id.
+    * centroids), and adjust `rows` by exactly −old +new — atomically,
+    * in ONE ledgered commit ([[SliceManifest.write]]).
+    * [[purgeVectors]]-then-[[ivfMaintainBatch]] as two verbs would leave
+    * a crash window where a replay purges the re-landed copy (or the
+    * fold's tombstone screen silently drops the re-insert).
     *
     * `removeIds` deletes outright; ids in both re-land (the upsert
     * wins). Previously-purged ids re-enter through an upsert (the verb
@@ -238,58 +229,31 @@ object IndexStore {
       : Option[Long] = {
     val spark = upserts.sparkSession
     graft.util.Maintenance.withLeasedWriteLock("IndexStore", spark, dir) {
-    val m = Manifest.read(spark, dir).getOrElse(sys.error(
-      s"no committed index at $dir — upsertVectors updates an existing " +
-        "index; seed with saveIvf/ivfMaintainBatch first"))
-    if (batchId >= 0 && batchId <= m.batch) return None
-    // one live row per vid (ADVICE r12): exact duplicates collapse,
-    // conflicting re-embeddings fail loudly — two copies in one data
-    // slice would both sit above the tombstone and both probe
-    val newVecs = graft.util.Maintenance.requireUniqueUpserts(
-      upserts.select(id.as("vid"), vec.as("v")), "vid", "ivf-index")
-    // ids in both upserts and removeIds re-land (the upsert wins)
-    val rem = removeIds.select(removeIds.columns.head).toDF("vid")
-      .distinct()
-      .join(newVecs.select(col("vid")), Seq("vid"), "left_anti")
-      .localCheckpoint(true)
-    if (newVecs.isEmpty && rem.isEmpty) {
-      Manifest.recordEmptyBatch(spark, dir, Some(m), batchId); return None
-    }
-    val (idx, _) = loadIvf(spark, dir)
-    // retire the LIVE copies of everything incoming or removed —
-    // absent/already-purged ids need no tombstone (their re-land, if
-    // any, is a plain insert above the existing mask)
-    val targets = newVecs.select(col("vid")).unionByName(rem)
-      .join(idx.assigned.select(col("vid")), Seq("vid"), "left_semi")
-      .localCheckpoint(true)
-    val nGone = targets.count()
-    // tombstone slice first (the mask covers only OLDER slices), then
-    // the re-assigned data slice above it — ids only claimed for dirs
-    // actually written (the crashed-sibling orphan rule)
-    var next = m.slices
-    if (nGone > 0L) {
-      Generations.claimSlice(spark, dir, Seq(s"gen=${m.gen}/assigned"), next)
-      targets.write.mode("overwrite")
-        .parquet(s"$dir/gen=${m.gen}/purged/slice=$next")
-      next += 1
-    }
-    var dn = 0L
-    if (!newVecs.isEmpty) {
-      Generations.claimSlice(spark, dir, Seq(s"gen=${m.gen}/purged"), next)
-      Similarity.assignDelta(idx, newVecs, col("vid"), col("v"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$dir/gen=${m.gen}/assigned/slice=$next")
-      dn = spark.read
-        .parquet(s"$dir/gen=${m.gen}/assigned/slice=$next").count()
-      next += 1
-    }
-    if (next == m.slices) { // nothing live to retire, nothing to land
-      Manifest.recordEmptyBatch(spark, dir, Some(m), batchId); return None
-    }
-    val commit = m.commit + 1
-    Manifest.commit(spark, dir, m.copy(rows = m.rows - nGone + dn,
-      batch = batchId, slices = next, commit = commit))
-    Some(commit)
+      val m = Manifest.read(spark, dir).getOrElse(sys.error(
+        s"no committed index at $dir — upsertVectors updates an existing " +
+          "index; seed with saveIvf/ivfMaintainBatch first"))
+      Manifest.write(spark, dir, m, batchId) {
+        // one live row per vid (ADVICE r12): exact duplicates collapse,
+        // conflicting re-embeddings fail loudly — two copies in one data
+        // slice would both sit above the tombstone and both probe
+        val newVecs = graft.util.Maintenance.requireUniqueUpserts(
+          upserts.select(id.as("vid"), vec.as("v")), "vid", "ivf-index")
+        val (idx, _) = loadIvfOn(spark, dir, m)
+        // ids in both upserts and removeIds re-land (the upsert wins);
+        // retire the LIVE copies of everything incoming or removed
+        val targets = newVecs.select(col("vid"))
+          .unionByName(removeIds.select(removeIds.columns.head).toDF("vid"))
+          .distinct()
+          .join(idx.assigned.select(col("vid")), Seq("vid"), "left_semi")
+          .localCheckpoint(true)
+        Manifest.Write(retire = Some(targets),
+          land = Option.when(!newVecs.isEmpty)(landAssigned(dir, m,
+            Similarity.assignDelta(idx, newVecs, col("vid"), col("v"))))) {
+          // rows −retired +landed, the landed ones as written
+          l => m.copy(rows = m.rows - l.retired + l.data.fold(0L)(s =>
+            spark.read.parquet(s"$dir/gen=${m.gen}/assigned/slice=$s").count()))
+        }
+      }.map(_.commit)
     }
   }
 
@@ -318,22 +282,18 @@ object IndexStore {
     * training. Returns (generation, rebuilt?). Empty batches are a
     * no-op (foreachBatch delivers them), and so is a batch id ≤ the
     * manifest's recorded `batch` — the idempotent-foreachBatch ledger
-    * that makes the stream EXACTLY-ONCE: after a crash between publish
-    * and checkpoint commit, the replayed batch would otherwise
-    * re-insert its vectors (the fold is NOT naturally idempotent). A
-    * manual (batchId = −1) fold resets the ledger — do not interleave
-    * manual folds into a streaming-maintained index while its query is
-    * live.
+    * ([[StoreManifest.ledgered]]) that makes the stream EXACTLY-ONCE:
+    * after a crash between publish and checkpoint commit, the replayed
+    * batch would otherwise re-insert its vectors (the fold is NOT
+    * naturally idempotent).
     *
-    * v2 fold I/O (round-9 verdict #3, closing the declared trade): a
-    * frozen-insert fold writes ONLY its delta's assigned rows as the
-    * generation's next slice ([[Similarity.assignDelta]] — one
-    * broadcast-argmin pass, cell-partitioned files) and bumps `slices`
-    * in the pointer commit — the generation dir is otherwise untouched,
-    * so fold write volume tracks the delta (IndexProbe measures it).
-    * Only the doubling re-train rewrites: it reassigns every vector,
-    * which invalidates the old slices wholesale, so it opens a fresh
-    * generation with slice 0 (the epoch reset).
+    * v2 fold I/O (round-9 verdict #3): a frozen-insert fold writes ONLY
+    * its delta's assigned rows as the generation's next slice, through
+    * the ledgered slice write ([[SliceManifest.write]]) — the
+    * generation dir is otherwise untouched, so fold write volume tracks
+    * the delta. Only the doubling re-train rewrites: it reassigns every
+    * vector, which invalidates the old slices wholesale, so it publishes
+    * a fresh generation with slice 0 (the epoch reset).
     *
     * CONTRACT — the plain fold is APPEND-ONLY of NEW ids (the sibling
     * stores' adjudicated rule): a batch id already in the index
@@ -348,57 +308,32 @@ object IndexStore {
       retainGens: Int = 2, batchId: Long = -1L): Option[(Long, Boolean)] = {
     val spark = batch.sparkSession
     graft.util.Maintenance.withLeasedWriteLock("IndexStore", spark, dir) {
-    val vecs = batch.select(id.as("vid"), vec.as("v"))
-    if (vecs.isEmpty) { Manifest.recordEmptyBatch(spark, dir, Manifest.read(spark, dir), batchId); return None }
-    Manifest.read(spark, dir) match {
-      case None =>
-        val seeded = Similarity.buildIvf(vecs, col("vid"), col("v"),
-          nCentroids, iterations = 1, materialize = true)
-        Some((saveIvf(seeded, dir, retainGens, batchId = batchId), true))
-      case Some(m) if batchId >= 0 && batchId <= m.batch =>
-        None // crash replay of an already-folded batch: no-op
-      case Some(m) =>
-        val (idx, _) = loadIvf(spark, dir)
-        // TOMBSTONE SCREEN (round-10 ADVICE): a purged vid stays purged
-        // until a re-train or compact sheds its tombstone — re-inserting
-        // it would bump `rows` while the tombstone hides the vector from
-        // every probe, permanently skewing the doubling denominator
-        val screened = vecs.join(liveTombs(spark, dir, m),
-          Seq("vid"), "left_anti")
-        if (screened.isEmpty) { Manifest.recordEmptyBatch(spark, dir, Some(m), batchId); return None }
-        // claim the id: a crashed purge's orphan tombstone slice here
-        // must not become live under this fold's commit
-        Generations.claimSlice(spark, dir, Seq(s"gen=${m.gen}/purged"),
-          m.slices)
-        // delta-sized write: assign the batch against the frozen
-        // centroids and append it as the generation's next slice —
-        // invisible until the pointer commit bumps the count
-        Similarity.assignDelta(idx, screened, col("vid"), col("v"))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$dir/gen=${m.gen}/assigned/slice=${m.slices}")
-        val dn = spark.read
-          .parquet(s"$dir/gen=${m.gen}/assigned/slice=${m.slices}").count()
-        val n = m.rows + dn
-        if (n.toDouble >= m.baseRows.toDouble * growthFactor) {
-          // doubling re-train: read every slice INCLUDING the just-
-          // written (still-uncommitted) one directly (minus tombstones —
-          // purged vectors must not re-enter through a re-train; the v4
-          // slice-ordered mask keeps upsert-re-landed copies in),
-          // retrain, publish a fresh generation; the orphan slice dies
-          // with its gen's GC
-          val all = maskOlder(window(spark, s"$dir/gen=${m.gen}/assigned",
-              m.copy(slices = m.slices + 1)), "vid", liveTombs(spark, dir, m))
-            .select(col("vid"), col("v"))
-          val retrained = Similarity.buildIvf(all, col("vid"), col("v"),
-            nCentroids, iterations = 1, materialize = true)
-          Some((saveIvf(retrained, dir, retainGens, batchId = batchId), true))
-        } else {
-          Manifest.commit(spark, dir,
-            m.copy(rows = n, batch = batchId, slices = m.slices + 1,
-              commit = m.commit + 1))
-          Some((m.gen, false))
+      val vecs = batch.select(id.as("vid"), vec.as("v"))
+      val prev = Manifest.read(spark, dir)
+      def train(all: DataFrame): (Long, Boolean) =
+        (saveIvf(Similarity.buildIvf(all, col("vid"), col("v"), nCentroids,
+          iterations = 1, materialize = true), dir, retainGens,
+          batchId = batchId), true)
+      Manifest.ledgered(spark, dir, prev, batchId) {
+        prev match {
+          case None => Option.when(!vecs.isEmpty)(train(vecs))
+          case Some(m) =>
+            Manifest.screen(spark, dir, m, vecs, "vid").flatMap { screened =>
+              val (idx, _) = loadIvfOn(spark, dir, m)
+              val delta = Similarity.assignDelta(idx, screened, col("vid"),
+                col("v")).localCheckpoint(true)
+              val n = m.rows + delta.count()
+              if (n.toDouble >= m.baseRows.toDouble * growthFactor)
+                // doubling re-train over every live vector plus the
+                // batch: purged vectors must not re-enter (the v4
+                // slice-ordered mask keeps upsert-re-landed copies in)
+                Some(train(idx.assigned.unionByName(delta)))
+              else Manifest.write(spark, dir, m, batchId)(Manifest.Write(
+                land = Some(landAssigned(dir, m, delta)))(
+                _ => m.copy(rows = n))).map(a => (a.gen, false))
+            }
         }
-    }
+      }
     }
   }
 
@@ -483,7 +418,8 @@ object IndexStore {
     // count what was written, not the (possibly lazy) input frame
     val n = spark.read.parquet(s"$dir/gen=$gen/codes").count()
     PqManifest.commit(spark, dir, PqMeta(PqFormat, gen, n, index.pq.m,
-      index.pq.subDim, carryBaseRows.getOrElse(n), batchId,
+      index.pq.subDim, carryBaseRows.getOrElse(n),
+      PqManifest.ledger(prev, batchId),
       prev.map(_.commit + 1).getOrElse(0L)))
     Generations.gc(spark, dir, gen - (retainGens - 1))
     gen
@@ -562,39 +498,31 @@ object IndexStore {
       batchId: Long = -1L): Option[(Long, Boolean)] = {
     val spark = batch.sparkSession
     graft.util.Maintenance.withLeasedWriteLock("IndexStore", spark, dir) {
-    val prev = PqManifest.read(spark, dir)
-    // crash replay of an already-folded batch: screened before any job
-    if (prev.exists(pm => batchId >= 0 && batchId <= pm.batch)) return None
-    val vecs = batch.select(id.as("vid"), vec.as("v")).localCheckpoint(true)
-    if (vecs.isEmpty) { PqManifest.recordEmptyBatch(spark, dir, prev, batchId); return None }
-    prev match {
-      case None =>
-        val seeded = Similarity.buildIvfPq(vecs, col("vid"), col("v"),
-          nCells, m, ksub, materialize = true)
-        val gen = saveIvfPq(seeded, dir, retainGens,
-          sideTables = Seq("vecs" -> vecs), batchId = batchId)
-        Some((gen, true))
-      case Some(pm) =>
-        val (idx, _) = loadIvfPqOn(spark, dir, pm)
-        val oldVecs = spark.read.parquet(s"$dir/gen=${pm.gen}/vecs")
-          .localCheckpoint(true) // survives its generation's GC
-        val allVecs = oldVecs.unionByName(vecs)
-        val n = pm.rows + vecs.count()
-        if (n.toDouble >= pm.baseRows.toDouble * growthFactor) {
-          val retrained = Similarity.buildIvfPq(allVecs,
-            col("vid"), col("v"), nCells, m, ksub, materialize = true)
-          val gen = saveIvfPq(retrained, dir, retainGens,
-            sideTables = Seq("vecs" -> allVecs), batchId = batchId)
-          Some((gen, true))
-        } else {
-          val grown = Similarity.ivfPqInsert(idx, vecs,
-            col("vid"), col("v"), materialize = true)
-          val gen = saveIvfPq(grown, dir, retainGens,
-            sideTables = Seq("vecs" -> allVecs),
-            carryBaseRows = Some(pm.baseRows), batchId = batchId)
-          Some((gen, false))
-        }
-    }
+      val prev = PqManifest.read(spark, dir)
+      PqManifest.ledgered(spark, dir, prev, batchId) {
+        val vecs = batch.select(id.as("vid"), vec.as("v")).localCheckpoint(true)
+        Option.when(!vecs.isEmpty)(prev match {
+          case None =>
+            (saveIvfPq(Similarity.buildIvfPq(vecs, col("vid"), col("v"),
+              nCells, m, ksub, materialize = true), dir, retainGens,
+              sideTables = Seq("vecs" -> vecs), batchId = batchId), true)
+          case Some(pm) =>
+            val (idx, _) = loadIvfPqOn(spark, dir, pm)
+            val allVecs = spark.read.parquet(s"$dir/gen=${pm.gen}/vecs")
+              .localCheckpoint(true) // survives its generation's GC
+              .unionByName(vecs)
+            val n = pm.rows + vecs.count()
+            if (n.toDouble >= pm.baseRows.toDouble * growthFactor)
+              (saveIvfPq(Similarity.buildIvfPq(allVecs, col("vid"), col("v"),
+                nCells, m, ksub, materialize = true), dir, retainGens,
+                sideTables = Seq("vecs" -> allVecs), batchId = batchId), true)
+            else
+              (saveIvfPq(Similarity.ivfPqInsert(idx, vecs, col("vid"), col("v"),
+                materialize = true), dir, retainGens,
+                sideTables = Seq("vecs" -> allVecs),
+                carryBaseRows = Some(pm.baseRows), batchId = batchId), false)
+        })
+      }
     }
   }
 
@@ -629,43 +557,37 @@ object IndexStore {
       batchId: Long = -1L): Option[Long] = {
     val spark = upserts.sparkSession
     graft.util.Maintenance.withLeasedWriteLock("IndexStore", spark, dir) {
-    val pm = PqManifest.read(spark, dir).getOrElse(sys.error(
-      s"no committed index at $dir — upsertPqVectors updates an existing " +
-        "index; seed with saveIvfPq/ivfPqMaintainBatch first"))
-    if (batchId >= 0 && batchId <= pm.batch) return None
-    val newVecs = graft.util.Maintenance.requireUniqueUpserts(
-      upserts.select(id.as("vid"), vec.as("v")), "vid", "ivfpq-index")
-    // ids in both upserts and removeIds re-land (the upsert wins)
-    val rem = removeIds.select(removeIds.columns.head).toDF("vid")
-      .distinct()
-      .join(newVecs.select(col("vid")), Seq("vid"), "left_anti")
-      .localCheckpoint(true)
-    if (newVecs.isEmpty && rem.isEmpty) {
-      PqManifest.recordEmptyBatch(spark, dir, Some(pm), batchId); return None
-    }
-    // survives its generation's GC (and the new gen's publish)
-    val oldVecs = spark.read.parquet(s"$dir/gen=${pm.gen}/vecs")
-      .localCheckpoint(true)
-    val targets = newVecs.select(col("vid")).unionByName(rem)
-      .join(oldVecs.select(col("vid")), Seq("vid"), "left_semi")
-      .localCheckpoint(true)
-    if (newVecs.isEmpty && targets.isEmpty) { // removes of absent ids
-      PqManifest.recordEmptyBatch(spark, dir, Some(pm), batchId); return None
-    }
-    val (idx, _) = loadIvfPq(spark, dir)
-    val keptCodes = idx.codes.join(targets, Seq("vid"), "left_anti")
-    val pruned = Similarity.IvfPqIndex(idx.cells,
-      idx.pq.copy(codes = keptCodes.select(col("vid"), col("codes"))),
-      keptCodes)
-    val refreshed =
-      if (newVecs.isEmpty) pruned
-      else Similarity.ivfPqInsert(pruned, newVecs, col("vid"), col("v"),
-        materialize = true)
-    val allVecs = oldVecs.join(targets, Seq("vid"), "left_anti")
-      .unionByName(newVecs)
-    Some(saveIvfPq(refreshed, dir, retainGens,
-      sideTables = Seq("vecs" -> allVecs),
-      carryBaseRows = Some(pm.baseRows), batchId = batchId))
+      val pm = PqManifest.read(spark, dir).getOrElse(sys.error(
+        s"no committed index at $dir — upsertPqVectors updates an existing " +
+          "index; seed with saveIvfPq/ivfPqMaintainBatch first"))
+      PqManifest.ledgered(spark, dir, Some(pm), batchId) {
+        val newVecs = graft.util.Maintenance.requireUniqueUpserts(
+          upserts.select(id.as("vid"), vec.as("v")), "vid", "ivfpq-index")
+        // survives its generation's GC (and the new gen's publish)
+        val oldVecs = spark.read.parquet(s"$dir/gen=${pm.gen}/vecs")
+          .localCheckpoint(true)
+        // ids in both upserts and removeIds re-land (the upsert wins)
+        val targets = newVecs.select(col("vid"))
+          .unionByName(removeIds.select(removeIds.columns.head).toDF("vid"))
+          .distinct()
+          .join(oldVecs.select(col("vid")), Seq("vid"), "left_semi")
+          .localCheckpoint(true)
+        Option.when(!newVecs.isEmpty || !targets.isEmpty) {
+          val (idx, _) = loadIvfPqOn(spark, dir, pm)
+          val keptCodes = idx.codes.join(targets, Seq("vid"), "left_anti")
+          val pruned = Similarity.IvfPqIndex(idx.cells,
+            idx.pq.copy(codes = keptCodes.select(col("vid"), col("codes"))),
+            keptCodes)
+          val refreshed =
+            if (newVecs.isEmpty) pruned
+            else Similarity.ivfPqInsert(pruned, newVecs, col("vid"), col("v"),
+              materialize = true)
+          saveIvfPq(refreshed, dir, retainGens,
+            sideTables = Seq("vecs" -> oldVecs.join(targets, Seq("vid"),
+              "left_anti").unionByName(newVecs)),
+            carryBaseRows = Some(pm.baseRows), batchId = batchId)
+        }
+      }
     }
   }
 

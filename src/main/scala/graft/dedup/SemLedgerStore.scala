@@ -17,8 +17,10 @@ import graft.util.StoreManifest.{maskOlder, tombstones, window}
   * [[Dedup.lshNearDupsDelta]] — only buckets containing a new vector
   * produce candidate work, no old×old — then label contraction
   * ([[Dedup.componentsIncremental]]). The fold config (bands, planes
-  * per band, dim, threshold‰) freezes in the manifest at seed time; the
-  * streaming face is exactly-once via the batch-id ledger.
+  * per band, dim, threshold‰) freezes in the manifest at seed time.
+  * Every write verb commits through the one ledgered slice write
+  * ([[graft.util.SliceManifest.write]]), so the streaming face is
+  * exactly-once via its batch-id ledger.
   * SemLedgerStoreSpec pins the q244 invariant across generations on
   * disk: stored pairs ∪ labels ≡ a full recompute.
   *
@@ -78,21 +80,23 @@ object SemLedgerStore {
       .select(col("a_id"), col("b_id"), col("cosine"))
   }
 
-  private def publish(spark: SparkSession, dir: String, deltaVecs: DataFrame,
-      deltaPairs: DataFrame, labels: DataFrame, meta: Meta,
-      retainGens: Int): Long = {
-    val sliceId = meta.slices - 1
-    // claim the id: a crashed purge's orphan tombstone slice here must
-    // not become live under this fold's commit (round-10 ADVICE)
-    Generations.claimSlice(spark, dir, Seq("purged"), sliceId)
-    deltaVecs.write.mode("overwrite").parquet(s"$dir/vecs/slice=$sliceId")
-    deltaPairs.write.mode("overwrite").parquet(s"$dir/pairs/slice=$sliceId")
-    labels.write.mode("overwrite").parquet(s"$dir/gen=${meta.gen}/labels")
-    val n = spark.read.parquet(s"$dir/gen=${meta.gen}/labels").count()
-    Manifest.commit(spark, dir, meta.copy(rows = n, commit = meta.commit + 1))
-    Generations.gc(spark, dir, meta.gen - (retainGens - 1))
-    meta.gen
+  /** What a write reads of `m`: the live vectors and the labels. */
+  private def vecsAndLabels(spark: SparkSession, dir: String,
+      m: Meta): (DataFrame, DataFrame) =
+    (liveVecs(spark, dir, m), spark.read.parquet(s"$dir/gen=${m.gen}/labels"))
+
+  /** Land a fold's vectors and their pairs as slice `s`. */
+  private def landVecs(dir: String, vecs: DataFrame, pairs: DataFrame)(
+      s: Long): Unit = {
+    vecs.write.mode("overwrite").parquet(s"$dir/vecs/slice=$s")
+    pairs.write.mode("overwrite").parquet(s"$dir/pairs/slice=$s")
   }
+
+  /** `m` advanced to the next labels generation holding `labels`. */
+  private def relabeled(spark: SparkSession, dir: String, m: Meta,
+      labels: DataFrame): Meta =
+    m.copy(gen = m.gen + 1,
+      rows = LedgerStore.landLabels(spark, dir, m.gen + 1, labels))
 
   /** [[LedgerStore.compact]]'s embedding twin: merge the live slice
     * window of both stores into one slice each and advance `sliceBase`
@@ -117,15 +121,11 @@ object SemLedgerStore {
     * unions, liveness-pruned, tombstone-filtered — current labels,
     * meta). */
   def load(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, Meta) =
-    loadOn(spark, dir, Manifest.get(spark, dir))
-
-  /** [[load]] against a manifest the caller has already read. */
-  private def loadOn(spark: SparkSession, dir: String, m: Meta)
-      : (DataFrame, DataFrame, DataFrame, Meta) =
-    (liveVecs(spark, dir, m),
-      livePairs(spark, dir, m),
+      : (DataFrame, DataFrame, DataFrame, Meta) = {
+    val m = Manifest.get(spark, dir)
+    (liveVecs(spark, dir, m), livePairs(spark, dir, m),
       spark.read.parquet(s"$dir/gen=${m.gen}/labels"), m)
+  }
 
   /** The current manifest, for callers pinning snapshots
     * ([[graft.util.PipelineLedger]]) without loading the frames. */
@@ -167,76 +167,38 @@ object SemLedgerStore {
   }
 
   /** [[LedgerStore.purgeDocs]]'s embedding twin — decremental semantic-
-    * ledger maintenance: affected components relabel from their
-    * remaining members' STORED VECTORS (the banded sign-LSH pipeline
-    * restricted to the members — exact under the same pair-closure
-    * argument, the ledger's uncapped profile), purged ids land as a
-    * tombstone slice filtering every live read (vectors AND pairs —
-    * later folds cannot pair against purged vectors), [[compact]] makes
-    * the removal physical. No-op for absent/already-purged ids. */
+    * ledger maintenance: [[upsertVecs]] with no upserts and no batch id
+    * ([[SliceManifest.purge]]). The affected components' remaining
+    * members re-enter through the upsert's one contraction over their
+    * STORED VECTORS (exact under the same pair-closure argument, the
+    * ledger's uncapped profile); the purged ids land as a tombstone
+    * slice filtering every live read (vectors AND pairs — later folds
+    * cannot pair against purged vectors); [[compact]] makes the removal
+    * physical. No-op for absent/already-purged ids. Returns the
+    * published generation. */
   def purgeVecs(spark: SparkSession, dir: String, vecIds: DataFrame,
-      retainGens: Int = 2): Option[Long] = {
-    graft.util.Maintenance.withLeasedWriteLock("SemLedgerStore", spark, dir) {
-    val m = Manifest.get(spark, dir)
-    val labels = spark.read.parquet(s"$dir/gen=${m.gen}/labels")
-    val targets = vecIds.select(vecIds.columns.head)
-      .toDF("id").distinct()
-      .join(labels.select(col("id")), Seq("id"), "left_semi")
-      .localCheckpoint(true)
-    if (targets.isEmpty) return None
-    val comps = labels.join(targets, Seq("id"), "left_semi")
-      .select(col("comp")).distinct()
-    val members = labels.join(comps, Seq("comp"), "left_semi")
-      .join(targets, Seq("id"), "left_anti")
-      .select(col("id"))
-    val vecsM = liveVecs(spark, dir, m)
-      .join(members, Seq("id"), "left_semi").localCheckpoint(true)
-    val pairsM = Dedup.lshNearDups(vecsM, col("id"), col("v"),
-      m.nBands, m.planesPerBand, m.dim, m.thresholdPerMille / 1000.0)
-    val lbl = Dedup.components(pairsM, col("a_id"), col("b_id"))
-    val relabeled = members
-      .join(lbl.select(col("id"), col("comp")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
-    val newLabels = labels.join(comps, Seq("comp"), "left_anti")
-      .select(col("id"), col("comp"))
-      .unionByName(relabeled)
-    val sliceId = m.slices
-    // claim the id: a crashed fold's orphan data slices must not become
-    // live when this commit advances the window
-    Generations.claimSlice(spark, dir, Seq("vecs", "pairs"), sliceId)
-    targets.write.mode("overwrite").parquet(s"$dir/purged/slice=$sliceId")
-    val gen = m.gen + 1
-    newLabels.write.mode("overwrite").parquet(s"$dir/gen=$gen/labels")
-    val n = spark.read.parquet(s"$dir/gen=$gen/labels").count()
-    Manifest.commit(spark, dir,
-      m.copy(gen = gen, rows = n, slices = sliceId + 1,
-        commit = m.commit + 1))
-    Generations.gc(spark, dir, gen - (retainGens - 1))
-    Some(gen)
-    }
-  }
+      retainGens: Int = 2): Option[Long] =
+    Manifest.purge(spark, dir, "SemLedgerStore")(m => upsertVecs(
+      liveVecs(spark, dir, m).limit(0), col("id"), col("v"), vecIds, dir,
+      retainGens))((_, a) => a.gen)
 
   /** EMBEDDING REFRESH (round 12) — the verb the canonical LLM-ops
     * flow needs: after a model upgrade, documents re-embed, and the
     * semantic ledger must retire each vector's OLD copy, land the NEW
     * one, and re-derive the pair ledger + labels — atomically, in one
-    * ledgered commit ([[graft.text.PostingsStore.upsertBatch]]'s
-    * semantics on the embedding substrate). Purge-then-fold as two
-    * verbs would leave a crash window where a replay purges the
-    * re-landed copy (purge has no ledger); here one commit carries the
-    * tombstone slice, the new vec/pair slices ABOVE it (the v5
-    * slice-ordered mask keeps them visible), the relabeled components,
-    * and the batch ledger.
+    * ledgered commit ([[SliceManifest.write]];
+    * [[graft.text.PostingsStore.upsertBatch]]'s semantics on the
+    * embedding substrate): the tombstone slice, the new vec/pair slices
+    * ABOVE it (the v5 slice-ordered mask keeps them visible), the
+    * relabeled components, and the batch ledger.
     *
     * Labels re-derive in ONE contraction ([[LedgerStore.upsertDocs]]'s
     * form): one checkpointed affected set ([[Dedup.affectedComponents]])
     * splits into the retiring targets and the remaining members; the
-    * members re-enter unlabeled, and their stored-vector pairs
-    * ([[purgeVecs]]' recompute over the members) join the new vectors'
-    * delta pairs in one contraction over the untouched components'
-    * labels ([[Dedup.relabelAffected]]) — identical labels to
-    * relabel-then-contract, exact under the same closure argument both
-    * parent verbs carry. `removeIds`
+    * members re-enter unlabeled, and their stored-vector pairs join the
+    * new vectors' delta pairs in one contraction over the untouched
+    * components' labels ([[Dedup.relabelAffected]]) — exact under the
+    * closure argument [[LedgerStore.upsertDocs]] carries. `removeIds`
     * deletes outright; ids in both re-land (the upsert wins). Returns
     * the new generation (None for replays / fully-empty batches). */
   def upsertVecs(upserts: DataFrame, id: Column, vec: Column,
@@ -244,73 +206,43 @@ object SemLedgerStore {
       batchId: Long = -1L): Option[Long] = {
     val spark = upserts.sparkSession
     graft.util.Maintenance.withLeasedWriteLock("SemLedgerStore", spark, dir) {
-    val m = Manifest.read(spark, dir).getOrElse(sys.error(
-      s"no committed semantic ledger at $dir — upsertVecs updates an " +
-        "existing ledger; seed with maintainBatch first"))
-    if (batchId >= 0 && batchId <= m.batch) return None
-    // one live row per id (ADVICE r12): exact duplicates collapse,
-    // conflicting re-embeddings fail loudly — two copies in one data
-    // slice would both sit above the tombstone and both stay visible
-    val newVecs = graft.util.Maintenance.requireUniqueUpserts(
-      upserts.select(id.as("id"), vec.as("v")), "id", "semantic-ledger")
-    // an id in both upserts and removeIds re-lands (the upsert wins) —
-    // drop the overlap HERE so the contract is the verb's, not an
-    // accident of downstream set algebra
-    val rem = removeIds.select(removeIds.columns.head).toDF("id")
-      .distinct()
-      .join(newVecs.select(col("id")), Seq("id"), "left_anti")
-      .localCheckpoint(true)
-    if (newVecs.isEmpty && rem.isEmpty) {
-      Manifest.recordEmptyBatch(spark, dir, Some(m), batchId); return None
-    }
-    val threshold = m.thresholdPerMille / 1000.0
-    val labels = spark.read.parquet(s"$dir/gen=${m.gen}/labels")
-    // newVecs and rem hold disjoint unique ids
-    val affected = Dedup.affectedComponents(labels,
-      newVecs.select(col("id")).unionByName(rem))
-    val targets = affected.filter(col("_t")).select(col("id"))
-    val members = affected.filter(!col("_t")).select(col("id"))
-    val vecs = liveVecs(spark, dir, m)
-    val pairsM =
-      if (members.isEmpty) None
-      else {
-        val vecsM = vecs.join(members, Seq("id"), "left_semi")
-          .localCheckpoint(true)
-        Some(Dedup.lshNearDups(vecsM, col("id"), col("v"),
-          m.nBands, m.planesPerBand, m.dim, threshold))
-      }
-    // the new vectors pair against the post-retirement corpus
-    val deltaPairs = Dedup.lshNearDupsDelta(
-      vecs.join(targets, Seq("id"), "left_anti"), newVecs,
-      col("id"), col("v"), m.nBands, m.planesPerBand, m.dim,
-      threshold).localCheckpoint(true)
-    val edges = pairsM.fold(deltaPairs)(deltaPairs.unionByName(_))
-    val newLabels = Dedup.relabelAffected(labels, affected,
-      newVecs.select(col("id")), edges)
-    // WRITES: tombstone slice first (the mask covers only OLDER
-    // slices), new vec/pair slices above it, labels, ONE commit
-    var next = m.slices
-    if (!targets.isEmpty) {
-      Generations.claimSlice(spark, dir, Seq("vecs", "pairs"), next)
-      targets.write.mode("overwrite").parquet(s"$dir/purged/slice=$next")
-      next += 1
-    }
-    if (!newVecs.isEmpty) {
-      Generations.claimSlice(spark, dir, Seq("purged"), next)
-      newVecs.write.mode("overwrite").parquet(s"$dir/vecs/slice=$next")
-      deltaPairs.write.mode("overwrite").parquet(s"$dir/pairs/slice=$next")
-      next += 1
-    }
-    if (next == m.slices) { // nothing live to retire, nothing to land
-      Manifest.recordEmptyBatch(spark, dir, Some(m), batchId); return None
-    }
-    val gen = m.gen + 1
-    newLabels.write.mode("overwrite").parquet(s"$dir/gen=$gen/labels")
-    val n = spark.read.parquet(s"$dir/gen=$gen/labels").count()
-    Manifest.commit(spark, dir, m.copy(gen = gen, rows = n, batch = batchId,
-      slices = next, commit = m.commit + 1))
-    Generations.gc(spark, dir, gen - (retainGens - 1))
-    Some(gen)
+      val m = Manifest.read(spark, dir).getOrElse(sys.error(
+        s"no committed semantic ledger at $dir — upsertVecs updates an " +
+          "existing ledger; seed with maintainBatch first"))
+      Manifest.write(spark, dir, m, batchId) {
+        // one live row per id (ADVICE r12): exact duplicates collapse,
+        // conflicting re-embeddings fail loudly — two copies in one data
+        // slice would both sit above the tombstone and both stay visible
+        val newVecs = graft.util.Maintenance.requireUniqueUpserts(
+          upserts.select(id.as("id"), vec.as("v")), "id", "semantic-ledger")
+        val threshold = m.thresholdPerMille / 1000.0
+        val (vecs, labels) = vecsAndLabels(spark, dir, m)
+        // an id in both upserts and removeIds re-lands (the upsert wins)
+        val affected = Dedup.affectedComponents(labels, newVecs.select(col("id"))
+          .unionByName(removeIds.select(removeIds.columns.head).toDF("id"))
+          .distinct())
+        val targets = affected.filter(col("_t")).select(col("id"))
+        val members = affected.filter(!col("_t")).select(col("id"))
+        val pairsM =
+          if (members.isEmpty) None
+          else {
+            val vecsM = vecs.join(members, Seq("id"), "left_semi")
+              .localCheckpoint(true)
+            Some(Dedup.lshNearDups(vecsM, col("id"), col("v"),
+              m.nBands, m.planesPerBand, m.dim, threshold))
+          }
+        // the new vectors pair against the post-retirement corpus
+        val deltaPairs = Dedup.lshNearDupsDelta(
+          vecs.join(targets, Seq("id"), "left_anti"), newVecs,
+          col("id"), col("v"), m.nBands, m.planesPerBand, m.dim,
+          threshold).localCheckpoint(true)
+        val edges = pairsM.fold(deltaPairs)(deltaPairs.unionByName(_))
+        val newLabels = Dedup.relabelAffected(labels, affected,
+          newVecs.select(col("id")), edges)
+        Manifest.Write(retire = Some(targets),
+          land = Option.when(!newVecs.isEmpty)(landVecs(dir, newVecs,
+            deltaPairs)))(_ => relabeled(spark, dir, m, newLabels))
+      }.map(a => LedgerStore.retain(spark, dir, a.gen, retainGens))
     }
   }
 
@@ -328,58 +260,47 @@ object SemLedgerStore {
   }
 
   /** Fold one batch of NEW vectors (id, embedding) into the persisted
-    * ledger; first batch seeds and freezes the config. Empty batches
-    * and crash-replayed batch ids are no-ops. */
+    * ledger through one ledgered write ([[SliceManifest.write]]); the
+    * first batch seeds and freezes the config. A purged id stays purged
+    * (the tombstone screen — re-folding it would re-enter the labels
+    * while the tombstone hides its vector from every pairing read).
+    * Empty batches and crash-replayed batch ids are no-ops. */
   def maintainBatch(batch: DataFrame, id: Column, vec: Column,
       dir: String, threshold: Double = 0.25, nBands: Int = 4,
       planesPerBand: Int = 4, dim: Int = 64, retainGens: Int = 2,
       batchId: Long = -1L): Option[Long] = {
     val spark = batch.sparkSession
     graft.util.Maintenance.withLeasedWriteLock("SemLedgerStore", spark, dir) {
-    val prev = Manifest.read(spark, dir)
-    // crash replay of an already-folded batch: screened before any job
-    if (prev.exists(m => batchId >= 0 && batchId <= m.batch)) return None
-    val vecs = batch.select(id.as("id"), vec.as("v")).localCheckpoint(true)
-    if (vecs.isEmpty) { Manifest.recordEmptyBatch(spark, dir, prev, batchId); return None }
-    val perMille = math.round(threshold * 1000).toInt
-    prev match {
-      case None =>
-        val pairs = Dedup.lshNearDupsDelta(vecs.limit(0), vecs,
-          col("id"), col("v"), nBands, planesPerBand, dim, threshold)
-        val labels = Dedup.componentsIncremental(
-          vecs.select(col("id"), col("id").as("comp")).limit(0),
-          vecs, col("id"), pairs, col("a_id"), col("b_id"))
-        Some(publish(spark, dir, vecs, pairs, labels,
-          Meta(Format, 0L, 0L, batchId, perMille, nBands, planesPerBand,
-            dim, sliceBase = 0L, slices = 1L, commit = -1L), retainGens))
-      case Some(m) =>
-        require(m.thresholdPerMille == perMille && m.nBands == nBands &&
-            m.planesPerBand == planesPerBand && m.dim == dim,
-          s"semantic ledger at $dir was seeded with " +
-            s"(${m.thresholdPerMille}‰, ${m.nBands}×${m.planesPerBand}, " +
-            s"dim ${m.dim}); refusing a mismatched fold — one ledger, " +
-            "one hyperplane family")
-        val (oldVecs, _, oldLabels, _) = loadOn(spark, dir, m)
-        // TOMBSTONE SCREEN (round-10 ADVICE): purged ids stay purged
-        // until compact+vacuum; re-folding one would re-enter the labels
-        // while the tombstone hides its vector from every pairing read
-        val screened = vecs.join(
-          tombstones(spark, s"$dir/purged", "id", m).select("id"),
-          Seq("id"), "left_anti").localCheckpoint(true)
-        if (screened.isEmpty) { Manifest.recordEmptyBatch(spark, dir, Some(m), batchId); return None }
-        val deltaPairs = Dedup.lshNearDupsDelta(oldVecs, screened,
-          col("id"), col("v"), nBands, planesPerBand, dim, threshold)
-          .localCheckpoint(true)
-        val allIds = oldLabels.select(col("id"))
-          .unionByName(screened.select(col("id")))
-        val newLabels = Dedup.componentsIncremental(
-          oldLabels, allIds, col("id"), deltaPairs,
-          col("a_id"), col("b_id"))
-        // writes: ONLY the delta slices + the labels — the stores append
-        Some(publish(spark, dir, screened, deltaPairs, newLabels,
-          m.copy(gen = m.gen + 1, batch = batchId, slices = m.slices + 1),
-          retainGens))
-    }
+      val perMille = math.round(threshold * 1000).toInt
+      val prev = Manifest.read(spark, dir)
+      val m = prev.getOrElse(Meta(Format, gen = -1L, rows = 0L, batch = -1L,
+        perMille, nBands, planesPerBand, dim, sliceBase = 0L, slices = 0L,
+        commit = -1L))
+      require(m.thresholdPerMille == perMille && m.nBands == nBands &&
+          m.planesPerBand == planesPerBand && m.dim == dim,
+        s"semantic ledger at $dir was seeded with " +
+          s"(${m.thresholdPerMille}‰, ${m.nBands}×${m.planesPerBand}, " +
+          s"dim ${m.dim}); refusing a mismatched fold — one ledger, " +
+          "one hyperplane family")
+      Manifest.write(spark, dir, m, batchId) {
+        val vecs = batch.select(id.as("id"), vec.as("v"))
+        Manifest.screen(spark, dir, m, vecs, "id").fold(Manifest.Write()(_ => m)) {
+          s =>
+            val screened = s.localCheckpoint(true)
+            val (oldVecs, oldLabels) = prev.fold((screened.limit(0),
+                screened.select(col("id"), col("id").as("comp")).limit(0)))(
+              vecsAndLabels(spark, dir, _))
+            val deltaPairs = Dedup.lshNearDupsDelta(oldVecs, screened,
+              col("id"), col("v"), nBands, planesPerBand, dim, threshold)
+              .localCheckpoint(true)
+            val labels = Dedup.componentsIncremental(oldLabels,
+              oldLabels.select(col("id")).unionByName(screened.select(col("id"))),
+              col("id"), deltaPairs, col("a_id"), col("b_id"))
+            // writes: ONLY the delta slices + the labels — the stores append
+            Manifest.Write(land = Some(landVecs(dir, screened, deltaPairs)))(
+              _ => relabeled(spark, dir, m, labels))
+        }
+      }.map(a => LedgerStore.retain(spark, dir, a.gen, retainGens))
     }
   }
 

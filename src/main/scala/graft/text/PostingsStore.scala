@@ -28,8 +28,10 @@ import graft.util.StoreManifest.{maskOlder, tombstones, window}
   * bit-for-bit), appends one immutable slice per store, and commits the
   * updated corpus statistics (`nDocs`, `totTokens` — BM25's N and avgdl
   * numerator) in the same atomic pointer PUT as the slice count: stats
-  * and postings can never disagree. Replays are no-ops via the batch-id
-  * ledger; [[compact]]/[[vacuumSlices]] bound the slice population.
+  * and postings can never disagree. Every write verb commits through the
+  * one ledgered slice write ([[graft.util.SliceManifest.write]]), so
+  * replays are no-ops via its batch-id ledger;
+  * [[compact]]/[[vacuumSlices]] bound the slice population.
   *
   * Every posting carries `tp` — a term-hash prefix — as an ordinary
   * data column, and each slice lands as ONE set of files (one per write
@@ -118,84 +120,91 @@ object PostingsStore {
     live(spark, dir, "doclen", m)
   }
 
+  /** The current manifest, or the seed of a store with no commit yet;
+    * `verb` names the write a mismatched prefix fan refuses. */
+  private def current(spark: SparkSession, dir: String, prefixes: Int,
+      verb: String): Meta = {
+    val m = Manifest.read(spark, dir).getOrElse(
+      Meta(Format, -1L, 0L, 0L, prefixes, sliceBase = 0L, slices = 0L,
+        commit = -1L))
+    require(m.prefixes == prefixes,
+      s"postings store at $dir was seeded with prefixes=${m.prefixes}; " +
+        s"refusing a mismatched $verb ($prefixes) — one store, one layout")
+    m
+  }
+
+  /** Tokenize `docs` (id, text) and land them as data slice `s`:
+    * postings hash-partitioned on `tp` and sorted by (tp, term), one file
+    * per write task (AQE coalesces a delta into one) — each file holds a
+    * share of the prefixes in order, so parquet row-group min/max stats
+    * on `tp` and `term` let the query's filters skip row groups (the
+    * Z-order lesson applied to the term axis; a slice below one row group
+    * is read whole and this is moot) — and the (id, dl) doc lengths. */
+  private def landDocs(dir: String, docs: DataFrame, prefixes: Int)(
+      s: Long): Unit = {
+    val toks = docs.select(col("id"),
+      explode(TextFunctions.tokens(col("text"))).as("term"))
+    toks.groupBy(col("id"), col("term")).agg(count(lit(1)).as("tf"))
+      .withColumn("tp", tp(col("term"), prefixes))
+      .repartition(col("tp")).sortWithinPartitions(col("tp"), col("term"))
+      .write.mode("overwrite").parquet(s"$dir/postings/slice=$s")
+    toks.groupBy(col("id")).agg(count(lit(1)).as("dl"))
+      .write.mode("overwrite").parquet(s"$dir/doclen/slice=$s")
+  }
+
+  /** (docs, tokens) of some (id, dl) rows — BM25's N and Σdl. */
+  private def stats(doclen: DataFrame): (Long, Long) = {
+    val r = doclen.agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** `m` with the corpus stats −retired +landed: the `retired` ids'
+    * stats from `m`'s live window, the landed ones from what was
+    * WRITTEN, not the possibly-lazy input — so the one commit carries
+    * stats, ledger and window together. */
+  private def restat(spark: SparkSession, dir: String, m: Meta,
+      retired: Option[DataFrame])(l: StoreManifest.Landed): Meta = {
+    val (gd, gt) = retired.filter(_ => l.retired > 0L).fold((0L, 0L))(t =>
+      stats(live(spark, dir, "doclen", m).join(t, Seq("id"), "left_semi")))
+    val (nd, nt) = l.data.fold((0L, 0L))(s =>
+      stats(spark.read.parquet(s"$dir/doclen/slice=$s")))
+    m.copy(nDocs = m.nDocs - gd + nd, totTokens = m.totTokens - gt + nt)
+  }
+
   /** Fold one batch of NEW documents (id, text) into the store: delta
     * tokenization only, one appended slice per table, corpus stats and
-    * batch ledger in the same atomic commit. Returns the slice id, None
-    * for empty batches and crash replays. */
+    * batch ledger in the same atomic commit ([[SliceManifest.write]]).
+    * A purged id stays purged through a plain fold (the tombstone
+    * screen, [[SliceManifest.screen]]): the delete-then-reingest flow is
+    * purge → compact → vacuum → re-fold, or ONE atomic [[upsertBatch]].
+    * Returns the slice id, None for empty batches and crash replays. */
   def maintainBatch(batch: DataFrame, id: Column, text: Column,
       dir: String, prefixes: Int = 64, batchId: Long = -1L): Option[Long] = {
     val spark = batch.sparkSession
     // purge/fold/compact all read-modify-write the pointer: serialize
     // in-process writers on the per-(store, dir) monitor (round-11
-    // verdict #5 — a purge racing a fold could claim the fold's slice
-    // id mid-write; cross-process remains single-writer by contract)
+    // verdict #5); cross-process writers are fenced by the lease
     graft.util.Maintenance.withLeasedWriteLock("PostingsStore", spark, dir) {
-    val docs = batch.select(id.as("id"), text.as("text"))
-    if (docs.isEmpty) { Manifest.recordEmptyBatch(spark, dir, Manifest.read(spark, dir), batchId); return None }
-    val prev = Manifest.read(spark, dir)
-    prev match {
-      case Some(m) if batchId >= 0 && batchId <= m.batch => return None
-      case Some(m) => require(m.prefixes == prefixes,
-        s"postings store at $dir was seeded with prefixes=${m.prefixes}; " +
-          s"refusing a mismatched fold ($prefixes) — one store, one layout")
-      case None => ()
-    }
-    val m = prev.getOrElse(
-      Meta(Format, -1L, 0L, 0L, prefixes, sliceBase = 0L, slices = 0L,
-        commit = -1L))
-    // TOMBSTONE SCREEN (round-10 ADVICE): a purged id stays purged until
-    // a compact physically removes its tombstone — re-folding it would
-    // increment nDocs/totTokens while the still-live tombstone hides its
-    // postings from every read, permanently skewing BM25's N/avgdl. The
-    // delete-then-reingest flow is: purge → compact → vacuum → re-fold —
-    // or ONE atomic [[upsertBatch]], the verb that retires the old copy
-    // itself (round 12) and therefore needs no screen.
-    val screened = prev.fold(docs)(m0 =>
-      docs.join(tombstones(spark, s"$dir/purged", "id", m0), Seq("id"),
-        "left_anti"))
-    if (prev.isDefined && screened.isEmpty) { Manifest.recordEmptyBatch(spark, dir, prev, batchId); return None }
-    val toks = screened.select(col("id"),
-      explode(TextFunctions.tokens(col("text"))).as("term"))
-    val sliceId = m.slices
-    // claim the id: a crashed PURGE may have left an orphan tombstone
-    // slice here, which this commit would otherwise make live
-    Generations.claimSlice(spark, dir, Seq("purged"), sliceId)
-    // postings are hash-partitioned on `tp` and land sorted by
-    // (tp, term), one file per write task (AQE coalesces a delta into
-    // one): each file holds a share of the prefixes in order, so parquet
-    // row-group min/max stats on `tp` and `term` let the query's filters
-    // skip row groups (the Z-order lesson applied to the term axis — a
-    // slice below one row group is read whole and this is moot)
-    toks.groupBy(col("id"), col("term")).agg(count(lit(1)).as("tf"))
-      .withColumn("tp", tp(col("term"), prefixes))
-      .repartition(col("tp")).sortWithinPartitions(col("tp"), col("term"))
-      .write.mode("overwrite").parquet(s"$dir/postings/slice=$sliceId")
-    toks.groupBy(col("id")).agg(count(lit(1)).as("dl"))
-      .write.mode("overwrite").parquet(s"$dir/doclen/slice=$sliceId")
-    // stats from what was WRITTEN (not the possibly-lazy input), then
-    // the one atomic commit carrying stats + ledger + window together
-    val stats = spark.read.parquet(s"$dir/doclen/slice=$sliceId")
-      .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
-    Manifest.commit(spark, dir, m.copy(batch = batchId,
-      nDocs = m.nDocs + stats.getLong(0),
-      totTokens = m.totTokens + stats.getLong(1),
-      slices = sliceId + 1, commit = m.commit + 1))
-    Some(sliceId)
+      val m = current(spark, dir, prefixes, "fold")
+      Manifest.write(spark, dir, m, batchId) {
+        val docs = batch.select(id.as("id"), text.as("text"))
+        Manifest.Write(land = Manifest.screen(spark, dir, m, docs, "id")
+          .map(landDocs(dir, _, prefixes)))(restat(spark, dir, m, None))
+      }.map(_.slices - 1)
     }
   }
 
   /** ATOMIC UPDATE/DELETE maintenance (round 12) — the verb a CDC
-    * consumer needs: one ledgered commit that (a) retires the CURRENT
-    * copy of every incoming or removed id (a tombstone slice — the v3
-    * slice-ordered mask), (b) lands the new copies as a data slice
-    * ABOVE the tombstones, and (c) adjusts the corpus statistics by
-    * exactly −old +new. Plain [[maintainBatch]] forbids re-folding
-    * (each doc folds once — its screen stands unchanged); updates go
-    * through HERE, where the verb itself retires the old copy so
-    * nothing double-counts. Atomicity is what makes the cascade
-    * exactly-once: purge-then-fold as two verbs would let a crash
-    * replay purge the re-folded copy (the fold's ledger suppresses the
-    * re-fold but purge has no ledger) — one commit, one replay guard.
+    * consumer needs: one ledgered commit ([[SliceManifest.write]]) that
+    * (a) retires the CURRENT copy of every incoming or removed id (a
+    * tombstone slice), (b) lands the new copies as a data slice ABOVE
+    * it, and (c) adjusts the corpus statistics by exactly −old +new.
+    * Plain [[maintainBatch]] forbids re-folding (each doc folds once —
+    * its screen stands unchanged); updates go through HERE, where the
+    * verb itself retires the old copy so nothing double-counts.
+    * Atomicity is what makes the cascade exactly-once: purge-then-fold
+    * as two verbs would let a crash replay purge the re-folded copy —
+    * one commit, one replay guard.
     *
     * `upserts` holds the docs to (re)index, `removeIds` the ids to
     * delete outright. Returns the data slice id (None for replays and
@@ -205,80 +214,26 @@ object PostingsStore {
       batchId: Long = -1L): Option[Long] = {
     val spark = upserts.sparkSession
     graft.util.Maintenance.withLeasedWriteLock("PostingsStore", spark, dir) {
-    // one live row per id (ADVICE r12): exact duplicates collapse,
-    // conflicting re-indexes fail loudly — two copies in one data slice
-    // would both sit above the tombstone, stay visible, and double-count
-    // in nDocs/totTokens
-    val docs = graft.util.Maintenance.requireUniqueUpserts(
-      upserts.select(id.as("id"), text.as("text")), "id", "postings-store")
-    // ids in both upserts and removeIds re-land (the upsert wins)
-    val rem = removeIds.select(removeIds.columns.head).toDF("id")
-      .distinct()
-      .join(docs.select(col("id")), Seq("id"), "left_anti")
-      .localCheckpoint(true)
-    val prev = Manifest.read(spark, dir)
-    prev match {
-      case Some(m) if batchId >= 0 && batchId <= m.batch => return None
-      case Some(m) => require(m.prefixes == prefixes,
-        s"postings store at $dir was seeded with prefixes=${m.prefixes}; " +
-          s"refusing a mismatched upsert ($prefixes) — one store, one layout")
-      case None => ()
-    }
-    val m = prev.getOrElse(
-      Meta(Format, -1L, 0L, 0L, prefixes, sliceBase = 0L, slices = 0L,
-        commit = -1L))
-    if (docs.isEmpty && rem.isEmpty) {
-      Manifest.recordEmptyBatch(spark, dir, prev, batchId); return None
-    }
-    // retire the LIVE copies of everything incoming or removed
-    val targets =
-      if (prev.isEmpty) rem.limit(0)
-      else docs.select(col("id")).unionByName(rem).distinct()
-        .join(live(spark, dir, "doclen", m).select(col("id")),
-          Seq("id"), "left_semi")
-        .localCheckpoint(true)
-    val gone =
-      if (prev.isEmpty) (0L, 0L)
-      else {
-        val g = live(spark, dir, "doclen", m)
-          .join(targets, Seq("id"), "left_semi")
-          .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
-        (g.getLong(0), g.getLong(1))
-      }
-    // tombstone slice first (the mask covers only OLDER slices), then
-    // the data slice above it — ids only allocated for dirs written
-    var next = m.slices
-    if (!targets.isEmpty) {
-      Generations.claimSlice(spark, dir, Seq("postings", "doclen"), next)
-      targets.write.mode("overwrite").parquet(s"$dir/purged/slice=$next")
-      next += 1
-    }
-    val (newNd, newNt) =
-      if (docs.isEmpty) (0L, 0L)
-      else {
-        val dataSlice = next
-        Generations.claimSlice(spark, dir, Seq("purged"), dataSlice)
-        val toks = docs.select(col("id"),
-          explode(TextFunctions.tokens(col("text"))).as("term"))
-        toks.groupBy(col("id"), col("term")).agg(count(lit(1)).as("tf"))
-          .withColumn("tp", tp(col("term"), prefixes))
-          .repartition(col("tp")).sortWithinPartitions(col("tp"), col("term"))
-          .write.mode("overwrite").parquet(s"$dir/postings/slice=$dataSlice")
-        toks.groupBy(col("id")).agg(count(lit(1)).as("dl"))
-          .write.mode("overwrite").parquet(s"$dir/doclen/slice=$dataSlice")
-        next += 1
-        val s = spark.read.parquet(s"$dir/doclen/slice=$dataSlice")
-          .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
-        (s.getLong(0), s.getLong(1))
-      }
-    if (next == m.slices) { // everything screened away: no-op bump
-      Manifest.recordEmptyBatch(spark, dir, prev, batchId); return None
-    }
-    Manifest.commit(spark, dir, m.copy(batch = batchId,
-      nDocs = m.nDocs - gone._1 + newNd,
-      totTokens = m.totTokens - gone._2 + newNt,
-      slices = next, commit = m.commit + 1))
-    Some(next - 1)
+      val m = current(spark, dir, prefixes, "upsert")
+      Manifest.write(spark, dir, m, batchId) {
+        // one live row per id (ADVICE r12): exact duplicates collapse,
+        // conflicting re-indexes fail loudly — two copies in one data
+        // slice would both sit above the tombstone, stay visible, and
+        // double-count in nDocs/totTokens
+        val docs = graft.util.Maintenance.requireUniqueUpserts(
+          upserts.select(id.as("id"), text.as("text")), "id", "postings-store")
+        // ids in both upserts and removeIds re-land (the upsert wins);
+        // retire the LIVE copies of everything incoming or removed
+        val targets = Option.when(m.commit >= 0L)(docs.select(col("id"))
+          .unionByName(removeIds.select(removeIds.columns.head).toDF("id"))
+          .distinct()
+          .join(live(spark, dir, "doclen", m).select(col("id")), Seq("id"),
+            "left_semi")
+          .localCheckpoint(true))
+        Manifest.Write(retire = targets,
+          land = Option.when(!docs.isEmpty)(landDocs(dir, docs, prefixes)))(
+          restat(spark, dir, m, targets))
+      }.map(_.slices - 1)
     }
   }
 
@@ -318,42 +273,18 @@ object PostingsStore {
     Manifest.vacuum(spark, dir)
 
   /** DECREMENTAL index maintenance — delete documents from the
-    * persisted inverted index (the purge verb on the retrieval
-    * substrate): purged ids land as a tombstone slice filtering every
-    * live read, and the corpus statistics DECREMENT in the same atomic
-    * commit — BM25's N and Σdl stay exact, so post-purge
-    * [[bm25Query]] still replays the full recompute over the remaining
-    * corpus bit-for-bit (df re-derives from the filtered postings; the
-    * spec pins it). [[compact]] makes the removal physical. No-op for
-    * absent/already-purged ids. Returns (docs removed, tokens removed). */
+    * persisted inverted index: [[upsertBatch]] with no upserts and no
+    * batch id ([[SliceManifest.purge]]). The purged ids land as a
+    * tombstone slice and the corpus statistics DECREMENT in the same
+    * commit, so post-purge [[bm25Query]] still replays the full
+    * recompute over the remaining corpus bit-for-bit. [[compact]] makes
+    * the removal physical. No-op for absent/already-purged ids. Returns
+    * (docs removed, tokens removed). */
   def purgeDocs(spark: SparkSession, dir: String,
-      docIds: DataFrame): Option[(Long, Long)] = {
-    graft.util.Maintenance.withLeasedWriteLock("PostingsStore", spark, dir) {
-    val m = Manifest.get(spark, dir)
-    val targets = docIds.select(docIds.columns.head)
-      .toDF("id").distinct()
-      .join(live(spark, dir, "doclen", m).select(col("id")),
-        Seq("id"), "left_semi")
-      .localCheckpoint(true)
-    if (targets.isEmpty) return None
-    // the purged docs' stats, from the store itself — the decrement the
-    // manifest commit carries
-    val gone = live(spark, dir, "doclen", m)
-      .join(targets, Seq("id"), "left_semi")
-      .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
-    val (nd, nt) = (gone.getLong(0), gone.getLong(1))
-    val sliceId = m.slices
-    // claim the id: a crashed FOLD may have left orphan data slices here;
-    // advancing the window without deleting them would make their rows
-    // live (uncounted by the stats) and break the replay's overwrite
-    Generations.claimSlice(spark, dir, Seq("postings", "doclen"), sliceId)
-    targets.write.mode("overwrite").parquet(s"$dir/purged/slice=$sliceId")
-    Manifest.commit(spark, dir, m.copy(
-      nDocs = m.nDocs - nd, totTokens = m.totTokens - nt,
-      slices = sliceId + 1, commit = m.commit + 1))
-    Some((nd, nt))
-    }
-  }
+      docIds: DataFrame): Option[(Long, Long)] =
+    Manifest.purge(spark, dir, "PostingsStore")(m => upsertBatch(docIds.limit(0),
+      col(docIds.columns.head), lit(""), docIds, dir, m.prefixes))(
+      (b, a) => (b.nDocs - a.nDocs, b.totTokens - a.totTokens))
 
   /** BM25 top-k served FROM THE STORE — [[LmQueries.bm25]]'s formula
     * (same rational IDF, same k1/b literals, same sorted-term IEEE

@@ -145,8 +145,10 @@ object Generations {
       BatchFieldRe.findFirstMatchIn(body).map(_.group(1).toLong).getOrElse(
         sys.error(s"$dir commit-$c.json carries no batch field: $body"))
     }
-    // batch ids are NONDECREASING across commits (the fold guard only
-    // moves the ledger forward; maintenance verbs copy it), so walk
+    // batch ids are NONDECREASING across commits — enforced, not
+    // assumed: every store commit records `StoreManifest.ledger`, the
+    // max of the current ledger and the verb's id, so a verb without a
+    // batch id (−1) never rewinds it; maintenance verbs copy it. Walk
     // DESCENDING from the newest commit and stop once batch drops below
     // the target — for the common case (pinning the batch just folded)
     // that is O(maintenance ops since the fold), not O(total history)
@@ -269,8 +271,8 @@ object Generations {
     * batch's replay would then re-fold at S+1, double-inserting it
     * (round-10 ADVICE). Writers that `mode("overwrite")` a sub at the
     * claimed id need no claim for that sub — overwrite is the claim. */
-  def claimSlice(spark: SparkSession, dir: String, subs: Seq[String],
-      sliceId: Long): Unit = {
+  private[util] def claimSlice(spark: SparkSession, dir: String,
+      subs: Seq[String], sliceId: Long): Unit = {
     val hc = Hfs.conf(spark)
     subs.foreach { sub =>
       val p = new HPath(s"$dir/$sub/slice=$sliceId")

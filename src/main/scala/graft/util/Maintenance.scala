@@ -40,7 +40,9 @@ object Maintenance {
     new ConcurrentHashMap[(String, SparkSession, String), Object]()
 
   /** Build-once accessor: the single seam every maintenance memo routes
-    * through. `build` runs at most once per (name, session, dir).
+    * through. `build` runs at most once per (name, session, dir), and
+    * its Spark jobs carry the description `build: <name>`, so a probe
+    * attributes every registered seed to its memo.
     *
     * Round-13 fix: builders NEST (a cascade substrate builds on the
     * merge-table substrate, which builds on others), and running user
@@ -72,7 +74,12 @@ object Maintenance {
         if (buildLocks.get(k) eq lock) {
           val again = store.get(k)
           if (again != null) return again.asInstanceOf[T]
-          val v = build
+          // label the build's jobs `build: <name>` (a nested build
+          // labels its own), then restore the caller's description
+          val sc = s.sparkContext
+          val callerDesc = sc.getLocalProperty("spark.job.description")
+          sc.setJobDescription(s"build: $name")
+          val v = try build finally sc.setJobDescription(callerDesc)
           store.put(k, v)
           return v
         }

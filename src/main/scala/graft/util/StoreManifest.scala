@@ -23,11 +23,13 @@ import org.apache.spark.sql.types.StructType
   * read or write ([[Generations.unparseableMsg]] tells a manifest from
   * another build apart from a corrupt one). On top of the codec the
   * kernel owns the current and archived reads, the archived commit
-  * ([[Generations.commitArchived]]), the empty-batch ledger bump and the
-  * batch → fold-commit pin; [[Generations]] keeps the pointer I/O. A
-  * store supplies its folds, its compaction's merged-slice writes and
-  * its read surfaces; the streaming loop that drives a fold is
-  * [[Maintenance.foldStream]].
+  * ([[Generations.commitArchived]]), the batch ledger (the replay guard
+  * and the empty-batch bump, [[ledgered]]) and the batch → fold-commit
+  * pin; [[Generations]] keeps the pointer I/O. The slice stores write
+  * through ONE ledgered slice write ([[SliceManifest.write]]): a store
+  * supplies what its verbs retire and land, its compaction's
+  * merged-slice writes and its read surfaces; the streaming loop that
+  * drives a fold is [[Maintenance.foldStream]].
   */
 class StoreManifest[M <: StoreManifest.Entry](val name: String,
     val format: String, what: String)(implicit tag: ClassTag[M]) {
@@ -87,23 +89,44 @@ class StoreManifest[M <: StoreManifest.Entry](val name: String,
   def commit(spark: SparkSession, dir: String, m: M): Unit =
     Generations.commitArchived(spark, dir, name, render(m), m.commit)
 
-  /** ADVICE r11: a ledgered batch the tombstone screen (or the batch
-    * itself) left EMPTY must still record its batch id — returning
-    * without a commit leaves the batch unledgered, so after maintenance
-    * drops the tombstones, a streaming replay of that batch (restart
-    * before the checkpoint committed) would re-fold and resurrect the
-    * purged rows. A no-op pointer bump (batch advanced, data untouched)
-    * keeps the replay guard `batchId <= m.batch` suppressing the
-    * re-fold. */
-  def recordEmptyBatch(spark: SparkSession, dir: String, prev: Option[M],
-      batchId: Long): Unit =
-    prev.foreach { m =>
-      if (batchId >= 0 && batchId > m.batch)
-        commit(spark, dir, updated(m) {
-          case "batch" => batchId
-          case "commit" => m.commit + 1
-        })
+  /** The batch ledger around ONE write: `body` runs only for a batch the
+    * ledger has not seen — the REPLAY GUARD: a ledgered id (≥ 0) at or
+    * below `m.batch` was already folded, so a stream's replay after a
+    * crash between the store's commit and the checkpoint's is a no-op,
+    * not a second insert. A `body` that lands nothing (None) still
+    * records its batch id: the EMPTY-BATCH bump (ADVICE r11 — a batch
+    * the tombstone screen left empty and never ledgered would re-fold on
+    * a replay once maintenance dropped the tombstones, resurrecting the
+    * purged rows). `prev` is None before the store's first commit. The
+    * slice stores reach this through [[SliceManifest.write]]; IVF-PQ's
+    * generation publishes call it directly. */
+  def ledgered[T](spark: SparkSession, dir: String, prev: Option[M],
+      batchId: Long)(body: => Option[T]): Option[T] =
+    if (prev.exists(m => batchId >= 0 && batchId <= m.batch)) None
+    else {
+      val out = body
+      if (out.isEmpty) prev.foreach(recordEmptyBatch(spark, dir, _, batchId))
+      out
     }
+
+  /** The no-op pointer bump: batch advanced, data untouched. A verb
+    * without a batch id (−1) records nothing, and an uncommitted seed
+    * (`commit` −1) has no pointer to bump. */
+  private def recordEmptyBatch(spark: SparkSession, dir: String, m: M,
+      batchId: Long): Unit =
+    if (m.commit >= 0 && batchId > m.batch)
+      commit(spark, dir, updated(m) {
+        case "batch" => batchId
+        case "commit" => m.commit + 1
+      })
+
+  /** The ledger a commit records: `batchId`, or the current ledger when
+    * the verb carries none (or an older one) — a manual write never
+    * rewinds the ledger, so a stream's replay of its last ledgered batch
+    * stays a no-op and [[commitForBatch]] can rely on batch ids never
+    * decreasing across commits. */
+  def ledger(prev: Option[M], batchId: Long): Long =
+    prev.fold(batchId)(m => math.max(m.batch, batchId))
 
   /** The committed snapshot id produced by LEDGERED batch `batchId` —
     * the pin a cross-store set manifest records (ADVICE r11: the
@@ -120,15 +143,114 @@ class StoreManifest[M <: StoreManifest.Entry](val name: String,
   * its `tables` (each `<dir>/<base(m)><table>/slice=S`; `base` is empty
   * except for IVF, whose tables live inside the generation, `gen=G/`).
   * Every table list is spelled here, once per store, and the protocol
-  * around the window is this class's: the live and change-window slice
-  * dirs, the readability check, the vacuum and the compaction skeleton.
-  * The store's tombstone table is `purged`. */
+  * around the window is this class's: the ledgered write ([[write]]),
+  * the tombstone screen, purge-as-upsert, the live and change-window
+  * slice dirs, the readability check, the vacuum and the compaction
+  * skeleton. The store's tombstone table is `purged`. */
 final class SliceManifest[M <: StoreManifest.Windowed](name: String,
     format: String, what: String, val tables: Seq[String],
     base: M => String = (_: M) => "")(implicit tag: ClassTag[M])
     extends StoreManifest[M](name, format, what) {
 
   private def subs(m: M): Seq[String] = tables.map(base(m) + _)
+
+  private def purged(m: M): String = s"${base(m)}purged"
+
+  /** One ledgered write's plan ([[write]]): `retire` holds the keys to
+    * tombstone (a materialized frame; skipped when empty), `withTombstone`
+    * writes any other table the tombstone slice carries (the graph's
+    * cancelling Δ-pairs), `land` writes the data slice at the id it is
+    * given, and `fill` sets the store's own fields (stats, `gen`, `rows`)
+    * once the slices are on disk. */
+  final class Write(val retire: Option[DataFrame],
+      val withTombstone: Long => Unit, val land: Option[Long => Unit],
+      val fill: StoreManifest.Landed => M)
+
+  object Write {
+    def apply(retire: Option[DataFrame] = None,
+        withTombstone: Long => Unit = _ => (),
+        land: Option[Long => Unit] = None)(
+        fill: StoreManifest.Landed => M): Write =
+      new Write(retire, withTombstone, land, fill)
+  }
+
+  /** THE LEDGERED SLICE WRITE — every slice-advancing verb of the five
+    * slice stores (folds, upserts and, through them, purges) is this one
+    * sequence, so the exactly-once bookkeeping cannot drift between
+    * stores. Given the current manifest `m` (or the store's seed, with
+    * `commit` −1) and the verb's batch id:
+    *  - the replay guard and the empty-batch bump ([[ledgered]]); `plan`
+    *    runs only past the guard;
+    *  - the tombstone, if `retire` holds any key, lands at slice
+    *    S = `m.slices` and the data at S or S+1 — SLICE-ORDERED: a
+    *    tombstone masks only older slices, so a re-landed row written
+    *    above its own tombstone stays visible;
+    *  - each id is CLAIMED before it is written: at the tombstone id the
+    *    data tables, at the data id the tombstone table. A crashed
+    *    verb's orphan there would otherwise turn live when this commit
+    *    advances the window past it — rows no stat counted, and a
+    *    crashed fold's replay double-inserting at the next id (round-10
+    *    ADVICE; overwriting a table is its own claim);
+    *  - one commit of `fill`'s manifest with `batch` ([[ledger]]),
+    *    `slices` and `commit` advanced.
+    * Returns the committed manifest; None for a replay or a write that
+    * landed nothing. */
+  def write(spark: SparkSession, dir: String, m: M, batchId: Long)(
+      plan: => Write): Option[M] =
+    ledgered(spark, dir, Some(m), batchId) {
+      val w = plan
+      var next = m.slices
+      def claim(subs: Seq[String]): Long = {
+        Generations.claimSlice(spark, dir, subs, next)
+        next += 1
+        next - 1
+      }
+      val retired = w.retire.fold(0L) { keys =>
+        val n = keys.count()
+        if (n > 0L) {
+          val s = claim(tables.filterNot(_ == "purged").map(base(m) + _))
+          keys.write.mode("overwrite").parquet(s"$dir/${purged(m)}/slice=$s")
+          w.withTombstone(s)
+        }
+        n
+      }
+      val data = w.land.map { f => val s = claim(Seq(purged(m))); f(s); s }
+      Option.when(next > m.slices) {
+        val out = updated(w.fill(StoreManifest.Landed(retired, data))) {
+          case "batch" => ledger(Some(m), batchId)
+          case "slices" => next
+          case "commit" => m.commit + 1
+        }
+        commit(spark, dir, out)
+        out
+      }
+    }
+
+  /** The append folds' TOMBSTONE SCREEN: `rows` minus every key the live
+    * window tombstones, or None when nothing is left (the fold then lands
+    * nothing and [[write]] records the empty batch). A purged key stays
+    * purged until compact and vacuum retire its tombstone — a plain
+    * re-fold would count it in the stats while the tombstone hides it
+    * from every read; an upsert, which retires the live copy itself,
+    * re-lands it. `schema` (the key column) skips the tombstones'
+    * schema-inference job. */
+  def screen(spark: SparkSession, dir: String, m: M, rows: DataFrame,
+      key: String, schema: Option[StructType] = None): Option[DataFrame] =
+    Some(rows.join(StoreManifest.tombstones(spark, s"$dir/${purged(m)}", key,
+      m, schema).select(col(key)), Seq(key), "left_anti")).filter(!_.isEmpty)
+
+  /** A PURGE is its store's upsert with no upserts and no batch id:
+    * `upsert(m)` runs under the store's write lease (`lock`) against the
+    * current manifest `m`, and `delta(before, after)` reports the change
+    * — None when no named key was live (nothing committed). */
+  def purge[T](spark: SparkSession, dir: String, lock: String)(
+      upsert: M => Any)(delta: (M, M) => T): Option[T] =
+    Maintenance.withLeasedWriteLock(lock, spark, dir) {
+      val before = get(spark, dir)
+      upsert(before)
+      Some(get(spark, dir)).filter(_.commit > before.commit)
+        .map(delta(before, _))
+    }
 
   /** Fail loudly unless every slice of `m`'s window is still on disk
     * ([[Generations.requireSlicesReadable]]) — the time-travel guard. */
@@ -210,7 +332,7 @@ final class SliceManifest[M <: StoreManifest.Windowed](name: String,
     Maintenance.withLeasedWriteLock(lock, spark, dir) {
       read(spark, dir).filter(m => m.slices - m.sliceBase > 1).map { m =>
         val merged = m.slices
-        Generations.claimSlice(spark, dir, Seq(s"${base(m)}purged"), merged)
+        Generations.claimSlice(spark, dir, Seq(purged(m)), merged)
         write(m, merged)
         commit(spark, dir, updated(m) {
           case "sliceBase" => merged
@@ -238,6 +360,10 @@ object StoreManifest {
     def sliceBase: Long
     def slices: Long
   }
+
+  /** What one [[SliceManifest.write]] landed: the keys tombstoned (0: no
+    * tombstone slice) and the data slice id, if any. */
+  final case class Landed(retired: Long, data: Option[Long])
 
   private val FieldRe = """"\w+": ("[^"]*"|-?[0-9]+)""".r
 

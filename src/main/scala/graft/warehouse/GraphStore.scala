@@ -3,7 +3,7 @@ package graft.warehouse
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.util.{Generations, SliceManifest, StoreManifest}
+import graft.util.{SliceManifest, StoreManifest}
 import graft.util.StoreManifest.{maskOlder, tombstones, window}
 
 /** Persisted GRAPH SUBSTRATE with incremental maintenance — the disk
@@ -27,8 +27,10 @@ import graft.util.StoreManifest.{maskOlder, tombstones, window}
   * items store and appends both slices before one atomic pointer
   * commit; write volume tracks the delta. Readers apply the
   * co-occurrence threshold at probe time (state keeps all counts — a
-  * pair at 1 must be able to cross the floor later). Replays are no-ops
-  * via the batch-id ledger. Contract: a line item folds exactly once
+  * pair at 1 must be able to cross the floor later). Every write verb
+  * commits through the one ledgered slice write
+  * ([[graft.util.SliceManifest.write]]), so replays are no-ops via its
+  * batch-id ledger. Contract: a line item folds exactly once
   * (disjoint delta batches — the LedgerStore/PostingsStore identity
   * rule).
   */
@@ -100,53 +102,46 @@ object GraphStore {
   def meta(spark: SparkSession, dir: String): Option[Meta] =
     Manifest.read(spark, dir)
 
+  /** Land basket `lines` (ord, item) as slice `s`: their Δ-pairs
+    * against the live `base` lines ([[GraphQueries.edgeDelta]]) and the
+    * lines themselves, partitioned by basket hash. */
+  private def landLines(dir: String, base: DataFrame, lines: DataFrame,
+      prefixes: Int)(s: Long): Unit = {
+    GraphQueries.edgeDelta(base, lines, "ord", "item")
+      .write.mode("overwrite").parquet(s"$dir/pairs/slice=$s")
+    lines.withColumn("op", opOf(col("ord"), prefixes))
+      .write.mode("overwrite").partitionBy("op")
+      .parquet(s"$dir/items/slice=$s")
+  }
+
   /** Fold one batch of NEW basket lines (ord, item) into the store:
     * Δ-pair expansion against the live items, two appended slices, one
-    * atomic commit. Empty batches and crash replays are no-ops. */
+    * ledgered commit ([[SliceManifest.write]]). A purged basket stays
+    * purged through a plain fold (the tombstone screen — re-folding its
+    * lines would add pair counts the hidden lines no longer back). Empty
+    * batches and crash replays are no-ops. */
   def maintainBatch(batch: DataFrame, ord: Column, item: Column,
       dir: String, batchId: Long = -1L,
       prefixes: Int = 64): Option[Long] = {
     val spark = batch.sparkSession
     // purge/fold/compact serialize on the per-(store, dir) monitor
-    // (round-11 verdict #5); cross-process stays single-writer
+    // (round-11 verdict #5); cross-process writers are fenced by the lease
     graft.util.Maintenance.withLeasedWriteLock("GraphStore", spark, dir) {
-    val items = batch.select(ord.as("ord"), item.as("item"))
-    if (items.isEmpty) { Manifest.recordEmptyBatch(spark, dir, Manifest.read(spark, dir), batchId); return None }
-    val prev = Manifest.read(spark, dir)
-    prev match {
-      case Some(m) if batchId >= 0 && batchId <= m.batch => return None
-      case Some(m) => require(m.prefixes == prefixes,
+      val m = Manifest.read(spark, dir).getOrElse(
+        Meta(Format, -1L, prefixes, sliceBase = 0L, slices = 0L, commit = -1L))
+      require(m.prefixes == prefixes,
         s"graph store at $dir was seeded with prefixes=${m.prefixes}; " +
           s"refusing a mismatched fold ($prefixes) — one store, one layout")
-      case None => ()
-    }
-    val m = prev.getOrElse(
-      Meta(Format, -1L, prefixes, sliceBase = 0L, slices = 0L,
-        commit = -1L))
-    // TOMBSTONE SCREEN (round-10 ADVICE): a purged basket stays purged
-    // until compact+vacuum; re-folding its lines would add pair counts
-    // while the tombstone hides the lines from every items read, so the
-    // merged counts would disagree with the live lines.
-    val screened = prev.fold(items)(m0 =>
-      items.join(tombstones(spark, s"$dir/purged", "ord", m0), Seq("ord"),
-        "left_anti"))
-    if (prev.isDefined && screened.isEmpty) { Manifest.recordEmptyBatch(spark, dir, prev, batchId); return None }
-    val baseItems =
-      if (m.slices == m.sliceBase)
-        items.limit(0) // seed: no live items yet
-      else baseItemsFor(spark, dir, screened.select(col("ord")))
-    val sliceId = m.slices
-    // claim the id: a crashed purge's orphan tombstone slice here must
-    // not become live under this fold's commit
-    Generations.claimSlice(spark, dir, Seq("purged"), sliceId)
-    GraphQueries.edgeDelta(baseItems, screened, "ord", "item")
-      .write.mode("overwrite").parquet(s"$dir/pairs/slice=$sliceId")
-    screened.withColumn("op", opOf(col("ord"), prefixes))
-      .write.mode("overwrite").partitionBy("op")
-      .parquet(s"$dir/items/slice=$sliceId")
-    Manifest.commit(spark, dir, m.copy(batch = batchId, slices = sliceId + 1,
-      commit = m.commit + 1))
-    Some(sliceId)
+      Manifest.write(spark, dir, m, batchId) {
+        val items = batch.select(ord.as("ord"), item.as("item"))
+        Manifest.Write(land = Manifest.screen(spark, dir, m, items, "ord")
+          .map { lines =>
+            val base =
+              if (m.slices == m.sliceBase) lines.limit(0) // no live items yet
+              else baseItemsFor(spark, dir, lines.select(col("ord")))
+            landLines(dir, base, lines, prefixes)
+          })(_ => m)
+      }.map(_.slices - 1)
     }
   }
 
@@ -204,50 +199,25 @@ object GraphStore {
 
   /** DECREMENTAL substrate maintenance — remove whole BASKETS (the
     * user-data purge unit: every pair lives within one basket, so a
-    * basket's removal is self-contained). The delta-store makes the
-    * decrement natural: one NEGATIVE Δ-count slice — exactly the purged
-    * baskets' internal pair multiset, recomputed from the stored lines
-    * — cancels their contributions in the read-side merge (zeroed pairs
-    * drop at load), and the basket ids land as a tombstone slice
-    * filtering the items reads, so later folds cannot pair against
-    * purged lines. [[compact]] then makes the removal physical (the
-    * pre-aggregated merge excludes zeros and the tombstoned lines).
-    * No-op for absent/already-purged baskets. Returns the slice id. */
+    * basket's removal is self-contained): [[upsertOrders]] with no
+    * upserts and no batch id ([[SliceManifest.purge]]) — one NEGATIVE
+    * Δ-count slice cancels the purged baskets' pairs in the read-side
+    * merge, and the tombstone filters their lines from every items read.
+    * [[compact]] then makes the removal physical. No-op for
+    * absent/already-purged baskets. Returns the slice id. */
   def purgeOrders(spark: SparkSession, dir: String,
-      ords: DataFrame): Option[Long] = {
-    graft.util.Maintenance.withLeasedWriteLock("GraphStore", spark, dir) {
-    val m = Manifest.get(spark, dir)
-    val targets = ords.select(ords.columns.head).toDF("ord").distinct()
-      .join(liveItems(spark, dir, m).select(col("ord")), Seq("ord"),
-        "left_semi")
-      .localCheckpoint(true)
-    if (targets.isEmpty) return None
-    // pruned read: the purged baskets' prefixes only
-    val goneLines = baseItemsFor(spark, dir, targets)
-      .join(targets, Seq("ord"), "left_semi").localCheckpoint(true)
-    val sliceId = m.slices
-    // claim the id: a crashed fold's orphan items slice must not become
-    // live when this commit advances the window (pairs is overwritten
-    // below — overwrite is the claim)
-    Generations.claimSlice(spark, dir, Seq("items"), sliceId)
-    GraphQueries.edgeDelta(goneLines.limit(0), goneLines, "ord", "item")
-      .select(col("u"), col("v"), (-col("dn")).as("dn"))
-      .write.mode("overwrite").parquet(s"$dir/pairs/slice=$sliceId")
-    targets.write.mode("overwrite").parquet(s"$dir/purged/slice=$sliceId")
-    Manifest.commit(spark, dir, m.copy(slices = sliceId + 1,
-      commit = m.commit + 1))
-    Some(sliceId)
-    }
-  }
+      ords: DataFrame): Option[Long] =
+    Manifest.purge(spark, dir, "GraphStore")(_ => upsertOrders(ords.limit(0),
+      col(ords.columns.head), lit(0L), ords, dir))((b, _) => b.slices)
 
   /** BASKET REFRESH (round 13) — the graph store's cell of the upsert
     * matrix: when a warehouse order CHANGES (lines added/removed), the
     * co-purchase graph must retire the basket's old pairs and land its
     * new ones atomically. The delta-store layout makes this pure
-    * differential algebra in ONE ledgered commit over two slice ids:
-    * slice S carries the tombstone (v4 slice-ordered: masks only older
-    * item slices) plus the NEGATIVE Δ-pairs cancelling the retired
-    * lines; slice S+1 carries the new lines and their POSITIVE Δ-pairs
+    * differential algebra in ONE ledgered commit
+    * ([[SliceManifest.write]]): the tombstone slice also carries the
+    * NEGATIVE Δ-pairs cancelling the retired lines; the data slice
+    * above it carries the new lines and their POSITIVE Δ-pairs
     * (replacement semantics — the new basket pairs against itself
     * only, its old lines being retired in the same commit). Summing
     * the pairs feed therefore keeps maintaining exact edge weights
@@ -264,54 +234,33 @@ object GraphStore {
       : Option[Long] = {
     val spark = upserts.sparkSession
     graft.util.Maintenance.withLeasedWriteLock("GraphStore", spark, dir) {
-    val m = Manifest.read(spark, dir).getOrElse(sys.error(
-      s"no committed graph store at $dir — upsertOrders updates an " +
-        "existing store; seed with maintainBatch first"))
-    if (batchId >= 0 && batchId <= m.batch) return None
-    val lines = upserts.select(ord.as("ord"), item.as("item"))
-      .distinct().localCheckpoint(true)
-    val rem = removeOrds.select(removeOrds.columns.head).toDF("ord")
-      .distinct()
-      .join(lines.select(col("ord")), Seq("ord"), "left_anti")
-      .localCheckpoint(true)
-    if (lines.isEmpty && rem.isEmpty) {
-      Manifest.recordEmptyBatch(spark, dir, Some(m), batchId); return None
-    }
-    // retire the LIVE baskets among incoming/removed — absent or
-    // already-purged ords need no tombstone (their re-land, if any, is
-    // a plain insert above the existing mask)
-    val targets = lines.select(col("ord")).distinct().unionByName(rem)
-      .join(liveItems(spark, dir, m).select(col("ord")), Seq("ord"),
-        "left_semi")
-      .localCheckpoint(true)
-    var next = m.slices
-    if (!targets.isEmpty) {
-      // tombstone + cancelling negatives, one slice id
-      val goneLines = baseItemsFor(spark, dir, targets)
-        .join(targets, Seq("ord"), "left_semi").localCheckpoint(true)
-      Generations.claimSlice(spark, dir, Seq("items"), next)
-      GraphQueries.edgeDelta(goneLines.limit(0), goneLines, "ord", "item")
-        .select(col("u"), col("v"), (-col("dn")).as("dn"))
-        .write.mode("overwrite").parquet(s"$dir/pairs/slice=$next")
-      targets.write.mode("overwrite").parquet(s"$dir/purged/slice=$next")
-      next += 1
-    }
-    if (!lines.isEmpty) {
-      // the re-landed/new baskets + their pairs, one slice id above
-      Generations.claimSlice(spark, dir, Seq("purged"), next)
-      GraphQueries.edgeDelta(lines.limit(0), lines, "ord", "item")
-        .write.mode("overwrite").parquet(s"$dir/pairs/slice=$next")
-      lines.withColumn("op", opOf(col("ord"), m.prefixes))
-        .write.mode("overwrite").partitionBy("op")
-        .parquet(s"$dir/items/slice=$next")
-      next += 1
-    }
-    if (next == m.slices) { // removes of absent baskets only
-      Manifest.recordEmptyBatch(spark, dir, Some(m), batchId); return None
-    }
-    Manifest.commit(spark, dir, m.copy(batch = batchId, slices = next,
-      commit = m.commit + 1))
-    Some(m.slices)
+      val m = Manifest.read(spark, dir).getOrElse(sys.error(
+        s"no committed graph store at $dir — upsertOrders updates an " +
+          "existing store; seed with maintainBatch first"))
+      Manifest.write(spark, dir, m, batchId) {
+        val lines = upserts.select(ord.as("ord"), item.as("item"))
+          .distinct().localCheckpoint(true)
+        // retire the LIVE baskets among incoming/removed — absent or
+        // already-purged ords need no tombstone (their re-land, if any,
+        // is a plain insert above the existing mask)
+        val targets = lines.select(col("ord"))
+          .unionByName(removeOrds.select(removeOrds.columns.head).toDF("ord"))
+          .distinct()
+          .join(liveItems(spark, dir, m).select(col("ord")), Seq("ord"),
+            "left_semi")
+          .localCheckpoint(true)
+        Manifest.Write(retire = Some(targets),
+          withTombstone = { s =>
+            // pruned read: the retired baskets' prefixes only
+            val gone = baseItemsFor(spark, dir, targets)
+              .join(targets, Seq("ord"), "left_semi").localCheckpoint(true)
+            GraphQueries.edgeDelta(gone.limit(0), gone, "ord", "item")
+              .select(col("u"), col("v"), (-col("dn")).as("dn"))
+              .write.mode("overwrite").parquet(s"$dir/pairs/slice=$s")
+          },
+          land = Option.when(!lines.isEmpty)(
+            landLines(dir, lines.limit(0), lines, m.prefixes)))(_ => m)
+      }.map(_ => m.slices)
     }
   }
 

@@ -339,6 +339,33 @@ class StoreHardeningSpec extends AnyFunSuite {
     assert(e.getMessage.contains("no commit for batch"))
   }
 
+  test("a verb without a batch id never rewinds the batch ledger: the " +
+      "replay of the last ledgered batch stays a no-op and keeps its pin") {
+    val dir = Files.createTempDirectory("norewind").toString
+    def slice(lo: Long, hi: Long) =
+      docs.filter(col("doc_id") > lo && col("doc_id") <= hi)
+    PostingsStore.maintainBatch(slice(0, 100), col("doc_id"), col("text"),
+      dir, batchId = 0L)
+    PostingsStore.maintainBatch(slice(100, 200), col("doc_id"), col("text"),
+      dir, batchId = 1L)
+    // a manual fold and a manual upsert (no batch id) in between
+    assert(PostingsStore.maintainBatch(slice(200, 300), col("doc_id"),
+      col("text"), dir).nonEmpty)
+    assert(PostingsStore.upsertBatch(slice(250, 260), col("doc_id"),
+      col("text"), Seq(5L).toDF("id"), dir).nonEmpty)
+    val m = PostingsStore.meta(spark, dir).get
+    assert(m.batch == 1L, "a verb without a batch id must keep the ledger")
+    // the stream replays batch 1 after a restart: a no-op, not a re-fold
+    // that would double its postings and nDocs
+    assert(PostingsStore.maintainBatch(slice(100, 200), col("doc_id"),
+      col("text"), dir, batchId = 1L).isEmpty)
+    assert(PostingsStore.meta(spark, dir).get == m)
+    val remaining = slice(0, 300).filter(col("doc_id") =!= 5L)
+    assert(m.nDocs == remaining.count())
+    assert(storeTop(dir) == fullTop(remaining))
+    assert(PostingsStore.commitForBatch(spark, dir, 1L) == 1L)
+  }
+
   test("a manifest from another format version reads as a VERSION " +
       "MISMATCH, not as corruption") {
     val dir = Files.createTempDirectory("vermismatch").toString
